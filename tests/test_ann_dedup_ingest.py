@@ -136,12 +136,10 @@ def test_replayed_batch_is_idempotent(spark, tmp_path):
 @pytest.mark.slow
 def test_metrics_reconcile_with_kept_corpus(spark, tmp_path):
     """sum(n_kept) == |kept corpus| and n_in covers the clean feed."""
-    from wd2duckdb_spark.streaming.semantic_ingest import (
-        semantic_ingest_metrics,
-    )
+    from wd2duckdb_spark.streaming.lake_index import batch_metrics
 
     _idx, out = _stream_corpus(spark, tmp_path, 3, "metrics")
-    m = semantic_ingest_metrics(spark, out).collect()
+    m = batch_metrics(spark, out).collect()
     n_kept = spark.read.parquet(out).count()
     assert sum(r.n_kept for r in m) == n_kept
     assert all(r.n_in == r.n_dups + r.n_kept for r in m)
@@ -156,24 +154,59 @@ def test_history_probe_streams_index_not_broadcast(spark, tmp_path):
     from wd2duckdb_spark.functions.ann_index import _assigned_rows
     from wd2duckdb_spark.functions.dedup import _cosine_fold_sql
     from wd2duckdb_spark.functions.similarity import trained_centroids
+    from wd2duckdb_spark.streaming import lake_index
 
     idx, _out = _stream_corpus(spark, tmp_path, 2, "orient")
     cents = trained_centroids(spark, SF_DIR)
     batch = tbl(spark, SF_DIR, "embeddings").limit(5)
     assigned = _assigned_rows(batch, cents, None, "l2")
-    b = assigned.select(
-        "cell", F.col("vec_id").alias("b_id"), F.col("v").alias("vb")
-    )
     hist = (
         spark.read.parquet(f"{idx}/assignments")
         .filter(F.col("batch") != 99)
         .select("cell", F.col("v").alias("vh"))
     )
-    probe = hist.join(F.broadcast(b), "cell").filter(
-        F.round(F.expr(_cosine_fold_sql("vb", "vh")), 4) >= F.lit(0.35)
+    probe = lake_index.probe(
+        assigned.select("cell", "vec_id", F.col("v").alias("vb")),
+        hist,
+        on=["cell"],
+        prune_col="cell",
+        verify=F.round(F.expr(_cosine_fold_sql("vb", "vh")), 4) >= F.lit(0.35),
     )
     plan = probe._jdf.queryExecution().executedPlan().toString()
     assert "BroadcastExchange" in plan
     assert plan.index("FileScan parquet [") < plan.index(
         "BroadcastExchange"
     ), plan
+
+
+@pytest.mark.slow
+def test_catchup_regime_keeps_same_vectors(spark, tmp_path, monkeypatch):
+    """The semantic tier shares the lake-index probe, so a batch past
+    MAX_BROADCAST_KEYS takes the shuffled-hash regime (batch side as
+    build) — and must keep exactly the vectors the default regime
+    keeps."""
+    from wd2duckdb_spark.catalog import tbl
+    from wd2duckdb_spark.functions.similarity import SEMDEDUP_THR
+    from wd2duckdb_spark.streaming import lake_index
+    from wd2duckdb_spark.streaming.semantic_ingest import _batch_vec_dedup
+
+    e = tbl(spark, SF_DIR, "embeddings")
+    rows = e.orderBy("vec_id").collect()
+    halves = [
+        spark.createDataFrame(rows[: len(rows) // 2], e.schema),
+        spark.createDataFrame(rows[len(rows) // 2 :], e.schema),
+    ]
+
+    def run(tag):
+        idx = _bootstrap_centroids_only(spark, tmp_path, tag)
+        out = str(tmp_path / f"semout_{tag}")
+        for i, half in enumerate(halves):
+            _batch_vec_dedup(half, i, idx, out, SEMDEDUP_THR, "l2")
+        return {
+            r.vec_id for r in spark.read.parquet(out).select("vec_id").collect()
+        }
+
+    default_kept = run("default")
+    monkeypatch.setattr(lake_index, "MAX_BROADCAST_KEYS", 1)
+    assert run("catchup") == default_kept
+    assert default_kept and len(default_kept) < len(rows)

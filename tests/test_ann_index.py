@@ -216,7 +216,8 @@ def test_compact_ann_index_preserves_probe_and_prunes_dirs(spark, tmp_path):
     """Folding all batches ≤ through_batch into batch=-1 keeps probe
     results identical, keeps cell-level partition pruning, and
     reduces the assignments directory count from (B+1)×cells toward
-    1×cells."""
+    2×cells; the newest batch, which a restart may replay, is never
+    folded (it would then be indexed twice)."""
     import os
 
     from wd2duckdb_spark.functions.ann_index import compact_ann_index
@@ -237,12 +238,15 @@ def test_compact_ann_index_preserves_probe_and_prunes_dirs(spark, tmp_path):
         )
 
     assert len(_batch_dirs()) == 6  # bootstrap + 5 micro-batches
-    compact_ann_index(spark, idx, through_batch=4)
-    assert _batch_dirs() == ["batch=-1"]
+    # the newest batch (4) may be replayed by a restart: never folded
+    with pytest.raises(ValueError, match="most recent batch"):
+        compact_ann_index(spark, idx, through_batch=4)
+    compact_ann_index(spark, idx, through_batch=3)
+    assert _batch_dirs() == ["batch=-1", "batch=4"]
     assert _probe_rows(spark, idx) == want
     # idempotent re-fold
-    compact_ann_index(spark, idx, through_batch=4)
-    assert _batch_dirs() == ["batch=-1"]
+    compact_ann_index(spark, idx, through_batch=3)
+    assert _batch_dirs() == ["batch=-1", "batch=4"]
     assert _probe_rows(spark, idx) == want
     # pruning still fires on the folded layout
     from wd2duckdb_spark.functions.ann_index import ivf_index_probe
@@ -368,13 +372,11 @@ def test_ann_index_metrics_reconcile_and_quarantine(spark, tmp_path):
     schema-contract quarantine: a batch with NULL/ragged vectors
     reports them as n_quarantined instead of indexing them."""
     from wd2duckdb_spark.catalog import tbl
-    from wd2duckdb_spark.functions.ann_index import (
-        ann_index_ingest,
-        ann_index_metrics,
-    )
+    from wd2duckdb_spark.functions.ann_index import ann_index_ingest
+    from wd2duckdb_spark.streaming.lake_index import batch_metrics
 
     idx = _build_streamed_index(spark, tmp_path, 2, "metrics")
-    m = {r.batch_id: r for r in ann_index_metrics(spark, idx).collect()}
+    m = {r.batch_id: r for r in batch_metrics(spark, idx).collect()}
     assert set(m) == {0, 1}
     n_boot = (
         spark.read.parquet(f"{idx}/assignments")
@@ -396,7 +398,7 @@ def test_ann_index_metrics_reconcile_and_quarantine(spark, tmp_path):
     )
     ann_index_ingest(dirty, 7, idx)
     m7 = {
-        r.batch_id: r for r in ann_index_metrics(spark, idx).collect()
+        r.batch_id: r for r in batch_metrics(spark, idx).collect()
     }[7]
     assert (m7.n_in, m7.n_indexed, m7.n_quarantined) == (3, 1, 2)
 

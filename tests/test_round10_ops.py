@@ -662,10 +662,8 @@ def test_simhash_ingest_index_archive_then_probe(spark, tmp_path):
     archive (keeping (tbl, key, sim) rows intact), and a later batch
     still drops an edit of an ARCHIVED document — the probe's replay
     filter (batch != batch_id) keeps archive rows visible."""
-    from wd2duckdb_spark.streaming.dedup_ingest import (
-        ARCHIVE_BATCH,
-        archive_index,
-    )
+    from wd2duckdb_spark.streaming.dedup_ingest import archive_index
+    from wd2duckdb_spark.streaming.lake_index import ARCHIVE_BATCH
     from wd2duckdb_spark.streaming.simhash_sig import _batch_simhash_dedup
 
     base = " ".join(f"w{i}" for i in range(200))
@@ -705,10 +703,10 @@ def test_simhash_ingest_probe_prunes_index_scan(spark, tmp_path, monkeypatch):
         SIMHASH_HAMMING,
         simhash_signatures,
     )
-    from wd2duckdb_spark.streaming import dedup_ingest
-    from wd2duckdb_spark.streaming.dedup_ingest import _IN_THRESHOLD_CONF
+    from wd2duckdb_spark.streaming import lake_index
+    from wd2duckdb_spark.streaming.lake_index import _IN_THRESHOLD_CONF
     from wd2duckdb_spark.streaming.simhash_sig import (
-        _history_hamming_dups,
+        _hamming_verify,
         _sig_banded_keys,
     )
 
@@ -736,17 +734,20 @@ def test_simhash_ingest_probe_prunes_index_scan(spark, tmp_path, monkeypatch):
     keys = [r.key for r in keys_df.select("key").distinct().collect()]
     assert len(keys) > 2
 
-    monkeypatch.setattr(dedup_ingest, "PROBE_CHUNK", 2)
+    def run_probe():
+        return lake_index.probe(
+            keys_df.select("tbl", "key", "doc_id", F.col("sim").alias("_new_sim")),
+            seen,
+            on=["tbl", "key"],
+            prune_col="key",
+            verify=_hamming_verify(SIMHASH_HAMMING),
+        )
+
+    monkeypatch.setattr(lake_index, "PROBE_CHUNK", 2)
     old = spark.conf.get(_IN_THRESHOLD_CONF)
     spark.conf.set(_IN_THRESHOLD_CONF, "3")
     try:
-        probe = _history_hamming_dups(
-            keys_df,
-            seen,
-            hamming=SIMHASH_HAMMING,
-            n_keys=len(keys),
-            probe_keys=keys,
-        )
+        probe = run_probe()
         plan = probe._jdf.queryExecution().executedPlan().toString()
     finally:
         spark.conf.set(_IN_THRESHOLD_CONF, old)
@@ -755,20 +756,14 @@ def test_simhash_ingest_probe_prunes_index_scan(spark, tmp_path, monkeypatch):
     assert "BroadcastHashJoin" in plan
 
     got = sorted(r.doc_id for r in probe.collect())
-    unpruned = sorted(
-        r.doc_id
-        for r in _history_hamming_dups(
-            keys_df,
-            seen,
-            hamming=SIMHASH_HAMMING,
-            n_keys=len(keys),
-            probe_keys=None,
-        ).collect()
-    )
+    monkeypatch.setattr(lake_index, "MAX_PROBE_CHUNKS", 0)  # full scan
+    unpruned = sorted(r.doc_id for r in run_probe().collect())
     assert got == unpruned == [3]
 
 
-def test_simhash_ingest_probe_streams_index_not_broadcast(spark, tmp_path):
+def test_simhash_ingest_probe_streams_index_not_broadcast(
+    spark, tmp_path, monkeypatch
+):
     """Join orientation at scale: the history probe broadcasts the
     MICRO-BATCH side and streams the signature index — the index
     FileScan must be the streamed (first) child, never inside the
@@ -777,8 +772,9 @@ def test_simhash_ingest_probe_streams_index_not_broadcast(spark, tmp_path):
         SIMHASH_HAMMING,
         simhash_signatures,
     )
+    from wd2duckdb_spark.streaming import lake_index
     from wd2duckdb_spark.streaming.simhash_sig import (
-        _history_hamming_dups,
+        _hamming_verify,
         _sig_banded_keys,
     )
 
@@ -794,14 +790,15 @@ def test_simhash_ingest_probe_streams_index_not_broadcast(spark, tmp_path):
     batch = spark.createDataFrame(
         [_doc(2, "alpha beta gamma delta epsilon")], DOC_SCHEMA
     )
-    probe = _history_hamming_dups(
+    monkeypatch.setattr(lake_index, "MAX_PROBE_CHUNKS", 0)  # full scan
+    probe = lake_index.probe(
         _sig_banded_keys(
             simhash_signatures(batch), blocks=4, hamming=SIMHASH_HAMMING
-        ),
+        ).select("tbl", "key", "doc_id", F.col("sim").alias("_new_sim")),
         seen,
-        hamming=SIMHASH_HAMMING,
-        n_keys=4,
-        probe_keys=None,
+        on=["tbl", "key"],
+        prune_col="key",
+        verify=_hamming_verify(SIMHASH_HAMMING),
     )
     plan = probe._jdf.queryExecution().executedPlan().toString()
     assert "BroadcastHashJoin" in plan

@@ -733,7 +733,9 @@ def test_neardup_ingest_one_batch_equals_batch_twin(spark, tmp_path):
     assert stream_kept == twin_kept
 
 
-def test_neardup_ingest_probe_streams_index_not_broadcast(spark, tmp_path):
+def test_neardup_ingest_probe_streams_index_not_broadcast(
+    spark, tmp_path, monkeypatch
+):
     """VERDICT r3 item 1: the history-index probe must broadcast the
     MICRO-BATCH side and stream the index — never build/broadcast the
     ever-growing index relation. Pinned on the executed plan: the
@@ -741,7 +743,7 @@ def test_neardup_ingest_probe_streams_index_not_broadcast(spark, tmp_path):
     bands (the index FileScan appears BEFORE the BroadcastExchange in
     the tree, i.e. it is the streamed first child)."""
     from wd2duckdb_spark.functions.dedup import band_keys
-    from wd2duckdb_spark.streaming.dedup_ingest import _history_dups
+    from wd2duckdb_spark.streaming import lake_index
 
     index_dir = str(tmp_path / "index")
     schema = "doc_id long, text string, lang string, source string, n_chars long"
@@ -754,7 +756,13 @@ def test_neardup_ingest_probe_streams_index_not_broadcast(spark, tmp_path):
     batch = spark.createDataFrame(
         [(2, "alpha beta gamma delta epsilon", "en", "w", 30)], schema
     )
-    probe = _history_dups(band_keys(batch), seen)
+    monkeypatch.setattr(lake_index, "MAX_PROBE_CHUNKS", 0)  # full scan
+    probe = lake_index.probe(
+        band_keys(batch).select("band", "key", "doc_id"),
+        seen,
+        on=["band", "key"],
+        prune_col="key",
+    )
     plan = probe._jdf.queryExecution().executedPlan().toString()
     assert "BroadcastHashJoin" in plan
     # the index parquet scan must be the STREAMED side: in the plan
@@ -896,11 +904,8 @@ def test_neardup_ingest_probe_prunes_index_scan(spark, tmp_path, monkeypatch):
     PROBE_CHUNK chunk unioned) — and the pruned probe finds exactly
     the same dups as the unpruned broadcast probe."""
     from wd2duckdb_spark.functions.dedup import band_keys
-    from wd2duckdb_spark.streaming import dedup_ingest
-    from wd2duckdb_spark.streaming.dedup_ingest import (
-        _IN_THRESHOLD_CONF,
-        _history_dups,
-    )
+    from wd2duckdb_spark.streaming import lake_index
+    from wd2duckdb_spark.streaming.lake_index import _IN_THRESHOLD_CONF
 
     schema = "doc_id long, text string, lang string, source string, n_chars long"
     hist = spark.createDataFrame(
@@ -921,16 +926,19 @@ def test_neardup_ingest_probe_prunes_index_scan(spark, tmp_path, monkeypatch):
         ],
         schema,
     )
-    bands = band_keys(batch)
+    bands = band_keys(batch).select("band", "key", "doc_id")
     keys = [r.key for r in bands.select("key").distinct().collect()]
     assert len(keys) > 2  # precondition: multiple chunks below
 
+    def run_probe():
+        return lake_index.probe(bands, seen, on=["band", "key"], prune_col="key")
+
     # force multi-chunk unioned branches
-    monkeypatch.setattr(dedup_ingest, "PROBE_CHUNK", 2)
+    monkeypatch.setattr(lake_index, "PROBE_CHUNK", 2)
     old = spark.conf.get(_IN_THRESHOLD_CONF)
     spark.conf.set(_IN_THRESHOLD_CONF, "3")
     try:
-        probe = _history_dups(bands, seen, n_keys=len(keys), probe_keys=keys)
+        probe = run_probe()
         plan = probe._jdf.queryExecution().executedPlan().toString()
     finally:
         spark.conf.set(_IN_THRESHOLD_CONF, old)
@@ -939,22 +947,20 @@ def test_neardup_ingest_probe_prunes_index_scan(spark, tmp_path, monkeypatch):
     assert "BroadcastHashJoin" in plan  # join tier unchanged
 
     got = sorted(r.doc_id for r in probe.collect())
-    unpruned = sorted(
-        r.doc_id for r in _history_dups(bands, seen).collect()
-    )
+    monkeypatch.setattr(lake_index, "MAX_PROBE_CHUNKS", 0)  # full scan
+    unpruned = sorted(r.doc_id for r in run_probe().collect())
     assert got == unpruned == [3]
 
 
-def test_neardup_ingest_catchup_batch_uses_shuffled_hash_join(spark, tmp_path):
+def test_neardup_ingest_catchup_batch_uses_shuffled_hash_join(
+    spark, tmp_path, monkeypatch
+):
     """ADVICE r4 (medium): a catch-up batch past MAX_BROADCAST_KEYS
     must NOT be broadcast (unbounded build → driver OOM); the probe
     falls back to a shuffled-hash join with the batch side as the
     hinted build, and still finds the same dups."""
     from wd2duckdb_spark.functions.dedup import band_keys
-    from wd2duckdb_spark.streaming.dedup_ingest import (
-        MAX_BROADCAST_KEYS,
-        _history_dups,
-    )
+    from wd2duckdb_spark.streaming import lake_index
 
     schema = "doc_id long, text string, lang string, source string, n_chars long"
     hist = spark.createDataFrame(
@@ -971,8 +977,13 @@ def test_neardup_ingest_catchup_batch_uses_shuffled_hash_join(spark, tmp_path):
         ],
         schema,
     )
-    probe = _history_dups(
-        band_keys(batch), seen, n_keys=MAX_BROADCAST_KEYS + 1
+    # the batch's 8 band-key rows exceed the broadcast cap
+    monkeypatch.setattr(lake_index, "MAX_BROADCAST_KEYS", 1)
+    probe = lake_index.probe(
+        band_keys(batch).select("band", "key", "doc_id"),
+        seen,
+        on=["band", "key"],
+        prune_col="key",
     )
     plan = probe._jdf.queryExecution().executedPlan().toString()
     assert "ShuffledHashJoin" in plan, plan
@@ -1109,11 +1120,11 @@ def test_neardup_ingest_metrics_sidecar(spark, tmp_path):
     (batch_id, n_in, n_dups, n_kept) row under out_dir/_metrics;
     totals reconcile with the kept corpus; the underscore dir is
     invisible to plain readers of out_dir; a replayed batch
-    OVERWRITES its row instead of duplicating it."""
-    from wd2duckdb_spark.streaming.dedup_ingest import (
-        _batch_dedup,
-        ingest_metrics,
-    )
+    OVERWRITES its row instead of duplicating it. n_kept is the
+    measured row count of the kept write: a batch that repeats a
+    doc_id duplicating history drops both rows and says so."""
+    from wd2duckdb_spark.streaming.dedup_ingest import _batch_dedup
+    from wd2duckdb_spark.streaming.lake_index import batch_metrics
 
     base = "the quick brown fox jumps over the lazy dog again and again"
     schema = "doc_id long, text string, lang string, source string, n_chars long"
@@ -1133,7 +1144,7 @@ def test_neardup_ingest_metrics_sidecar(spark, tmp_path):
     _batch_dedup(b0, 0, index_dir, out_dir)
     _batch_dedup(b1, 1, index_dir, out_dir)
 
-    m = {r.batch_id: r for r in ingest_metrics(spark, out_dir).collect()}
+    m = {r.batch_id: r for r in batch_metrics(spark, out_dir).collect()}
     assert m[0].n_in == 2 and m[0].n_dups == 0 and m[0].n_kept == 2
     assert m[1].n_in == 2 and m[1].n_dups == 1 and m[1].n_kept == 1
 
@@ -1145,8 +1156,26 @@ def test_neardup_ingest_metrics_sidecar(spark, tmp_path):
     }
 
     _batch_dedup(b1, 1, index_dir, out_dir)  # replay
-    rows = ingest_metrics(spark, out_dir).collect()
+    rows = batch_metrics(spark, out_dir).collect()
     assert [r.batch_id for r in rows] == [0, 1]
+
+    # doc 5 arrives twice and copies history (doc 1): both rows drop
+    dup_of_history = (5, base, "en", "w", len(base))
+    b2 = spark.createDataFrame(
+        [
+            dup_of_history,
+            dup_of_history,
+            (6, "yet another unrelated document mentioning columnar shuffles", "en", "w", 58),
+        ],
+        schema,
+    )
+    _batch_dedup(b2, 2, index_dir, out_dir)
+    m2 = {r.batch_id: r for r in batch_metrics(spark, out_dir).collect()}[2]
+    assert (m2.n_in, m2.n_dups, m2.n_kept) == (3, 2, 1)
+    kept = spark.read.parquet(out_dir)
+    assert kept.count() == sum(
+        r.n_kept for r in batch_metrics(spark, out_dir).collect()
+    )
 
 
 @pytest.mark.slow
@@ -1157,7 +1186,7 @@ def test_neardup_ingest_catchup_tier_end_to_end(spark, tmp_path, monkeypatch):
     MAX_BROADCAST_KEYS so a normal batch lands in the catch-up
     regime, and compare against an identical run at default
     thresholds."""
-    from wd2duckdb_spark.streaming import dedup_ingest
+    from wd2duckdb_spark.streaming import lake_index
     from wd2duckdb_spark.streaming.dedup_ingest import _batch_dedup
 
     base = "the quick brown fox jumps over the lazy dog again and again"
@@ -1184,7 +1213,7 @@ def test_neardup_ingest_catchup_tier_end_to_end(spark, tmp_path, monkeypatch):
         )
 
     default_kept = run("default")
-    monkeypatch.setattr(dedup_ingest, "MAX_BROADCAST_KEYS", 1)
+    monkeypatch.setattr(lake_index, "MAX_BROADCAST_KEYS", 1)
     catchup_kept = run("catchup")
     assert catchup_kept == default_kept
     assert 200 in catchup_kept  # the genuinely-new doc survived
@@ -1194,9 +1223,9 @@ def test_neardup_ingest_zero_key_batch_skips_probe(spark, tmp_path, monkeypatch)
     """VERDICT r5 item 5: a batch whose docs all emit zero band keys
     (< 3 tokens → no shingles) can hit nothing in the index — the
     probe join must be skipped entirely, not built as a full-scan
-    broadcast join over zero rows. Pinned by making _history_dups
-    explode if touched; every tiny doc is kept."""
-    from wd2duckdb_spark.streaming import dedup_ingest
+    broadcast join over zero rows. Pinned by making the probe's join
+    builder explode if touched; every tiny doc is kept."""
+    from wd2duckdb_spark.streaming import lake_index
     from wd2duckdb_spark.streaming.dedup_ingest import _batch_dedup
 
     schema = "doc_id long, text string, lang string, source string, n_chars long"
@@ -1209,7 +1238,7 @@ def test_neardup_ingest_zero_key_batch_skips_probe(spark, tmp_path, monkeypatch)
     def _boom(*a, **k):  # pragma: no cover - the assertion IS not-called
         raise AssertionError("probe join built for a zero-key batch")
 
-    monkeypatch.setattr(dedup_ingest, "_history_dups", _boom)
+    monkeypatch.setattr(lake_index, "_join", _boom)
     tiny = spark.createDataFrame(
         [(2, "hi", "en", "w", 2), (3, "one two", "en", "w", 7)], schema
     )
@@ -1223,10 +1252,10 @@ def test_neardup_ingest_in_threshold_raise_is_monotonic(spark, tmp_path):
     be monotonic and never restored — a per-batch set/restore pair
     races between concurrent ingest streams sharing the session. An
     already-higher value stays; a lower one is raised and stays."""
-    from wd2duckdb_spark.streaming.dedup_ingest import (
+    from wd2duckdb_spark.streaming.dedup_ingest import _batch_dedup
+    from wd2duckdb_spark.streaming.lake_index import (
         _IN_THRESHOLD_CONF,
         PROBE_CHUNK,
-        _batch_dedup,
     )
 
     schema = "doc_id long, text string, lang string, source string, n_chars long"
@@ -1246,22 +1275,60 @@ def test_neardup_ingest_in_threshold_raise_is_monotonic(spark, tmp_path):
         spark.conf.set(_IN_THRESHOLD_CONF, old)
 
 
+def test_neardup_ingest_batch_job_count(spark, tmp_path):
+    """One micro-batch over an existing index runs a fixed number of
+    Spark jobs: the probe's key count and key collect, the broadcasts,
+    the kept and index writes and the sidecar write. The per-batch
+    counts ride on the kept write as an observation. Counting them with
+    two ``count()`` calls (n_dups, n_in) costs a shuffle-map job and a
+    result job each, and caching the dup set for those counts one more
+    job: 21 jobs that way, 16 now, so a reintroduced count job fails
+    this pin."""
+    from wd2duckdb_spark.streaming.dedup_ingest import _batch_dedup
+
+    base = "the quick brown fox jumps over the lazy dog again and again"
+    schema = "doc_id long, text string, lang string, source string, n_chars long"
+    index_dir, out_dir = str(tmp_path / "index"), str(tmp_path / "out")
+    b0 = spark.createDataFrame(
+        [(1, base, "en", "w", len(base)), (2, "tiny doc", "en", "w", 8)],
+        schema,
+    )
+    b1 = spark.createDataFrame(
+        [
+            (3, base.replace("dog", "cat"), "en", "w", len(base)),
+            (4, "completely different content about distributed query engines", "en", "w", 60),
+        ],
+        schema,
+    )
+    _batch_dedup(b0, 0, index_dir, out_dir)
+    sc = spark.sparkContext
+    group = f"batch-job-count-{tmp_path.name}"
+    sc.setJobGroup(group, "one micro-batch over an existing index")
+    try:
+        _batch_dedup(b1, 1, index_dir, out_dir)
+    finally:
+        for k in ("spark.jobGroup.id", "spark.job.description",
+                  "spark.job.interruptOnCancel"):
+            sc.setLocalProperty(k, None)
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 16
+    assert sorted(
+        r.doc_id for r in spark.read.parquet(out_dir).collect()
+    ) == [1, 2, 4]
+
+
 @pytest.mark.slow
 def test_neardup_ingest_midband_probe_still_prunes(spark, tmp_path, monkeypatch):
     """VERDICT r5 item 1: the pruned regime must extend through the
     mid-band — more than the old 16 scan branches (the cliff is
-    per-branch IN depth, never branch count). 25 branches of chunked
+    per-branch IN depth, never branch count). 28 branches of chunked
     IN predicates reach the scan and agree with the unpruned probe."""
     from wd2duckdb_spark.functions.dedup import band_keys
-    from wd2duckdb_spark.streaming import dedup_ingest
-    from wd2duckdb_spark.streaming.dedup_ingest import (
-        _IN_THRESHOLD_CONF,
-        _history_dups,
-    )
+    from wd2duckdb_spark.streaming import lake_index
+    from wd2duckdb_spark.streaming.lake_index import _IN_THRESHOLD_CONF
 
     # the constant itself is part of the contract: ≥ 64 branches
     # (12,800 keys at PROBE_CHUNK=200) stay in the pruned regime
-    assert dedup_ingest.MAX_PROBE_CHUNKS >= 64
+    assert lake_index.MAX_PROBE_CHUNKS >= 64
 
     schema = "doc_id long, text string, lang string, source string, n_chars long"
     hist = spark.createDataFrame(
@@ -1282,26 +1349,33 @@ def test_neardup_ingest_midband_probe_still_prunes(spark, tmp_path, monkeypatch)
              "en", "w", 60),
             (101, "fresh content nothing like anything seen before today",
              "en", "w", 54),
+        ]
+        # fresh docs with disjoint words: > 16 branches even at chunk
+        # size 2 (14 docs × 4 band keys = 56 keys = 28 chunks)
+        + [
+            (102 + j, " ".join(f"fresh{j}w{t}" for t in range(8)), "en", "w", 60)
+            for j in range(12)
         ],
         schema,
     )
-    bands = band_keys(batch)
-    keys = sorted({r.key for r in bands.select("key").collect()})
-    # pad with synthetic keys so the chunking yields >16 branches even
-    # at chunk size 2 (pure supersets keep join semantics untouched)
-    keys += [f"00000000000000000000000000000{i:03d}" for i in range(50 - len(keys))]
-    monkeypatch.setattr(dedup_ingest, "PROBE_CHUNK", 2)
+    bands = band_keys(batch).select("band", "key", "doc_id")
+
+    def run_probe():
+        return lake_index.probe(bands, seen, on=["band", "key"], prune_col="key")
+
+    monkeypatch.setattr(lake_index, "PROBE_CHUNK", 2)
     old = spark.conf.get(_IN_THRESHOLD_CONF)
     spark.conf.set(_IN_THRESHOLD_CONF, "3")
     try:
-        probe = _history_dups(bands, seen, n_keys=len(keys), probe_keys=keys)
+        probe = run_probe()
         plan = probe._jdf.queryExecution().executedPlan().toString()
     finally:
         spark.conf.set(_IN_THRESHOLD_CONF, old)
     assert plan.count("In(key") >= 17, plan  # > the old 16-branch cap
     assert "BroadcastHashJoin" in plan
     got = sorted(r.doc_id for r in probe.collect())
-    unpruned = sorted(r.doc_id for r in _history_dups(bands, seen).collect())
+    monkeypatch.setattr(lake_index, "MAX_PROBE_CHUNKS", 0)  # full scan
+    unpruned = sorted(r.doc_id for r in run_probe().collect())
     assert got == unpruned == [100]
 
 
@@ -1440,7 +1514,7 @@ def test_archive_signatures_folds_partials_losslessly(spark, tmp_path):
     } == before
     # swap hygiene: no staging/backup dirs left behind
     assert not os.path.exists(sig_dir + "._compact")
-    assert not os.path.exists(sig_dir + "._prearchive")
+    assert not os.path.exists(sig_dir + "._precompact")
 
 @pytest.mark.slow
 def test_source_signature_stream_auto_archive(spark, tmp_path):
@@ -1502,7 +1576,7 @@ def test_source_signature_stream_auto_archive(spark, tmp_path):
     assert auto == plain == twin and auto
     # swap hygiene: no staging/backup dirs left behind by in-stream folds
     assert not os.path.exists(sig_auto + "._compact")
-    assert not os.path.exists(sig_auto + "._prearchive")
+    assert not os.path.exists(sig_auto + "._precompact")
 
 
 @pytest.mark.slow

@@ -1,14 +1,12 @@
-"""Persisted IVF ANN index with ingest-time maintenance (VERDICT r10
-item 2).
+"""Persisted IVF ANN index with ingest-time maintenance.
 
 The session-memoized IVF path (:mod:`wd2duckdb_spark.functions.
 similarity` — ``q_ivf_ann_topk``) re-derives every vector's cell
 assignment from the full embeddings table on each query: correct, but
 the "index" dies with the session. Production similarity search
 builds the index ONCE (train on a sample, write assignments + the
-centroid table to the lake) and maintains it AT INGEST — exactly the
-protocol the dedup tier already has for its MinHash band-key index
-(streaming/dedup_ingest.py). This module is that protocol applied to
+centroid table to the lake) and maintains it AT INGEST — the lake-index
+protocol (streaming/lake_index.py) the dedup tiers share, applied to
 IVF:
 
 - :func:`ivf_index_write` — bootstrap: assign every existing vector
@@ -28,10 +26,9 @@ IVF:
   each micro-batch of new vectors is assigned against the PERSISTED
   centroids (read once per session per index — memoized; the
   assignment rule therefore cannot drift between bootstrap and
-  stream) and overwrite-written to ``assignments/batch=<id>`` — the
-  same replay-idempotent protocol as the dedup index: a replayed
-  micro-batch (restart after crash) rewrites its own partition
-  instead of duplicating it.
+  stream) and overwrite-written to ``assignments/batch=<id>``, so a
+  replayed micro-batch (restart after crash) rewrites its own
+  partition instead of duplicating it.
 
 - :func:`ivf_index_probe` — query: nprobe nearest cells are picked
   DRIVER-SIDE from the tiny centroid table, and the assignments scan
@@ -79,6 +76,7 @@ from wd2duckdb_spark.functions.similarity import (
     pq_code_col,
     query_vector,
 )
+from wd2duckdb_spark.streaming import lake_index
 
 #: (applicationId, index_dir) → [(cid, vector)] — the persisted
 #: centroid table is immutable after bootstrap (frozen-centroid
@@ -138,6 +136,12 @@ def l2_assign_col(
 INDEX_ATTR_COLS = ("label",)
 
 
+def _valid_vector() -> Column:
+    """Schema contract of an indexable vector; other rows are
+    quarantined."""
+    return F.col("embedding").isNotNull() & (F.size("embedding") == EMB_DIM)
+
+
 def _assigned_rows(
     vecs: DataFrame,
     cents: list[tuple[int, list[float]]],
@@ -160,10 +164,7 @@ def _assigned_rows(
     if assign not in ("cosine", "l2"):
         raise ValueError(f"unknown assign rule {assign!r}")
     out = (
-        vecs.filter(
-            F.col("embedding").isNotNull()
-            & (F.size("embedding") == EMB_DIM)  # schema contract
-        )
+        vecs.filter(_valid_vector())
         .withColumn("v", _as_double(F.col("embedding")))
         .withColumn("nv", norm(F.col("v")))
         .withColumn("cell", cell)
@@ -216,7 +217,7 @@ def ivf_index_write(
         )
         .write.mode("error")
         .partitionBy("cell")
-        .parquet(f"{index_dir}/assignments/batch=-1")
+        .parquet(f"{index_dir}/assignments/batch={lake_index.ARCHIVE_BATCH}")
     )
 
 
@@ -232,47 +233,29 @@ def ann_index_ingest(
     bootstrap's code columns once per session (schema probe, no
     data read).
 
-    A per-batch accounting sidecar (the streaming face of the
-    reference's progress reporting, same protocol as the dedup
-    tier's ``_metrics``) records arrivals vs indexed rows — the
-    difference is the schema-contract quarantine (NULL/ragged
-    vectors), the number an index operator watches for feed rot.
-    Underscore dir, invisible to assignments readers; overwrite
-    keeps replays idempotent like the data write."""
+    The per-batch sidecar (``lake_index.batch_metrics(spark,
+    index_dir)``) records arrivals vs indexed rows — the difference is
+    the schema-contract quarantine (NULL/ragged vectors), the number an
+    index operator watches for feed rot; ``sum(n_indexed)`` reconciles
+    with the assignments table minus the bootstrap."""
     spark = batch_df.sparkSession
     cents = _index_centroids(spark, index_dir)
     codebook = _index_codebook_if_stored(spark, index_dir)
-    batch_df = batch_df.persist()  # feeds the assign AND the count
-    try:
-        assigned = _assigned_rows(batch_df, cents, codebook).persist()
-        try:
-            assigned.write.mode("overwrite").partitionBy("cell").parquet(
-                f"{index_dir}/assignments/batch={batch_id}"
-            )
-            n_in = batch_df.count()
-            n_indexed = assigned.count()
-            spark.createDataFrame(
-                [(batch_id, n_in, n_indexed, n_in - n_indexed)],
-                "batch_id long, n_in long, n_indexed long, n_quarantined long",
-            ).coalesce(1).write.mode("overwrite").parquet(
-                f"{index_dir}/_metrics/batch={batch_id}"
-            )
-        finally:
-            assigned.unpersist()
-    finally:
-        batch_df.unpersist()
-
-
-def ann_index_metrics(spark: SparkSession, index_dir: str) -> DataFrame:
-    """Per-micro-batch index-maintenance accounting (n_in / n_indexed
-    / n_quarantined per batch) — read it to monitor dirty-vector rate
-    over time or reconcile totals against the assignments table
-    (``sum(n_indexed) == count(assignments) − bootstrap``, asserted
-    in tests)."""
-    return (
-        spark.read.parquet(f"{index_dir}/_metrics")
-        .select("batch_id", "n_in", "n_indexed", "n_quarantined")
-        .orderBy("batch_id")
+    src, obs = lake_index.observe_rows(batch_df, _valid_vector())
+    lake_index.write_batch(
+        _assigned_rows(src, cents, codebook),
+        f"{index_dir}/assignments",
+        batch_id,
+        cell=True,
+    )
+    n = obs.get
+    lake_index.write_metrics(
+        spark,
+        index_dir,
+        batch_id,
+        n_in=n["n_in"],
+        n_indexed=n["n_kept"],
+        n_quarantined=n["n_in"] - n["n_kept"],
     )
 
 
@@ -538,46 +521,24 @@ def ivf_pq_index_probe(
     )
 
 
-#: Partition value of the bootstrap/archive tier. Structured
-#: Streaming batch ids start at 0, so -1 never collides with a live
-#: batch (same convention as the dedup index's ARCHIVE_BATCH).
-BOOTSTRAP_BATCH = -1
-
-
 def compact_ann_index(
     spark: SparkSession, index_dir: str, through_batch: int
 ) -> None:
     """Fold every assignments ``batch=<id>`` partition with id ≤
     ``through_batch`` (plus the bootstrap) into ONE ``batch=-1``
     partition, preserving the ``cell`` sub-partitioning the probe's
-    directory pruning depends on — the ANN face of the dedup tier's
-    ``archive_index``: after B micro-batches the probe otherwise
-    lists B×n_cells directories. Batches later than ``through_batch``
-    pass through untouched (they may still be replayed by a restarted
-    stream; the stream must be STOPPED past ``through_batch`` when
-    this runs — same offline contract as the dedup archive).
-    Idempotent: re-folding with the same ``through_batch`` rewrites
-    the same rows into the same layout. Crash-safe via the shared
-    staging swap (:func:`wd2duckdb_spark.maintenance.swap_in`)."""
-    from wd2duckdb_spark.maintenance import swap_in
-
-    path = f"{index_dir}/assignments"
-    a = spark.read.parquet(path)
-    folded = a.withColumn(
-        "batch",
-        F.when(
-            F.col("batch") <= through_batch, F.lit(BOOTSTRAP_BATCH)
-        ).otherwise(F.col("batch")),
+    directory pruning depends on — after B micro-batches the probe
+    otherwise lists B×n_cells directories. :func:`lake_index.fold`
+    refuses the newest batch (a restarted stream may replay it, and it
+    would then be indexed twice) and swaps the rewrite in crash-safely;
+    re-folding with the same ``through_batch`` is idempotent."""
+    lake_index.fold(
+        spark,
+        f"{index_dir}/assignments",
+        through_batch,
+        lambda df: df.repartition("batch", "cell"),
+        cell=True,
     )
-    tmp = path.rstrip("/") + "._compact"
-    backup = path.rstrip("/") + "._precompact"
-    (
-        folded.repartition("batch", "cell")
-        .write.mode("overwrite")
-        .partitionBy("batch", "cell")
-        .parquet(tmp)
-    )
-    swap_in(spark, path, tmp, backup, op="compact_ann_index")
 
 
 # ---------------------------------------------------------------------------

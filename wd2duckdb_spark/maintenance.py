@@ -139,7 +139,7 @@ def swap_in(
     ``path``, delete ``backup``. A crash at any point leaves either
     the original or the backup intact; recovery is renaming the
     ``._precompact`` backup into place. Shared by every offline
-    rewrite (compact_partitioned, dedup_ingest.archive_index)."""
+    rewrite (compact_partitioned, lake_index.fold)."""
     jvm, fs = _fs(spark, path)
     Path = jvm.org.apache.hadoop.fs.Path
     fs.delete(Path(backup), True)

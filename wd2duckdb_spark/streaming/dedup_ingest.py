@@ -7,8 +7,9 @@ pipeline has no streaming tier; this extends the batch
 ``functions.dedup`` semantics to a feed): ``dedup_stream`` (exact
 keys, watermark-bounded state) repairs at-least-once delivery;
 THIS stage enforces corpus-level content uniqueness — its state is
-the whole history, so it lives in a parquet index on the lake, not in
-the state store:
+the whole history, so it lives in a lake index
+(:mod:`~wd2duckdb_spark.streaming.lake_index`, which owns the append,
+replay, probe and fold rules), not in the state store:
 
 - per micro-batch, compute each doc's LSH band keys
   (:func:`wd2duckdb_spark.functions.dedup.band_keys` — the same
@@ -19,62 +20,15 @@ the state store:
   batch (bucket-min keep rule — the batch tier's canonical-min
   convention);
 - kept docs append to ``out_dir``; ALL docs' band keys (kept AND
-  dropped) append to ``index_dir``. Indexing dropped docs too keeps
-  the cross-batch rule aligned with the batch twin
-  (``q_lsh_keep_list``, whose window-min ranges over every doc): a
-  later doc near-duplicating only a DROPPED doc is still a duplicate
-  of previously-seen content and must be dropped — keep decisions
-  then do not depend on where micro-batch boundaries fell. Both
-  writes go to ``batch=<id>`` subdirectories with overwrite, so a
-  REPLAYED micro-batch (restart after crash) rewrites its own output
-  instead of duplicating it — idempotent, exactly-once end to end.
+  dropped) append to ``index_dir``, so the cross-batch rule matches
+  the batch twin ``q_lsh_keep_list``, whose window-min ranges over
+  every doc.
 
-The index's absence is checked EXPLICITLY with the FileSystem API
-(same discipline as ``maintenance.upsert_stream``), and "absent"
-means NO COMMITTED DATA FILE anywhere under ``index_dir`` — a crash
-during the very first index write can leave ``batch=0/_temporary``
-droppings, and a name-only check would then read an empty dataset
-("unable to infer schema") and wedge the stream on every retry. A
-transient read error still fails the batch (Structured Streaming
-retries it), not mistaken for "first batch" — which would silently
-admit every near-duplicate of the prior corpus.
-
-Scale: the only join against history is the index probe, tiered on
-the micro-batch's band-key count (:func:`_history_dups`):
-
-- **pruned regime** (≤ ``PROBE_CHUNK × MAX_PROBE_CHUNKS`` keys — the
-  rate-limited steady state): the batch's distinct keys are pushed
-  into the index SCAN as chunked ``key IN (...)`` filters, so with
-  the key-sorted, small-row-group layout :func:`_batch_dedup` writes
-  (min/max footer stats per ~256 KB row group — INDEX_ROW_GROUP_BYTES),
-  probe BYTES READ stay ~flat as the index grows — only row groups whose key range
-  intersects the batch are decoded. The surviving rows then hit the
-  usual ``seen ⋈ broadcast(bands)`` (batch side is the build). The
-  IN list is chunked at ``PROBE_CHUNK`` values per scan branch
-  because Spark pushes an IN to parquet as a LEFT-DEEP OR chain
-  whose recursive evaluation overflows the task stack somewhere
-  past ~1k values (measured: 1024 ok, 2048 SO on this JVM; the
-  exact cliff moves with JIT state, so the cap keeps 5× margin).
-- **broadcast regime** (≤ ``MAX_BROADCAST_KEYS``): same join, full
-  index scan — the batch is still safely broadcast-sized but too
-  many keys to pushdown-prune.
-- **catch-up regime** (beyond that — an unbounded availableNow
-  backlog batch): an explicit broadcast would OOM the driver
-  (Spark hard-fails broadcasts > 8 GB), so the probe falls back to
-  a SHUFFLED-HASH join with the BATCH side as the hinted build.
-  History shuffles once in this regime; that is the price of an
-  unbounded batch — callers that care should rate-limit the source
-  (``maxFilesPerTrigger`` / ``maxBytesPerTrigger``), which also
-  keeps batches inside the pruned regime.
-
-A left-semi with the batch on the left would be wrong at scale in
-all three tiers: Spark supports LeftSemi builds only on the right,
-so past the broadcast threshold the ENTIRE band-key history would
-shuffle every micro-batch. Index growth is ~N_BANDS rows per
-ingested doc; rewrites (``maintenance.compact_partitioned`` /
-:func:`compact_index`) must PRESERVE the ``batch=<id>`` partition
-layout — it carries the replay filter — and re-sort by ``key`` so
-compaction keeps the pruning property.
+The index is key-sorted in small row groups, the layout the pruned
+probe skips row groups on. Index growth is ~N_BANDS rows per ingested
+doc; rewrites (:func:`compact_index`, :func:`archive_index`) preserve
+the ``batch=<id>`` partitions, which carry the replay filter, and the
+key sort.
 
 Docs with fewer than 3 tokens emit no shingles, hence no band keys,
 and are always kept — same contract as the batch tier.
@@ -82,246 +36,37 @@ and are always kept — same contract as the batch tier.
 
 from __future__ import annotations
 
+import math
+
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from wd2duckdb_spark.functions.dedup import band_keys
-
-#: Max IN-list values per pushed scan branch. Spark translates a
-#: pushed In to a left-deep parquet OR chain evaluated recursively;
-#: task threads StackOverflow past ~1-2k values (JIT-dependent), so
-#: each branch stays far below the measured cliff.
-PROBE_CHUNK = 200
-#: Max scan branches unioned in the pruned regime (all branches share
-#: one FileIndex, so listing happens once; each branch decodes only
-#: the pages its key chunk can touch). The cliff that motivates a cap
-#: is per-branch IN-list DEPTH, not branch count (VERDICT r5 item 1) —
-#: measured this round: 16→512 branches scale linearly in time
-#: (~0.2 s/branch) and bytes (~0.35 MB/branch on a 2M-row index),
-#: no failure at any count. 64 extends pruning through the mid-band
-#: (12,800 keys ≈ a 3,200-doc burst) while keeping the worst-case
-#: probe ~13 s; past it a full-scan broadcast probe is cheaper at
-#: test scale and the documented trade at 100 TB is the source rate
-#: limit. Module-level so operators of huge indices can raise it —
-#: chunked-probe cost is O(batch keys), full-scan cost is O(index).
-MAX_PROBE_CHUNKS = 64
-#: Band-key count above which the micro-batch may no longer be
-#: broadcast (ADVICE r4: availableNow catch-up batches are unbounded;
-#: 1M keys ≈ 60-80 MB hashed relation — past this the probe becomes a
-#: shuffled-hash join with the batch side as build).
-MAX_BROADCAST_KEYS = 1_000_000
-#: Row-group size for index writes. The index is a lookup structure,
-#: not an analytics table, so groups are deliberately tiny (~5k keys):
-#: with the key-sorted layout each probe key decodes ONE group per
-#: file, so probe bytes ≈ n_files × n_probe_keys × group_size —
-#: independent of index size once files are large (compact_index with
-#: a big target collapses history to a handful of files). Stats
-#: overhead is ~300 B per group ≈ 0.1%.
-INDEX_ROW_GROUP_BYTES = 1 << 18
-#: Session conf consulted at scan time: IN lists longer than this are
-#: degraded to a useless min/max range push for high-entropy md5 keys.
-#: :func:`_ensure_in_threshold` raises it to PROBE_CHUNK+1 so the
-#: chunked probes push as real IN predicates. The raise is MONOTONIC
-#: and never restored (ADVICE r5 item 2): a set/restore pair around
-#: each micro-batch races with concurrent streams sharing the session
-#: (interleaved restores can pin the wrong value permanently), while
-#: leaving the threshold raised is harmless — it only changes at what
-#: IN size other queries degrade to a min/max range push.
-_IN_THRESHOLD_CONF = "spark.sql.parquet.pushdown.inFilterThreshold"
+from wd2duckdb_spark.streaming import lake_index
 
 
-def _ensure_in_threshold(spark) -> None:
-    """Raise the parquet IN-pushdown threshold to cover PROBE_CHUNK,
-    if it does not already. Idempotent and monotonic — safe under
-    concurrent ingest streams on one SparkSession (the benign race is
-    two writers setting the same value)."""
-    try:
-        cur = int(spark.conf.get(_IN_THRESHOLD_CONF))
-    except (TypeError, ValueError):
-        cur = -1
-    if cur < PROBE_CHUNK + 1:
-        spark.conf.set(_IN_THRESHOLD_CONF, str(PROBE_CHUNK + 1))
-
-
-def _has_committed_data(fs, jvm, index_dir: str) -> bool:
-    """True iff a non-hidden DATA FILE exists under ``index_dir`` —
-    directly or inside a first-level ``batch=<id>`` subdirectory.
-    Directory names alone don't count: a crashed first write leaves
-    ``batch=0/_temporary`` and nothing else, which must read as
-    "no index yet", not as a committed index (ADVICE r3)."""
-    idx_path = jvm.org.apache.hadoop.fs.Path(index_dir)
-    if not fs.exists(idx_path):
-        return False
-    for st in fs.listStatus(idx_path):
-        name = st.getPath().getName()
-        if name.startswith(("_", ".")):
-            continue
-        if st.isFile():
-            return True
-        for sub in fs.listStatus(st.getPath()):
-            if sub.isFile() and not sub.getPath().getName().startswith(
-                ("_", ".")
-            ):
-                return True
-    return False
-
-
-def _history_dups(
-    bands: DataFrame,
-    seen: DataFrame,
-    *,
-    n_keys: int = 0,
-    probe_keys: list[str] | None = None,
-) -> DataFrame:
-    """doc_ids (of the current batch) whose band keys hit the
-    persisted index.
-
-    Join orientation is the scale contract (VERDICT r3 item 1): the
-    BATCH side is the build — bounded at one micro-batch of band keys
-    — and the history index is the streamed probe side, so nothing
-    history-sized ever broadcasts, however large the corpus grows.
-    (The natural-looking ``bands.join(seen, "left_semi")`` is wrong
-    at scale: LeftSemi can only build RIGHT, i.e. broadcast the
-    index.) Three tiers, chosen by the caller-supplied ``n_keys``
-    (module docstring has the rationale):
-
-    - ``probe_keys`` given → the index scan is pre-filtered with
-      chunked pushable ``key IN (...)`` predicates (a superset of the
-      join keys, so semantics are untouched) before the broadcast
-      join: row groups outside the batch's key set are never decoded.
-    - ``n_keys`` ≤ :data:`MAX_BROADCAST_KEYS` → broadcast join over
-      the full index scan.
-    - beyond → shuffled-hash join, batch side hinted as build: an
-      unbounded catch-up batch must not be broadcast (ADVICE r4).
-      History shuffles once here — the documented cost of running
-      without a source rate limit.
-    """
-    batch_side = bands.select("band", "key", "doc_id")
-    if n_keys > MAX_BROADCAST_KEYS:
-        return (
-            seen.join(batch_side.hint("shuffle_hash"), ["band", "key"], "inner")
-            .select("doc_id")
-            .distinct()
-        )
-    if probe_keys:
-        ks = sorted(set(probe_keys))
-        chunks = [
-            ks[i : i + PROBE_CHUNK] for i in range(0, len(ks), PROBE_CHUNK)
-        ]
-        pruned = seen.filter(F.col("key").isin(chunks[0]))
-        for chunk in chunks[1:]:
-            pruned = pruned.union(seen.filter(F.col("key").isin(chunk)))
-        seen = pruned
-    return (
-        seen.join(F.broadcast(batch_side), ["band", "key"], "inner")
+def _dups(batch_df: DataFrame, bands: DataFrame, seen) -> DataFrame:
+    w = Window.partitionBy("band", "key")
+    in_batch = (
+        bands.withColumn("_mn", F.min("doc_id").over(w))
+        .filter(F.col("doc_id") > F.col("_mn"))
         .select("doc_id")
-        .distinct()
     )
+    if seen is None:
+        return in_batch
+    return lake_index.probe(
+        bands.select("band", "key", "doc_id"),
+        seen.select("band", "key"),
+        on=["band", "key"],
+        prune_col="key",
+    ).union(in_batch)
 
 
 def _batch_dedup(
     batch_df: DataFrame, batch_id: int, index_dir: str, out_dir: str
 ) -> None:
-    spark = batch_df.sparkSession
-    jvm = spark._jvm
-    hconf = spark.sparkContext._jsc.hadoopConfiguration()
-    fs = jvm.org.apache.hadoop.fs.Path(index_dir).getFileSystem(hconf)
-    index_exists = _has_committed_data(fs, jvm, index_dir)
-
-    bands = dup_ids = None
-    _ensure_in_threshold(spark)
-    # persists happen INSIDE the try: bands.count() is a real Spark
-    # job, and a transient failure there must still unwind both
-    # caches in the finally or every foreachBatch retry leaks a copy
-    try:
-        # the micro-batch feeds THREE consumers (band keys, the kept
-        # left-anti write, the sidecar count) and a foreachBatch frame
-        # re-reads its source per action — cache it for the batch's
-        # duration so the source is scanned once (review: the sidecar
-        # count was a third full source scan per batch)
-        batch_df = batch_df.persist()
-        # key-sorted within partitions: each ~INDEX_ROW_GROUP_BYTES row
-        # group of the index write below covers a narrow key range,
-        # which is what makes the next batches' IN-pushdown probes
-        # prune on min/max footer stats (no extra exchange — the sort
-        # rides the partitioning band_keys already has)
-        bands = band_keys(batch_df).sortWithinPartitions("key").persist()
-        n_keys = bands.count()  # materializes the cache; sizes the probe
-        if index_exists and n_keys > 0:  # read errors PROPAGATE (batch retried)
-            seen = (
-                spark.read.parquet(index_dir)
-                # a REPLAYED batch must not see its own keys from the
-                # crashed attempt — it would drop its docs as self-dups
-                .filter(F.col("batch") != batch_id)
-                .select("band", "key")
-            )
-            probe_keys = None
-            if n_keys <= PROBE_CHUNK * MAX_PROBE_CHUNKS:
-                # bounded collect (≤ 12,800 strings ≈ 0.8 MB): band-key
-                # rows are ≥ distinct keys, so n_keys bounds the list
-                probe_keys = [
-                    r.key for r in bands.select("key").distinct().collect()
-                ]
-            hist_dups = _history_dups(
-                bands, seen, n_keys=n_keys, probe_keys=probe_keys
-            )
-        else:
-            # genuinely the first batch — or a zero-key batch (every
-            # doc < 3 tokens emits no shingles): nothing can hit the
-            # index, so skip the probe plan entirely (VERDICT r5 item 5
-            # — the old path still built a full-scan broadcast join to
-            # join zero rows)
-            hist_dups = bands.limit(0).select("doc_id")
-        w = Window.partitionBy("band", "key")
-        batch_dups = (
-            bands.withColumn("_mn", F.min("doc_id").over(w))
-            .filter(F.col("doc_id") > F.col("_mn"))
-            .select("doc_id")
-        )
-        dup_ids = hist_dups.union(batch_dups).distinct().persist()
-
-        kept = batch_df.join(dup_ids, "doc_id", "left_anti")
-        kept.write.mode("overwrite").parquet(f"{out_dir}/batch={batch_id}")
-        # ALL band keys are indexed, dropped docs included — see module
-        # docstring (cross-batch parity with the batch twin's
-        # every-doc window-min)
-        (
-            bands.write.mode("overwrite")
-            .option("parquet.block.size", str(INDEX_ROW_GROUP_BYTES))
-            .parquet(f"{index_dir}/batch={batch_id}")
-        )
-        # per-batch accounting sidecar (the streaming face of the
-        # reference's progress reporting): drop rate per micro-batch,
-        # queryable as one tiny parquet table. Underscore dir —
-        # invisible to readers of out_dir; overwrite keeps replays
-        # idempotent like the data writes. n_dups is a count of the
-        # already-persisted dup set; n_in counts the batch-persisted
-        # frame (cached above) — bounded work per batch.
-        n_dups = dup_ids.count()
-        n_in = batch_df.count()
-        spark.createDataFrame(
-            [(batch_id, n_in, n_dups, n_in - n_dups)],
-            "batch_id long, n_in long, n_dups long, n_kept long",
-        ).coalesce(1).write.mode("overwrite").parquet(
-            f"{out_dir}/_metrics/batch={batch_id}"
-        )
-    finally:  # a failed write must not leak cached RDDs across retries
-        batch_df.unpersist()  # no-op if the persist never ran
-        if bands is not None:
-            bands.unpersist()
-        if dup_ids is not None:
-            dup_ids.unpersist()
-
-
-def ingest_metrics(spark, out_dir: str) -> DataFrame:
-    """Per-micro-batch dedup accounting written by the stage
-    (n_in / n_dups / n_kept per batch) — read it to monitor drop
-    rate over time or to reconcile totals against the kept corpus
-    (``sum(n_kept) == count(out_dir)``, asserted in tests)."""
-    return (
-        spark.read.parquet(f"{out_dir}/_metrics")
-        .select("batch_id", "n_in", "n_dups", "n_kept")
-        .orderBy("batch_id")
+    lake_index.dedup_batch(
+        batch_df, batch_id, index_dir, out_dir, sign=band_keys, dups=_dups, key="key"
     )
 
 
@@ -329,10 +74,10 @@ def compact_index(spark, index_dir: str, target_file_bytes: int = 128 << 20):
     """Compact the band-key index in place, preserving BOTH layout
     invariants the probe depends on: the ``batch=<id>`` partition
     structure (replay filter) and the key-sorted small-row-group
-    physical layout (IN-pushdown row-group pruning). Thin wrapper
-    over :func:`maintenance.compact_partitioned`; run it only while
-    the stream is stopped (the swap is not coordinated with a
-    concurrent ``foreachBatch``).
+    physical layout (row-group pruning). Thin wrapper over
+    :func:`maintenance.compact_partitioned`; run it only while the
+    stream is stopped (the swap is not coordinated with a concurrent
+    ``foreachBatch``).
 
     Refuses an index that already holds an archive partition:
     ``compact_partitioned`` hash-salts rows across files, which would
@@ -343,19 +88,12 @@ def compact_index(spark, index_dir: str, target_file_bytes: int = 128 << 20):
     idempotently."""
     from wd2duckdb_spark.maintenance import compact_partitioned
 
-    batches = {
-        r.batch
-        for r in spark.read.parquet(index_dir)
-        .select("batch")
-        .distinct()
-        .collect()
-    }
-    if ARCHIVE_BATCH in batches:
+    if lake_index.ARCHIVE_BATCH in lake_index.batches(spark, index_dir):
         raise ValueError(
-            f"compact_index: {index_dir} contains a batch={ARCHIVE_BATCH} "
-            "archive partition; hash-salted compaction would destroy its "
-            "disjoint key-range layout — use archive_index (idempotent "
-            "re-fold) instead"
+            f"compact_index: {index_dir} contains a "
+            f"batch={lake_index.ARCHIVE_BATCH} archive partition; "
+            "hash-salted compaction would destroy its disjoint key-range "
+            "layout — use archive_index (idempotent re-fold) instead"
         )
     return compact_partitioned(
         spark,
@@ -363,15 +101,10 @@ def compact_index(spark, index_dir: str, target_file_bytes: int = 128 << 20):
         "batch",
         target_file_bytes=target_file_bytes,
         sort_within=("key",),
-        write_options={"parquet.block.size": str(INDEX_ROW_GROUP_BYTES)},
+        write_options={
+            "parquet.block.size": str(lake_index.INDEX_ROW_GROUP_BYTES)
+        },
     )
-
-
-#: Partition value the archive tier folds old batches into. Structured
-#: Streaming batch ids start at 0, so -1 can never collide with a real
-#: batch and the replay filter (``batch != batch_id``) always keeps
-#: archive rows visible to probes.
-ARCHIVE_BATCH = -1
 
 
 def archive_index(
@@ -382,77 +115,35 @@ def archive_index(
 ) -> None:
     """Fold every committed ``batch=<id>`` partition with id ≤
     ``through_batch`` (and any existing archive) into ONE globally
-    key-range-sorted ``batch=-1`` archive partition.
+    key-range-sorted ``batch=-1`` archive partition
+    (:func:`lake_index.fold`, which refuses the newest batch).
 
     Why this exists: :func:`compact_index` shrinks file COUNTS but
     must keep every ``batch=<id>`` directory, so after B micro-batches
     the probe still opens ≥ B files — probe bytes grow with batch
     count even though each file prunes internally. Archiving removes
-    that term: the archive is written with ``repartitionByRange`` on
-    ``(batch, key)``, so its files cover DISJOINT key ranges and a
-    probe key touches exactly one archive file's one row group —
-    probe bytes ≈ n_probe_keys × row-group size + the few live batch
-    dirs, independent of history size. This is the steady-state
-    operational loop at 100 TB: stream → periodic archive → stream.
+    that term: the archive is range-partitioned on ``(batch, key)``, so
+    its files cover DISJOINT key ranges and a probe key touches exactly
+    one archive file's one row group — probe bytes ≈ n_probe_keys ×
+    row-group size + the few live batch dirs, independent of history
+    size. This is the steady-state operational loop at 100 TB: stream
+    → periodic archive → stream. Also folds a SimHash signature index,
+    which shares the layout."""
+    from wd2duckdb_spark.maintenance import dir_bytes
 
-    Safety: refuses to archive the HIGHEST batch id present — after a
-    crash-restart Structured Streaming replays the last (possibly
-    uncommitted) batch, and its replay filter must still be able to
-    exclude that batch's own keys, which requires them to sit in
-    their own ``batch=<id>`` partition, not the archive. Run offline
-    (stream stopped), like :func:`compact_index`; the directory swap
-    is the staged-rename protocol of ``maintenance.swap_in`` (crash
-    leaves original or backup intact). Re-running with the same
-    arguments is idempotent (the archive re-folds into itself).
-    """
-    import math
-
-    from wd2duckdb_spark.maintenance import dir_bytes, swap_in
-
-    df = spark.read.parquet(index_dir)
-    batch_vals = sorted(
-        r.batch for r in df.select("batch").distinct().collect()
-    )
-    if not batch_vals:
-        raise ValueError(
-            f"archive_index: {index_dir} holds no rows (every micro-batch "
-            "so far was empty, or the index was truncated) — nothing to "
-            "archive"
-        )
-    if through_batch >= batch_vals[-1]:
-        raise ValueError(
-            f"archive_index: through_batch={through_batch} would archive "
-            f"the most recent batch {batch_vals[-1]}, which a restart may "
-            "replay; pass through_batch < max batch id"
-        )
-    relabeled = df.withColumn(
-        "batch",
-        F.when(
-            F.col("batch") <= through_batch, F.lit(ARCHIVE_BATCH)
-        ).otherwise(F.col("batch")),
-    )
-    n_live = len([b for b in batch_vals if b > through_batch])
+    n_live = sum(b > through_batch for b in lake_index.batches(spark, index_dir))
     n = max(
         1,
         math.ceil(dir_bytes(spark, index_dir) / target_file_bytes),
         n_live + 1,
     )
-    tmp = index_dir.rstrip("/") + "._compact"
-    backup = index_dir.rstrip("/") + "._precompact"
-    (
-        # range on (batch, key): archive rows land in contiguous
-        # key-sorted cells (disjoint file ranges — the probe layout),
-        # live batches keep per-batch key-sorted files; the leading
-        # batch ordering satisfies the partitionBy writer, so no
-        # hidden re-sort scrambles the layout
-        relabeled.repartitionByRange(n, "batch", "key")
-        .sortWithinPartitions("batch", "key")
-        .write.mode("overwrite")
-        .option("parquet.block.size", str(INDEX_ROW_GROUP_BYTES))
-        .partitionBy("batch")
-        .parquet(tmp)
+    lake_index.fold(
+        spark,
+        index_dir,
+        through_batch,
+        lambda df: df.repartitionByRange(n, "batch", "key"),
+        key="key",
     )
-    swap_in(spark, index_dir, tmp, backup, op="archive_index")
 
 
 def neardup_ingest_stream(
@@ -465,28 +156,23 @@ def neardup_ingest_stream(
     """Start the dedup-at-ingest stage over a streaming ``documents``
     source; returns the StreamingQuery. Read the kept corpus with
     ``spark.read.parquet(out_dir)`` (the ``batch`` partition column
-    records provenance).
+    records provenance) and per-batch drop accounting with
+    ``lake_index.batch_metrics(spark, out_dir)``.
 
     Rate-limit the SOURCE (``maxFilesPerTrigger`` /
     ``maxBytesPerTrigger`` on the reader the caller builds) so
-    micro-batches stay inside the pruned probe regime
-    (≤ ``PROBE_CHUNK × MAX_PROBE_CHUNKS`` band keys ≈ 3,200 docs):
-    probes then read a ~flat number of index bytes regardless of
-    history size. Unlimited availableNow catch-up batches still
-    run correctly — :func:`_history_dups` degrades to a full-scan
-    broadcast probe and, past :data:`MAX_BROADCAST_KEYS`, to a
-    shuffled-hash join (never an unbounded broadcast, ADVICE r4) —
-    but they pay a full index scan/shuffle for the batch.
+    micro-batches stay inside the pruned probe regime (≤ 12,800 band
+    keys ≈ 3,200 docs): probes then read a ~flat number of index bytes
+    regardless of history size. Larger catch-up batches still run
+    correctly but pay a full index scan or shuffle.
 
-    SESSION-WIDE side effect (ADVICE r6): the first probe raises
+    Session-wide side effect: the stage raises
     ``spark.sql.parquet.pushdown.inFilterThreshold`` from its default
-    (10) to ``PROBE_CHUNK + 1`` (201) for the WHOLE SparkSession and
-    never restores it (monotonic by design — a set/restore pair races
-    with concurrent streams). Unrelated queries sharing the session
-    keep pushing IN lists of up to 200 values down to parquet as real
-    IN predicates instead of a min/max range — a perf-only behavioral
-    change, but one operators co-hosting other workloads should know
-    stays in effect after the stream stops."""
+    (10) to 201 and never restores it (``lake_index`` explains why).
+    Unrelated queries sharing the session keep pushing IN lists of up
+    to 200 values to parquet as real IN predicates instead of a min/max
+    range — a perf-only change, but one that stays in effect after the
+    stream stops."""
 
     def _fn(batch_df: DataFrame, batch_id: int) -> None:
         _batch_dedup(batch_df, batch_id, index_dir, out_dir)

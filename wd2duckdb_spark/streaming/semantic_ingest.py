@@ -22,21 +22,17 @@ in tests/test_ann_dedup_ingest.py, with the index bootstrapped from
 (:func:`wd2duckdb_spark.functions.ann_index.l2_assign_col` — floor-6
 squared-L2 argmin, bit-identical to the batch clustering).
 
-Scale: the history probe joins the micro-batch (broadcast — bounded
-at one batch of vectors) against ONLY the index cells the batch
-touches (``cell IN (…)`` over the Hive cell layout = directory-level
-pruning; cells-per-batch ≤ n_cells, a bounded driver-side list).
-Per-cell candidate volume is the SemDeDup bound: cluster-bounded,
-never corpus-quadratic. In-batch pairs are batch² per cell at worst —
-rate-limit the source like the MinHash tier. Writes are the standard
-replay-idempotent ``batch=<id>`` overwrites (index, kept corpus, and
-the ``_metrics`` accounting sidecar), so a crashed-and-replayed
-micro-batch rewrites its own output.
+Appends, replay filter and the history probe are the lake-index
+protocol (:mod:`~wd2duckdb_spark.streaming.lake_index`), pruned on the
+``cell`` partition column: a rate-limited batch's probe reads only the
+cells it touches. Per-cell candidate volume is the SemDeDup bound:
+cluster-bounded, never corpus-quadratic. In-batch pairs are batch² per
+cell at worst — rate-limit the source like the MinHash tier.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from wd2duckdb_spark.functions.ann_index import (
@@ -44,34 +40,7 @@ from wd2duckdb_spark.functions.ann_index import (
     _index_centroids,
 )
 from wd2duckdb_spark.functions.similarity import SEMDEDUP_THR
-
-
-def _has_any_assignments(spark: SparkSession, index_dir: str) -> bool:
-    """Committed-data check for the assignments tree — the dedup
-    tier's crash-dropping discipline (``batch=0/_temporary`` without
-    a committed file must read as "no history yet"), but DEPTH-
-    UNBOUNDED: this index nests ``batch=<id>/cell=<c>/`` two levels
-    deep, where dedup_ingest's one-level helper would see only
-    directories and report an existing index as absent (the bug the
-    first parity run caught: batch 1 silently skipped the history
-    probe and every cross-batch duplicate survived)."""
-    jvm = spark._jvm
-    hconf = spark.sparkContext._jsc.hadoopConfiguration()
-    root = jvm.org.apache.hadoop.fs.Path(f"{index_dir}/assignments")
-    fs = root.getFileSystem(hconf)
-    if not fs.exists(root):
-        return False
-    stack = [root]
-    while stack:
-        p = stack.pop()
-        for st in fs.listStatus(p):
-            name = st.getPath().getName()
-            if name.startswith(("_", ".")):
-                continue
-            if st.isFile():
-                return True
-            stack.append(st.getPath())
-    return False
+from wd2duckdb_spark.streaming import lake_index
 
 
 def _batch_vec_dedup(
@@ -84,74 +53,42 @@ def _batch_vec_dedup(
 ) -> None:
     from wd2duckdb_spark.functions.dedup import _cosine_fold_sql
 
-    spark = batch_df.sparkSession
-    cents = _index_centroids(spark, index_dir)
-    history_exists = _has_any_assignments(spark, index_dir)
+    cents = _index_centroids(batch_df.sparkSession, index_dir)
+    near = F.round(F.expr(_cosine_fold_sql("vb", "vh")), 4) >= F.lit(
+        round(float(threshold), 4)
+    )
 
-    batch_df = batch_df.persist()
-    assigned = None
-    try:
-        assigned = _assigned_rows(batch_df, cents, None, assign).persist()
-
-        thr = F.lit(round(float(threshold), 4))
-        sim = F.round(F.expr(_cosine_fold_sql("vb", "vh")), 4)
-        b = assigned.select(
+    def dups(b: DataFrame, assigned: DataFrame, seen) -> DataFrame:
+        b_side = assigned.select(
             "cell", F.col("vec_id").alias("b_id"), F.col("v").alias("vb")
         )
-        if history_exists:
-            cells = [r.cell for r in assigned.select("cell").distinct().collect()]
-            hist = (
-                spark.read.parquet(f"{index_dir}/assignments")
-                # a REPLAYED batch must not see its own crashed
-                # attempt's rows — it would drop its vectors as
-                # self-dups (dedup_ingest protocol)
-                .filter(F.col("batch") != batch_id)
-                .filter(F.col("cell").isin(*cells))  # directory pruning
-                .select("cell", F.col("v").alias("vh"))
+        in_batch = (
+            assigned.select(
+                "cell", F.col("vec_id").alias("a_id"), F.col("v").alias("vh")
             )
-            # batch side broadcasts (bounded at one micro-batch);
-            # the index side STREAMS — same orientation discipline as
-            # the SimHash probe (never broadcast history)
-            hist_dups = (
-                hist.join(F.broadcast(b), "cell")
-                .filter(sim >= thr)
-                .select(F.col("b_id").alias("vec_id"))
-            )
-        else:
-            hist_dups = assigned.limit(0).select("vec_id")
-        a_side = assigned.select(
-            "cell", F.col("vec_id").alias("a_id"), F.col("v").alias("vh")
-        )
-        batch_dups = (
-            a_side.join(F.broadcast(b), "cell")
-            .filter(F.col("a_id") < F.col("b_id"))
-            .filter(sim >= thr)
+            .join(F.broadcast(b_side), "cell")
+            .filter((F.col("a_id") < F.col("b_id")) & near)
             .select(F.col("b_id").alias("vec_id"))
         )
-        dup_ids = hist_dups.union(batch_dups).distinct().persist()
-        try:
-            kept = batch_df.join(dup_ids, "vec_id", "left_anti")
-            kept.write.mode("overwrite").parquet(
-                f"{out_dir}/batch={batch_id}"
-            )
-            # ALL vectors index — kept and dropped (module docstring)
-            assigned.write.mode("overwrite").partitionBy("cell").parquet(
-                f"{index_dir}/assignments/batch={batch_id}"
-            )
-            n_dups = dup_ids.count()
-            n_in = batch_df.count()
-            spark.createDataFrame(
-                [(batch_id, n_in, n_dups, n_in - n_dups)],
-                "batch_id long, n_in long, n_dups long, n_kept long",
-            ).coalesce(1).write.mode("overwrite").parquet(
-                f"{out_dir}/_metrics/batch={batch_id}"
-            )
-        finally:
-            dup_ids.unpersist()
-    finally:
-        batch_df.unpersist()
-        if assigned is not None:
-            assigned.unpersist()
+        if seen is None:
+            return in_batch
+        return lake_index.probe(
+            assigned.select("cell", "vec_id", F.col("v").alias("vb")),
+            seen.select("cell", F.col("v").alias("vh")),
+            on=["cell"],
+            prune_col="cell",
+            verify=near,
+        ).union(in_batch)
+
+    lake_index.dedup_batch(
+        batch_df,
+        batch_id,
+        f"{index_dir}/assignments",
+        out_dir,
+        sign=lambda b: _assigned_rows(b, cents, None, assign),
+        dups=dups,
+        cell=True,
+    )
 
 
 def semantic_ingest_stream(
@@ -171,7 +108,7 @@ def semantic_ingest_stream(
     must match the bootstrap's rule — ``l2`` is the SemDeDup/Lloyd
     rule that makes stream results equal the batch twin's. Read the
     kept corpus with ``spark.read.parquet(out_dir)``; per-batch drop
-    accounting with ``semantic_ingest_metrics``."""
+    accounting with ``lake_index.batch_metrics(spark, out_dir)``."""
 
     def _fn(batch_df: DataFrame, batch_id: int) -> None:
         _batch_vec_dedup(
@@ -184,12 +121,3 @@ def semantic_ingest_stream(
     if available_now:
         writer = writer.trigger(availableNow=True)
     return writer.start()
-
-
-def semantic_ingest_metrics(spark: SparkSession, out_dir: str) -> DataFrame:
-    """Per-micro-batch dedup accounting (n_in / n_dups / n_kept)."""
-    return (
-        spark.read.parquet(f"{out_dir}/_metrics")
-        .select("batch_id", "n_in", "n_dups", "n_kept")
-        .orderBy("batch_id")
-    )

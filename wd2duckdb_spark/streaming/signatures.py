@@ -8,10 +8,10 @@ incrementally as document shards land: each micro-batch reduces its
 own docs to (source, h0..h7) partials, and the true corpus signature
 of a source is the component-wise ``min`` over all partials ever
 written. No state store, no read-modify-write: partials append under
-``batch=<id>`` (overwrite per batch — the replay-idempotence protocol
-of ``dedup_ingest``), and because min-merge is idempotent, even a
-DOUBLE-counted batch could not corrupt the merge — the layout only
-needs replay protection to keep the directory tidy.
+``batch=<id>`` (overwrite per batch — the lake-index protocol of
+:mod:`~wd2duckdb_spark.streaming.lake_index`), and because min-merge is
+idempotent, even a DOUBLE-counted batch could not corrupt the merge —
+the layout only needs replay protection to keep the directory tidy.
 
 Scale: a batch partial is ≤ S rows × 8 longs (S = #sources), so the
 signature table after B batches is ≤ B·S tiny rows; the merged view
@@ -32,6 +32,7 @@ from wd2duckdb_spark.functions.dedup import (
     _source_shingles,
     overlap_from_signatures,
 )
+from wd2duckdb_spark.streaming import lake_index
 
 __all__ = [
     "source_signature_stream",
@@ -46,16 +47,9 @@ def _batch_signatures(batch_df: DataFrame, batch_id: int, sig_dir: str) -> None:
     written idempotently under ``batch=<id>`` (a replayed batch
     rewrites its own partition). Batches whose docs all have <3 tokens
     produce an empty partition — harmless to the merge."""
-    sig = (
-        _source_shingles(batch_df)
-        .groupBy("source")
-        .agg(*_minhash_cols())
-    )
-    (
-        sig.coalesce(1)  # ≤ S rows — one small file per batch
-        .write.mode("overwrite")
-        .parquet(f"{sig_dir}/batch={batch_id}")
-    )
+    sig = _source_shingles(batch_df).groupBy("source").agg(*_minhash_cols())
+    # ≤ S rows — one small file per batch
+    lake_index.write_batch(sig.coalesce(1), sig_dir, batch_id)
 
 
 def source_signature_stream(
@@ -70,17 +64,16 @@ def source_signature_stream(
     up-to-date merged signatures at any time with
     :func:`source_signatures` — no stream restart needed.
 
-    ``archive_every=N`` (VERDICT r7 item 4) folds the store from
-    INSIDE the stream: every N-th micro-batch, after writing its own
-    partial, runs :func:`archive_signatures` over every batch id
-    strictly below it — so the store holds (1 archive + ≤N live
-    partials) at steady state instead of one file per batch forever,
-    with no offline maintenance window. Safe in-stream because
-    foreachBatch callbacks run serially for a query (no concurrent
-    writer to ``sig_dir``), the just-written newest batch is never
-    folded (the refusal guard archive_signatures already enforces),
-    and a crash-replayed batch that re-runs the fold only min-merges
-    the archive into itself — idempotent by the sketch algebra."""
+    ``archive_every=N`` folds the store from INSIDE the stream: every
+    N-th micro-batch, after writing its own partial, runs
+    :func:`archive_signatures` over every batch id strictly below it —
+    so the store holds (1 archive + ≤N live partials) at steady state
+    instead of one file per batch forever, with no offline maintenance
+    window. Safe in-stream because foreachBatch callbacks run serially
+    for a query (no concurrent writer to ``sig_dir``), the just-written
+    newest batch is never folded (the fold's refusal guard), and a
+    crash-replayed batch that re-runs the fold only min-merges the
+    archive into itself — idempotent by the sketch algebra."""
 
     def _fn(batch_df: DataFrame, batch_id: int) -> None:
         _batch_signatures(batch_df, batch_id, sig_dir)
@@ -101,29 +94,27 @@ def source_signature_stream(
     )
 
 
+def _min_hashes() -> list:
+    return [F.min(f"h{i}").alias(f"h{i}") for i in range(N_MINHASH)]
+
+
 def source_signatures(spark, sig_dir: str) -> DataFrame:
     """Merged per-source signatures: component-wise min over every
     batch partial — identical to the batch tier's signature over the
     full corpus (pinned in tests/test_streaming.py), because min is a
     lossless merge for MinHash."""
-    return (
-        spark.read.parquet(sig_dir)
-        .groupBy("source")
-        .agg(*[F.min(f"h{i}").alias(f"h{i}") for i in range(N_MINHASH)])
-    )
+    return spark.read.parquet(sig_dir).groupBy("source").agg(*_min_hashes())
 
 
 def archive_signatures(spark, sig_dir: str, through_batch: int) -> None:
     """Fold every ``batch=<id>`` partial with id ≤ ``through_batch``
     (and any existing archive) into ONE min-merged ``batch=-1``
-    archive partition — the signature-store twin of
-    :func:`~wd2duckdb_spark.streaming.dedup_ingest.archive_index`
-    (VERDICT r6 item 1).
+    archive partition (:func:`lake_index.fold`).
 
     Why: each micro-batch writes one partial file, and
     :func:`source_signatures` lists and min-merges ALL of them forever
     — file count (and merge width) grow with batch count, the same
-    shape ``archive_index`` exists to fix for the dedup index. The
+    shape ``dedup_ingest.archive_index`` fixes for the dedup index. The
     rows are S×8 longs so the growth is driver-trivial for years, but
     the steady-state loop should still be stream → periodic archive →
     stream, keeping the store at (1 archive + few live partials).
@@ -131,58 +122,15 @@ def archive_signatures(spark, sig_dir: str, through_batch: int) -> None:
     Safety comes from the sketch algebra, not from coordination:
     min-merge is associative, commutative, and IDEMPOTENT, so folding
     partials that a replayed batch later rewrites could not corrupt
-    the merged signature even in principle — a double-counted partial
-    min-merges to the same result. The archive therefore pre-merges to
-    ONE row per source (the fold is itself a ``min``), re-archiving is
-    idempotent (the archive folds into itself), and the only
-    protection needed is directory tidiness: like ``archive_index``,
-    the HIGHEST live batch id is refused so a crash-restart replay
-    (which rewrites its own ``batch=<id>`` partition) never races the
-    swap. Run offline (stream stopped) OR from inside the maintaining
-    stream's own foreachBatch via ``source_signature_stream(...,
-    archive_every=N)`` — serial per-query callbacks mean no concurrent
-    writer either way; the directory swap is the staged-rename
-    protocol of ``maintenance.swap_in`` (a crash leaves the original
-    or the backup intact).
+    the merged signature even in principle. The archive therefore
+    pre-merges to ONE row per source, re-archiving is idempotent, and
+    the fold's newest-batch refusal only keeps a crash-restart replay
+    from racing the swap. Run offline (stream stopped) OR from inside
+    the maintaining stream via ``source_signature_stream(...,
+    archive_every=N)``.
     """
-    from wd2duckdb_spark.maintenance import swap_in
-    from wd2duckdb_spark.streaming.dedup_ingest import ARCHIVE_BATCH
-
-    df = spark.read.parquet(sig_dir)
-    batch_vals = sorted(
-        r.batch for r in df.select("batch").distinct().collect()
-    )
-    live_vals = [b for b in batch_vals if b != ARCHIVE_BATCH]
-    if not live_vals:
-        raise ValueError(
-            f"archive_signatures: {sig_dir} holds no live batch partials "
-            "(nothing to fold, or the store was truncated)"
-        )
-    if through_batch >= live_vals[-1]:
-        raise ValueError(
-            f"archive_signatures: through_batch={through_batch} would "
-            f"archive the most recent batch {live_vals[-1]}, which a "
-            "restart may replay over the swap; pass "
-            "through_batch < max batch id"
-        )
-    old = F.col("batch") <= through_batch  # includes batch=-1
-    folded = (
-        df.filter(old)
-        .groupBy("source")
-        .agg(*[F.min(f"h{i}").alias(f"h{i}") for i in range(N_MINHASH)])
-        .withColumn("batch", F.lit(ARCHIVE_BATCH))
-    )
-    live = df.filter(~old)
-    tmp = sig_dir.rstrip("/") + "._compact"
-    backup = sig_dir.rstrip("/") + "._prearchive"
-    (
-        folded.unionByName(live)
-        .coalesce(1)  # ≤ S archive rows + a few live partials
-        .write.mode("overwrite")
-        .partitionBy("batch")
-        .parquet(tmp)
-    )
-    swap_in(spark, sig_dir, tmp, backup, op="archive_signatures")
+    merge = lake_index.archive_merge("source", *_min_hashes())
+    lake_index.fold(spark, sig_dir, through_batch, merge)
 
 
 # overlap_from_signatures is re-exported from functions.dedup: the

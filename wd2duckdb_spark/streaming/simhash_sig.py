@@ -1,5 +1,5 @@
-"""Incremental per-document SimHash signature maintenance (VERDICT r8
-item 6): the streaming face of
+"""Incremental per-document SimHash signature maintenance: the
+streaming face of
 :func:`~wd2duckdb_spark.functions.dedup.q_simhash_hamming_pairs`,
 closing the dedup-at-ingest gap for small EDITS — the ingest index
 (``dedup_ingest``) catches exact and MinHash set-overlap duplicates,
@@ -15,11 +15,10 @@ no state store, no read-modify-write.
 Replay protection — WEAKER algebra than the MinHash store, stated
 honestly: ``min`` (signatures.py) is idempotent, so even a
 double-counted batch could not corrupt that merge; ``sum`` is not.
-Correctness here rests on the ``batch=<id>`` overwrite protocol (a
-crash-replayed batch REWRITES its own partition, so each row is
-counted exactly once), the same guarantee ``dedup_ingest`` relies on
-— plus the archive's newest-batch refusal, which keeps a replayed
-batch from racing a concurrent fold of its own partition.
+Correctness here rests on the lake-index protocol
+(:mod:`~wd2duckdb_spark.streaming.lake_index`): a crash-replayed batch
+REWRITES its own partition, so each row is counted exactly once, and
+the fold never folds the newest batch a replay could rewrite.
 
 Semantics note: a document SPLIT across micro-batches merges by
 summed counters with per-chunk token distinctness (a token occurring
@@ -45,11 +44,17 @@ from wd2duckdb_spark.functions.dedup import (
     SIMHASH_BANDS,
     SIMHASH_BITS,
     SIMHASH_HAMMING,
+    _simhash_combo_key,
+    _validate_simhash_banding,
     counters_to_signature,
     simhash_bit_counts,
+    simhash_block_widths,
     simhash_candidates,
     simhash_pairs,
+    simhash_signatures,
+    simhash_tables,
 )
+from wd2duckdb_spark.streaming import lake_index
 
 __all__ = [
     "simhash_signature_stream",
@@ -65,14 +70,9 @@ def _batch_bit_counts(
     batch_df: DataFrame, batch_id: int, sig_dir: str
 ) -> None:
     """One micro-batch → its (doc_id, n, c0..c59) counter partials,
-    written idempotently under ``batch=<id>`` (a replayed batch
-    rewrites its own partition — the sum merge requires exactly-once
-    per row, which this layout provides)."""
-    (
-        simhash_bit_counts(batch_df)
-        .coalesce(1)  # one small file per batch
-        .write.mode("overwrite")
-        .parquet(f"{sig_dir}/batch={batch_id}")
+    one small file written idempotently under ``batch=<id>``."""
+    lake_index.write_batch(
+        simhash_bit_counts(batch_df).coalesce(1), sig_dir, batch_id
     )
 
 
@@ -106,15 +106,11 @@ def simhash_signature_stream(
     return writer.start()
 
 
-def _merged_counters(spark: SparkSession, sig_dir: str) -> DataFrame:
-    return (
-        spark.read.parquet(sig_dir)
-        .groupBy("doc_id")
-        .agg(
-            F.sum("n").alias("n"),
-            *[F.sum(f"c{j}").alias(f"c{j}") for j in range(SIMHASH_BITS)],
-        )
-    )
+def _counter_sums() -> list:
+    return [
+        F.sum("n").alias("n"),
+        *[F.sum(f"c{j}").alias(f"c{j}") for j in range(SIMHASH_BITS)],
+    ]
 
 
 def doc_signatures(spark: SparkSession, sig_dir: str) -> DataFrame:
@@ -122,7 +118,9 @@ def doc_signatures(spark: SparkSession, sig_dir: str) -> DataFrame:
     batch partial, then the majority-vote finalize — identical to the
     batch tier's :func:`simhash_signatures` over the full corpus when
     docs arrive whole (pinned in tests/test_streaming.py)."""
-    return counters_to_signature(_merged_counters(spark, sig_dir))
+    return counters_to_signature(
+        spark.read.parquet(sig_dir).groupBy("doc_id").agg(*_counter_sums())
+    )
 
 
 def doc_band_keys(
@@ -132,36 +130,11 @@ def doc_band_keys(
     blocks: int = SIMHASH_BANDS,
     hamming: int = SIMHASH_HAMMING,
 ) -> DataFrame:
-    """(doc_id, tbl, key) probe rows for the streaming-maintained
+    """(doc_id, sim, tbl, key) probe rows for the streaming-maintained
     store under any banding layout — what an ingest-time Hamming
     probe joins new docs against."""
-    sig = doc_signatures(spark, sig_dir)
-    # reuse the pair machinery's key builder via its candidate frame
-    # contract: candidates are built FROM these keys, so expose them
-    # by re-deriving on the signature frame
-    from wd2duckdb_spark.functions.dedup import (
-        _simhash_combo_key,
-        _validate_simhash_banding,
-        simhash_block_widths,
-        simhash_tables,
-    )
-
-    _validate_simhash_banding(SIMHASH_BITS, blocks, hamming)
-    widths = simhash_block_widths(SIMHASH_BITS, blocks)
-    offsets = [sum(widths[:i]) for i in range(blocks)]
-    entries = F.array(
-        *[
-            F.struct(
-                F.lit(t).alias("tbl"),
-                _simhash_combo_key(
-                    F.col("sim"), combo, widths, offsets
-                ).alias("key"),
-            )
-            for t, combo in enumerate(simhash_tables(blocks, hamming))
-        ]
-    )
-    return sig.select("doc_id", "sim", F.explode(entries).alias("e")).select(
-        "doc_id", "sim", F.col("e.tbl").alias("tbl"), F.col("e.key").alias("key")
+    return _sig_banded_keys(
+        doc_signatures(spark, sig_dir), blocks=blocks, hamming=hamming
     )
 
 
@@ -187,57 +160,19 @@ def archive_bit_counts(
     """Fold every ``batch=<id>`` partial with id ≤ ``through_batch``
     (and any existing archive) into ONE sum-merged ``batch=-1``
     archive partition — the counter-store twin of
-    ``signatures.archive_signatures``, with the refusal guard doing
-    REAL replay work here: sum is not idempotent, so the newest live
-    batch (which a crash-restart would rewrite) must never be folded
-    — folding it and then replaying it would double-count. Older
-    batches are safe: their ``batch=<id>`` rewrites are byte-identical
-    re-derivations, and once folded they no longer exist as separate
-    partitions to replay over (the checkpoint has moved past them)."""
-    from wd2duckdb_spark.maintenance import swap_in
-    from wd2duckdb_spark.streaming.dedup_ingest import ARCHIVE_BATCH
-
-    df = spark.read.parquet(sig_dir)
-    batch_vals = sorted(
-        r.batch for r in df.select("batch").distinct().collect()
+    ``signatures.archive_signatures``. The fold's newest-batch refusal
+    does real replay work here: sum is not idempotent, so folding the
+    batch a restart would rewrite would double-count it."""
+    lake_index.fold(
+        spark,
+        sig_dir,
+        through_batch,
+        lake_index.archive_merge("doc_id", *_counter_sums()),
     )
-    live_vals = [b for b in batch_vals if b != ARCHIVE_BATCH]
-    if not live_vals:
-        raise ValueError(
-            f"archive_bit_counts: {sig_dir} holds no live batch partials"
-        )
-    if through_batch >= live_vals[-1]:
-        raise ValueError(
-            f"archive_bit_counts: through_batch={through_batch} would "
-            f"archive the most recent batch {live_vals[-1]}, which a "
-            "restart may REPLAY — sum-merge would double-count it; pass "
-            "through_batch < max batch id"
-        )
-    old = F.col("batch") <= through_batch  # includes batch=-1
-    folded = (
-        df.filter(old)
-        .groupBy("doc_id")
-        .agg(
-            F.sum("n").alias("n"),
-            *[F.sum(f"c{j}").alias(f"c{j}") for j in range(SIMHASH_BITS)],
-        )
-        .withColumn("batch", F.lit(ARCHIVE_BATCH))
-    )
-    live = df.filter(~old)
-    tmp = sig_dir.rstrip("/") + "._compact"
-    backup = sig_dir.rstrip("/") + "._prearchive"
-    (
-        folded.unionByName(live)
-        .coalesce(1)
-        .write.mode("overwrite")
-        .partitionBy("batch")
-        .parquet(tmp)
-    )
-    swap_in(spark, sig_dir, tmp, backup, op="archive_bit_counts")
 
 
 # ---------------------------------------------------------------------------
-# SimHash dedup AT ingest (VERDICT r9 item 6)
+# SimHash dedup AT ingest
 # ---------------------------------------------------------------------------
 
 
@@ -248,13 +183,6 @@ def _sig_banded_keys(
     the same Manku combined-key layout :func:`simhash_candidates`
     joins on, exposed row-wise so an ingest index can persist and
     probe it."""
-    from wd2duckdb_spark.functions.dedup import (
-        _simhash_combo_key,
-        _validate_simhash_banding,
-        simhash_block_widths,
-        simhash_tables,
-    )
-
     _validate_simhash_banding(SIMHASH_BITS, blocks, hamming)
     widths = simhash_block_widths(SIMHASH_BITS, blocks)
     offsets = [sum(widths[:i]) for i in range(blocks)]
@@ -277,57 +205,11 @@ def _sig_banded_keys(
     )
 
 
-def _history_hamming_dups(
-    keys: DataFrame,
-    seen: DataFrame,
-    *,
-    hamming: int,
-    n_keys: int,
-    probe_keys: list | None,
-) -> DataFrame:
-    """doc_ids of the current batch within Hamming ≤ ``hamming`` of
-    ANY indexed document. Same three probe tiers and the same join
-    orientation as ``dedup_ingest._history_dups`` (batch side is the
-    build — history never broadcasts), but SimHash banding is only a
-    candidate GENERATOR, so every (tbl, key) hit is verified with the
-    exact in-row ``bit_count(new.sim XOR old.sim)`` against the
-    STORED signature before it can drop a document — the decision
-    rule is Hamming geometry, not bucket identity (that's what makes
-    the stream's keep set match ``q_simhash_hamming_pairs``)."""
-    from wd2duckdb_spark.streaming.dedup_ingest import (
-        MAX_BROADCAST_KEYS,
-        PROBE_CHUNK,
-    )
-
-    batch_side = keys.select(
-        "tbl", "key", "doc_id", F.col("sim").alias("_new_sim")
-    )
-    verified = lambda j: (  # noqa: E731
-        j.filter(
-            F.bit_count(F.col("_new_sim").bitwiseXOR(F.col("sim")))
-            <= hamming
-        )
-        .select("doc_id")
-        .distinct()
-    )
-    if n_keys > MAX_BROADCAST_KEYS:
-        return verified(
-            seen.join(
-                batch_side.hint("shuffle_hash"), ["tbl", "key"], "inner"
-            )
-        )
-    if probe_keys:
-        ks = sorted(set(probe_keys))
-        chunks = [
-            ks[i : i + PROBE_CHUNK] for i in range(0, len(ks), PROBE_CHUNK)
-        ]
-        pruned = seen.filter(F.col("key").isin(chunks[0]))
-        for chunk in chunks[1:]:
-            pruned = pruned.union(seen.filter(F.col("key").isin(chunk)))
-        seen = pruned
-    return verified(
-        seen.join(F.broadcast(batch_side), ["tbl", "key"], "inner")
-    )
+def _hamming_verify(hamming: int):
+    """Verify rule of the history probe: the exact in-row Hamming
+    distance between the batch doc's signature (``_new_sim``) and the
+    STORED one — banding generates candidates, geometry decides."""
+    return F.bit_count(F.col("_new_sim").bitwiseXOR(F.col("sim"))) <= hamming
 
 
 def _batch_simhash_dedup(
@@ -339,88 +221,30 @@ def _batch_simhash_dedup(
     blocks: int,
     hamming: int,
 ) -> None:
-    from wd2duckdb_spark.functions.dedup import simhash_signatures
-    from wd2duckdb_spark.streaming.dedup_ingest import (
-        INDEX_ROW_GROUP_BYTES,
-        MAX_PROBE_CHUNKS,
-        PROBE_CHUNK,
-        _ensure_in_threshold,
-        _has_committed_data,
-    )
-
-    spark = batch_df.sparkSession
-    jvm = spark._jvm
-    hconf = spark.sparkContext._jsc.hadoopConfiguration()
-    fs = jvm.org.apache.hadoop.fs.Path(index_dir).getFileSystem(hconf)
-    index_exists = _has_committed_data(fs, jvm, index_dir)
-
-    keys = dup_ids = None
-    _ensure_in_threshold(spark)
-    try:
-        batch_df = batch_df.persist()
-        sig = simhash_signatures(batch_df)
-        # key-sorted within partitions: same row-group pruning layout
-        # as the MinHash index (IN-pushdown probes skip row groups
-        # whose key min/max misses the batch)
-        keys = (
-            _sig_banded_keys(sig, blocks=blocks, hamming=hamming)
-            .sortWithinPartitions("key")
-            .persist()
+    def sign(b: DataFrame) -> DataFrame:
+        return _sig_banded_keys(
+            simhash_signatures(b), blocks=blocks, hamming=hamming
         )
-        n_keys = keys.count()
-        if index_exists and n_keys > 0:
-            seen = (
-                spark.read.parquet(index_dir)
-                # a replayed batch must not self-collide with its own
-                # crashed attempt's keys
-                .filter(F.col("batch") != batch_id)
-                .select("tbl", "key", "sim")
-            )
-            probe_keys = None
-            if n_keys <= PROBE_CHUNK * MAX_PROBE_CHUNKS:
-                probe_keys = [
-                    r.key for r in keys.select("key").distinct().collect()
-                ]
-            hist_dups = _history_hamming_dups(
-                keys,
-                seen,
-                hamming=hamming,
-                n_keys=n_keys,
-                probe_keys=probe_keys,
-            )
-        else:
-            hist_dups = keys.limit(0).select("doc_id")
+
+    def dups(b: DataFrame, keys: DataFrame, seen) -> DataFrame:
         # within-batch: exact pairs (a < b) via the shared pair
         # machinery — the larger id drops, the batch tier's keep-min
-        batch_dups = simhash_pairs(
-            sig, blocks=blocks, hamming=hamming
+        in_batch = simhash_pairs(
+            simhash_signatures(b), blocks=blocks, hamming=hamming
         ).select(F.col("b_id").alias("doc_id"))
-        dup_ids = hist_dups.union(batch_dups).distinct().persist()
+        if seen is None:
+            return in_batch
+        return lake_index.probe(
+            keys.select("tbl", "key", "doc_id", F.col("sim").alias("_new_sim")),
+            seen.select("tbl", "key", "sim"),
+            on=["tbl", "key"],
+            prune_col="key",
+            verify=_hamming_verify(hamming),
+        ).union(in_batch)
 
-        kept = batch_df.join(dup_ids, "doc_id", "left_anti")
-        kept.write.mode("overwrite").parquet(f"{out_dir}/batch={batch_id}")
-        # ALL docs' signatures index — kept AND dropped: a later doc
-        # editing a DROPPED doc is still a near-copy of previously
-        # seen content (same rationale as the MinHash tier)
-        (
-            keys.write.mode("overwrite")
-            .option("parquet.block.size", str(INDEX_ROW_GROUP_BYTES))
-            .parquet(f"{index_dir}/batch={batch_id}")
-        )
-        n_dups = dup_ids.count()
-        n_in = batch_df.count()
-        spark.createDataFrame(
-            [(batch_id, n_in, n_dups, n_in - n_dups)],
-            "batch_id long, n_in long, n_dups long, n_kept long",
-        ).coalesce(1).write.mode("overwrite").parquet(
-            f"{out_dir}/_metrics/batch={batch_id}"
-        )
-    finally:
-        batch_df.unpersist()
-        if keys is not None:
-            keys.unpersist()
-        if dup_ids is not None:
-            dup_ids.unpersist()
+    lake_index.dedup_batch(
+        batch_df, batch_id, index_dir, out_dir, sign=sign, dups=dups, key="key"
+    )
 
 
 def simhash_ingest_stream(
@@ -433,13 +257,12 @@ def simhash_ingest_stream(
     blocks: int = SIMHASH_BANDS,
     hamming: int = SIMHASH_HAMMING,
 ):
-    """Dedup-at-ingest in the EDIT-DISTANCE mode (VERDICT r9 item 6):
-    drop incoming documents within Hamming ≤ ``hamming`` of anything
-    EVER ingested — the third ingest tier next to ``dedup_stream``
-    (exact keys) and ``neardup_ingest_stream`` (MinHash set overlap):
-    an edited near-copy changes few tokens, so its SimHash flips few
-    bits while its shingle-set Jaccard can fall below any LSH
-    threshold.
+    """Dedup-at-ingest in the EDIT-DISTANCE mode: drop incoming
+    documents within Hamming ≤ ``hamming`` of anything EVER ingested —
+    the third ingest tier next to ``dedup_stream`` (exact keys) and
+    ``neardup_ingest_stream`` (MinHash set overlap): an edited
+    near-copy changes few tokens, so its SimHash flips few bits while
+    its shingle-set Jaccard can fall below any LSH threshold.
 
     Per micro-batch: 60-bit signatures via the shared batch
     machinery, then
@@ -454,20 +277,14 @@ def simhash_ingest_stream(
     Kept docs append under ``out_dir/batch=<id>``; ALL docs' keys +
     signatures index under ``index_dir/batch=<id>`` (dropped docs
     included — a later edit of a dropped doc is still previously-seen
-    content). Both writes overwrite their own ``batch=<id>``
-    partition, so a crash-replayed micro-batch rewrites instead of
-    duplicating, and the probe's ``batch != batch_id`` filter keeps a
-    replay from self-colliding — the exactly-once protocol of the
-    MinHash tier, unchanged. Probe tiers (IN-pushdown row-group
-    pruning / broadcast / shuffled-hash with the BATCH side as build)
-    and the key-sorted small-row-group index layout are shared with
-    ``dedup_ingest`` — history never broadcasts. The index speaks the
-    same ``batch=<id>`` layout, so the SAME maintenance loop applies:
+    content). Appends, replay filter, probe regimes and the key-sorted
+    index layout are the lake-index protocol shared with
+    ``dedup_ingest``, so the SAME maintenance loop applies:
     ``dedup_ingest.archive_index`` folds old batches into the
     ``batch=-1`` archive and later probes still see the archived
-    signatures (pinned in tests/test_round10_ops.py).
+    signatures (pinned by the SimHash ingest tests).
 
-    Batch-twin parity (pinned in tests/test_round10_ops.py): with
+    Batch-twin parity (pinned by the SimHash ingest tests): with
     doc_ids arriving in order, the kept set equals the batch rule
     "drop every b_id of ``q_simhash_hamming_pairs``" regardless of
     where micro-batch boundaries fall. Docs with no tokens emit no
@@ -495,7 +312,7 @@ def simhash_ingest_stream(
 #: No registered queries: the streaming store's correctness contract
 #: is batch-twin parity (tests/test_streaming.py pins merged
 #: signatures == simhash_signatures and stream pairs ==
-#: q_simhash_hamming_pairs; tests/test_round10_ops.py pins the ingest
+#: q_simhash_hamming_pairs; the SimHash ingest tests pin the ingest
 #: tier's kept set == the batch pair rule across boundary layouts,
 #: dup-of-dropped-doc, and crash replay); simhash_candidates is
 #: re-exported for probe composition.
