@@ -149,10 +149,16 @@ def main() -> None:
     # first execution) — min-of-2 measures the engine, not the noise.
     # The FIRST-rep time is additionally reported per query (the
     # "queries_cold" sibling map — an additive key, the existing
-    # contract is unchanged): rep 1 computes with nothing cached, so
-    # cold vs min separates plan-shape wins from cache-warm wins
-    # (VERDICT r11 item 2). Cold numbers carry full single-shot host
-    # noise — compare them across runs only in aggregate.
+    # contract is unchanged): rep 1 runs with an empty CacheManager, so
+    # cold vs min separates plan-shape wins from cache-warm wins. Rep 1
+    # is not "nothing cached" for every query: session memos of model
+    # state survive clearCache() — notably the CC keep-list memo
+    # (dedup._cc_cache, eagerly checkpointed) — so only the first
+    # headline query that needs the near-dup clusters
+    # (leakage_safe_split) pays the CC build, in its rep 1; anything
+    # run after it in the same session reuses the memo. Cold numbers
+    # carry full single-shot host noise — compare them across runs
+    # only in aggregate.
     timings: dict[str, float] = {}
     cold: dict[str, float] = {}
     for name in HEADLINE:
@@ -179,6 +185,8 @@ def main() -> None:
         # own work. (Rep 2 of the SAME query intentionally keeps the
         # cache: min-of-2 measures steady state.)
         spark.catalog.clearCache()
+    # the ingest jobs below must not carry the last query's label
+    spark.sparkContext.setJobDescription(None)
 
     ingest_stats = _bench_ingest(spark)
 

@@ -95,8 +95,8 @@ def test_connected_components_unconverged_raises(spark):
 def test_reliable_checkpoint_conf_flows_through_iterative_ops(spark, tmp_path):
     """Round 6: the engine-wide reliable-checkpoint path
     (catalog.eager_checkpoint + RELIABLE_CKPT_CONF) must carry every
-    iterative lineage truncation — CC label rounds (both algorithms)
-    and PageRank supersteps — writing durable snapshots under the
+    iterative lineage truncation — CC label rounds and PageRank
+    supersteps — writing durable snapshots under the
     given dir while leaving results identical to the default path."""
     import os
 
@@ -110,10 +110,6 @@ def test_reliable_checkpoint_conf_flows_through_iterative_ops(spark, tmp_path):
     )
     base_prop = {
         (r.node, r.cluster_id) for r in connected_components(pairs).collect()
-    }
-    base_star = {
-        (r.node, r.cluster_id)
-        for r in connected_components(pairs, algorithm="star").collect()
     }
     base_pr = [
         tuple(r)
@@ -129,10 +125,6 @@ def test_reliable_checkpoint_conf_flows_through_iterative_ops(spark, tmp_path):
             (r.node, r.cluster_id)
             for r in connected_components(pairs).collect()
         }
-        got_star = {
-            (r.node, r.cluster_id)
-            for r in connected_components(pairs, algorithm="star").collect()
-        }
         got_pr = [
             tuple(r)
             for r in q_pagerank_topk(
@@ -143,7 +135,6 @@ def test_reliable_checkpoint_conf_flows_through_iterative_ops(spark, tmp_path):
         spark.conf.unset(RELIABLE_CKPT_CONF)
 
     assert got_prop == base_prop
-    assert got_star == base_star
     assert got_pr == base_pr
     files = [
         os.path.join(dp, f)

@@ -692,6 +692,41 @@ def test_simhash_ingest_index_archive_then_probe(spark, tmp_path):
     assert kept == [1, 2]  # 3 dropped via the ARCHIVED signature of 1
 
 
+def test_simhash_ingest_signs_each_batch_once(spark, tmp_path, monkeypatch):
+    """One SimHash ingest micro-batch runs the per-token md5 fold ONCE:
+    the in-batch pairs come from the persisted banded keys (shared
+    self-join + Hamming test), not from re-signing the batch. The
+    in-batch rule still drops the edit (2 flipped bits) and keeps the
+    unrelated and the token-less docs."""
+    from wd2duckdb_spark.streaming import simhash_sig
+
+    calls = []
+    real = simhash_sig.simhash_signatures
+
+    def counted(*args, **kwargs):
+        calls.append(1)
+        return real(*args, **kwargs)
+
+    monkeypatch.setattr(simhash_sig, "simhash_signatures", counted)
+    base = " ".join(f"w{i}" for i in range(200))
+    batch = spark.createDataFrame(
+        [
+            _doc(1, base),
+            _doc(2, base.replace("w0 ", "x0 ", 1)),  # 2 bits from doc 1
+            _doc(3, " ".join(f"u{i}" for i in range(200))),
+            _doc(4, ""),
+        ],
+        DOC_SCHEMA,
+    )
+    out_dir = str(tmp_path / "out")
+    simhash_sig._batch_simhash_dedup(
+        batch, 0, str(tmp_path / "index"), out_dir, blocks=4, hamming=3
+    )
+    assert len(calls) == 1
+    kept = sorted(r.doc_id for r in spark.read.parquet(out_dir).collect())
+    assert kept == [1, 3, 4]
+
+
 def test_simhash_ingest_probe_prunes_index_scan(spark, tmp_path, monkeypatch):
     """The SimHash probe's rate-limited tier pushes the batch's
     banded keys into the signature-index scan as chunked IN
@@ -701,14 +736,12 @@ def test_simhash_ingest_probe_prunes_index_scan(spark, tmp_path, monkeypatch):
     (Hamming verification unaffected by the superset pre-filter)."""
     from wd2duckdb_spark.functions.dedup import (
         SIMHASH_HAMMING,
+        _simhash_keys,
         simhash_signatures,
     )
     from wd2duckdb_spark.streaming import lake_index
     from wd2duckdb_spark.streaming.lake_index import _IN_THRESHOLD_CONF
-    from wd2duckdb_spark.streaming.simhash_sig import (
-        _hamming_verify,
-        _sig_banded_keys,
-    )
+    from wd2duckdb_spark.streaming.simhash_sig import _hamming_verify
 
     base = " ".join(f"w{i}" for i in range(200))
     hist = spark.createDataFrame(
@@ -716,7 +749,7 @@ def test_simhash_ingest_probe_prunes_index_scan(spark, tmp_path, monkeypatch):
         DOC_SCHEMA,
     )
     index_dir = str(tmp_path / "index")
-    _sig_banded_keys(
+    _simhash_keys(
         simhash_signatures(hist), blocks=4, hamming=SIMHASH_HAMMING
     ).withColumn("batch", F.lit(0)).write.parquet(index_dir)
     seen = spark.read.parquet(index_dir).select("tbl", "key", "sim")
@@ -728,7 +761,7 @@ def test_simhash_ingest_probe_prunes_index_scan(spark, tmp_path, monkeypatch):
         ],
         DOC_SCHEMA,
     )
-    keys_df = _sig_banded_keys(
+    keys_df = _simhash_keys(
         simhash_signatures(batch), blocks=4, hamming=SIMHASH_HAMMING
     )
     keys = [r.key for r in keys_df.select("key").distinct().collect()]
@@ -770,19 +803,17 @@ def test_simhash_ingest_probe_streams_index_not_broadcast(
     BroadcastExchange subtree."""
     from wd2duckdb_spark.functions.dedup import (
         SIMHASH_HAMMING,
+        _simhash_keys,
         simhash_signatures,
     )
     from wd2duckdb_spark.streaming import lake_index
-    from wd2duckdb_spark.streaming.simhash_sig import (
-        _hamming_verify,
-        _sig_banded_keys,
-    )
+    from wd2duckdb_spark.streaming.simhash_sig import _hamming_verify
 
     index_dir = str(tmp_path / "index")
     hist = spark.createDataFrame(
         [_doc(1, "alpha beta gamma delta epsilon")], DOC_SCHEMA
     )
-    _sig_banded_keys(
+    _simhash_keys(
         simhash_signatures(hist), blocks=4, hamming=SIMHASH_HAMMING
     ).withColumn("batch", F.lit(0)).write.parquet(index_dir)
     seen = spark.read.parquet(index_dir).select("tbl", "key", "sim")
@@ -792,7 +823,7 @@ def test_simhash_ingest_probe_streams_index_not_broadcast(
     )
     monkeypatch.setattr(lake_index, "MAX_PROBE_CHUNKS", 0)  # full scan
     probe = lake_index.probe(
-        _sig_banded_keys(
+        _simhash_keys(
             simhash_signatures(batch), blocks=4, hamming=SIMHASH_HAMMING
         ).select("tbl", "key", "doc_id", F.col("sim").alias("_new_sim")),
         seen,

@@ -684,15 +684,12 @@ def test_spread_skips_shuffle_when_scan_is_parallel(spark):
 
 
 def test_spread_consumers_result_identical_both_regimes(spark):
-    """The seam is pure plan shape: an affected doc-keyed aggregate
-    pipeline (simhash_bit_counts) returns identical rows whether the
-    spread fires (scan_parts=1) or is skipped (scan_parts >= cores)."""
+    """The seam is pure plan shape: a spreading consumer (the MinHash
+    kernel) returns identical rows whether the spread fires
+    (scan_parts=1) or is skipped (scan_parts >= cores)."""
     from pyspark.sql import functions as F
 
-    from wd2duckdb_spark.functions.dedup import (
-        counters_to_signature,
-        simhash_bit_counts,
-    )
+    from wd2duckdb_spark.functions.dedup import _minhash_sig_frame
 
     n = spark.sparkContext.defaultParallelism
     docs = (
@@ -705,12 +702,8 @@ def test_spread_consumers_result_identical_both_regimes(spark):
         )
         .repartition(n + 3)  # already-parallel scan stand-in
     )
-    spread_fires = counters_to_signature(
-        simhash_bit_counts(docs, scan_parts=1)
-    )
-    spread_skipped = counters_to_signature(
-        simhash_bit_counts(docs, scan_parts=n + 3)
-    )
+    spread_fires = _minhash_sig_frame(docs, scan_parts=1)
+    spread_skipped = _minhash_sig_frame(docs, scan_parts=n + 3)
     a = sorted(map(tuple, spread_fires.collect()))
     b = sorted(map(tuple, spread_skipped.collect()))
     assert a == b and len(a) == 200
@@ -730,12 +723,18 @@ def test_spread_consumers_result_identical_both_regimes(spark):
 def test_scan_partitions_memoized(spark):
     """scan_partitions probes .rdd once per (session, sf_dir, table) —
     the probe costs ~100 ms of driver planning, far too much to pay
-    inline on every query invocation."""
+    inline on every query invocation — and the MinHash kernel's spread
+    decision over the documents table reads the memoized value."""
     from wd2duckdb_spark.catalog import (
         _scan_parts_cache,
         scan_partitions,
         session_key,
     )
+    from wd2duckdb_spark.functions.dedup import q_minhash_signatures
+
+    def spreads() -> bool:
+        plan = q_minhash_signatures(spark, SF_DIR)._jdf.queryExecution()
+        return "RepartitionByExpression [doc_id" in plan.optimizedPlan().toString()
 
     n1 = scan_partitions(spark, SF_DIR, "documents")
     key = (session_key(spark), SF_DIR, "documents")
@@ -744,6 +743,9 @@ def test_scan_partitions_memoized(spark):
     _scan_parts_cache[key] = -7
     try:
         assert scan_partitions(spark, SF_DIR, "documents") == -7
+        assert spreads()  # -7 < cores: the kernel spreads
+        _scan_parts_cache[key] = 1 << 20
+        assert not spreads()  # ≥ cores: the memo says the scan is parallel
     finally:
         _scan_parts_cache[key] = n1
     assert n1 >= 1
@@ -877,13 +879,13 @@ def test_bigram_lm_memoized_and_rearmed(spark):
 
 
 def test_minhash_sig_fresh_and_consistent(spark):
-    """Optimization round 12: _minhash_sig builds a FRESH signature
-    frame per invocation (no session memo); pairs from the sig= path
-    equal pairs from the inline (sig=None) path; and the frame's
-    values match q_minhash_signatures' registered build."""
+    """The MinHash kernel builds a FRESH signature frame per invocation
+    (no session memo); the registered pair query equals the pair
+    pipeline over the documents table; and the kernel's values match
+    q_minhash_signatures' registered build."""
     from wd2duckdb_spark.catalog import scan_partitions, tbl
     from wd2duckdb_spark.functions.dedup import (
-        _minhash_sig,
+        _minhash_sig_frame,
         lsh_candidate_pairs,
         q_minhash_lsh_pairs,
         q_minhash_signatures,
@@ -899,9 +901,11 @@ def test_minhash_sig_fresh_and_consistent(spark):
         .collect()
     )
     assert sig_pairs == fresh_pairs
-    s1 = _minhash_sig(spark, SF_DIR)
-    s2 = _minhash_sig(spark, SF_DIR)
+    docs = tbl(spark, SF_DIR, "documents")
+    s1 = _minhash_sig_frame(docs)
+    s2 = _minhash_sig_frame(docs)
     assert s1 is not s2  # fresh per invocation, no session memo
+    assert not s1.storageLevel.useMemory
     sig_rows = sorted(s1.collect(), key=lambda r: r["doc_id"])
     fresh_rows = q_minhash_signatures(spark, SF_DIR).collect()
     assert sig_rows == fresh_rows

@@ -1,8 +1,8 @@
-"""Round-12 optimization pins: the in-row MinHash signature
-(:func:`_minhash_sig_frame`) must be value-identical to the exploded
-shingle + doc-keyed aggregate formulation it replaced, and must plan
-with ZERO exchanges in the multi-split (at-scale) regime where the
-old form still paid the doc-keyed aggregate shuffle."""
+"""MinHash kernel pins: the in-row signature (:func:`_minhash_sig_frame`)
+must be value-identical to an independent exploded-shingle + doc-keyed
+aggregate reference, and must plan with ZERO exchanges in the
+multi-split (at-scale) regime where the aggregate form pays the
+doc-keyed shuffle."""
 
 from __future__ import annotations
 
@@ -12,9 +12,22 @@ from tests.conftest import SF_DIR
 
 
 def _aggregate_form(toks):
-    """The pre-round-12 formulation: explode shingles, groupBy doc."""
-    from wd2duckdb_spark.functions.dedup import _minhash_cols
-
+    """Reference formulation: explode shingles, groupBy doc, 8 min
+    aggregates over md5 windows (one md5 → four 32-bit lanes)."""
+    mins = [
+        F.min(
+            F.conv(
+                F.substring(
+                    F.md5(F.concat(F.lit(f"{i // 4}|"), F.col("shingle"))),
+                    1 + 8 * (i % 4),
+                    8,
+                ),
+                16,
+                10,
+            ).cast("long")
+        ).alias(f"h{i}")
+        for i in range(8)
+    ]
     return (
         toks.select(
             "doc_id",
@@ -27,13 +40,13 @@ def _aggregate_form(toks):
             ).alias("shingle"),
         )
         .groupBy("doc_id")
-        .agg(*_minhash_cols())
+        .agg(*mins)
     )
 
 
 def test_minhash_inrow_matches_aggregate_form(spark):
     """Same multiset of md5-window longs, same minima — row-for-row
-    identical to the r11 aggregate formulation on the fixture corpus
+    identical to the aggregate formulation on the fixture corpus
     (incl. duplicate shingles within a doc: min is duplicate-invariant
     and neither form deduplicates)."""
     from wd2duckdb_spark.catalog import scan_partitions, spread, tbl
@@ -76,9 +89,8 @@ def test_minhash_inrow_zero_exchange_multisplit(spark, tmp_path):
     )
     assert "Exchange" not in plan
     # parity on the sharded twin vs the single-split fixture build
-    from wd2duckdb_spark.catalog import scan_partitions
-    from wd2duckdb_spark.functions.dedup import minhash_signatures
+    from wd2duckdb_spark.functions.dedup import q_minhash_signatures
 
-    ref = sorted(map(tuple, minhash_signatures(spark, SF_DIR).collect()))
+    ref = sorted(map(tuple, q_minhash_signatures(spark, SF_DIR).collect()))
     got = sorted(map(tuple, sig.collect()))
     assert got == ref

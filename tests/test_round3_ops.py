@@ -1,5 +1,6 @@
-"""Round-3 hardening tests: large-star/small-star connected components
-(VERDICT r2 item 5 — adversarial chain-shaped dup clusters)."""
+"""Connected-components and near-dup keep-rule tests: label
+propagation against a union-find reference, and the cluster-level
+keep rules built on it."""
 
 from __future__ import annotations
 
@@ -26,25 +27,11 @@ def _union_find_labels(n_edges):
     return {x: find(x) for x in parent}
 
 
-@pytest.mark.slow
-def test_star_cc_converges_logarithmically_on_10k_path(spark):
-    """A 10k-node path graph has diameter 10k: min-label propagation
-    would need ~10k rounds, the star alternation tens (O(log n)).
-    max_iters=40 IS the assertion — the function raises if exceeded."""
-    from wd2duckdb_spark.functions.dedup import connected_components
-
-    n = 10_000
-    pairs = spark.range(n - 1).selectExpr(
-        "id AS a_id", "id + 1 AS b_id"
-    )
-    labels = connected_components(pairs, max_iters=40, algorithm="star")
-    got = labels.selectExpr(
-        "count(*) AS n", "count(distinct cluster_id) AS c", "min(cluster_id) AS m"
-    ).collect()[0]
-    assert (got.n, got.c, got.m) == (n, 1, 0)
-
-
 def test_star_cc_matches_union_find_on_random_graph(spark):
+    """Label propagation equals python union-find on a random sparse
+    graph (the test id predates the removal of the star algorithm).
+    Propagation converges in diameter + 1 rounds; max_iters = the node
+    count bounds any diameter of this graph."""
     from wd2duckdb_spark.functions.dedup import connected_components
 
     rng = random.Random(7)
@@ -57,43 +44,9 @@ def test_star_cc_matches_union_find_on_random_graph(spark):
     pairs = spark.createDataFrame(edges, "a_id long, b_id long")
     got = {
         r.node: r.cluster_id
-        for r in connected_components(
-            pairs, max_iters=40, algorithm="star"
-        ).collect()
+        for r in connected_components(pairs, max_iters=300).collect()
     }
     assert got == expected
-
-
-def test_star_cc_agrees_with_propagation(spark):
-    """Both algorithms behind the one API must produce identical
-    labelings (clustered star shapes — the LSH regime)."""
-    from wd2duckdb_spark.functions.dedup import connected_components
-
-    edges = (
-        [(0, i) for i in range(1, 6)]
-        + [(10, 11), (11, 12), (12, 10)]
-        + [(20, 21)]
-    )
-    pairs = spark.createDataFrame(edges, "a_id long, b_id long")
-    star = {
-        r.node: r.cluster_id
-        for r in connected_components(pairs, algorithm="star").collect()
-    }
-    prop = {
-        r.node: r.cluster_id
-        for r in connected_components(
-            pairs, algorithm="propagation"
-        ).collect()
-    }
-    assert star == prop
-
-
-def test_cc_unknown_algorithm_raises(spark):
-    from wd2duckdb_spark.functions.dedup import connected_components
-
-    pairs = spark.createDataFrame([(1, 2)], "a_id long, b_id long")
-    with pytest.raises(ValueError, match="unknown algorithm"):
-        connected_components(pairs, algorithm="bogus")
 
 
 def test_iterative_checkpoint_interval_is_result_invariant(spark):
@@ -136,9 +89,11 @@ from hypothesis import strategies as st
 )
 def test_star_cc_property_matches_union_find(spark, edges):
     """Property: for ANY pair list (self-loops, duplicates, parallel
-    edges included), the star labeling equals python union-find with
-    min-label canonicalization. Self-loop-only nodes are their own
-    singleton cluster (matching the propagation variant's contract)."""
+    edges included), the propagation labeling equals python union-find
+    with min-label canonicalization. Self-loop-only nodes are their own
+    singleton cluster. max_iters = 41 ≥ the node count bounds any
+    diameter of these graphs. (The test id predates the removal of the
+    star algorithm.)"""
     from wd2duckdb_spark.functions.dedup import connected_components
 
     expected = _union_find_labels([(a, b) for a, b in edges if a != b])
@@ -150,9 +105,7 @@ def test_star_cc_property_matches_union_find(spark, edges):
     pairs = spark.createDataFrame(edges, "a_id long, b_id long")
     got = {
         r.node: r.cluster_id
-        for r in connected_components(
-            pairs, max_iters=40, algorithm="star"
-        ).collect()
+        for r in connected_components(pairs, max_iters=41).collect()
     }
     assert got == expected
 

@@ -12,6 +12,72 @@ import pyspark.sql.functions as F
 from tests.conftest import FIXTURE_DUMP, SF_DIR
 
 
+def _simhash_reference(docs):
+    """Independent 60-bit SimHash reference: explode each doc's
+    distinct non-empty tokens, a doc-keyed count + per-bit sum
+    aggregate, then the 2·c > n majority vote — the aggregate form,
+    kept here so the store's kernel + sum-merge path is checked
+    against a formulation it does not share."""
+    toks = docs.select(
+        "doc_id",
+        F.explode(
+            F.array_distinct(F.split(F.lower(F.trim("text")), " "))
+        ).alias("tok"),
+    ).filter(F.col("tok") != "")
+    h = F.conv(F.substring(F.md5("tok"), 1, 15), 16, 10).cast("long")
+    agg = toks.groupBy("doc_id").agg(
+        F.count("*").alias("n"),
+        *[
+            F.sum(F.shiftright(h, j).bitwiseAND(1)).alias(f"c{j}")
+            for j in range(60)
+        ],
+    )
+    sim = sum(
+        F.when(F.col(f"c{j}") * 2 > F.col("n"), F.lit(1 << j)).otherwise(0)
+        for j in range(60)
+    )
+    return {
+        tuple(r)
+        for r in agg.select("doc_id", sim.cast("long").alias("sim")).collect()
+    }
+
+
+def _source_minhash_reference(docs):
+    """Independent per-source MinHash reference: explode each doc's
+    word-3-gram shingles, then 8 min aggregates per source over md5
+    windows (one md5 → four 32-bit lanes) — the aggregate form, kept
+    here so the store's kernel + min-merge path is checked against a
+    formulation it does not share."""
+    toks = docs.select(
+        "source", F.split(F.lower(F.trim(F.col("text"))), " ").alias("toks")
+    ).filter(F.size("toks") >= 3)
+    sh = toks.select(
+        "source",
+        F.explode(
+            F.expr(
+                "transform(sequence(1, size(toks) - 2),"
+                " i -> concat_ws(' ', element_at(toks, i),"
+                " element_at(toks, i + 1), element_at(toks, i + 2)))"
+            )
+        ).alias("shingle"),
+    )
+    mins = [
+        F.min(
+            F.conv(
+                F.substring(
+                    F.md5(F.concat(F.lit(f"{i // 4}|"), F.col("shingle"))),
+                    1 + 8 * (i % 4),
+                    8,
+                ),
+                16,
+                10,
+            ).cast("long")
+        ).alias(f"h{i}")
+        for i in range(8)
+    ]
+    return {tuple(r) for r in sh.groupBy("source").agg(*mins).collect()}
+
+
 def test_stream_matches_batch(spark, tmp_path):
     """availableNow streaming pass over the fixture dump produces the
     same six tables as the batch ingest."""
@@ -1388,11 +1454,7 @@ def test_source_signature_stream_matches_batch_twin(spark, tmp_path):
     replay idempotence: re-writing a batch partition leaves the merge
     unchanged (min is idempotent)."""
     from wd2duckdb_spark.catalog import tbl
-    from wd2duckdb_spark.functions.dedup import (
-        _minhash_cols,
-        _source_shingles,
-        q_source_overlap_sketch,
-    )
+    from wd2duckdb_spark.functions.dedup import q_source_overlap_sketch
     from wd2duckdb_spark.streaming.signatures import (
         _batch_signatures,
         source_signature_stream,
@@ -1419,13 +1481,7 @@ def test_source_signature_stream_matches_batch_twin(spark, tmp_path):
     merged = {
         tuple(r) for r in source_signatures(spark, sig_dir).collect()
     }
-    batch = {
-        tuple(r)
-        for r in _source_shingles(docs)
-        .groupBy("source")
-        .agg(*_minhash_cols())
-        .collect()
-    }
+    batch = _source_minhash_reference(docs)
     assert merged == batch and merged
 
     got = [
@@ -1463,7 +1519,6 @@ def test_archive_signatures_folds_partials_losslessly(spark, tmp_path):
 
     from tests.conftest import SF_DIR
     from wd2duckdb_spark.catalog import tbl
-    from wd2duckdb_spark.functions.dedup import _minhash_cols, _source_shingles
     from wd2duckdb_spark.streaming.signatures import (
         _batch_signatures,
         archive_signatures,
@@ -1480,10 +1535,7 @@ def test_archive_signatures_folds_partials_losslessly(spark, tmp_path):
     _batch_signatures(docs.limit(0), 4, sig_dir)
 
     before = {tuple(r) for r in source_signatures(spark, sig_dir).collect()}
-    batch_twin = {
-        tuple(r)
-        for r in _source_shingles(docs).groupBy("source").agg(*_minhash_cols()).collect()
-    }
+    batch_twin = _source_minhash_reference(docs)
     assert before == batch_twin and before
 
     # refuse the newest ROW-VISIBLE batch (id 3): a restart may replay
@@ -1527,7 +1579,6 @@ def test_source_signature_stream_auto_archive(spark, tmp_path):
 
     from tests.conftest import SF_DIR
     from wd2duckdb_spark.catalog import tbl
-    from wd2duckdb_spark.functions.dedup import _minhash_cols, _source_shingles
     from wd2duckdb_spark.streaming.signatures import (
         source_signature_stream,
         source_signatures,
@@ -1566,13 +1617,7 @@ def test_source_signature_stream_auto_archive(spark, tmp_path):
 
     auto = {tuple(r) for r in source_signatures(spark, sig_auto).collect()}
     plain = {tuple(r) for r in source_signatures(spark, sig_plain).collect()}
-    twin = {
-        tuple(r)
-        for r in _source_shingles(docs)
-        .groupBy("source")
-        .agg(*_minhash_cols())
-        .collect()
-    }
+    twin = _source_minhash_reference(docs)
     assert auto == plain == twin and auto
     # swap hygiene: no staging/backup dirs left behind by in-stream folds
     assert not os.path.exists(sig_auto + "._compact")
@@ -1617,7 +1662,7 @@ def test_simhash_signature_stream_matches_batch_twin(spark, tmp_path):
 
     merged = {tuple(r) for r in doc_signatures(spark, sig_dir).collect()}
     batch = {tuple(r) for r in simhash_signatures(docs).collect()}
-    assert merged == batch and merged
+    assert merged == batch == _simhash_reference(docs) and merged
 
     got = [
         tuple(r) for r in stream_simhash_pairs(spark, sig_dir).collect()
@@ -1640,6 +1685,51 @@ def test_simhash_signature_stream_matches_batch_twin(spark, tmp_path):
     n_docs = docs.count()
     assert keys.count() == 4 * n_docs  # C(4,1) tables at the default
     assert keys.groupBy("doc_id").count().filter("count != 4").count() == 0
+
+
+def test_simhash_counter_store_sums_split_doc_rows(spark, tmp_path):
+    """A document split into two rows of ONE batch is stored as two
+    kernel rows, and its merged signature is the vote over both rows'
+    summed counters — per-row token distinctness, so a token in both
+    rows counts twice (the split-document semantics of the counter
+    store). Expected values come from a pure-Python SimHash."""
+    import hashlib
+
+    from wd2duckdb_spark.streaming.simhash_sig import (
+        _batch_bit_counts,
+        doc_signatures,
+    )
+
+    rows = [
+        (1, "alpha beta gamma delta"),
+        (1, "delta epsilon zeta eta theta"),
+        (2, "iota kappa lambda"),
+    ]
+    batch = spark.createDataFrame(rows, "doc_id long, text string")
+    sig_dir = str(tmp_path / "sig")
+    _batch_bit_counts(batch, 0, sig_dir)
+    stored = spark.read.parquet(sig_dir)
+    assert stored.filter("doc_id = 1").count() == 2  # one row per chunk
+
+    def counts(text):
+        hs = [
+            int(hashlib.md5(t.encode()).hexdigest()[:15], 16)
+            for t in set(text.lower().strip().split(" "))
+            if t
+        ]
+        return len(hs), [sum((h >> j) & 1 for h in hs) for j in range(60)]
+
+    expected = {}
+    for doc_id, text in rows:
+        n, c = counts(text)
+        n0, c0 = expected.get(doc_id, (0, [0] * 60))
+        expected[doc_id] = (n0 + n, [a + b for a, b in zip(c0, c)])
+    want = {
+        d: sum(1 << j for j in range(60) if 2 * c[j] > n)
+        for d, (n, c) in expected.items()
+    }
+    got = {r.doc_id: r.sim for r in doc_signatures(spark, sig_dir).collect()}
+    assert got == want
 
 
 @pytest.mark.slow

@@ -8,13 +8,20 @@ Design for 100 TB:
 - MinHash/LSH: shingle → k minhashes → band keys → bucket self-join.
   The self-join is on band keys, never all-pairs; candidate volume is
   controlled by (k, bands) — the classic banding trade-off;
-- SimHash: one pass to a 16-bit signature per doc (pure agg), pairs
-  compared only within signature buckets at scale;
+- SimHash: one in-row pass to per-bit counters and a majority vote per
+  doc, pairs compared only within banded signature keys at scale;
 - n-gram Jaccard: exact verification step for candidate pairs (here
   demonstrated on the deterministic consecutive-id pairing);
 - embedding near-dup: banded sign-LSH candidate buckets (one shuffle,
   in-bucket pair expansion, inline cosine verify) — never all-pairs;
   miss probability is parameterized by the banding S-curve.
+
+Each hash family has ONE signature kernel — an in-row projection per
+document (:func:`_minhash_sig_frame`, :func:`_simhash_counts`) — and
+ONE merge over kernel rows (:func:`_min_merge`, :func:`_sum_merge`):
+a signature over many rows (a source, a document split across
+micro-batches, an archived store) is a merge of kernel rows, never a
+second explode + aggregate formulation.
 
 All hashes are md5-derived so every operator is reproducible in ANSI
 SQL — the DuckDB oracles verify signatures, not just row counts. No
@@ -54,60 +61,29 @@ def word_shingles_expr(n: int = 3) -> str:
     )
 
 
-def _minhash_cols() -> list[Column]:
-    """k md5-derived minhash AGGREGATES over an exploded shingle col.
+def _minhash_sig_frame(
+    d: DataFrame, *, id_col: str = "doc_id", scan_parts: int | None = None
+) -> DataFrame:
+    """The MinHash kernel: ``documents``-shaped frame → (``id_col``,
+    h0..h7), one row per document with ≥3 tokens, computed entirely
+    in-row. A document's shingles live in its own row, so each of the
+    8 minima is an ``array_min`` over an in-row transform: no
+    aggregation exchange. ``id_col`` is the column the row carries —
+    ``doc_id`` for per-document signatures, ``source`` for the
+    per-source sketch, which :func:`_min_merge` then reduces.
 
     One md5 yields four independent 32-bit values (128/32), so the 8
-    hash functions cost 2 md5 evaluations per shingle, not 8.
-
-    Kept for the consumers whose groups span MANY rows — the
-    source-keyed signatures (:func:`q_source_signatures`) and the
-    streaming per-source incremental index
-    (streaming/signatures.py), where min() must MERGE across
-    micro-batches/documents. Per-DOCUMENT signatures use the in-row
-    :func:`_minhash_sig_frame` instead (same values, no aggregate)."""
-    return [
-        F.min(
-            F.conv(
-                F.substring(
-                    F.md5(F.concat(F.lit(f"{i // 4}|"), F.col("shingle"))),
-                    1 + 8 * (i % 4),
-                    8,
-                ),
-                16,
-                10,
-            ).cast("long")
-        ).alias(f"h{i}")
-        for i in range(N_MINHASH)
-    ]
-
-
-def _minhash_sig_frame(
-    d: DataFrame, *, scan_parts: int | None = None
-) -> DataFrame:
-    """``documents``-shaped frame → (doc_id, h0..h7) MinHash signature,
-    computed ENTIRELY IN-ROW (optimization round 12, the
-    :func:`simhash_signatures` move applied to the MinHash tier): a
-    document's shingles live in its own row, so each of the 8 minima
-    is an ``array_min`` over an in-row transform — ZERO aggregation
-    exchanges. The previous formulation exploded shingles and ran a
-    doc-keyed 8-min aggregate: locally that hash-aggregated ~n_shingle
-    rows per doc; at scale it shuffled doc-keyed partials. One md5
-    yields four independent 32-bit values (128/32), so the 8 hash
-    functions cost 2 md5 evaluations per shingle — the two digests are
-    computed ONCE per shingle into a 64-hex-char column that the 8
-    window extractions then slice (the multi-referenced expensive
-    array survives CollapseProject, so the md5 work is not duplicated
-    per h-column; the same guard the SimHash fold relies on). Shingles
-    are NOT deduplicated per doc: min() is invariant to duplicates and
-    the per-doc ``array_distinct`` pass is pure cost here (the DuckDB
+    hash functions cost 2 md5 evaluations per shingle. The two digests
+    are computed once per shingle into a 64-hex-char column that the 8
+    window extractions slice (the multi-referenced expensive array
+    survives CollapseProject, so the md5 work is not duplicated per
+    h-column; the same guard the SimHash fold relies on). Shingles are
+    not deduplicated per doc: min() is invariant to duplicates and a
+    per-doc ``array_distinct`` pass is pure cost here (the DuckDB
     oracle keeps ``list_distinct`` and matches bit-for-bit).
 
-    Values are exactly the previous aggregate's: min over the same
-    multiset of ``conv(substr(md5(seed|shingle)))`` longs — pinned
-    against the registered oracle and the r11 formulation in
-    tests/test_round11_ops.py. ``scan_parts``: see
-    :func:`wd2duckdb_spark.catalog.spread` (the repartition spreads
+    Rows are spread on ``doc_id`` whatever ``id_col`` is; ``scan_parts``:
+    see :func:`wd2duckdb_spark.catalog.spread` (the repartition spreads
     per-row md5 CPU on a single-split local scan and disappears on a
     multi-split one)."""
     gram = F.expr(
@@ -118,7 +94,7 @@ def _minhash_sig_frame(
     wt = (
         spread(d, "doc_id", scan_parts=scan_parts)
         .select(
-            "doc_id", F.split(F.lower(F.trim(F.col("text"))), " ").alias("_tk")
+            id_col, F.split(F.lower(F.trim(F.col("text"))), " ").alias("_tk")
         )
         .filter(F.size("_tk") >= 3)
     )
@@ -128,7 +104,7 @@ def _minhash_sig_frame(
             F.md5(F.concat(F.lit("0|"), s)), F.md5(F.concat(F.lit("1|"), s))
         ),
     )
-    wh = wt.select("doc_id", hs.alias("_hh"))
+    wh = wt.select(id_col, hs.alias("_hh"))
     cols = [
         F.array_min(
             F.transform(
@@ -140,7 +116,18 @@ def _minhash_sig_frame(
         ).alias(f"h{i}")
         for i in range(N_MINHASH)
     ]
-    return wh.select("doc_id", *cols)
+    return wh.select(id_col, *cols)
+
+
+def _min_merge(sig: DataFrame) -> DataFrame:
+    """MinHash's merge: kernel rows carrying ``source`` (or merged
+    partials) → one signature per source, the component-wise ``min``.
+    Associative, commutative and idempotent, so partials over any split
+    of the rows merge losslessly and re-merging a merged row is a
+    no-op."""
+    return sig.groupBy("source").agg(
+        *[F.min(f"h{i}").alias(f"h{i}") for i in range(N_MINHASH)]
+    )
 
 
 def _with_shingles(
@@ -151,8 +138,8 @@ def _with_shingles(
 ) -> DataFrame:
     """documents → (doc_id, sh: array<string>) distinct word-3-grams.
 
-    ``tokenizer`` selects the token stream the shingles are built from
-    (VERDICT r10 item 3): ``whitespace`` (default — every registered
+    ``tokenizer`` selects the token stream the shingles are built from:
+    ``whitespace`` (default — every registered
     oracle keeps it) or ``unicode``
     (:data:`wd2duckdb_spark.functions.text.UNICODE_TOKEN_RE` runs),
     which is what keeps shingle dedup meaningful on CJK /
@@ -167,9 +154,7 @@ def _with_shingles(
     parquet file (one input split), and the higher-order-function
     shingling is interpreted (non-codegen) — without the repartition
     the whole corpus shingles on a single core. On a real multi-split
-    corpus the scan parallelizes anyway, and hash-partitioning by
-    doc_id pre-aligns the downstream groupBy(doc_id) so the minhash
-    aggregation needs no second exchange.
+    corpus the scan parallelizes anyway.
 
     The partition count is explicit: a bare ``repartition("doc_id")``
     exchange gets AQE-coalesced back to ONE partition (input bytes are
@@ -177,7 +162,7 @@ def _with_shingles(
     Cost is per-shingle CPU, not input bytes, so bytes-based coalescing
     is the wrong heuristic here.
 
-    ``scan_parts`` (optimization round 11): callers that read straight
+    ``scan_parts``: callers that read straight
     from a parquet scan pass its memoized split count and the
     repartition is SKIPPED when the scan already provides a task per
     core — see :func:`wd2duckdb_spark.catalog.spread`. None (streaming
@@ -200,9 +185,16 @@ def _with_shingles(
     )
 
 
-def _band_key_cols(sig: DataFrame) -> DataFrame:
-    """(doc_id, h0..h7) signatures → (doc_id, band, key) band keys."""
-    return sig.select(
+def band_keys(docs: DataFrame, *, scan_parts: int | None = None) -> DataFrame:
+    """``documents``-shaped DataFrame → (doc_id, band, key): the
+    MinHash LSH band keys of every document with ≥3 tokens (shorter
+    docs emit no keys — they cannot near-duplicate under word-3-gram
+    shingles and are always kept). Each key is the md5 of two adjacent
+    signature values, derived in-row from the kernel
+    (:func:`_minhash_sig_frame`), so batch pair generation and the
+    streaming ingest index cannot drift on signature semantics.
+    ``scan_parts``: see :func:`_minhash_sig_frame`."""
+    return _minhash_sig_frame(docs, scan_parts=scan_parts).select(
         "doc_id",
         F.explode(
             F.array(
@@ -222,59 +214,17 @@ def _band_key_cols(sig: DataFrame) -> DataFrame:
     ).select("doc_id", "bk.band", "bk.key")
 
 
-def minhash_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-doc MinHash signature (h0..h7) — in-row, zero aggregation
-    exchanges (see :func:`_minhash_sig_frame`)."""
+def q_minhash_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Per-doc MinHash signature (h0..h7): the kernel over the
+    documents table — in-row, no aggregation exchange."""
     return _minhash_sig_frame(
         tbl(spark, sf_dir, "documents"),
         scan_parts=scan_partitions(spark, sf_dir, "documents"),
-    )
-
-
-def q_minhash_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return minhash_signatures(spark, sf_dir).orderBy("doc_id")
-
-
-def _minhash_sig(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Fresh MinHash signature frame (doc_id, h0..h7) over the fixture
-    documents — the shared construction of the MinHash tier's PAIR
-    consumers (q_minhash_lsh_pairs, q_lsh_keep_list and the two
-    composition diagnostics). Each consumer references the frame ONCE
-    in its plan (banding is a single downstream pass), so there is no
-    within-plan reuse to persist for; the round-11 session memo that
-    lived here only excluded the signature pass from warm benchmark
-    reps and is gone (optimization round 12 — every invocation now
-    measures cold-representative work)."""
-    return minhash_signatures(spark, sf_dir)
-
-
-def band_keys(
-    docs: DataFrame,
-    *,
-    scan_parts: int | None = None,
-    sig: DataFrame | None = None,
-) -> DataFrame:
-    """``documents``-shaped DataFrame → (doc_id, band, key): the
-    MinHash LSH band keys of every document with ≥3 tokens (shorter
-    docs emit no keys — they cannot near-duplicate under word-3-gram
-    shingles and are always kept).
-
-    Composed from the SAME helpers as the batch tier
-    (:func:`_minhash_sig_frame` → :func:`_band_key_cols`), so batch
-    pair generation and the streaming ingest index cannot drift on
-    signature semantics. ``scan_parts``: see :func:`_with_shingles`.
-    ``sig``: a pre-computed signature frame — band keys are derived
-    from it in-row, skipping the shingle+minhash rebuild."""
-    if sig is None:
-        sig = _minhash_sig_frame(docs, scan_parts=scan_parts)
-    return _band_key_cols(sig)
+    ).orderBy("doc_id")
 
 
 def lsh_candidate_pairs(
-    docs: DataFrame,
-    *,
-    scan_parts: int | None = None,
-    sig: DataFrame | None = None,
+    docs: DataFrame, *, scan_parts: int | None = None
 ) -> DataFrame:
     """Distinct LSH candidate pairs ``(a_id, b_id)``, ``a_id < b_id``,
     of a ``documents``-shaped frame — the shared pair pipeline behind
@@ -289,7 +239,7 @@ def lsh_candidate_pairs(
     parameters (pathological all-identical corpora excepted, which is
     inherent to the operator)."""
     buckets = (
-        band_keys(docs, scan_parts=scan_parts, sig=sig)
+        band_keys(docs, scan_parts=scan_parts)
         .groupBy("band", "key")
         .agg(F.sort_array(F.collect_set("doc_id")).alias("ids"))
         .filter(F.size("ids") >= 2)
@@ -315,30 +265,22 @@ def q_minhash_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     :func:`lsh_candidate_pairs` for the plan shape."""
     return lsh_candidate_pairs(
         tbl(spark, sf_dir, "documents"),
-        sig=_minhash_sig(spark, sf_dir),
+        scan_parts=scan_partitions(spark, sf_dir, "documents"),
     ).orderBy("a_id", "b_id")
 
 
-def connected_components(
-    pairs: DataFrame, max_iters: int = 50, algorithm: str = "propagation"
-) -> DataFrame:
+def connected_components(pairs: DataFrame, max_iters: int = 50) -> DataFrame:
     """Undirected connected components over ``(a_id, b_id)`` pairs.
 
     Returns ``(node, cluster_id)`` where cluster_id = the component's
-    minimum node id. Two algorithms behind one API:
-
-    - ``"propagation"`` (default): iterative min-label propagation —
-      every node repeatedly adopts the minimum label among itself and
-      its neighbors until fixpoint. Converges in O(component diameter)
-      rounds (early exit on no-change); each round is one join + one
-      aggregation, both on the node key. LSH dedup components are
-      shallow (near-cliques), so this is the right default cost.
-    - ``"star"``: the large-star/small-star alternation (Kiveris et
-      al., "Connected Components in MapReduce and Beyond") —
-      O(log² n) rounds WORST case, ~log n in practice, independent of
-      diameter. The insurance policy for adversarial chain-shaped dup
-      clusters (10k-node path: propagation needs 10k rounds, star
-      converges in tens — pinned in tests/test_round3_ops.py).
+    minimum node id, by iterative min-label propagation: every node
+    repeatedly adopts the minimum label among itself and its neighbors
+    until fixpoint. Converges in diameter + 1 rounds (early exit on
+    no-change); each round is one join + one aggregation, both on the
+    node key. LSH dedup components are shallow (near-cliques), so the
+    round count stays small where this runs; a chain-shaped component
+    deeper than ``max_iters`` raises rather than returning partial
+    labels, which would split real components.
 
     Every round's labels are eagerly checkpointed
     (:func:`~wd2duckdb_spark.catalog.eager_checkpoint`): iterative
@@ -348,17 +290,7 @@ def connected_components(
     storage — acceptable for a deterministic re-runnable batch job;
     set the ``RELIABLE_CKPT_CONF`` session conf to a durable dir on
     clusters where executor loss is routine.
-
-    Raises ``RuntimeError`` if still unconverged after ``max_iters`` —
-    silently returning partial labels would split real components.
     """
-    if algorithm == "star":
-        return _connected_components_star(pairs, max_iters)
-    if algorithm != "propagation":
-        raise ValueError(
-            f"connected_components: unknown algorithm {algorithm!r} "
-            "(expected 'propagation' or 'star')"
-        )
     edges = (
         pairs.selectExpr("a_id AS u", "b_id AS v")
         .union(pairs.selectExpr("b_id AS u", "a_id AS v"))
@@ -399,97 +331,10 @@ def connected_components(
                 return labels
         raise RuntimeError(
             f"connected_components did not converge in {max_iters} rounds "
-            "(component diameter exceeds max_iters); raise max_iters or "
-            "rerun with algorithm='star'"
+            "(component diameter exceeds max_iters); raise max_iters"
         )
     finally:
         edges.unpersist()
-
-
-def _connected_components_star(
-    pairs: DataFrame, max_iters: int = 50
-) -> DataFrame:
-    """Large-star/small-star alternation (Kiveris et al. 2014):
-
-    - **large-star** — every node attaches its strictly LARGER
-      neighbors to the minimum of its neighborhood (incl. itself);
-    - **small-star** — every node attaches itself and its smaller
-      neighbors to its minimum smaller neighbor.
-
-    Each round halves chain-ish structures, so rounds scale with
-    log(component size), not diameter. Fixpoint: the edge set is a
-    star forest (every edge is node → component min) and small-star
-    reproduces it unchanged — checked with an exact set compare
-    (count + one-sided exceptAll; both sides are distinct sets).
-    Per-round cost: two groupBy-min + join rounds over the edge set,
-    lineage truncated by eager checkpointing exactly like the
-    propagation variant (reliable-dir selectable the same way).
-    """
-    cur = eager_checkpoint(
-        pairs.selectExpr("a_id AS u", "b_id AS v")
-        .filter("u IS NOT NULL AND v IS NOT NULL AND u <> v")
-        .distinct()
-    )
-    # eagerly checkpointed like `cur`: the returned labels must not
-    # keep a lazy reference to `pairs` — re-running the label DataFrame
-    # would otherwise re-execute the whole upstream candidate-pair
-    # plan (e.g. the MinHash-LSH pipeline) once per action
-    nodes = eager_checkpoint(
-        pairs.selectExpr("a_id AS node")
-        .union(pairs.selectExpr("b_id AS node"))
-        .distinct()
-    )
-    for _ in range(max_iters):
-        # large-star over the symmetrized neighbor lists
-        nbrs = cur.union(cur.selectExpr("v AS u", "u AS v"))
-        mins = nbrs.groupBy("u").agg(F.min("v").alias("mv"))
-        large = (
-            nbrs.join(mins, "u")
-            .filter(F.col("v") > F.col("u"))
-            .select(
-                F.col("v").alias("u"),
-                F.least("u", "mv").alias("v"),
-            )
-            .distinct()
-        )
-        # small-star over large->small directed edges
-        d = (
-            large.selectExpr("greatest(u, v) AS u", "least(u, v) AS v")
-            .filter("u <> v")
-            .distinct()
-        )
-        smins = d.groupBy("u").agg(F.min("v").alias("mv"))
-        nxt = eager_checkpoint(
-            d.join(smins, "u")
-            .select(F.col("v").alias("u"), F.col("mv").alias("v"))
-            .union(smins.selectExpr("u", "mv AS v"))
-            .filter("u <> v")
-            .distinct()
-        )
-        same = (
-            nxt.count() == cur.count()
-            and nxt.exceptAll(cur).limit(1).count() == 0
-        )
-        cur.unpersist()
-        cur = nxt
-        if same:
-            # star forest: cur maps node -> component min. cur stays
-            # checkpoint-cached — it backs the returned lazy plan
-            # (same deliberate leak as the propagation variant's final
-            # labels; bench.py clears cache between queries).
-            return (
-                nodes.join(
-                    cur.withColumnRenamed("u", "node"), "node", "left"
-                )
-                .select(
-                    "node",
-                    F.coalesce("v", "node").alias("cluster_id"),
-                )
-            )
-    raise RuntimeError(
-        f"connected_components(star) did not converge in "
-        f"{max_iters} rounds"
-    )
 
 
 #: (session id, sf_dir) → component labels. connected_components is
@@ -615,7 +460,7 @@ def q_lsh_keep_list(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = tbl(spark, sf_dir, "documents").select("doc_id")
     bands = band_keys(
         tbl(spark, sf_dir, "documents"),
-        sig=_minhash_sig(spark, sf_dir),
+        scan_parts=scan_partitions(spark, sf_dir, "documents"),
     )
     w = Window.partitionBy("band", "key")
     dup_ids = (
@@ -754,77 +599,28 @@ def _validate_simhash_banding(bits: int, blocks: int, hamming: int) -> None:
         )
 
 
-def simhash_bit_counts(
-    docs: DataFrame,
-    *,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    bits: int = SIMHASH_BITS,
-    scan_parts: int | None = None,
-) -> DataFrame:
-    """The MERGEABLE half of SimHash: per-document per-bit counters
-    ``(id_col, n, c0..c{bits-1})`` over the document's DISTINCT
-    whitespace tokens. Counters are sums, so partials over disjoint
-    row sets ADD — the property the streaming signature maintenance
-    (streaming/simhash_sig.py) is built on. One doc-keyed aggregate,
-    map-side combined."""
-    if not 1 <= bits <= 60:
-        raise ValueError(f"bits must be in [1, 60] (15 md5 hex chars), got {bits}")
-    toks = (
-        spread(docs, id_col, scan_parts=scan_parts)
-        .select(
-            id_col,
-            F.explode(
-                F.array_distinct(F.split(F.lower(F.trim(text_col)), " "))
-            ).alias("tok"),
-        )
-        .filter(F.col("tok") != "")
-    )
-    h = F.conv(F.substring(F.md5("tok"), 1, 15), 16, 10).cast("long")
-    bit_sums = [
-        F.sum(F.shiftright(h, j).bitwiseAND(1)).alias(f"c{j}")
-        for j in range(bits)
-    ]
-    return toks.groupBy(id_col).agg(F.count("*").alias("n"), *bit_sums)
-
-
-def counters_to_signature(
-    counters: DataFrame, *, id_col: str = "doc_id", bits: int = SIMHASH_BITS
-) -> DataFrame:
-    """Finalize bit counters into signatures: bit j set iff the
-    majority of counted tokens had it set (``2·c_j > n``)."""
-    sim = None
-    for j in range(bits):
-        term = F.when(
-            F.col(f"c{j}") * 2 > F.col("n"), F.lit(1 << j)
-        ).otherwise(F.lit(0))
-        sim = term if sim is None else sim + term
-    return counters.select(id_col, sim.cast("long").alias("sim"))
-
-
-def simhash_signatures(
+def _simhash_counts(
     docs: DataFrame,
     *,
     id_col: str = "doc_id",
     text_col: str = "text",
     bits: int = SIMHASH_BITS,
 ) -> DataFrame:
-    """Per-document SimHash: majority vote per bit over the md5
-    hashes of the document's DISTINCT whitespace tokens → one
-    ``bits``-wide signature (``(id_col, sim)``).
+    """The SimHash kernel: per-document bit counters ``(id_col, n, c)``
+    over the md5 hashes of the document's DISTINCT non-empty whitespace
+    tokens — ``n`` tokens, ``c[j]`` of them with bit j set (bit j of
+    the long read from the md5's first 15 hex chars). Documents without
+    tokens emit no row.
 
-    Computed ENTIRELY IN-ROW (round 11): a document's tokens live in
-    its own row, so the bit counters are a single ``aggregate()`` fold
-    over the hashed token array (one 60-int accumulator per row) and
-    the majority vote a second in-row fold — ZERO exchanges. The
-    previous formulation repartitioned the documents table by id (a
-    full shuffle of the corpus TEXT payload — guide §8's heavy-bytes
-    anti-pattern) to feed explode + a doc-keyed 60-counter aggregate;
-    measured 0.99 → 0.86 s at sf0.1, identical output row-for-row.
-    Streaming keeps the mergeable-counter path
-    (:func:`simhash_bit_counts`, counters ADD across disjoint row
-    sets), which this must stay value-identical to — pinned by the
-    batch-twin parity test in tests/test_streaming.py."""
+    Computed entirely in-row: a document's tokens live in its own row,
+    so the counters are one ``aggregate()`` fold over the hashed token
+    array (one ``bits``-int accumulator per row) — no exchange, and no
+    shuffle of the corpus text to a doc-keyed aggregate. Counters are
+    sums, so rows over disjoint token sets of one document merge by
+    :func:`_sum_merge`. They stay one array column here: spreading them
+    over ``bits`` columns in the kernel made :func:`simhash_signatures`
+    ~1.6× slower at sf0.1, so only the streaming counter store spreads
+    them, at its write."""
     if not 1 <= bits <= 60:
         raise ValueError(
             f"bits must be in [1, 60] (15 md5 hex chars), got {bits}"
@@ -839,7 +635,6 @@ def simhash_signatures(
     wh = docs.select(F.col(id_col), hs.alias("_hs")).filter(
         F.size("_hs") > 0
     )
-    n = F.size("_hs")
     seq = F.sequence(F.lit(0), F.lit(bits - 1))
     counts = F.aggregate(
         "_hs",
@@ -851,20 +646,117 @@ def simhash_signatures(
             + F.call_function("shiftright", h, j).bitwiseAND(1).cast("int"),
         ),
     )
-    wc = wh.select(F.col(id_col), n.alias("_n"), counts.alias("_c"))
+    return wh.select(F.col(id_col), F.size("_hs").alias("n"), counts.alias("c"))
+
+
+def _sum_merge(counts: DataFrame) -> DataFrame:
+    """SimHash's merge, over counter rows in the store layout
+    ``(doc_id, n, c0..c59)`` (the kernel's array spread over columns):
+    one row per ``doc_id``, the component-wise sum. Sums are not
+    idempotent, so a row must be counted once — the counter store's
+    replay rule."""
+    return counts.groupBy("doc_id").agg(
+        F.sum("n").alias("n"),
+        *[F.sum(f"c{j}").alias(f"c{j}") for j in range(SIMHASH_BITS)],
+    )
+
+
+def _simhash_vote(
+    counts: DataFrame, *, id_col: str = "doc_id", bits: int = SIMHASH_BITS
+) -> DataFrame:
+    """Finalize ``(id_col, n, c)`` counters into signatures
+    ``(id_col, sim)``: bit j set iff the majority of counted tokens had
+    it set (``2·c[j] > n``) — a second in-row fold."""
+    seq = F.sequence(F.lit(0), F.lit(bits - 1))
     sim = F.aggregate(
         F.zip_with(
-            F.col("_c"),
+            F.col("c"),
             seq,
             lambda c, j: F.when(
-                c * 2 > F.col("_n"),
+                c * 2 > F.col("n"),
                 F.call_function("shiftleft", F.lit(1).cast("long"), j),
             ).otherwise(F.lit(0).cast("long")),
         ),
         F.lit(0).cast("long"),
         lambda acc, x: acc + x,
     )
-    return wc.select(F.col(id_col), sim.alias("sim"))
+    return counts.select(F.col(id_col), sim.alias("sim"))
+
+
+def simhash_signatures(
+    docs: DataFrame,
+    *,
+    id_col: str = "doc_id",
+    text_col: str = "text",
+    bits: int = SIMHASH_BITS,
+) -> DataFrame:
+    """Per-document SimHash: majority vote per bit over the md5
+    hashes of the document's DISTINCT whitespace tokens → one
+    ``bits``-wide signature (``(id_col, sim)``) — the kernel
+    (:func:`_simhash_counts`) finalized by :func:`_simhash_vote`, in
+    one in-row pass with no exchange. The streaming store merges the
+    same kernel rows before the same vote, so a document that arrives
+    whole gets the same signature there (pinned by the batch-twin
+    parity test in tests/test_streaming.py)."""
+    return _simhash_vote(
+        _simhash_counts(docs, id_col=id_col, text_col=text_col, bits=bits),
+        id_col=id_col,
+        bits=bits,
+    )
+
+
+def _simhash_keys(
+    sig: DataFrame,
+    *,
+    bits: int = SIMHASH_BITS,
+    blocks: int = SIMHASH_BANDS,
+    hamming: int = SIMHASH_HAMMING,
+) -> DataFrame:
+    """(doc_id, sim) signatures → (doc_id, sim, tbl, key) probe rows,
+    one per Manku table (:func:`simhash_tables`): ``key`` concatenates
+    the table's blocks of ``sim``. The one banded-key builder — the
+    batch pair queries self-join its rows (:func:`_simhash_key_pairs`)
+    and the SimHash ingest index persists and probes them."""
+    _validate_simhash_banding(bits, blocks, hamming)
+    widths = simhash_block_widths(bits, blocks)
+    offsets = [sum(widths[:i]) for i in range(blocks)]
+    entries = F.array(
+        *[
+            F.struct(
+                F.lit(t).alias("tbl"),
+                _simhash_combo_key(
+                    F.col("sim"), combo, widths, offsets
+                ).alias("key"),
+            )
+            for t, combo in enumerate(simhash_tables(blocks, hamming))
+        ]
+    )
+    return sig.select("doc_id", "sim", F.explode(entries).alias("e")).select(
+        "doc_id",
+        "sim",
+        F.col("e.tbl").alias("tbl"),
+        F.col("e.key").alias("key"),
+    )
+
+
+def _simhash_key_pairs(keys: DataFrame) -> DataFrame:
+    """Distinct candidate pairs ``(a_id, b_id, sa, sb)``, ``a_id <
+    b_id``, of :func:`_simhash_keys` rows: docs sharing any (tbl,
+    key). The self-join runs on (tbl, key) — hot exact-dup clusters
+    skew a key, and AQE's skew-join split handles exactly that
+    shape."""
+    a = keys.select(
+        F.col("doc_id").alias("a_id"), F.col("sim").alias("sa"), "tbl", "key"
+    )
+    b = keys.select(
+        F.col("doc_id").alias("b_id"), F.col("sim").alias("sb"), "tbl", "key"
+    )
+    return (
+        a.join(b, ["tbl", "key"])
+        .filter(F.col("a_id") < F.col("b_id"))
+        .select("a_id", "b_id", "sa", "sb")
+        .distinct()
+    )
 
 
 def simhash_candidates(
@@ -888,39 +780,12 @@ def simhash_candidates(
     directly measurable (tools/bench_simhash_bands.py).
 
     Plan: ONE generator pass explodes each signature into its
-    C(blocks, hamming) (table, key) probes; the self-join runs on
-    (table, key) — hot exact-dup clusters skew a key, and AQE's
-    skew-join split handles exactly that shape."""
-    _validate_simhash_banding(bits, blocks, hamming)
-    widths = simhash_block_widths(bits, blocks)
-    offsets = [sum(widths[:i]) for i in range(blocks)]
-    tables = simhash_tables(blocks, hamming)
-    sim = F.col(sim_col)
-    entries = F.array(
-        *[
-            F.struct(
-                F.lit(t).alias("tbl"),
-                _simhash_combo_key(sim, combo, widths, offsets).alias("key"),
-            )
-            for t, combo in enumerate(tables)
-        ]
-    )
-    keys = sig.select(
-        F.col(id_col).alias("doc_id"),
-        sim.alias("sim"),
-        F.explode(entries).alias("e"),
-    ).select("doc_id", "sim", F.col("e.tbl").alias("tbl"), F.col("e.key").alias("key"))
-    a = keys.select(
-        F.col("doc_id").alias("a_id"), F.col("sim").alias("sa"), "tbl", "key"
-    )
-    b = keys.select(
-        F.col("doc_id").alias("b_id"), F.col("sim").alias("sb"), "tbl", "key"
-    )
-    return (
-        a.join(b, ["tbl", "key"])
-        .filter(F.col("a_id") < F.col("b_id"))
-        .select("a_id", "b_id", "sa", "sb")
-        .distinct()
+    C(blocks, hamming) (table, key) probes (:func:`_simhash_keys`),
+    then the (table, key) self-join (:func:`_simhash_key_pairs`)."""
+    _validate_simhash_banding(bits, blocks, hamming)  # before touching sig
+    sig = sig.select(F.col(id_col).alias("doc_id"), F.col(sim_col).alias("sim"))
+    return _simhash_key_pairs(
+        _simhash_keys(sig, bits=bits, blocks=blocks, hamming=hamming)
     )
 
 
@@ -935,10 +800,10 @@ def simhash_pairs(
 ) -> DataFrame:
     """Every signature pair within Hamming distance ≤ ``hamming``
     (exact — the banding is a complete candidate generator, the
-    in-row ``bit_count(a XOR b)`` verifies). Public parameterized API
-    (VERDICT r8 item 1): ``blocks``/``hamming`` pick the Manku-style
-    table-count-vs-key-width point; the answer set is IDENTICAL for
-    every valid setting, only the candidate volume changes."""
+    in-row ``bit_count(a XOR b)`` verifies). ``blocks``/``hamming``
+    pick the Manku-style table-count-vs-key-width point; the answer
+    set is IDENTICAL for every valid setting, only the candidate
+    volume changes."""
     cand = simhash_candidates(
         sig,
         bits=bits,
@@ -964,12 +829,10 @@ def _simhash_sig(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Persisted 60-bit signature frame for the banded pair queries.
     The persist is within-plan reuse (guide §5): BOTH sides of the
     banded self-join (every probe table of the wide layout) read the
-    one materialized signature aggregate — the dominant cost; the
-    banding is cheap. Armed per invocation, not per session
-    (optimization round 12 — the round-11 session memo only excluded
-    the signature pass from warm benchmark reps; Spark's CacheManager
-    dedupes the identical canonicalized plan, so repeat invocations in
-    one session still share a single cache entry)."""
+    one materialized signature frame — the dominant cost; the
+    banding is cheap. Armed per invocation, not per session: Spark's
+    CacheManager dedupes the identical canonicalized plan, so repeat
+    invocations in one session still share a single cache entry."""
     return simhash_signatures(tbl(spark, sf_dir, "documents")).persist()
 
 
@@ -1002,8 +865,8 @@ def q_simhash_wide_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     (same oracle — exactness means the banding choice cannot change
     the answer), generated through the WIDE-KEY table layout
     (blocks=6, hamming=3): C(6,3) = 20 probe tables keyed on 30-bit
-    3-block combined keys. This is the ≥10⁸-document posture (VERDICT
-    r8 item 1): random-collision candidates scale ~20·N²/2^31 vs the
+    3-block combined keys. This is the ≥10⁸-document posture:
+    random-collision candidates scale ~20·N²/2^31 vs the
     narrow layout's ~4·N²/2^16 — ~6,500× fewer false candidates per
     pair of documents, bought with 5× the probe rows. The candidate-
     volume crossover is measured, not asserted:
@@ -1023,8 +886,7 @@ def _shingle_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
     (its benchmark and corpus branches). The persist is a within-plan
     optimizer barrier AND shares one shingling pass between the two
     branches of a single invocation; it is armed per invocation, not
-    per session (optimization round 12 — the round-11 session memo only
-    excluded the shingle pass from warm benchmark reps)."""
+    per session, so every invocation pays its own shingle pass."""
     return _with_shingles(
         tbl(spark, sf_dir, "documents"),
         scan_parts=scan_partitions(spark, sf_dir, "documents"),
@@ -1068,8 +930,7 @@ def q_ngram_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     repartition — re-evaluating the full interpreted shingle transform
     inside the one-task scan stage, per branch (measured 6.3 s → 1.5 s
     at sf0.1 with the barrier). The cached relation also shares ONE
-    shingling pass between the benchmark and corpus branches — and,
-    since round 11, with q_ngram_jaccard via the session memo."""
+    shingling pass between the benchmark and corpus branches."""
     d = _shingle_sets(spark, sf_dir)
     bench = (
         d.filter(F.col("doc_id") < 10)
@@ -1130,7 +991,7 @@ def q_repeated_ngram_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.size("w") >= SPAN_N)
         .select("doc_id", F.posexplode(grams).alias("pos", "gram"))
         # persisted straight off the scan, NOT pre-partitioned on gram
-        # (optimization round 12, guide §2.2/§2.4): of this frame's
+        # (guide §2.2/§2.4): of this frame's
         # three consumers only the dup aggregate keys on gram — and its
         # map-side partial combine shuffles (gram, count) partials, far
         # fewer bytes than the full occurrence rows an up-front
@@ -1242,8 +1103,7 @@ def _span_removal_frame(
     # one shingling pass feeds the dup aggregate AND the occurrence
     # side of the join back (same barrier rationale as
     # q_repeated_ngram_spans / ngram_decontaminate); the persist is
-    # armed per invocation — the round-11 session memo that lived here
-    # is gone (optimization round 12). The explicit gram exchange
+    # armed per invocation. The explicit gram exchange
     # STAYS: both consumers key on gram, and the interleaved A/B
     # min-of-3 at sf0.1 shows it winning (word-5-gram 1.53 s vs
     # 2.39 s combine-first; 16-token verbatim 1.71 s vs 2.23 s;
@@ -1336,14 +1196,13 @@ def q_ngram_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
         # hash(gram) satisfies the distinct's (doc_id, gram)
         # clustering AND the first-seen aggregate AND the join back
         # — one corpus-sized exchange instead of three (guide §2.4;
-        # round 11; re-proven round 12 by interleaved A/B min-of-3 at
+        # interleaved A/B min-of-3 at
         # sf0.1: 2.07 s / 7.6 MB shuffle-write with the shared gram
         # exchange vs 2.41 s / 14.4 MB combine-first — here, unlike
         # repeated_ngram_spans, EVERY consumer keys on gram, including
         # the corpus-sized first-seen join back). The persist feeds
         # first-seen, the join back and the max_id ceiling within ONE
-        # invocation; it is armed per invocation — the round-11 session
-        # memo is gone (optimization round 12).
+        # invocation; it is armed per invocation.
         .repartition("gram")
         .distinct()
         .persist()
@@ -1463,10 +1322,11 @@ def _source_shingles(
     d: DataFrame, *, scan_parts: int | None = None
 ) -> DataFrame:
     """documents → (source, shingle) exploded word-3-grams (tokenize →
-    inline-explode; NOT per-doc-distinct, which both consumers
-    tolerate: collect_set and min are duplicate-invariant — groups
-    span many documents here, so the exploded+aggregate form is the
-    right one, unlike the per-doc in-row :func:`_minhash_sig_frame`).
+    inline-explode; NOT per-doc-distinct, which the consumer tolerates:
+    collect_set is duplicate-invariant). The input of
+    :func:`q_source_overlap_matrix`, which needs the shingle SETS, not
+    signatures — MinHash signatures over any grouping come from the
+    in-row kernel plus :func:`_min_merge`.
     ``scan_parts``: see :func:`_with_shingles`."""
     toks = (
         spread(d, "doc_id", scan_parts=scan_parts)
@@ -1506,21 +1366,24 @@ def q_source_overlap_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
     including 0-agreement pairs (the sketch can't distinguish "no
     overlap" from "overlap below 1/k").
 
+    Plan: the doc tier's in-row kernel carrying ``source``, then one
+    per-source :func:`_min_merge` — the min over a source's per-doc
+    minima is the min over its shingles, and only S×k partial rows per
+    task reach the shuffle, where exploding shingles shipped one row
+    per shingle to the aggregate.
+
     Determinism: the signature is the same md5-derived minhash family
     as the doc tier (one md5 → four 32-bit lanes), so the oracle
     reproduces it bit-for-bit; the estimate is n_match/8.0 — an exact
     binary fraction, no rounding needed. Sources whose every doc has
     <3 tokens have no shingle set and are absent, symmetrically.
     """
-    d = tbl(spark, sf_dir, "documents")
-    sig = (
-        _source_shingles(
-            d, scan_parts=scan_partitions(spark, sf_dir, "documents")
-        )
-        .groupBy("source")
-        .agg(*_minhash_cols())
+    sig = _minhash_sig_frame(
+        tbl(spark, sf_dir, "documents"),
+        id_col="source",
+        scan_parts=scan_partitions(spark, sf_dir, "documents"),
     )
-    return overlap_from_signatures(sig)
+    return overlap_from_signatures(_min_merge(sig))
 
 
 def overlap_from_signatures(sig: DataFrame) -> DataFrame:
@@ -1659,8 +1522,8 @@ def q_embedding_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     S-curve s = 1 - theta/pi, and at a LOW threshold (0.4 => s = 0.63)
     achieving ~1e-7 miss probability needs (2 planes, 32 tables) —
     measured on this corpus, that generates ~8x MORE candidate
-    cosines than the exact all-pairs count (the round-1 banded
-    implementation cost 50 s at sf0.1 where this kernel costs ~1 s).
+    cosines than the exact all-pairs count (a banded implementation
+    cost 50 s at sf0.1 where this kernel costs ~1 s).
     Banding only pays at high thresholds (0.95 => s = 0.9, where
     (12, 16) prunes ~500x) — that regime is served by
     ``similarity.ann_lsh_bucketed``.  Below it, the scalable exact
@@ -1687,7 +1550,7 @@ def q_embedding_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from wd2duckdb_spark.functions.similarity import EMB_DIM
 
-    # ADVICE r3: _EMB_DIM is a hand-mirrored literal of this constant
+    # _EMB_DIM is a hand-mirrored literal of this constant
     # (module-level import would cycle); fail loudly at first use if
     # the PQ geometry ever changes, instead of letting the engine
     # filter and the oracle WHERE silently quarantine different rows
@@ -1857,9 +1720,7 @@ def q_fuzzy_name_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     the key (noun + length band / soundex) until blocks fit a task.
     JVM built-in levenshtein, no UDF.
 
-    Plan (round-4 rewrite, VERDICT r3 item 2; supersedes the round-3
-    salted join, which itself replaced round 2's O(table) broadcast):
-    a GRID-DECOMPOSED shuffle self-join on the block key —
+    Plan: a GRID-DECOMPOSED shuffle self-join on the block key —
     ``operators/skew.grid_self_join``. This fixture has only 8
     distinct block nouns, so a plain shuffle equi-join would funnel
     each block's full quadratic pair expansion into ONE reduce task;
@@ -1871,21 +1732,21 @@ def q_fuzzy_name_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     The ``shuffle_hash`` hint pins the strategy: Catalyst's size
     estimate for the exploded replica side is unreliable and an
-    auto-broadcast of a table-sized side is the round-2 failure this
-    plan exists to avoid. Hash beats merge here because neither
+    auto-broadcast of a table-sized side is the failure this plan
+    exists to avoid. Hash beats merge here because neither
     side's sort order is reusable and the per-cell build side is
     |block|/G rows — bounded by the same widen-the-key rule that
     bounds pair count.
 
-    Two measured cuts inside the block survive from round 2 (75 s at
-    full O(n*m) per pair → 38 s banded → ~2.5 s spread at sf0.1):
+    Two measured cuts inside the block (75 s at full O(n*m) per pair
+    → 38 s banded → ~2.5 s spread at sf0.1):
     (a) a length prefilter |len(a)-len(b)| <= 4 — implied by the
     distance bound, so it drops pairs before any DP runs; (b) the
     THRESHOLD form ``levenshtein(a, b, 4)``, which runs the banded
     O(len*k) DP with early exit instead of the full O(len^2) matrix,
     returning -1 past the bound.
 
-    Round-11 cut (guide §1.2 "per-task work"): both names in a block
+    A third cut (guide §1.2 "per-task work"): both names in a block
     END with the identical ``" <noun>"`` suffix, and edit distance is
     invariant under stripping a shared suffix — so the DP runs on the
     noun-STRIPPED prefixes (~20% shorter strings, and the DP is
@@ -1968,11 +1829,11 @@ def _prefix_frames(
     silently shorten a prefix into missed pairs.
 
     The shingle-DF table ``dfc`` is CORPUS-LINEAR (distinct shingles),
-    so it must NOT be force-broadcast (VERDICT r9 item 1 — at 100 TB
-    that pins a vocabulary-sized table to the driver and every
-    executor). Both sides are keyed by ``tok``; the shuffle join is
-    the scale-safe plan, AQE still downgrades to broadcast at runtime
-    when dfc is genuinely small, and tools/bench_prefix_join.py
+    so it must NOT be force-broadcast (at 100 TB that pins a
+    vocabulary-sized table to the driver and every executor). Both
+    sides are keyed by ``tok``; the shuffle join is the scale-safe
+    plan, AQE still downgrades to broadcast at runtime when dfc is
+    genuinely small, and tools/bench_prefix_join.py
     measures candidate volume + wall-clock staying per-row-flat at
     1×/4×/16× corpus (where dfc itself grows 16×): with per-copy
     token namespaces (so pair semantics scale linearly by
@@ -1987,11 +1848,9 @@ def _prefix_frames(
     self-join consumes ``prefix`` twice and the verification join
     consumes ``sets`` twice (and containment probes ``prefix`` against
     the ``toks`` projection of ``sets``). They are armed per
-    invocation — the round-11/ADVICE-r10 session memo that lived here
-    only excluded the DF-count + window pipeline from warm benchmark
-    reps, and Spark's CacheManager dedupes the identical canonicalized
-    plans, so repeat invocations in one session still share a single
-    cache entry per frame (no unbounded-entry leak).
+    invocation, and Spark's CacheManager dedupes the identical
+    canonicalized plans, so repeat invocations in one session still
+    share a single cache entry per frame (no unbounded-entry leak).
     """
     from pyspark.sql import Window
 
@@ -2055,7 +1914,7 @@ def q_jaccard_prefix_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     sort for prefix positions, then a join whose fan-out is bounded
     by the DF of *prefix* shingles — the classic exact alternative to
     LSH when the threshold is high and misses are unacceptable. The
-    candidate machinery (incl. the VERDICT-r9 de-broadcast of the
+    candidate machinery (incl. the de-broadcast of the
     corpus-linear shingle-DF table) is shared with
     :func:`q_containment_join` via :func:`_prefix_frames`.
     """
@@ -2109,7 +1968,7 @@ CDC_W = 4
 CDC_MOD = 32  # expected chunk length ≈ 32 tokens
 CDC_B = 131
 CDC_M = 2147483647  # 2^31−1; th < 2^32, th·131³ < 2^54 — fits int64
-#: FastCDC-style normalization (VERDICT r9 item 3): chunk lengths are
+#: FastCDC-style normalization: chunk lengths are
 #: clamped to [CDC_MIN, CDC_MAX] (avg/4, avg·4 — the classic FastCDC
 #: ratios). Without clamps a low-entropy token stream degenerates:
 #: a constant-token doc whose window hash happens to be ≡0 (mod 32)
@@ -2195,9 +2054,9 @@ def q_cdc_chunk_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     the edit — pinned by a planted-insertion test in
     tests/test_round9_ops.py where CDC finds the shared tail and the
     fixed grid finds nothing after the edit point. Chunk lengths are
-    clamped to [CDC_MIN, CDC_MAX] (FastCDC normalization, VERDICT r9
-    item 3) so low-entropy streams can't degenerate to 1-token or
-    document-sized chunks — pinned by an all-same-token planted doc
+    clamped to [CDC_MIN, CDC_MAX] (FastCDC normalization) so
+    low-entropy streams can't degenerate to 1-token or document-sized
+    chunks — pinned by an all-same-token planted doc
     in tests/test_round10_ops.py.
 
     Plan: tokenize + window-hash + boundary selection + chunk
@@ -2269,13 +2128,13 @@ def q_verbatim_overlap_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Plan: tokenize + window-hash in-row (zero UDFs), ONE exchange on
     the uniform md5 window key for the distinct + per-key min, then a
-    pair-keyed aggregate. Round 11: the `.distinct()` used to hash on
-    (doc_id, wkey) and the window then re-shuffled on wkey — TWO
+    pair-keyed aggregate. Hashing the `.distinct()` on (doc_id, wkey)
+    and re-shuffling on wkey for the window would cost TWO
     corpus-sized exchanges of the same frame (guide §2.4). An explicit
     repartition on wkey alone satisfies BOTH downstream requirements
     (hash(wkey) clusters every (wkey, doc_id) group, a subset of the
     distinct's keys, and is exactly the window's partitioning), so the
-    dedup and the per-key min now ride one exchange; plan-pinned.
+    dedup and the per-key min ride one exchange; plan-pinned.
     The oracle keeps the anchored rule via min() OVER (PARTITION BY
     window).
     """
@@ -2314,8 +2173,8 @@ def q_verbatim_overlap_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_verbatim_span_removal(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The ACTION twin of :func:`q_verbatim_overlap_pairs` (VERDICT
-    r10 item 4): Lee et al. 2022's actual dedup REMOVES the shared
+    """The ACTION twin of :func:`q_verbatim_overlap_pairs`:
+    Lee et al. 2022's actual dedup REMOVES the shared
     verbatim spans — the pairs query only NAMES the documents. This
     cuts every later occurrence of any corpus-repeated
     :data:`VERBATIM_K`-token window: the min-(doc_id, pos) occurrence
@@ -2356,7 +2215,7 @@ CONTAIN_NUM, CONTAIN_DEN = 9, 10
 
 
 def q_containment_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Asymmetric CONTAINMENT self-join (VERDICT r8 item 4): directed
+    """Asymmetric CONTAINMENT self-join: directed
     pairs (a → b) where ≥ 90% of a's word-3-gram shingles appear in b
     — the doc-IN-doc contamination mode Jaccard misses by
     construction: a 50-gram document embedded verbatim in a
@@ -2381,7 +2240,7 @@ def q_containment_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: one shingle-DF shuffle, one per-doc window sort for prefix
     positions (shared with `jaccard_prefix_join` via
-    :func:`_prefix_frames`, incl. the VERDICT-r9 de-broadcast of the
+    :func:`_prefix_frames`, incl. the de-broadcast of the
     corpus-linear shingle-DF table), then the prefix-probe join.
     100 TB posture: the inverted list is linear in corpus shingles;
     candidate volume is Σ_prefix-shingle df(s) — controlled by prefix
@@ -2426,7 +2285,7 @@ def q_containment_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_lsh_candidate_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Candidate-generation quality eval (round 8): precision/recall
+    """Candidate-generation quality eval: precision/recall
     of the MinHash-LSH candidate pairs against EXACT ground truth —
     the pairs at word-3-gram Jaccard ≥ 0.8 that the PPJoin prefix
     filter (:func:`q_jaccard_prefix_join`) finds exactly and
@@ -2448,7 +2307,7 @@ def q_lsh_candidate_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     cand = (
         lsh_candidate_pairs(
             tbl(spark, sf_dir, "documents"),
-            sig=_minhash_sig(spark, sf_dir),
+            scan_parts=scan_partitions(spark, sf_dir, "documents"),
         )
         .select("a_id", "b_id")
         .withColumn("_c", F.lit(1))
@@ -2506,7 +2365,7 @@ def q_neardup_method_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
             "l",
             lsh_candidate_pairs(
                 tbl(spark, sf_dir, "documents"),
-                sig=_minhash_sig(spark, sf_dir),
+                scan_parts=scan_partitions(spark, sf_dir, "documents"),
             ),
         ),
         ("j", q_jaccard_prefix_join(spark, sf_dir)),
@@ -3170,7 +3029,7 @@ ORACLES["dedup_span_removal"] = f"""
 """
 
 
-# candidate-quality eval (round 8): composes the LSH-pair and exact
+# candidate-quality eval: composes the LSH-pair and exact
 # PPJoin oracles verbatim — candidates and ground truth cannot drift
 # from the queries this eval evaluates
 ORACLES["lsh_candidate_eval"] = f"""
@@ -3196,7 +3055,7 @@ ORACLES["lsh_candidate_eval"] = f"""
 """
 
 
-# methods-audit matrix (round 8 wave 3): all three near-dup pair
+# methods-audit matrix: all three near-dup pair
 # oracles composed verbatim — the agreement numbers cannot drift from
 # the pipelines they compare
 ORACLES["neardup_method_overlap"] = f"""

@@ -200,14 +200,11 @@ def q_split_leakage_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     NULL, so the least() NULL-skip trap does not bite), and a ≤6-row
     aggregate. Scale cost = the pair pipeline itself.
     """
-    from wd2duckdb_spark.functions.dedup import (
-        _minhash_sig,
-        lsh_candidate_pairs,
-    )
+    from wd2duckdb_spark.functions.dedup import lsh_candidate_pairs
 
     pairs = lsh_candidate_pairs(
         tbl(spark, sf_dir, "documents"),
-        sig=_minhash_sig(spark, sf_dir),
+        scan_parts=scan_partitions(spark, sf_dir, "documents"),
     )
     sa = split_label(F.col("a_id"))
     sb = split_label(F.col("b_id"))

@@ -323,17 +323,15 @@ def batches(spark, root: str) -> list[int]:
     )
 
 
-def archive_merge(group_col: str, *aggs: Column) -> Callable:
+def archive_merge(reduce: Callable[[DataFrame], DataFrame]) -> Callable:
     """A :func:`fold` ``merge`` for a mergeable-sketch store: archive
-    rows collapse to one row per ``group_col`` under ``aggs`` (the
-    store's merge), live partials pass through, one output file."""
+    rows collapse under ``reduce`` (the store's merge, one row per
+    group key), live partials pass through, one output file."""
 
     def merge(df: DataFrame) -> DataFrame:
         arch = F.col("batch") == ARCHIVE_BATCH
         return (
-            df.filter(arch)
-            .groupBy(group_col)
-            .agg(*aggs)
+            reduce(df.filter(arch))
             .withColumn("batch", F.lit(ARCHIVE_BATCH))
             .unionByName(df.filter(~arch))
             .coalesce(1)

@@ -24,12 +24,10 @@ never from re-scanning the corpus.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
 from wd2duckdb_spark.functions.dedup import (
-    N_MINHASH,
-    _minhash_cols,
-    _source_shingles,
+    _min_merge,
+    _minhash_sig_frame,
     overlap_from_signatures,
 )
 from wd2duckdb_spark.streaming import lake_index
@@ -47,7 +45,7 @@ def _batch_signatures(batch_df: DataFrame, batch_id: int, sig_dir: str) -> None:
     written idempotently under ``batch=<id>`` (a replayed batch
     rewrites its own partition). Batches whose docs all have <3 tokens
     produce an empty partition — harmless to the merge."""
-    sig = _source_shingles(batch_df).groupBy("source").agg(*_minhash_cols())
+    sig = _min_merge(_minhash_sig_frame(batch_df, id_col="source"))
     # ≤ S rows — one small file per batch
     lake_index.write_batch(sig.coalesce(1), sig_dir, batch_id)
 
@@ -94,16 +92,12 @@ def source_signature_stream(
     )
 
 
-def _min_hashes() -> list:
-    return [F.min(f"h{i}").alias(f"h{i}") for i in range(N_MINHASH)]
-
-
 def source_signatures(spark, sig_dir: str) -> DataFrame:
     """Merged per-source signatures: component-wise min over every
     batch partial — identical to the batch tier's signature over the
     full corpus (pinned in tests/test_streaming.py), because min is a
     lossless merge for MinHash."""
-    return spark.read.parquet(sig_dir).groupBy("source").agg(*_min_hashes())
+    return _min_merge(spark.read.parquet(sig_dir))
 
 
 def archive_signatures(spark, sig_dir: str, through_batch: int) -> None:
@@ -129,8 +123,9 @@ def archive_signatures(spark, sig_dir: str, through_batch: int) -> None:
     the maintaining stream via ``source_signature_stream(...,
     archive_every=N)``.
     """
-    merge = lake_index.archive_merge("source", *_min_hashes())
-    lake_index.fold(spark, sig_dir, through_batch, merge)
+    lake_index.fold(
+        spark, sig_dir, through_batch, lake_index.archive_merge(_min_merge)
+    )
 
 
 # overlap_from_signatures is re-exported from functions.dedup: the

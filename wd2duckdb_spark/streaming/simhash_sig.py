@@ -7,10 +7,10 @@ but an edited near-copy needs SimHash's Hamming geometry.
 
 SimHash's per-bit counters are MERGEABLE BY SUM: the signature is a
 majority vote over per-bit counts of token hashes, and sums over
-disjoint row sets add. So each micro-batch reduces its docs to
-(doc_id, n, c0..c59) partials appended under ``batch=<id>``, and the
-true corpus counters are the component-wise SUM over all partials —
-no state store, no read-modify-write.
+disjoint row sets add. So each micro-batch writes its docs' kernel
+rows (doc_id, n, c0..c59) under ``batch=<id>``, and the true corpus
+counters are the component-wise SUM over all rows — no state store,
+no read-modify-write.
 
 Replay protection — WEAKER algebra than the MinHash store, stated
 honestly: ``min`` (signatures.py) is idempotent, so even a
@@ -20,19 +20,17 @@ Correctness here rests on the lake-index protocol
 REWRITES its own partition, so each row is counted exactly once, and
 the fold never folds the newest batch a replay could rewrite.
 
-Semantics note: a document SPLIT across micro-batches merges by
-summed counters with per-chunk token distinctness (a token occurring
-in two chunks counts twice) — the natural incremental semantics.
-When each document arrives whole in one batch (the common shard
-layout, and the batch-twin test's), the merged signatures are
-bit-identical to the batch tier's.
+Semantics note: a document SPLIT across rows — across micro-batches,
+or repeated within one — merges by summed counters with per-row
+token distinctness (a token occurring in two rows counts twice) —
+the natural incremental semantics. When each document arrives whole
+in one row (the common shard layout, and the batch-twin test's), the
+merged signatures are bit-identical to the batch tier's.
 
-Scale: a batch partial is ≤ rows(batch) × 62 longs; the merged view
-is one doc-keyed sum aggregate — the same shuffle the batch tier
-pays, amortized across batches. Band keys for probing come from the
-shared :func:`~wd2duckdb_spark.functions.dedup.simhash_pairs`
-machinery, so narrow/wide layouts apply unchanged to the
-streaming-maintained store.
+Scale: a batch writes ≤ rows(batch) × 62 longs; the merged view is
+one doc-keyed sum aggregate. Band keys for probing come from the
+shared banded-key builder of ``functions.dedup``, so narrow/wide
+layouts apply unchanged to the streaming-maintained store.
 """
 
 from __future__ import annotations
@@ -44,15 +42,13 @@ from wd2duckdb_spark.functions.dedup import (
     SIMHASH_BANDS,
     SIMHASH_BITS,
     SIMHASH_HAMMING,
-    _simhash_combo_key,
-    _validate_simhash_banding,
-    counters_to_signature,
-    simhash_bit_counts,
-    simhash_block_widths,
-    simhash_candidates,
+    _simhash_counts,
+    _simhash_key_pairs,
+    _simhash_keys,
+    _simhash_vote,
+    _sum_merge,
     simhash_pairs,
     simhash_signatures,
-    simhash_tables,
 )
 from wd2duckdb_spark.streaming import lake_index
 
@@ -69,11 +65,18 @@ __all__ = [
 def _batch_bit_counts(
     batch_df: DataFrame, batch_id: int, sig_dir: str
 ) -> None:
-    """One micro-batch → its (doc_id, n, c0..c59) counter partials,
-    one small file written idempotently under ``batch=<id>``."""
-    lake_index.write_batch(
-        simhash_bit_counts(batch_df).coalesce(1), sig_dir, batch_id
+    """One micro-batch → its kernel rows in the store layout
+    (doc_id, n, c0..c59), one small file written idempotently under
+    ``batch=<id>``."""
+    rows = _simhash_counts(batch_df).select(
+        "doc_id",
+        F.col("n").cast("long").alias("n"),
+        *[
+            F.col("c")[j].cast("long").alias(f"c{j}")
+            for j in range(SIMHASH_BITS)
+        ],
     )
+    lake_index.write_batch(rows.coalesce(1), sig_dir, batch_id)
 
 
 def simhash_signature_stream(
@@ -106,21 +109,14 @@ def simhash_signature_stream(
     return writer.start()
 
 
-def _counter_sums() -> list:
-    return [
-        F.sum("n").alias("n"),
-        *[F.sum(f"c{j}").alias(f"c{j}") for j in range(SIMHASH_BITS)],
-    ]
-
-
 def doc_signatures(spark: SparkSession, sig_dir: str) -> DataFrame:
     """Merged per-document signatures: component-wise SUM over every
-    batch partial, then the majority-vote finalize — identical to the
+    stored row, then the majority-vote finalize — identical to the
     batch tier's :func:`simhash_signatures` over the full corpus when
     docs arrive whole (pinned in tests/test_streaming.py)."""
-    return counters_to_signature(
-        spark.read.parquet(sig_dir).groupBy("doc_id").agg(*_counter_sums())
-    )
+    merged = _sum_merge(spark.read.parquet(sig_dir))
+    c = F.array(*[f"c{j}" for j in range(SIMHASH_BITS)])
+    return _simhash_vote(merged.select("doc_id", "n", c.alias("c")))
 
 
 def doc_band_keys(
@@ -133,7 +129,7 @@ def doc_band_keys(
     """(doc_id, sim, tbl, key) probe rows for the streaming-maintained
     store under any banding layout — what an ingest-time Hamming
     probe joins new docs against."""
-    return _sig_banded_keys(
+    return _simhash_keys(
         doc_signatures(spark, sig_dir), blocks=blocks, hamming=hamming
     )
 
@@ -167,7 +163,7 @@ def archive_bit_counts(
         spark,
         sig_dir,
         through_batch,
-        lake_index.archive_merge("doc_id", *_counter_sums()),
+        lake_index.archive_merge(_sum_merge),
     )
 
 
@@ -176,39 +172,10 @@ def archive_bit_counts(
 # ---------------------------------------------------------------------------
 
 
-def _sig_banded_keys(
-    sig: DataFrame, *, blocks: int, hamming: int
-) -> DataFrame:
-    """(doc_id, sim, tbl, key) probe rows for a signature frame —
-    the same Manku combined-key layout :func:`simhash_candidates`
-    joins on, exposed row-wise so an ingest index can persist and
-    probe it."""
-    _validate_simhash_banding(SIMHASH_BITS, blocks, hamming)
-    widths = simhash_block_widths(SIMHASH_BITS, blocks)
-    offsets = [sum(widths[:i]) for i in range(blocks)]
-    entries = F.array(
-        *[
-            F.struct(
-                F.lit(t).alias("tbl"),
-                _simhash_combo_key(
-                    F.col("sim"), combo, widths, offsets
-                ).alias("key"),
-            )
-            for t, combo in enumerate(simhash_tables(blocks, hamming))
-        ]
-    )
-    return sig.select("doc_id", "sim", F.explode(entries).alias("e")).select(
-        "doc_id",
-        "sim",
-        F.col("e.tbl").alias("tbl"),
-        F.col("e.key").alias("key"),
-    )
-
-
 def _hamming_verify(hamming: int):
-    """Verify rule of the history probe: the exact in-row Hamming
-    distance between the batch doc's signature (``_new_sim``) and the
-    STORED one — banding generates candidates, geometry decides."""
+    """The exact in-row Hamming test between the batch doc's signature
+    (``_new_sim``) and a STORED or earlier one (``sim``) — banding
+    generates candidates, geometry decides."""
     return F.bit_count(F.col("_new_sim").bitwiseXOR(F.col("sim"))) <= hamming
 
 
@@ -222,16 +189,24 @@ def _batch_simhash_dedup(
     hamming: int,
 ) -> None:
     def sign(b: DataFrame) -> DataFrame:
-        return _sig_banded_keys(
+        return _simhash_keys(
             simhash_signatures(b), blocks=blocks, hamming=hamming
         )
 
     def dups(b: DataFrame, keys: DataFrame, seen) -> DataFrame:
-        # within-batch: exact pairs (a < b) via the shared pair
-        # machinery — the larger id drops, the batch tier's keep-min
-        in_batch = simhash_pairs(
-            simhash_signatures(b), blocks=blocks, hamming=hamming
-        ).select(F.col("b_id").alias("doc_id"))
+        # within-batch: exact pairs (a < b) from the persisted keys via
+        # the shared banded self-join — the larger id drops, the batch
+        # tier's keep-min
+        in_batch = (
+            _simhash_key_pairs(keys)
+            .select(
+                F.col("b_id").alias("doc_id"),
+                F.col("sb").alias("_new_sim"),
+                F.col("sa").alias("sim"),
+            )
+            .filter(_hamming_verify(hamming))
+            .select("doc_id")
+        )
         if seen is None:
             return in_batch
         return lake_index.probe(
@@ -264,15 +239,16 @@ def simhash_ingest_stream(
     near-copy changes few tokens, so its SimHash flips few bits while
     its shingle-set Jaccard can fall below any LSH threshold.
 
-    Per micro-batch: 60-bit signatures via the shared batch
-    machinery, then
+    Per micro-batch: 60-bit signatures and their Manku banded keys
+    via the shared batch machinery, computed once, then
 
-    - HISTORY probe: the batch's Manku banded keys against the
-      persisted (tbl, key, sim) index — candidates verified with the
-      exact in-row Hamming test against the STORED signature (banding
+    - HISTORY probe: the batch's keys against the persisted
+      (tbl, key, sim) index — candidates verified with the exact
+      in-row Hamming test against the STORED signature (banding
       generates, geometry decides);
-    - WITHIN-batch: exact pairs from :func:`simhash_pairs`; the
-      larger doc_id drops (keep-min).
+    - WITHIN-batch: the same keys' banded self-join and Hamming test
+      (the pairs :func:`simhash_pairs` finds); the larger doc_id
+      drops (keep-min).
 
     Kept docs append under ``out_dir/batch=<id>``; ALL docs' keys +
     signatures index under ``index_dir/batch=<id>`` (dropped docs
@@ -308,15 +284,3 @@ def simhash_ingest_stream(
         writer = writer.trigger(availableNow=True)
     return writer.start()
 
-
-#: No registered queries: the streaming store's correctness contract
-#: is batch-twin parity (tests/test_streaming.py pins merged
-#: signatures == simhash_signatures and stream pairs ==
-#: q_simhash_hamming_pairs; the SimHash ingest tests pin the ingest
-#: tier's kept set == the batch pair rule across boundary layouts,
-#: dup-of-dropped-doc, and crash replay); simhash_candidates is
-#: re-exported for probe composition.
-QUERIES: dict = {}
-ORACLES: dict[str, str] = {}
-
-_ = simhash_candidates  # re-export for probe composition
