@@ -451,3 +451,26 @@ def test_filtered_index_probe_matches_from_scratch_prefilter(spark):
     assert "cell" in pf
     pushed = " ".join(pushed_filters(df))
     assert "label" in pushed, pushed
+
+
+def test_centroid_table_plans_local_table_scan(spark, tmp_path, monkeypatch):
+    """The centroid table written on every index bootstrap is a
+    JVM-local relation (``LocalTableScan``, no Python-fed
+    ``ExistingRDD`` scan), and it reads back exactly as given."""
+    from wd2duckdb_spark.functions import ann_index
+    from wd2duckdb_spark.functions.similarity import _centroids
+
+    frames, real = [], ann_index.local_frame
+
+    def spy(*args):
+        frames.append(real(*args))
+        return frames[-1]
+
+    monkeypatch.setattr(ann_index, "local_frame", spy)
+    idx = str(tmp_path / "index")
+    cents = _centroids(spark, SF_DIR)
+    ann_index.ivf_index_write(spark, SF_DIR, idx)
+    (frame,) = frames
+    plan = frame._jdf.queryExecution().executedPlan().toString()
+    assert "LocalTableScan" in plan and "ExistingRDD" not in plan, plan
+    assert ann_index._index_centroids(spark, idx) == cents

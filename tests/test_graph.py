@@ -91,6 +91,36 @@ def test_connected_components_unconverged_raises(spark):
         connected_components(pairs, max_iters=3)
 
 
+def test_connected_components_jobs_per_round(spark):
+    """One propagation round is one checkpoint job and its adaptive
+    shuffle stages: 5 jobs. The changed-label count is observed on that
+    job; a separate change-check join (10 jobs per round that way)
+    fails this pin. A chain of n edges converges in n + 1 rounds, so
+    one more edge is one more round; the labels stay exact."""
+    from wd2duckdb_spark.functions.dedup import connected_components
+
+    sc = spark.sparkContext
+
+    def jobs(n):
+        pairs = spark.createDataFrame(
+            [(i, i + 1) for i in range(n)], "a_id long, b_id long"
+        )
+        group = f"cc-jobs-per-round-{n}"
+        sc.setJobGroup(group, "connected components")
+        try:
+            labels = connected_components(pairs)
+        finally:
+            for k in ("spark.jobGroup.id", "spark.job.description",
+                      "spark.job.interruptOnCancel"):
+                sc.setLocalProperty(k, None)
+        assert {(r.node, r.cluster_id) for r in labels.collect()} == {
+            (i, 0) for i in range(n + 1)
+        }
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    assert jobs(5) - jobs(4) == 5
+
+
 @pytest.mark.slow
 def test_reliable_checkpoint_conf_flows_through_iterative_ops(spark, tmp_path):
     """Round 6: the engine-wide reliable-checkpoint path

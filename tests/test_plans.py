@@ -955,3 +955,38 @@ def test_source_overlap_matrix_plan_one_pass_sets(spark):
     df.collect()  # AQE-final plan carries the exchange reuse
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert len(re.findall("ReusedExchange", plan)) >= 1, plan
+
+
+def test_local_frame_round_trips_nulls_nan_arrays_and_empty(spark):
+    """``catalog.local_frame``: a table built from Python rows plans a
+    ``LocalTableScan`` with exactly the DDL schema; ``None`` stays
+    null, NaN stays NaN (inside arrays too), and zero rows give an
+    empty frame of the same schema."""
+    import math
+
+    from wd2duckdb_spark.catalog import local_frame
+
+    ddl = "id long, x double, v array<double>, s string, n int"
+    nan = float("nan")
+    df = local_frame(
+        spark,
+        [(1, None, [1.5, nan], "it's \\ ü", 7), (2, nan, None, None, None)],
+        ddl,
+    )
+    assert df.schema.simpleString() == (
+        "struct<id:bigint,x:double,v:array<double>,s:string,n:int>"
+    )
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert "LocalTableScan" in plan and "ExistingRDD" not in plan, plan
+    a, b = df.orderBy("id").collect()
+    assert (a.id, a.x, a.v[0], a.s, a.n) == (1, None, 1.5, "it's \\ ü", 7)
+    assert math.isnan(a.v[1])
+    assert b.id == 2 and math.isnan(b.x)
+    assert (b.v, b.s, b.n) == (None, None, None)
+    # NaN is a value, not a null, to Spark as well
+    assert df.filter(F.isnan("x")).count() == 1
+    assert df.filter(F.col("x").isNull()).count() == 1
+
+    empty = local_frame(spark, [], ddl)
+    assert empty.schema == df.schema
+    assert empty.collect() == []

@@ -336,6 +336,9 @@ def test_bm25_eval_plan_no_per_query_corpus_sort(spark):
             # the localCheckpointed per-query aggregate (round 11):
             # |queries| materialized rows, not matched corpus docs
             or "Scan ExistingRDD" in child
+            # the literal query list the zero-match-preserving left
+            # join starts from: |queries| rows built in Python
+            or "LocalTableScan [query#" in child
         ), child
     # the tf frame is persisted: branches read the cache, the corpus
     # is scanned+tokenized once per materialization

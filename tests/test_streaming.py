@@ -1018,6 +1018,98 @@ def test_neardup_ingest_probe_prunes_index_scan(spark, tmp_path, monkeypatch):
     assert got == unpruned == [3]
 
 
+def _pruned_vs_full_scan(spark, monkeypatch, batch_side, seen, on, prune_col):
+    """The executed plan and the sorted ids of the pruned probe forced
+    into several ``IN`` chunks, then the sorted ids of the full-scan
+    regime."""
+    from wd2duckdb_spark.streaming import lake_index
+    from wd2duckdb_spark.streaming.lake_index import _IN_THRESHOLD_CONF
+
+    def run_probe():
+        return lake_index.probe(batch_side, seen, on=on, prune_col=prune_col)
+
+    monkeypatch.setattr(lake_index, "PROBE_CHUNK", 2)
+    old = spark.conf.get(_IN_THRESHOLD_CONF)
+    spark.conf.set(_IN_THRESHOLD_CONF, "3")
+    try:
+        probe = run_probe()
+        plan = probe._jdf.queryExecution().executedPlan().toString()
+        got = sorted(r[0] for r in probe.collect())
+    finally:
+        spark.conf.set(_IN_THRESHOLD_CONF, old)
+    monkeypatch.setattr(lake_index, "MAX_PROBE_CHUNKS", 0)  # full scan
+    full = sorted(r[0] for r in run_probe().collect())
+    return plan, got, full
+
+
+def test_pruned_probe_escapes_string_keys(spark, tmp_path, monkeypatch):
+    """The pruned probe's ``IN`` chunks are SQL text: keys holding a
+    quote, a backslash or non-ASCII text must still match exactly the
+    history rows the full-scan regime finds."""
+    keys = [
+        "plain", "it's", "back\\slash", "\\'both", "naïve ключ 鍵", "a''b"
+    ]
+    index_dir = str(tmp_path / "index")
+    spark.createDataFrame(
+        [(k, 0) for k in keys] + [("other", 0)], "key string, batch int"
+    ).write.parquet(index_dir)
+    seen = spark.read.parquet(index_dir).select("key")
+    batch_side = spark.createDataFrame(
+        [(k, i) for i, k in enumerate(keys)]
+        + [("it", 10), ("back\\\\slash", 11), ("naive", 12), ("\\", 13)],
+        "key string, doc_id long",
+    )
+    plan, got, full = _pruned_vs_full_scan(
+        spark, monkeypatch, batch_side, seen, ["key"], "key"
+    )
+    assert "In(key" in plan, plan
+    assert "Union" in plan, plan
+    assert got == full == list(range(len(keys)))
+
+
+def test_pruned_probe_int_prune_column(spark, tmp_path, monkeypatch):
+    """An int partition column (the semantic tier's ``cell``) prunes
+    through the same SQL-text chunks and finds what the full scan
+    finds."""
+    index_dir = str(tmp_path / "index")
+    spark.createDataFrame(
+        [(c, c * 10 + j, 0) for c in range(6) for j in range(2)],
+        "cell int, v long, batch int",
+    ).write.partitionBy("batch", "cell").parquet(index_dir)
+    seen = spark.read.parquet(index_dir).select("cell")
+    batch_side = spark.createDataFrame(
+        [(1, 100), (3, 101), (4, 102), (9, 103), (-2, 104)],
+        "cell int, vec_id long",
+    )
+    plan, got, full = _pruned_vs_full_scan(
+        spark, monkeypatch, batch_side, seen, ["cell"], "cell"
+    )
+    assert "PartitionFilters: [isnotnull(cell" in plan, plan
+    assert "Union" in plan, plan
+    assert got == full == [100, 101, 102]
+
+
+def test_write_metrics_plans_local_table_scan(spark, tmp_path, monkeypatch):
+    """The sidecar row is a JVM-local relation: its write plans a
+    ``LocalTableScan``, never a Python-fed ``ExistingRDD`` scan."""
+    from wd2duckdb_spark.streaming import lake_index
+
+    frames, real = [], lake_index.local_frame
+
+    def spy(*args):
+        frames.append(real(*args))
+        return frames[-1]
+
+    monkeypatch.setattr(lake_index, "local_frame", spy)
+    root = str(tmp_path / "out")
+    lake_index.write_metrics(spark, root, 3, n_in=5, n_dups=2, n_kept=3)
+    (frame,) = frames
+    plan = frame._jdf.queryExecution().executedPlan().toString()
+    assert "LocalTableScan" in plan and "ExistingRDD" not in plan, plan
+    (row,) = lake_index.batch_metrics(spark, root).collect()
+    assert row.asDict() == {"batch_id": 3, "n_in": 5, "n_dups": 2, "n_kept": 3}
+
+
 def test_neardup_ingest_catchup_batch_uses_shuffled_hash_join(
     spark, tmp_path, monkeypatch
 ):

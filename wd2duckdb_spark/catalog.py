@@ -4,7 +4,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import LongType, TimestampType
+from pyspark.sql.types import LongType, StructType, TimestampType
 
 TESTDATA_TABLES = (
     "region",
@@ -234,6 +234,29 @@ def spread(df: DataFrame, *keys: str, scan_parts: int | None = None) -> DataFram
     if scan_parts is not None and not df.isStreaming and scan_parts >= n:
         return df
     return df.repartition(n, *keys) if keys else df.repartition(n)
+
+
+def local_frame(spark: SparkSession, rows, ddl: str) -> DataFrame:
+    """A table built from Python rows (``rows``: tuples in the column
+    order of the DDL schema ``ddl``) as a JVM-local relation.
+
+    ``spark.createDataFrame(<python list>)`` plans a ``Scan
+    ExistingRDD``, and every read of it starts a Python worker — about
+    1 s for a one-row sidecar write. Handed over as a ``pyarrow.Table``
+    with the Arrow types of ``ddl``, the same rows plan a
+    ``LocalTableScan`` the JVM reads by itself, with the size
+    statistics a join planner uses. ``None`` is null, NaN stays NaN,
+    and zero rows give an empty frame of the same schema."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    schema = StructType.fromDDL(ddl)
+    arrow = to_arrow_schema(schema)
+    cols = list(zip(*rows)) or [()] * len(arrow)
+    table = pa.Table.from_arrays(
+        [pa.array(c, type=f.type) for c, f in zip(cols, arrow)], schema=arrow
+    )
+    return spark.createDataFrame(table, schema)
 
 
 #: Temporal columns the driver has shipped (or may ship) in varying

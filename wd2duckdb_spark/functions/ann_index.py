@@ -59,7 +59,12 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from wd2duckdb_spark.catalog import register_memo, session_key, tbl
+from wd2duckdb_spark.catalog import (
+    local_frame,
+    register_memo,
+    session_key,
+    tbl,
+)
 from wd2duckdb_spark.functions.similarity import (
     EMB_DIM,
     IVF_CENTROID_IDS,
@@ -207,7 +212,8 @@ def ivf_index_write(
     cents = centroids if centroids is not None else _centroids(spark, sf_dir)
     if not cents:
         raise ValueError(f"no trainable centroids in {sf_dir}")
-    spark.createDataFrame(
+    local_frame(
+        spark,
         [(cid, vec) for cid, vec in cents],
         "cid int, embedding array<double>",
     ).coalesce(1).write.mode("error").parquet(f"{index_dir}/centroids")
@@ -318,8 +324,9 @@ def write_index_codebook(
     """Persist the PQ codebook alongside the index so ingest batches
     (and later sessions) encode with EXACTLY the bootstrap's
     codebook."""
-    spark.createDataFrame(
-        [(i, v) for i, v in enumerate(codebook)],
+    local_frame(
+        spark,
+        list(enumerate(codebook)),
         "code int, vec array<double>",
     ).coalesce(1).write.mode("error").parquet(f"{index_dir}/codebook")
 

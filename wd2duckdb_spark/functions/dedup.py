@@ -31,7 +31,7 @@ uses md5+conv, all inside codegen.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from wd2duckdb_spark.catalog import (
@@ -277,10 +277,12 @@ def connected_components(pairs: DataFrame, max_iters: int = 50) -> DataFrame:
     repeatedly adopts the minimum label among itself and its neighbors
     until fixpoint. Converges in diameter + 1 rounds (early exit on
     no-change); each round is one join + one aggregation, both on the
-    node key. LSH dedup components are shallow (near-cliques), so the
-    round count stays small where this runs; a chain-shaped component
-    deeper than ``max_iters`` raises rather than returning partial
-    labels, which would split real components.
+    node key, run by the round's checkpoint job, which also counts the
+    changed labels in an ``Observation`` (no second change-check job).
+    LSH dedup components are shallow (near-cliques), so the round count
+    stays small where this runs; a chain-shaped component deeper than
+    ``max_iters`` raises rather than returning partial labels, which
+    would split real components.
 
     Every round's labels are eagerly checkpointed
     (:func:`~wd2duckdb_spark.catalog.eager_checkpoint`): iterative
@@ -309,8 +311,17 @@ def connected_components(pairs: DataFrame, max_iters: int = 50) -> DataFrame:
                 .groupBy(edges["u"].alias("node"))
                 .agg(F.min("cluster_id").alias("nbr_min"))
             )
+            # a node's label changes iff a neighbor's is smaller; the
+            # count rides on the round's checkpoint job
+            changed = Observation()
             new_labels = eager_checkpoint(  # truncate lineage per round
                 labels.join(neighbor_min, "node", "left")
+                .observe(
+                    changed,
+                    F.count_if(F.col("nbr_min") < F.col("cluster_id")).alias(
+                        "n"
+                    ),
+                )
                 .select(
                     "node",
                     F.least(
@@ -318,16 +329,9 @@ def connected_components(pairs: DataFrame, max_iters: int = 50) -> DataFrame:
                     ).alias("cluster_id"),
                 )
             )
-            changed = (
-                new_labels.alias("n")
-                .join(labels.alias("o"), "node")
-                .filter(F.col("n.cluster_id") != F.col("o.cluster_id"))
-                .limit(1)
-                .count()
-            )
             labels.unpersist()
             labels = new_labels
-            if changed == 0:
+            if changed.get["n"] == 0:
                 return labels
         raise RuntimeError(
             f"connected_components did not converge in {max_iters} rounds "

@@ -34,7 +34,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from wd2duckdb_spark.catalog import tbl
+from wd2duckdb_spark.catalog import local_frame, tbl
 
 #: RRF smoothing constant (the value from the original RRF paper and
 #: the default in Elasticsearch/OpenSearch/Vespa hybrid search).
@@ -220,25 +220,9 @@ def q_mmr_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     import math
 
-    from pyspark.sql.types import (
-        DoubleType,
-        IntegerType,
-        LongType,
-        StructField,
-        StructType,
-    )
-
     from wd2duckdb_spark.functions.similarity import cosine_scored
 
-    schema = StructType(
-        [
-            StructField("rank", IntegerType()),
-            StructField("vec_id", LongType()),
-            StructField("rel", DoubleType()),
-            StructField("max_sim", DoubleType()),
-            StructField("mmr", DoubleType()),
-        ]
-    )
+    schema = "rank int, vec_id long, rel double, max_sim double, mmr double"
     cands = (
         cosine_scored(spark, sf_dir, 0)
         .orderBy(F.desc("cosine"), "vec_id")
@@ -246,7 +230,7 @@ def q_mmr_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
         .collect()
     )
     if not cands:
-        return spark.createDataFrame([], schema)
+        return local_frame(spark, [], schema)
     rel = {r.vec_id: r.cosine for r in cands}
     assert all(v < _MMR_ENC for v in rel), "vec_id exceeds oracle encoding"
     sims: dict[tuple[int, int], float] = {
@@ -268,7 +252,7 @@ def q_mmr_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
                 best = (key, v, rel[v], ms, score)
         selected.append(best[1])
         out.append((step + 1, best[1], float(best[2]), float(best[3]), best[4]))
-    return spark.createDataFrame(out, schema).orderBy("rank")
+    return local_frame(spark, out, schema).orderBy("rank")
 
 
 def _mmr_oracle() -> str:

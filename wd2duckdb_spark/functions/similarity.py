@@ -25,6 +25,7 @@ from wd2duckdb_spark.catalog import (
 )
 from wd2duckdb_spark.catalog import (
     eager_checkpoint,
+    local_frame,
     register_memo,
     scan_partitions,
     session_key,
@@ -785,7 +786,8 @@ def q_embedding_pca(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     model = pca_model(spark, sf_dir)
     if model is None:
-        return spark.createDataFrame(
+        return local_frame(
+            spark,
             [],
             "component int, eigenvalue double, projected_var double, "
             "explained_ratio double, whitened_var double",

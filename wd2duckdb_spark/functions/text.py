@@ -14,6 +14,7 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from wd2duckdb_spark.catalog import (
+    local_frame,
     register_memo,
     scan_partitions,
     session_key,
@@ -792,8 +793,8 @@ def q_bm25_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # LEFT JOIN from the literal query list so zero-match queries keep
     # their row (groupBy alone drops them on an empty/matchless corpus)
-    labels = spark.createDataFrame(
-        [(" ".join(q),) for q in qsets], "query string"
+    labels = local_frame(
+        spark, [(" ".join(q),) for q in qsets], "query string"
     )
     return (
         labels.join(agg, "query", "left")

@@ -24,6 +24,7 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from wd2duckdb_spark.catalog import (
+    local_frame,
     register_memo,
     scan_partitions,
     session_key,
@@ -1022,7 +1023,7 @@ def domain_cap_keep(
     # joined quota with the fallback for unmapped sources.
     spark = docs.sparkSession
     cap_rows = [(s, int(k)) for s, k in sorted(caps.items())]
-    cap_df = spark.createDataFrame(cap_rows, "source string, _quota int")
+    cap_df = local_frame(spark, cap_rows, "source string, _quota int")
     return (
         ranked.filter(F.col("_rn") <= F.lit(max_cap))
         .join(F.broadcast(cap_df), "source", "left")

@@ -42,7 +42,10 @@ its layout; this module owns the rules:
     which overflows the task stack somewhere past ~1k values (1024 ok,
     2048 StackOverflowError where measured; the cliff moves with JIT
     state, so the chunk keeps a 5× margin). Branch count has no such
-    cliff: 16 to 512 branches scale linearly (~0.2 s each).
+    cliff: 8 to 64 branches over a 5-file index scale linearly, at
+    ~0.1-0.15 s each (one scan task per file per branch, ``local[4]``).
+    Each chunk is one parsed SQL ``IN`` (:func:`_in_expr`), so building
+    the branches costs milliseconds, not a py4j call per value.
   - *broadcast* (≤ ``MAX_BROADCAST_KEYS`` rows): the same join over the
     full history scan.
   - *shuffled-hash* (beyond): an unbounded catch-up batch must not be
@@ -85,6 +88,7 @@ from functools import reduce
 from pyspark.sql import Column, DataFrame, Observation
 from pyspark.sql import functions as F
 
+from wd2duckdb_spark.catalog import local_frame
 from wd2duckdb_spark.maintenance import _fs, swap_in
 
 #: Partition id of the archive and of the ANN bootstrap. Streaming batch
@@ -93,7 +97,9 @@ ARCHIVE_BATCH = -1
 #: Max ``IN`` values per pushed scan branch (the stack cliff above).
 PROBE_CHUNK = 200
 #: Max scan branches of the pruned regime: 12,800 keys, a ~3,200-doc
-#: burst of MinHash band keys, at a worst-case probe of ~13 s. Past it a
+#: burst of MinHash band keys, at a worst-case probe of ~9-12 s over a
+#: 5-file index at ``local[4]`` (1.2-1.8 s of it in :func:`probe` itself:
+#: the regime count, the key collect and the plan build). Past it a
 #: full-scan probe is cheaper at test scale; raise it for huge indices —
 #: pruned-probe cost is O(batch keys), full-scan cost O(index).
 MAX_PROBE_CHUNKS = 64
@@ -180,10 +186,12 @@ def observe_rows(df: DataFrame, kept: Column) -> tuple[DataFrame, Observation]:
 def write_metrics(spark, root: str, batch_id: int, **counts: int) -> None:
     """The one-row per-batch accounting sidecar, ``(batch_id,
     *counts)`` in keyword order. Underscore dir: invisible to readers of
-    ``root``; overwrite keeps replays idempotent like the data writes."""
+    ``root``; overwrite keeps replays idempotent like the data writes.
+    The row is a :func:`~wd2duckdb_spark.catalog.local_frame`, so the
+    write is one JVM-only job that starts no Python worker."""
     cols = ", ".join(f"{k} long" for k in counts)
-    spark.createDataFrame(
-        [(batch_id, *counts.values())], f"batch_id long, {cols}"
+    local_frame(
+        spark, [(batch_id, *counts.values())], f"batch_id long, {cols}"
     ).coalesce(1).write.mode("overwrite").parquet(
         f"{root}/_metrics/batch={batch_id}"
     )
@@ -244,11 +252,30 @@ def _join(
         seen = reduce(
             DataFrame.union,
             (
-                seen.filter(F.col(prune_col).isin(vals[i : i + PROBE_CHUNK]))
+                seen.filter(_in_expr(prune_col, vals[i : i + PROBE_CHUNK]))
                 for i in range(0, len(vals), PROBE_CHUNK)
             ),
         )
     return seen.join(F.broadcast(batch_side), on)
+
+
+def _sql_lit(v: str | int) -> str:
+    """SQL literal of a prune value: a quoted string with ``\\`` and
+    ``'`` escaped, or an int printed as an int."""
+    if isinstance(v, str):
+        return "'" + v.replace("\\", "\\\\").replace("'", "\\'") + "'"
+    if isinstance(v, int) and not isinstance(v, bool):
+        return str(v)
+    raise TypeError(f"unsupported prune value {v!r}")
+
+
+def _in_expr(col: str, vals: list) -> Column:
+    """``col IN (vals)`` parsed from one SQL string. ``Column.isin``
+    costs a py4j round trip per value (~0.8 ms each: ~2 s for 3,200
+    keys); one parse of the same list is milliseconds and plans the
+    identical ``In`` filter."""
+    name = col.replace("`", "``")
+    return F.expr(f"`{name}` IN ({', '.join(map(_sql_lit, vals))})")
 
 
 def dedup_batch(
