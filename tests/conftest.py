@@ -5,7 +5,9 @@ import sys
 
 import pytest
 
-sys.path.insert(0, "/root/repo")
+#: the checkout this file lives in — tests import and run its code
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 
 def _enable_protobuf_shim() -> None:
@@ -37,7 +39,7 @@ def _enable_protobuf_shim() -> None:
 _enable_protobuf_shim()
 
 SF_DIR = "/root/testdata/sf0.001"
-FIXTURE_DUMP = "/root/repo/tests/fixtures/mini_dump.json"
+FIXTURE_DUMP = os.path.join(REPO, "tests", "fixtures", "mini_dump.json")
 
 
 @pytest.fixture(scope="session")

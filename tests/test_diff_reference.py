@@ -7,12 +7,14 @@ registry IS available."""
 
 from __future__ import annotations
 
+import os
 import subprocess
 import sys
 
 import pytest
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 from tools.diff_reference import find_binary  # noqa: E402
 
@@ -25,7 +27,7 @@ _BINARY, _REASON = find_binary(allow_build=False)
 def test_reference_binary_tables_match():
     proc = subprocess.run(
         [sys.executable, "tools/diff_reference.py"],
-        cwd="/root/repo",
+        cwd=REPO,
         capture_output=True,
         text=True,
         timeout=900,

@@ -7,7 +7,7 @@ from __future__ import annotations
 import duckdb
 import pytest
 
-from tests.conftest import FIXTURE_DUMP
+from tests.conftest import FIXTURE_DUMP, REPO
 
 
 @pytest.fixture(scope="module")
@@ -102,7 +102,7 @@ def test_cli_end_to_end(tmp_path):
             sys.executable, "-m", "wd2duckdb_spark",
             "--json", FIXTURE_DUMP, "--database", str(db),
         ],
-        capture_output=True, text=True, timeout=300, cwd="/root/repo",
+        capture_output=True, text=True, timeout=300, cwd=REPO,
     )
     assert r.returncode == 0, r.stderr[-2000:]
     assert "entities processed in" in r.stdout
@@ -116,7 +116,7 @@ def test_cli_end_to_end(tmp_path):
             sys.executable, "-m", "wd2duckdb_spark",
             "--json", FIXTURE_DUMP, "--database", str(db),
         ],
-        capture_output=True, text=True, timeout=120, cwd="/root/repo",
+        capture_output=True, text=True, timeout=120, cwd=REPO,
     )
     assert r2.returncode == 1 and "already exists" in r2.stderr
 
@@ -142,7 +142,7 @@ def test_cli_stdin_dash(tmp_path):
             "--json", "-", "--database", str(db),
         ],
         input=compressed,
-        capture_output=True, timeout=300, cwd="/root/repo",
+        capture_output=True, timeout=300, cwd=REPO,
     )
     assert r.returncode == 0, r.stderr[-2000:].decode(errors="replace")
     assert b"entities processed in" in r.stdout
@@ -169,7 +169,7 @@ def test_cli_empty_and_garbage_dumps(tmp_path):
     r = subprocess.run(
         [sys.executable, "-m", "wd2duckdb_spark",
          "--json", str(empty), "--database", str(db1)],
-        capture_output=True, text=True, timeout=300, cwd="/root/repo",
+        capture_output=True, text=True, timeout=300, cwd=REPO,
     )
     assert r.returncode == 0, r.stderr[-2000:]
     assert "0 entities processed" in r.stdout
@@ -183,7 +183,7 @@ def test_cli_empty_and_garbage_dumps(tmp_path):
     r = subprocess.run(
         [sys.executable, "-m", "wd2duckdb_spark",
          "--json", str(garbage), "--database", str(db2)],
-        capture_output=True, text=True, timeout=300, cwd="/root/repo",
+        capture_output=True, text=True, timeout=300, cwd=REPO,
     )
     assert r.returncode == 0, r.stderr[-2000:]
     assert "3 malformed lines skipped" in (r.stdout + r.stderr)

@@ -91,6 +91,63 @@ def test_connected_components_unconverged_raises(spark):
         connected_components(pairs, max_iters=3)
 
 
+def _group_jobs(spark, group, fn):
+    """``(fn(), number of Spark jobs fn ran)``, counted by job group."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        for k in ("spark.jobGroup.id", "spark.job.description",
+                  "spark.job.interruptOnCancel"):
+            sc.setLocalProperty(k, None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_k_hop_call_runs_no_job(spark):
+    """k_hop only builds a plan: the call runs no Spark job, and the
+    caller's one action runs every hop. A frontier persisted and
+    counted per hop (2 hops: 12 jobs in the call) fails this pin."""
+    from wd2duckdb_spark.operators.graph import k_hop
+
+    e = _edges(spark, [(1, 2), (2, 3), (3, 4), (1, 5), (5, 4)])
+    start = _start(spark, [1])
+    for k, want in ((2, [3, 4]), (3, [4])):
+        res, n = _group_jobs(
+            spark, f"k-hop-call-{k}", lambda: k_hop(e, start, k)
+        )
+        assert n == 0
+        assert sorted(r.id for r in res.collect()) == want
+
+
+def test_pagerank_tol_boundary_runs_on_checkpoint_job(spark):
+    """``tol`` observes its L1 delta on the boundary's checkpoint job.
+    6 supersteps with a boundary every 2 give one delta boundary (the
+    4th); its join with the previous vector adds 2 adaptive-stage jobs
+    to that checkpoint, and no query of its own (a separate delta
+    join + collect: 5 jobs). The graph does not converge, so
+    ``tol=0.0`` runs every superstep."""
+    from wd2duckdb_spark.operators.graph import pagerank
+
+    rows = [(i, (i + 1) % 6) for i in range(6)] + [(0, 2), (2, 0), (3, 1)]
+
+    def run(tol):
+        # a fresh frame per run: its persisted structure is not shared
+        edges = spark.createDataFrame(rows, "src long, dst long")
+        ranks, n = _group_jobs(
+            spark,
+            f"pagerank-tol-{tol}",
+            lambda: pagerank(edges, tol=tol, max_iters=6,
+                             checkpoint_interval=2),
+        )
+        return {r.node_id: r.rank for r in ranks.collect()}, n
+
+    base, n_base = run(None)
+    got, n_tol = run(0.0)
+    assert got == base
+    assert n_tol - n_base == 2
+
+
 def test_connected_components_jobs_per_round(spark):
     """One propagation round is one checkpoint job and its adaptive
     shuffle stages: 5 jobs. The changed-label count is observed on that
@@ -99,24 +156,18 @@ def test_connected_components_jobs_per_round(spark):
     one more edge is one more round; the labels stay exact."""
     from wd2duckdb_spark.functions.dedup import connected_components
 
-    sc = spark.sparkContext
-
     def jobs(n):
         pairs = spark.createDataFrame(
             [(i, i + 1) for i in range(n)], "a_id long, b_id long"
         )
-        group = f"cc-jobs-per-round-{n}"
-        sc.setJobGroup(group, "connected components")
-        try:
-            labels = connected_components(pairs)
-        finally:
-            for k in ("spark.jobGroup.id", "spark.job.description",
-                      "spark.job.interruptOnCancel"):
-                sc.setLocalProperty(k, None)
+        labels, n_jobs = _group_jobs(
+            spark, f"cc-jobs-per-round-{n}",
+            lambda: connected_components(pairs),
+        )
         assert {(r.node, r.cluster_id) for r in labels.collect()} == {
             (i, 0) for i in range(n + 1)
         }
-        return len(sc.statusTracker().getJobIdsForGroup(group))
+        return n_jobs
 
     assert jobs(5) - jobs(4) == 5
 
@@ -143,9 +194,7 @@ def test_reliable_checkpoint_conf_flows_through_iterative_ops(spark, tmp_path):
     }
     base_pr = [
         tuple(r)
-        for r in q_pagerank_topk(
-            spark, SF_DIR, checkpoint_interval=2
-        ).collect()
+        for r in q_pagerank_topk(spark, SF_DIR).collect()
     ]
 
     ckpt = str(tmp_path / "reliable")
@@ -157,9 +206,7 @@ def test_reliable_checkpoint_conf_flows_through_iterative_ops(spark, tmp_path):
         }
         got_pr = [
             tuple(r)
-            for r in q_pagerank_topk(
-                spark, SF_DIR, checkpoint_interval=2
-            ).collect()
+            for r in q_pagerank_topk(spark, SF_DIR).collect()
         ]
     finally:
         spark.conf.unset(RELIABLE_CKPT_CONF)

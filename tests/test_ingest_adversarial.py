@@ -7,11 +7,14 @@ sentinels, FIXTURES.md)."""
 
 from __future__ import annotations
 
+import os
+
 import pytest
 
+from tests.conftest import REPO
 from wd2duckdb_spark.ingest import INFINITY_TS, NEG_INFINITY_TS
 
-FIXTURE = "/root/repo/tests/fixtures/adversarial_dump.json"
+FIXTURE = os.path.join(REPO, "tests", "fixtures", "adversarial_dump.json")
 
 
 @pytest.fixture(scope="module")

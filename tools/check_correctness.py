@@ -10,6 +10,7 @@ name, values stringified). Usage:
 
 from __future__ import annotations
 
+import os
 import sys
 import time
 
@@ -35,7 +36,7 @@ def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.001"
     only = set(sys.argv[2:])
 
-    sys.path.insert(0, "/root/repo")
+    sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
     import __spark_entry__ as entrymod
     from wd2duckdb_spark import get_spark
 

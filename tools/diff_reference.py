@@ -35,6 +35,9 @@ import sys
 import tempfile
 from pathlib import Path
 
+#: the checkout this script lives in — the CLI under test runs from it
+REPO = Path(__file__).resolve().parent.parent
+
 #: Table names per wikidata-rs value.rs:361-368 (mirrored by our
 #: sources.duckdb_io.TABLE_NAMES).
 TABLES = ("vertex", "edge", "string", "coordinates", "quantity", "time")
@@ -111,7 +114,7 @@ def is_sentinel_delta(a: tuple[str, ...], b: tuple[str, ...]) -> bool:
 
 def main() -> int:
     args = [a for a in sys.argv[1:] if not a.startswith("--")]
-    dump = args[0] if args else "/root/repo/tests/fixtures/mini_dump.json"
+    dump = args[0] if args else str(REPO / "tests" / "fixtures" / "mini_dump.json")
     keep = "--keep" in sys.argv
 
     binary, reason = find_binary()
@@ -145,7 +148,7 @@ def main() -> int:
                 "--database",
                 str(our_db),
             ],
-            cwd="/root/repo",
+            cwd=REPO,
             capture_output=True,
             text=True,
             timeout=600,

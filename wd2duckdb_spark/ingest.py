@@ -415,11 +415,12 @@ def time_table(claims: DataFrame) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-def build_tables(
-    spark: SparkSession, dump_path: str, lang: str = DEFAULT_LANG
+def parsed_tables(
+    parsed: DataFrame, lang: str = DEFAULT_LANG
 ) -> dict[str, DataFrame]:
-    """Dump file → the six logical tables as (lazy) DataFrames."""
-    parsed = parse_entities(sanitize_lines(read_dump_lines(spark, dump_path)))
+    """Parsed entities → the six logical tables as (lazy) DataFrames.
+    Batch ingest, :func:`build_tables` and the streaming sink all take
+    their tables from here; each table fn applies ``with_sink`` itself."""
     claims = exploded_claims(parsed)
     return {
         "vertex": vertex_table(parsed, lang),
@@ -431,14 +432,22 @@ def build_tables(
     }
 
 
+def build_tables(
+    spark: SparkSession, dump_path: str, lang: str = DEFAULT_LANG
+) -> dict[str, DataFrame]:
+    """Dump file → the six logical tables as (lazy) DataFrames."""
+    return parsed_tables(
+        parse_entities(sanitize_lines(read_dump_lines(spark, dump_path))), lang
+    )
+
+
 def ingest(
     spark: SparkSession,
     dump_path: str,
     out_path: str,
     lang: str = DEFAULT_LANG,
     mode: str = "error",
-    edge_sort: bool = True,
-    edge_layout: str | None = None,
+    edge_layout: str = "sort",
     metrics: dict | None = None,
 ) -> dict[str, str]:
     """Run the full ETL: dump → 6 parquet table dirs under ``out_path``.
@@ -465,19 +474,17 @@ def ingest(
     cache-priming job (e.g. ``count()``) wastes the pass it shares
     with no sink (measured ~17% slower at 500k lines).
 
-    ``edge_sort``: sort edge-class tables within partitions by
+    ``edge_layout``: ``"sort"`` (default), ``"zorder"``, or ``"none"``.
+    ``"sort"`` sorts edge-class tables within partitions by
     ``(src_id, dst_id)`` so parquet min/max row-group stats act as the
     moral equivalent of the reference's src_id/dst_id indices
     (value.rs:332-350) — point/range lookups prune row groups.
-
-    ``edge_layout``: ``"sort"`` (default when ``edge_sort``),
-    ``"zorder"``, or ``"none"``. ``"zorder"`` sorts within partitions
-    by the Morton interleave of (src_id, dst_id) instead of the
-    lexical pair — row-group stats then prune point lookups on EITHER
-    endpoint (the full both-direction parity of value.rs:332-350),
-    still with zero extra shuffle. The lexical default keeps the
-    stronger single-column src_id pruning; choose per dominant access
-    pattern.
+    ``"zorder"`` sorts within partitions by the Morton interleave of
+    (src_id, dst_id) instead of the lexical pair — row-group stats then
+    prune point lookups on EITHER endpoint (the full both-direction
+    parity of value.rs:332-350), still with zero extra shuffle. The
+    lexical default keeps the stronger single-column src_id pruning;
+    choose per dominant access pattern. ``"none"`` writes unsorted.
 
     ``metrics``: pass a dict to receive ingest counters — the
     reference's progress accounting (main.rs:229-236, 323-325) done
@@ -508,16 +515,7 @@ def ingest(
         )
     parsed = parsed.persist()
     try:
-        # each table fn applies with_sink itself — no pre-tagging here
-        claims = exploded_claims(parsed)
-        tables = {
-            "vertex": vertex_table(parsed, lang),
-            "edge": edge_table(claims),
-            "string": string_table(claims),
-            "coordinates": coordinates_table(claims),
-            "quantity": quantity_table(claims),
-            "time": time_table(claims),
-        }
+        tables = parsed_tables(parsed, lang)
         observations: dict[str, Observation] = {}
         if metrics is not None:
             for name in list(tables):
@@ -526,16 +524,17 @@ def ingest(
                     observations[name], F.count(F.lit(1)).alias("rows")
                 )
 
-        layout = edge_layout or ("sort" if edge_sort else "none")
-        if layout not in ("sort", "zorder", "none"):
-            raise ValueError(f"edge_layout must be sort|zorder|none: {layout}")
+        if edge_layout not in ("sort", "zorder", "none"):
+            raise ValueError(
+                f"edge_layout must be sort|zorder|none: {edge_layout}"
+            )
 
         def _write(name: str, df: DataFrame) -> tuple[str, str]:
-            if layout != "none" and name == "vertex":
+            if edge_layout != "none" and name == "vertex":
                 df = df.sortWithinPartitions("id")
-            elif layout == "sort" and name != "vertex":
+            elif edge_layout == "sort" and name != "vertex":
                 df = df.sortWithinPartitions("src_id", "dst_id")
-            elif layout == "zorder" and name != "vertex":
+            elif edge_layout == "zorder" and name != "vertex":
                 from wd2duckdb_spark.layout import morton_code
 
                 df = df.sortWithinPartitions(

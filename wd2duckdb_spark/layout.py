@@ -6,7 +6,7 @@ lookups and traversals without scans. Spark's equivalents
 (SURVEY §4.3):
 
 - **sortWithinPartitions + parquet min/max stats** (the ingest default,
-  ingest.py ``edge_sort``): row-group pruning for point/range
+  ingest.py ``edge_layout="sort"``): row-group pruning for point/range
   predicates on src_id — the cheap, always-on tier.
 - **bucketBy(src_id)** (this module): hash-bucketed, sorted warehouse
   tables. Equi-joins and aggregations on the bucket key skip the
@@ -136,7 +136,7 @@ def write_date_partitioned(
     scan, probed by :func:`wd2duckdb_spark.plans.partition_filters`).
     At 100 TB with daily arrival this makes time-bounded queries touch
     only their days — and it composes with the in-file sort/min-max
-    tier of :func:`write_bucketed`/``ingest(edge_sort=True)``.
+    tier of :func:`write_bucketed`/``ingest(edge_layout="sort")``.
     """
     from pyspark.sql import functions as F
 

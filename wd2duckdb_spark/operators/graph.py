@@ -13,7 +13,7 @@ broadcast for dim-sized sides and AQE splits skewed hub keys
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from wd2duckdb_spark.catalog import (
@@ -129,26 +129,42 @@ def _bipartite_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     return fwd.union(rev)
 
 
-#: Registered-query default for PageRank's lineage truncation: a
-#: checkpoint every 2 supersteps bounds failure replay to ≤2
-#: supersteps instead of the whole 5-superstep, ~26-exchange chain
-#: (VERDICT r9 item 4). Measured at sf0.1 local[8], min-of-2 warm:
-#: interval 0 → 3.3 s, 2 → 3.8 s, 1 → 4.3 s — the 15% local cost
-#: buys the cluster posture; results are interval-invariant (pinned
-#: in tests/test_round3_ops.py), so oracle hashes are unchanged.
+#: Registered-query checkpoint interval: the rank vector is
+#: checkpointed every 2 supersteps, so a lost executor replays at
+#: most 2 supersteps instead of the whole 5-superstep, ~26-exchange
+#: chain. Measured at sf0.1 local[8], min-of-2 warm: interval 0 →
+#: 3.3 s, 2 → 3.8 s, 1 → 4.3 s. Results are interval-invariant
+#: (pinned in tests/test_round3_ops.py).
 PR_CKPT_DEFAULT = 2
 
-#: (applicationId, sf_dir) → (outdeg, trans, n): the rank-independent
-#: transition structure every PageRank call reuses. ADVICE r10: the
-#: per-call persist() of outdeg/trans leaked a pair of cache entries
-#: on every invocation in a long-lived session; the memo bounds that
-#: to one pair per (session, sf_dir) and makes repeat calls start
-#: from the warm structure. clear_memos() invalidates as usual.
+#: (applicationId, sf_dir) → (outdeg, trans, n) of the trade graph.
+#: One persisted pair per (session, sf_dir): a per-call persist would
+#: leave a pair of cache entries behind on every call in a long-lived
+#: session. clear_memos() invalidates as usual.
 _pr_trans_cache: dict[tuple[str, str], tuple] = register_memo({})
 
 
+def _pr_build(edges: DataFrame) -> tuple:
+    """Persisted ``(outdeg, trans, n)`` of a ``(src, dst)`` edge frame:
+    the rank-independent transition structure ``trans(src, dst, deg)``
+    that every superstep reuses, and the vertex count ``n``.
+
+    ``outdeg`` doubles as the vertex set (every vertex is a ``src``
+    under :func:`pagerank`'s contract), so the vertex count and the
+    uniform init vector read this small persisted frame instead of
+    re-shuffling ``trans`` through a distinct. An empty edge frame
+    returns ``n == 0`` with both frames already unpersisted."""
+    outdeg = edges.groupBy("src").agg(F.count("*").alias("deg")).persist()
+    trans = edges.join(outdeg, "src").persist()
+    n = outdeg.count()  # warms the vertex cache; trans warms lazily
+    if n == 0:
+        trans.unpersist()
+        outdeg.unpersist()
+    return outdeg, trans, n
+
+
 def _pr_structure(spark: SparkSession, sf_dir: str) -> tuple:
-    """Persisted-once (outdeg, trans, n) for the trade graph."""
+    """:func:`_pr_build` of the trade graph, memoized per session."""
     key = (session_key(spark), sf_dir)
     cached = _pr_trans_cache.get(key)
     if cached is not None:
@@ -157,75 +173,50 @@ def _pr_structure(spark: SparkSession, sf_dir: str) -> tuple:
             if not f.storageLevel.useMemory:
                 f.persist()
         return cached
-    edges = _bipartite_edges(spark, sf_dir)
-    # outdeg doubles as the VERTEX SET (one row per distinct src, and
-    # the bidirectional construction makes every vertex a src), so
-    # the vertex count and the uniform init vector both read this
-    # small persisted frame instead of re-shuffling trans through a
-    # distinct — two fewer corpus-side jobs per call (round 10).
-    outdeg = edges.groupBy("src").agg(F.count("*").alias("deg")).persist()
-    # Rank-independent per-edge transition structure, reused every
-    # superstep: (src, dst, deg).
-    trans = edges.join(outdeg, "src").persist()
-    n = outdeg.count()  # warms the vertex cache; trans warms lazily
-    if n == 0:
-        # degenerate corpus — don't memoize empty persists
-        trans.unpersist()
-        outdeg.unpersist()
-        return outdeg, trans, 0
-    _pr_trans_cache[key] = (outdeg, trans, n)
-    return outdeg, trans, n
+    built = _pr_build(_bipartite_edges(spark, sf_dir))
+    if built[2] > 0:  # an empty corpus is not memoized
+        _pr_trans_cache[key] = built
+    return built
 
 
-def q_pagerank_topk(
-    spark: SparkSession,
-    sf_dir: str,
-    checkpoint_interval: int = PR_CKPT_DEFAULT,
-) -> DataFrame:
-    """Distributed PageRank (5 synchronous iterations, d=0.85) over the
-    customer↔supplier trade graph — the iterative-dataflow pattern
-    (repeated join → groupBy per superstep), oracle-verified against an
-    unrolled recursive-CTE DuckDB formulation.
+def _pr_supersteps(
+    outdeg: DataFrame,
+    trans: DataFrame,
+    n: int,
+    max_iters: int,
+    checkpoint_interval: int,
+    tol: float | None = None,
+) -> tuple[DataFrame, bool]:
+    """The PageRank superstep loop: ``(ranks(id, rank), converged)``.
 
-    Each rank vector feeds exactly ONE downstream superstep, so the
-    lineage is a linear chain with no recompute amplification — the
-    whole loop stays lazy and compiles into a single DAG (~2 shuffle
-    stages per superstep) instead of one Spark job per iteration (the
-    per-superstep persist+count variant measured 10× slower here: all
-    fixed job-scheduling overhead). Only the rank-independent
-    transition structure (src, dst, deg), which every superstep reuses,
-    is persisted. ``checkpoint_interval=k`` (>0) eagerly
-    localCheckpoints the rank vector every k supersteps: at a real
-    100 TB scale an executor loss otherwise replays the WHOLE chain
-    back to the source scan — the knob bounds recovery replay to ≤k
-    supersteps at the cost of materializing the (vertex-sized) rank
-    vector. The registered default is :data:`PR_CKPT_DEFAULT` (= 2):
-    at cluster scale a lost executor replays at most 2 supersteps
-    instead of the whole chain, for a measured ~15% local cost (see
-    the constant's docstring; interval 0 remains available for
-    single-node batch reruns, and the full per-superstep
-    persist+count variant measured 10× slower — all fixed
-    job-scheduling overhead). Correctness is interval-invariant
-    (pinned in tests/test_round3_ops.py). Additionally, bucket the
-    edge table on src (layout.py) so each superstep shuffles only the
-    rank vector.
+    Each superstep is one join of the rank vector with ``trans`` and
+    one ``groupBy(dst)``. Each rank vector feeds exactly one later
+    superstep, so the lineage is a linear chain and the loop stays
+    lazy: one DAG, not one job per superstep (a per-superstep
+    persist+count measured 10× slower, all job-scheduling overhead).
+    Every ``checkpoint_interval`` supersteps (``<= 0``: never) the rank
+    vector is eagerly checkpointed, which bounds failure replay to that
+    many supersteps.
 
-    The bidirectional construction guarantees every vertex has both in-
-    and out-degree ≥ 1 — no dangling-mass term, and the contribution
-    aggregation alone reaches every vertex (no left-join backfill).
+    With ``tol`` set, from the second boundary on the checkpoint job
+    also observes the L1 delta ``Σ|r − r_prev|`` against the previous
+    boundary's vector, and the loop stops once it is below ``tol``:
+    the convergence check rides on a job that runs anyway.
+
+    The teleport term is the literal ``PR_TELEPORT / n`` (see
+    :data:`PR_TELEPORT`), so the loop matches the SQL oracle. No
+    vertices (``n == 0``) give an empty vector (1.0/n would divide by
+    zero).
     """
-    outdeg, trans, n = _pr_structure(spark, sf_dir)
     if n == 0:
-        # degenerate corpus: no edges, no vertices — empty result with
-        # the output schema (1.0/n would otherwise divide by zero)
-        return outdeg.limit(0).select(
-            F.col("src").alias("node_id"), F.lit(0.0).alias("rank")
-        )
-
+        return outdeg.select(
+            F.col("src").alias("id"), F.lit(0.0).alias("rank")
+        ), False
     ranks = outdeg.select(
         F.col("src").alias("id"), F.lit(1.0 / n).alias("rank")
     )
-    for i in range(PR_ITERS):
+    prev = None  # rank vector at the last boundary, as (id, prev)
+    for i in range(max_iters):
         contribs = (
             trans.join(ranks, trans.src == ranks.id)
             .groupBy("dst")
@@ -237,12 +228,48 @@ def q_pagerank_topk(
                 "rank"
             ),
         )
-        if (
-            checkpoint_interval > 0
-            and (i + 1) % checkpoint_interval == 0
-            and i + 1 < PR_ITERS
-        ):
+        at_boundary = (
+            checkpoint_interval > 0 and (i + 1) % checkpoint_interval == 0
+        )
+        if not at_boundary or i + 1 == max_iters:
+            continue
+        if prev is None or tol is None:
             ranks = eager_checkpoint(ranks)
+        else:
+            delta = Observation()
+            ranks = eager_checkpoint(
+                ranks.join(prev, "id", "left")
+                .observe(
+                    delta,
+                    F.sum(F.abs(F.col("rank") - F.col("prev"))).alias("d"),
+                )
+                .select("id", "rank")
+            )
+            d = delta.get["d"]
+            if d is not None and d < tol:
+                return ranks, True
+        if tol is not None:
+            prev = ranks.select("id", F.col("rank").alias("prev"))
+    return ranks, False
+
+
+def q_pagerank_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Distributed PageRank (5 synchronous iterations, d=0.85) over the
+    customer↔supplier trade graph — the iterative-dataflow pattern
+    (repeated join → groupBy per superstep), oracle-verified against an
+    unrolled recursive-CTE DuckDB formulation. The top 20 of
+    :func:`_pr_supersteps` over the session-memoized transition
+    structure, checkpointed every :data:`PR_CKPT_DEFAULT` supersteps.
+    Bucketing the edge table on src (layout.py) would make each
+    superstep shuffle only the rank vector.
+
+    The bidirectional construction guarantees every vertex has both in-
+    and out-degree ≥ 1 — no dangling-mass term, and the contribution
+    aggregation alone reaches every vertex (no left-join backfill).
+    """
+    ranks, _ = _pr_supersteps(
+        *_pr_structure(spark, sf_dir), PR_ITERS, PR_CKPT_DEFAULT
+    )
     return (
         ranks.select(
             F.col("id").alias("node_id"), F.round("rank", 6).alias("rank")
@@ -256,13 +283,13 @@ def pagerank(
     edges: DataFrame,
     tol: float | None = None,
     max_iters: int = 20,
-    damping: float = PR_DAMPING,
     checkpoint_interval: int = PR_CKPT_DEFAULT,
 ) -> DataFrame:
-    """Production-shaped PageRank over an arbitrary ``(src, dst)``
-    edge frame with optional tolerance-based EARLY STOP (VERDICT r10
-    item 7): a fixed superstep count either wastes supersteps on a
-    fast-converging graph or under-converges a slow one.
+    """PageRank (d=0.85) over an arbitrary ``(src, dst)`` edge frame,
+    returning ``(node_id, rank)`` for every vertex, with an optional
+    tolerance-based early stop: a fixed superstep count either wastes
+    supersteps on a fast-converging graph or under-converges a slow
+    one.
 
     Contract: every vertex must appear as a ``src`` (no dangling
     mass) — the same invariant the registered
@@ -270,68 +297,17 @@ def pagerank(
     construction; callers with dangling nodes should add self-loops
     or reverse edges first.
 
-    When ``tol`` is set, convergence is tested at each CHECKPOINT
-    boundary (every ``checkpoint_interval`` supersteps) — the rank
-    vector is already being materialized there for lineage
-    truncation, so the L1-delta check is one extra vertex-sized
-    aggregate per boundary, not per superstep: ``Σ|r_i − r_{i−k}| <
-    tol`` stops the loop. With ``tol=None`` the loop runs exactly
-    ``max_iters`` supersteps (the registered query's behavior, which
-    stays on its own 5-iteration oracle-pinned path). Scale posture
-    identical to :func:`q_pagerank_topk`: lazy linear lineage between
-    boundaries, persisted rank-independent transition structure,
-    replay bounded to ≤ ``checkpoint_interval`` supersteps.
+    With ``tol`` set, convergence is tested at each checkpoint
+    boundary (every ``checkpoint_interval`` supersteps; ``<= 0`` means
+    no boundary, so no early stop), on the boundary's own checkpoint
+    job (see :func:`_pr_supersteps`): ``Σ|r_i − r_{i−k}| < tol`` stops
+    the loop. With ``tol=None`` the loop runs exactly ``max_iters``
+    supersteps.
     """
-    if checkpoint_interval <= 0:
-        checkpoint_interval = max_iters  # single final boundary
-    outdeg = edges.groupBy("src").agg(F.count("*").alias("deg")).persist()
-    trans = edges.join(outdeg, "src").persist()
-    n = outdeg.count()
-    if n == 0:
-        outdeg.unpersist()
-        trans.unpersist()
-        return edges.limit(0).select(
-            F.col("src").alias("node_id"), F.lit(0.0).alias("rank")
-        )
-    teleport = 1.0 - damping
-    ranks = outdeg.select(
-        F.col("src").alias("id"), F.lit(1.0 / n).alias("rank")
+    outdeg, trans, n = _pr_build(edges)
+    ranks, converged = _pr_supersteps(
+        outdeg, trans, n, max_iters, checkpoint_interval, tol
     )
-    prev_ckpt = None  # rank vector at the last boundary
-    converged = False
-    for i in range(max_iters):
-        contribs = (
-            trans.join(ranks, trans.src == ranks.id)
-            .groupBy("dst")
-            .agg(F.sum(F.col("rank") / F.col("deg")).alias("contrib"))
-        )
-        ranks = contribs.select(
-            F.col("dst").alias("id"),
-            (F.lit(teleport / n) + damping * F.col("contrib")).alias("rank"),
-        )
-        at_boundary = (i + 1) % checkpoint_interval == 0
-        if at_boundary and i + 1 < max_iters:
-            ranks = eager_checkpoint(ranks)
-            if tol is not None:
-                if prev_ckpt is not None:
-                    delta = (
-                        ranks.join(
-                            prev_ckpt.select(
-                                "id", F.col("rank").alias("prev")
-                            ),
-                            "id",
-                        )
-                        .agg(
-                            F.sum(
-                                F.abs(F.col("rank") - F.col("prev"))
-                            ).alias("d")
-                        )
-                        .collect()[0]["d"]
-                    )
-                    if delta is not None and delta < tol:
-                        converged = True
-                        break
-                prev_ckpt = ranks
     if converged:
         # the returned frame is checkpoint-truncated — trans/outdeg
         # are no longer in its lineage, so release them now
@@ -397,36 +373,30 @@ def k_hop(
     over ``edge(src_id, property_id, dst_id)`` that the reference's
     endpoint indices exist to serve (value.rs:332-350; SURVEY §2.2).
 
-    Each hop is one equi-join on the frontier + distinct. Scale:
+    Each hop is one equi-join of the frontier with the edges on
+    ``src_id``, then a ``distinct``. The result is one lazy plan,
+    linear in ``k``: each hop reads the previous frontier once, so
+    nothing is recomputed, and the caller's action runs the whole
+    traversal (no job per hop). Scale:
 
-    - the frontier is persisted per hop — without it, hop N recomputes
-      the whole lineage N times and the plan grows exponentially;
-    - the join key is ``src_id``, so a bucketed edge table (layout.py)
-      makes every hop a shuffle of the FRONTIER only (edge side stays
-      in place) — at 100 TB the frontier is the small side and
-      Catalyst broadcasts it per hop;
+    - a bucketed edge table (layout.py) makes every hop a shuffle of
+      the frontier only (the edge side stays in place); at 100 TB the
+      frontier is the small side and Catalyst broadcasts it per hop;
     - hub-key skew (P31/Q5) is handled by AQE skew-join; pathological
       frontiers can use operators.skew.salted_join per hop.
 
-    The returned frontier is persisted and already materialized —
-    callers reuse it without recompute and should ``.unpersist()`` it
-    when done (intermediate frontiers are unpersisted here; unreleased
-    ones are eventually reclaimed by the ContextCleaner on GC).
+    The result is not persisted; ``.unpersist()`` on it is a no-op.
     """
     if property_id is not None:
         edge = edge.filter(F.col("property_id") == property_id)
     edge = edge.select("src_id", "dst_id")
     frontier = start.select(F.col("id").cast("long").alias("id")).distinct()
     for _ in range(k):
-        nxt = (
+        frontier = (
             frontier.join(edge, frontier["id"] == edge["src_id"])
             .select(F.col("dst_id").alias("id"))
             .distinct()
-            .persist()
         )
-        nxt.count()  # materialize before unpersisting the parent
-        frontier.unpersist()
-        frontier = nxt
     return frontier
 
 
@@ -680,9 +650,7 @@ def _weighted_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     return pair.select(both.alias("e")).select("e.src", "e.dst", "e.w")
 
 
-def q_shortest_path_bounded(
-    spark: SparkSession, sf_dir: str, checkpoint_interval: int = 0
-) -> DataFrame:
+def q_shortest_path_bounded(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Single-source shortest paths within SP_ITERS hops (weighted
     Bellman-Ford supersteps) over the trade graph — the
     cheapest-route / influence-radius query the reference's
@@ -710,9 +678,12 @@ def q_shortest_path_bounded(
     stages of the cached variant collapsing to ~16). Each superstep
     shuffles only the distance vector. Hop-bounded by construction —
     the 100 TB failure mode of unbounded BFS (frontier = whole graph)
-    cannot occur.
+    cannot occur. There is no mid-chain checkpoint: SP_ITERS bounds the
+    chain, and failure replay re-reads the repartition exchange's
+    shuffle files, not the parquet scan (a checkpoint every 2
+    supersteps measured 4.6 → 5.9 s at sf0.1 local[8]).
 
-    Superstep shape (round 11): the classic ``dist ∪ relax(dist)``
+    Superstep shape: the classic ``dist ∪ relax(dist)``
     Bellman-Ford step references ``dist`` TWICE, so the unrolled lazy
     chain doubles the plan subtree per superstep — 2^SP_ITERS copies
     of the early supersteps (485 physical operators / 198 Exchange
@@ -742,7 +713,7 @@ def q_shortest_path_bounded(
         F.lit(SP_SRC).cast("long").alias("node"),
         F.lit(0.0).alias("dist"),
     )
-    for i in range(SP_ITERS):
+    for _ in range(SP_ITERS):
         # deliberately NO join-strategy hint: the distance vector is
         # the small side at any scale, and AQE picks broadcast at
         # fixture scale (a pinned shuffle_hash measured +0.75 s here
@@ -753,21 +724,6 @@ def q_shortest_path_bounded(
             .groupBy(F.col("dst").alias("node"))
             .agg(F.min(F.col("dist") + F.col("w")).alias("dist"))
         )
-        # Replay bound for long superstep chains at cluster scale.
-        # Unlike PageRank (default PR_CKPT_DEFAULT=2), this stays 0:
-        # SP_ITERS=4 already bounds the distance-vector chain, every
-        # superstep re-reads the edge table through the ONE
-        # repartition exchange's shuffle files (a durable mid-chain
-        # materialization — failure replay re-reads those files, not
-        # the parquet scan), and interval=2 measured 4.6 → 5.9 s
-        # (+28%) at sf0.1 local[8] for no added replay bound worth
-        # having at 4 supersteps.
-        if (
-            checkpoint_interval > 0
-            and (i + 1) % checkpoint_interval == 0
-            and i + 1 < SP_ITERS
-        ):
-            dist = eager_checkpoint(dist)
     return dist.select(
         F.col("node").alias("node_id"),
         (F.floor(F.col("dist") * 1e6 + F.lit(0.5)) / 1e6).alias("dist"),

@@ -28,15 +28,9 @@ from pyspark.sql.streaming import StreamingQuery
 
 from wd2duckdb_spark.ingest import (
     DEFAULT_LANG,
-    edge_table,
-    coordinates_table,
-    exploded_claims,
     parse_entities,
-    quantity_table,
+    parsed_tables,
     sanitize_lines,
-    string_table,
-    time_table,
-    vertex_table,
 )
 
 
@@ -65,8 +59,11 @@ def ingest_stream(
     """Continuously append arriving dump shards into the six tables.
 
     ``foreachBatch`` reuses the exact batch builders, so streaming and
-    batch output are byte-identical for identical input. Exactly-once
-    per table dir via the checkpoint + the parquet sink's task-commit.
+    batch output hold identical rows for identical input. The files are
+    not byte-identical: batch ingest sorts within partitions (its
+    ``edge_layout``) and this sink appends each micro-batch unsorted.
+    Exactly-once per table dir via the checkpoint + the parquet sink's
+    task-commit.
 
     ``available_now=True`` processes the current directory contents and
     stops — the test/backfill mode.
@@ -77,16 +74,7 @@ def ingest_stream(
         # for all 6 sinks (same rationale as ingest.ingest)
         parsed = parse_entities(sanitize_lines(lines)).persist()
         try:
-            claims = exploded_claims(parsed)
-            tables = {
-                "vertex": vertex_table(parsed, lang),
-                "edge": edge_table(claims),
-                "string": string_table(claims),
-                "coordinates": coordinates_table(claims),
-                "quantity": quantity_table(claims),
-                "time": time_table(claims),
-            }
-            for name, df in tables.items():
+            for name, df in parsed_tables(parsed, lang).items():
                 df.write.mode("append").parquet(f"{out_path}/{name}")
         finally:
             parsed.unpersist()
