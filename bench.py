@@ -153,7 +153,7 @@ def main() -> None:
     # cold vs min separates plan-shape wins from cache-warm wins. Rep 1
     # is not "nothing cached" for every query: session memos of model
     # state survive clearCache() — notably the CC keep-list memo
-    # (dedup._cc_cache, eagerly checkpointed) — so only the first
+    # (dedup._cc_labels, eagerly checkpointed) — so only the first
     # headline query that needs the near-dup clusters
     # (leakage_safe_split) pays the CC build, in its rep 1; anything
     # run after it in the same session reuses the memo. Cold numbers

@@ -148,6 +148,20 @@ def test_pagerank_tol_boundary_runs_on_checkpoint_job(spark):
     assert n_tol - n_base == 2
 
 
+def test_pagerank_unconverged_releases_its_structure(spark):
+    """A call that does not converge still leaves the CacheManager as
+    it found it: the returned vector is checkpointed, so the persisted
+    ``outdeg``/``trans`` of the call are released."""
+    from wd2duckdb_spark.operators.graph import pagerank
+
+    cm = spark._jsparkSession.sharedState().cacheManager()
+    edges = spark.createDataFrame([(0, 1), (1, 2), (2, 0)], "src long, dst long")
+    before = cm.cachedData().size()
+    ranks = pagerank(edges, max_iters=3)
+    assert cm.cachedData().size() == before
+    assert sorted(r.node_id for r in ranks.collect()) == [0, 1, 2]
+
+
 def test_connected_components_jobs_per_round(spark):
     """One propagation round is one checkpoint job and its adaptive
     shuffle stages: 5 jobs. The changed-label count is observed on that

@@ -860,15 +860,20 @@ def test_semantic_dedup_pair_join_is_grid_shuffle(spark):
     grid-decomposed shuffle self-join (cid is an 8-value hot key —
     same regime as fuzzy_name_pairs): ShuffledHashJoin on
     (cid, _gi, _gj), and the only broadcasts are the constant-size
-    centroid tables. Pinned on the lazy internal builder — the plan
-    the public query's eager checkpoint executes (q_semantic_dedup
-    itself returns the checkpointed scan, round-5 cache hygiene)."""
-    from wd2duckdb_spark.functions.similarity import _semantic_dedup_plan
+    centroid tables. Pinned on the pair stage over a fresh Lloyd
+    chain — the plan the public query's eager checkpoint executes
+    (q_semantic_dedup itself returns the checkpointed scan)."""
+    from wd2duckdb_spark.functions.similarity import (
+        _lloyd_assignment,
+        _semantic_keep_plan,
+    )
     from wd2duckdb_spark.plans import explain_str
 
     from wd2duckdb_spark.plans import plan_summary as _ps
 
-    vecs, asg, df = _semantic_dedup_plan(spark, SF_DIR)
+    vecs, asg, _cents = _lloyd_assignment(spark, SF_DIR)
+    asg = asg.persist()  # it feeds both the pair stage and the keep join
+    df = _semantic_keep_plan(spark, vecs, asg)
     try:
         p = explain_str(df, "simple")
         assert "ShuffledHashJoin" in p  # the grid pair join

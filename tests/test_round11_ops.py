@@ -148,16 +148,13 @@ def test_prefix_frames_fresh_per_invocation_no_cache_leak(spark):
 
 def test_pagerank_structure_memoized_per_session(spark):
     """Same for the PageRank transition structure (outdeg/trans)."""
-    from wd2duckdb_spark.operators.graph import (
-        _pr_structure,
-        _pr_trans_cache,
-    )
+    from wd2duckdb_spark.operators.graph import _pr_structure
 
-    _pr_trans_cache.clear()
+    _pr_structure.cache.clear()
     a = _pr_structure(spark, SF_DIR)
     b = _pr_structure(spark, SF_DIR)
     assert a[0] is b[0] and a[1] is b[1] and a[2] == b[2] > 0
-    assert len(_pr_trans_cache) == 1
+    assert len(_pr_structure.cache) == 1
 
 
 # ---------------------------------------------------------------------------
@@ -725,11 +722,7 @@ def test_scan_partitions_memoized(spark):
     the probe costs ~100 ms of driver planning, far too much to pay
     inline on every query invocation — and the MinHash kernel's spread
     decision over the documents table reads the memoized value."""
-    from wd2duckdb_spark.catalog import (
-        _scan_parts_cache,
-        scan_partitions,
-        session_key,
-    )
+    from wd2duckdb_spark.catalog import scan_partitions, session_key
     from wd2duckdb_spark.functions.dedup import q_minhash_signatures
 
     def spreads() -> bool:
@@ -738,16 +731,17 @@ def test_scan_partitions_memoized(spark):
 
     n1 = scan_partitions(spark, SF_DIR, "documents")
     key = (session_key(spark), SF_DIR, "documents")
-    assert _scan_parts_cache[key] == n1
+    cache = scan_partitions.cache
+    assert cache[key] == n1
     # poison the cache: a re-probe would overwrite, a memo hit returns it
-    _scan_parts_cache[key] = -7
+    cache[key] = -7
     try:
         assert scan_partitions(spark, SF_DIR, "documents") == -7
         assert spreads()  # -7 < cores: the kernel spreads
-        _scan_parts_cache[key] = 1 << 20
+        cache[key] = 1 << 20
         assert not spreads()  # ≥ cores: the memo says the scan is parallel
     finally:
-        _scan_parts_cache[key] = n1
+        cache[key] = n1
     assert n1 >= 1
 
 
@@ -858,22 +852,23 @@ def test_bigram_lm_memoized_and_rearmed(spark):
     return identical rows across the memo hit."""
     from wd2duckdb_spark.catalog import session_key
     from wd2duckdb_spark.functions.text import (
-        _lm_cache,
+        _bigram_lm,
         q_bigram_surprisal,
         q_perplexity_bucket_sample,
     )
 
-    _lm_cache.clear()
+    cache = _bigram_lm.cache
+    cache.clear()
     r1 = q_bigram_surprisal(spark, SF_DIR).collect()
     key = (session_key(spark), SF_DIR)
-    lm = _lm_cache[key]
+    lm = cache[key]
     assert lm.storageLevel.useMemory
     q_perplexity_bucket_sample(spark, SF_DIR)  # shares the model
-    assert _lm_cache[key] is lm and len(_lm_cache) == 1
+    assert cache[key] is lm and len(cache) == 1
     spark.catalog.clearCache()
     assert not lm.storageLevel.useMemory
     r2 = q_bigram_surprisal(spark, SF_DIR).collect()
-    assert _lm_cache[key] is lm  # memo hit, not a retrain
+    assert cache[key] is lm  # memo hit, not a retrain
     assert lm.storageLevel.useMemory  # re-armed
     assert r1 == r2
 

@@ -83,12 +83,16 @@ def test_shard_manifest_is_stable_and_complete(spark):
 def test_kmeans_centroid_broadcast_plan(spark):
     """The centroid side must broadcast — a shuffled join of a K-row
     table against the corpus would be the wrong plan at any scale.
-    Pinned on the lazy internal builder, the plan q_kmeans_lloyd's
-    eager checkpoint executes (the public query returns only the
-    checkpointed scan, round-5 cache hygiene)."""
-    from wd2duckdb_spark.functions.similarity import _kmeans_summary_plan
+    Pinned on a fresh Lloyd chain under the query's own summary, the
+    plan q_kmeans_lloyd's eager checkpoint executes (the public query
+    reads the memoized checkpointed assignment)."""
+    from wd2duckdb_spark.functions.similarity import (
+        _cluster_summary,
+        _lloyd_assignment,
+    )
 
-    vecs, summary = _kmeans_summary_plan(spark, SF_DIR)
+    vecs, asg, _cents = _lloyd_assignment(spark, SF_DIR)
+    summary = _cluster_summary(asg)
     try:
         plan = summary._jdf.queryExecution().executedPlan().toString()
         assert "BroadcastNestedLoopJoin" in plan or "BroadcastExchange" in plan

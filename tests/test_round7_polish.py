@@ -1,11 +1,10 @@
 """Round-7 polish: ADVICE r6 fixes + VERDICT r6 ranked items.
 
 Covers:
-- eager_checkpoint re-points the process-global checkpoint dir only on
-  an actual change (ADVICE r6 item 1);
+- eager_checkpoint re-points the process-global checkpoint dir only
+  when the selected dir changes;
 - the Lloyd cluster-once memo keys on the RESOLVED checkpoint mode so
-  a conf flip re-materializes instead of serving stale local blocks
-  (ADVICE r6 item 2);
+  a conf flip re-materializes instead of serving stale local blocks;
 - hot_keys_report NULL-key tie-break matches DuckDB (ADVICE r6 item 3);
 - checkpoint files are reclaimed (or bounded) across clear_memos +
   re-materialize cycles now that get_spark enables
@@ -35,52 +34,59 @@ def _rdd_ckpt_dirs(root: str) -> set[str]:
 
 
 def test_eager_checkpoint_sets_dir_once_per_resolved_dir(spark, tmp_path):
-    """ADVICE r6 item 1: setCheckpointDir appends a random UUID subdir
-    per call, and the dir is process-global SparkContext state — so
-    eager_checkpoint must re-point only when the resolved dir actually
-    changes. Two calls with the same reliable_dir must land in the
-    SAME context checkpoint dir (UUID subdir stable); a different
-    reliable_dir must re-point."""
+    """setCheckpointDir appends a random UUID subdir per call, and the
+    dir is process-global SparkContext state — so eager_checkpoint
+    must re-point only when the selected dir actually changes. Two
+    calls under the same RELIABLE_CKPT_CONF must land in the SAME
+    context checkpoint dir (UUID subdir stable); a different conf
+    value must re-point."""
     from wd2duckdb_spark import catalog
+    from wd2duckdb_spark.catalog import RELIABLE_CKPT_CONF
 
     d1 = str(tmp_path / "ckpt_a")
     d2 = str(tmp_path / "ckpt_b")
     df = spark.range(10)
 
-    catalog.eager_checkpoint(df, reliable_dir=d1)
-    jctx = spark.sparkContext._jsc.sc()
-    first = jctx.getCheckpointDir().get()
-    catalog.eager_checkpoint(spark.range(20), reliable_dir=d1)
-    assert jctx.getCheckpointDir().get() == first, (
-        "same reliable_dir must not re-point the global checkpoint dir"
-    )
+    try:
+        spark.conf.set(RELIABLE_CKPT_CONF, d1)
+        catalog.eager_checkpoint(df)
+        jctx = spark.sparkContext._jsc.sc()
+        first = jctx.getCheckpointDir().get()
+        catalog.eager_checkpoint(spark.range(20))
+        assert jctx.getCheckpointDir().get() == first, (
+            "same dir must not re-point the global checkpoint dir"
+        )
 
-    catalog.eager_checkpoint(spark.range(5), reliable_dir=d2)
-    second = jctx.getCheckpointDir().get()
-    assert second != first
-    assert d2.lstrip("/") in second
+        spark.conf.set(RELIABLE_CKPT_CONF, d2)
+        catalog.eager_checkpoint(spark.range(5))
+        second = jctx.getCheckpointDir().get()
+        assert second != first
+        assert d2.lstrip("/") in second
 
-    # and back: the memo tracks the LAST dir, not a grow-only set
-    catalog.eager_checkpoint(spark.range(3), reliable_dir=d1)
-    assert d1.lstrip("/") in jctx.getCheckpointDir().get()
+        # and back: the context follows the LAST selected dir
+        spark.conf.set(RELIABLE_CKPT_CONF, d1)
+        catalog.eager_checkpoint(spark.range(3))
+        assert d1.lstrip("/") in jctx.getCheckpointDir().get()
+    finally:
+        spark.conf.unset(RELIABLE_CKPT_CONF)
 
 
 def test_lloyd_memo_keys_on_checkpoint_mode(spark, tmp_path):
-    """ADVICE r6 item 2: a memo entry materialized under
-    localCheckpoint must NOT be served after the session selects a
-    durable checkpoint dir — the resolved dir is part of the key, so
-    the conf flip re-materializes into the reliable dir."""
+    """A memo entry materialized under localCheckpoint must NOT be
+    served after the session selects a durable checkpoint dir — the
+    resolved dir is part of the key, so the conf flip re-materializes
+    into the reliable dir."""
     from wd2duckdb_spark import catalog
-    from wd2duckdb_spark.functions import similarity
+    from wd2duckdb_spark.catalog import RELIABLE_CKPT_CONF
     from wd2duckdb_spark.functions.similarity import (
-        RELIABLE_CKPT_CONF,
         _lloyd_assignment_materialized,
+        _lloyd_checkpointed,
     )
 
     catalog.clear_memos()
     app = spark.sparkContext.applicationId
     local_frame = _lloyd_assignment_materialized(spark, SF_DIR)
-    assert (app, SF_DIR, None) in similarity._asg_memo
+    assert (app, SF_DIR, None) in _lloyd_checkpointed.cache
 
     ckpt_dir = str(tmp_path / "reliable")
     spark.conf.set(RELIABLE_CKPT_CONF, ckpt_dir)
@@ -88,7 +94,7 @@ def test_lloyd_memo_keys_on_checkpoint_mode(spark, tmp_path):
         durable_frame = _lloyd_assignment_materialized(spark, SF_DIR)
         # distinct memo entry, NOT the stale local-blocks frame
         assert durable_frame is not local_frame
-        assert (app, SF_DIR, ckpt_dir) in similarity._asg_memo
+        assert (app, SF_DIR, ckpt_dir) in _lloyd_checkpointed.cache
         assert _rdd_ckpt_dirs(ckpt_dir), (
             "durable entry must have written reliable checkpoint data"
         )
@@ -148,6 +154,7 @@ def test_reliable_checkpoints_reclaimed_or_bounded(spark, tmp_path):
     GC nudge, live rdd-* dirs must be < N (i.e., at least one old
     snapshot was reclaimed, accumulation is not monotone)."""
     from wd2duckdb_spark import catalog
+    from wd2duckdb_spark.catalog import RELIABLE_CKPT_CONF
 
     assert (
         spark.conf.get("spark.cleaner.referenceTracking.cleanCheckpoints")
@@ -156,12 +163,14 @@ def test_reliable_checkpoints_reclaimed_or_bounded(spark, tmp_path):
 
     ckpt_dir = str(tmp_path / "gc_ckpt")
     cycles = 4
-    for i in range(cycles):
-        df = catalog.eager_checkpoint(
-            spark.range(100 + i), reliable_dir=ckpt_dir
-        )
-        df.count()
-        del df  # drop the only Python reference → py4j detach → JVM GC
+    spark.conf.set(RELIABLE_CKPT_CONF, ckpt_dir)
+    try:
+        for i in range(cycles):
+            df = catalog.eager_checkpoint(spark.range(100 + i))
+            df.count()
+            del df  # drop the only Python reference → py4j detach → JVM GC
+    finally:
+        spark.conf.unset(RELIABLE_CKPT_CONF)
     # nudge: CPython refcount released the Datasets already; ask the
     # JVM to collect so the ContextCleaner's weak-ref queue drains
     deadline = time.time() + 30

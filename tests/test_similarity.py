@@ -211,16 +211,15 @@ def test_memo_keys_are_application_ids(spark):
     clear_memos()
     tbl(spark, SF_DIR, "nation")
     similarity.query_vector(spark, SF_DIR, 0)
-    from wd2duckdb_spark.catalog import _scan_cache
-
-    for cache in (_scan_cache, similarity._qv_cache):
+    caches = (tbl.cache, similarity.query_vector.cache)
+    for cache in caches:
         assert cache, "memo should be populated"
         for key in cache:
             assert key[0] == spark.sparkContext.applicationId, key
 
     # and the registry-wide invalidation hook empties them all
     clear_memos()
-    assert not _scan_cache and not similarity._qv_cache
+    assert not any(caches)
 
 
 def test_semantic_dedup_releases_caches(spark):
@@ -259,24 +258,25 @@ def test_cluster_once_memo_shared_and_clearable(spark):
         q_semantic_dedup,
     )
 
+    memo = similarity._lloyd_checkpointed.cache
     catalog.clear_memos()
-    assert not similarity._asg_memo
+    assert not memo
     q_kmeans_lloyd(spark, SF_DIR).count()
     # memo key includes the RESOLVED checkpoint dir (None = local mode)
     key = (spark.sparkContext.applicationId, SF_DIR, None)
-    assert set(similarity._asg_memo) == {key}
-    seeded = similarity._asg_memo[key]
+    assert set(memo) == {key}
+    seeded = memo[key]
 
     # the second consumer rides the SAME materialized assignment
     q_semantic_dedup(spark, SF_DIR).count()
-    assert similarity._asg_memo[key] is seeded
+    assert memo[key] is seeded
 
     # registry-wide invalidation empties it; next call repopulates
     catalog.clear_memos()
-    assert not similarity._asg_memo
+    assert not memo
     q_semantic_dedup(spark, SF_DIR).count()
-    assert set(similarity._asg_memo) == {key}
-    assert similarity._asg_memo[key] is not seeded
+    assert set(memo) == {key}
+    assert memo[key] is not seeded
 
 
 @pytest.mark.slow
@@ -292,9 +292,8 @@ def test_cluster_once_memo_reliable_checkpoint_path(spark, tmp_path):
 
     from tests.conftest import SF_DIR
     from wd2duckdb_spark import catalog
-    from wd2duckdb_spark.functions import similarity
+    from wd2duckdb_spark.catalog import RELIABLE_CKPT_CONF
     from wd2duckdb_spark.functions.similarity import (
-        RELIABLE_CKPT_CONF,
         q_kmeans_lloyd,
         q_semantic_dedup,
     )

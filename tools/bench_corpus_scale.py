@@ -282,12 +282,12 @@ def main() -> None:
                 best = float("inf")
                 for _ in range(2):
                     # kmeans_lloyd's assignment is memoized per
-                    # (app, dir) since round 5 — drop ONLY that memo so
-                    # every rep re-runs the Lloyd chain (the scaling
-                    # under test). A blanket clear_memos() here would
-                    # also wipe the scan cache and the IVF/PQ memos,
+                    # session and dir — drop ONLY that memo so every
+                    # rep re-runs the Lloyd chain (the scaling under
+                    # test). A blanket clear_memos() here would also
+                    # wipe the scan cache and the IVF/PQ memos,
                     # silently changing what EVERY row measures.
-                    similarity._asg_memo.clear()
+                    similarity._lloyd_checkpointed.cache.clear()
                     t0 = time.perf_counter()
                     queries[name](spark, scaled_dir).write.format(
                         "noop"

@@ -2,6 +2,9 @@
 
 from __future__ import annotations
 
+import functools
+import inspect
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import LongType, StructType, TimestampType
@@ -23,7 +26,7 @@ TESTDATA_TABLES = (
 def session_key(spark: SparkSession) -> str:
     """Stable memo key for a session: the context's applicationId.
 
-    ``id(spark)`` is NOT safe here (ADVICE r4): CPython recycles
+    ``id(spark)`` is NOT safe here: CPython recycles
     object addresses, so after a stopped session is garbage-collected
     a NEW session can land on the same id and silently alias the dead
     session's cached DataFrames/vectors. applicationId is unique per
@@ -34,99 +37,123 @@ def session_key(spark: SparkSession) -> str:
     return spark.sparkContext.applicationId
 
 
-#: Every module-level memo dict registers here so a fixture
-#: regeneration (or a cold-start test) can invalidate ALL of them in
-#: one call instead of knowing each module's private name.
+#: The cache dict of every :func:`session_memo` function, so
+#: :func:`clear_memos` can empty all of them in one call.
 _MEMO_REGISTRY: list[dict] = []
 
 
-def register_memo(d: dict) -> dict:
-    _MEMO_REGISTRY.append(d)
-    return d
+def _frames(value) -> tuple:
+    """The DataFrames in a memoized value (one frame or a tuple)."""
+    vals = value if isinstance(value, tuple) else (value,)
+    return tuple(v for v in vals if isinstance(v, DataFrame))
+
+
+def session_memo(fn):
+    """Memoize ``fn(spark, *args)`` per session: the one rule for state
+    reused across a session's queries (scans, probe vectors, trained
+    models, CC labels, the Lloyd assignment).
+
+    - Key: ``(session_key(spark), *args)`` with defaults bound, so a
+      defaulted and an explicit argument share one entry.
+    - Hit: ``key in cache``, so a ``None`` or ``[]`` result is a hit
+      too (an empty corpus is not re-probed on every call).
+    - Re-arm: on a hit, a memoized DataFrame that was persisted but
+      lost its blocks to ``spark.catalog.clearCache()`` is persisted
+      again. After ``clearCache()`` a persisted frame reads
+      ``is_cached`` with a storage level that does not use memory; a
+      lazy read or a checkpointed frame is not cached at all, so it is
+      never re-persisted (and ``is_cached`` is a Python flag, so such a
+      hit makes no JVM call).
+
+    The cache is ``fn.cache`` and is emptied by :func:`clear_memos`.
+    """
+    sig = inspect.signature(fn)
+    cache: dict = {}
+    _MEMO_REGISTRY.append(cache)
+
+    @functools.wraps(fn)
+    def memo(spark: SparkSession, *args, **kwargs):
+        bound = sig.bind(spark, *args, **kwargs)
+        bound.apply_defaults()
+        key = (session_key(spark), *list(bound.arguments.values())[1:])
+        if key in cache:
+            value = cache[key]
+            for f in _frames(value):
+                if f.is_cached and not f.storageLevel.useMemory:
+                    f.persist()
+            return value
+        cache[key] = value = fn(*bound.args, **bound.kwargs)
+        return value
+
+    memo.cache = cache
+    return memo
 
 
 def clear_memos() -> None:
-    """Empty every registered memo (scan cache, probe vectors, IVF
-    centroids, PQ codebook, PCA models, CC keep-lists, trained LM/LR
-    model tables). Needed only when fixture parquet is rewritten IN
-    PLACE under an sf_dir a live session already memoized (ADVICE r4).
+    """Empty every :func:`session_memo` cache. Needed when fixture
+    parquet is rewritten in place under an sf_dir a live session has
+    already memoized, and before a cold-start measurement.
 
-    Persisted DataFrame values are best-effort unpersisted before the
-    references are dropped (ADVICE r11 item 5): without it a fixture
-    regeneration leaked the old frames in the CacheManager until
-    GC/clearCache. Values from a stopped session raise on unpersist —
-    ignored, the entry is unreachable either way."""
-    for d in _MEMO_REGISTRY:
-        for v in d.values():
-            vals = v if isinstance(v, tuple) else (v,)
-            for f in vals:
-                if isinstance(f, DataFrame):
-                    try:
-                        f.unpersist()
-                    except Exception:
-                        pass
-        d.clear()
+    Memoized DataFrames are unpersisted before their entries are
+    dropped, so a fixture regeneration does not leave the old frames
+    in the CacheManager until GC or ``clearCache()``. A frame from a
+    stopped session raises on unpersist; that is ignored, since the
+    entry is unreachable either way."""
+    for cache in _MEMO_REGISTRY:
+        for value in cache.values():
+            for f in _frames(value):
+                try:
+                    f.unpersist()
+                except Exception:
+                    pass
+        cache.clear()
 
 
-#: Session conf selecting DURABLE lineage truncation engine-wide:
-#: when set to a directory (HDFS/S3/local path), every
-#: :func:`eager_checkpoint` site (iterative CC labels, PageRank/SSSP
-#: supersteps, the Lloyd cluster-once memo, the semantic-dedup
-#: keep-list) materializes with reliable ``df.checkpoint()`` against
-#: it instead of executor-local ``localCheckpoint()`` blocks — the
-#: correct posture on a 1000-executor cluster where executor loss is
-#: routine (VERDICT r5 item 3, generalized from the Lloyd memo to
-#: every truncation site).
+#: Session conf selecting durable lineage truncation engine-wide: when
+#: set to a directory (HDFS/S3/local path), every
+#: :func:`eager_checkpoint` site (CC label rounds, PageRank/SSSP
+#: supersteps, the Lloyd assignment memo, the semantic-dedup
+#: keep-list) materializes with a reliable ``df.checkpoint()`` against
+#: it instead of executor-local ``localCheckpoint()`` blocks: the right
+#: posture on a large cluster, where executor loss is routine.
 RELIABLE_CKPT_CONF = "spark.wd2duckdb_spark.reliableCheckpointDir"
 
 
-def eager_checkpoint(df: DataFrame, reliable_dir: str | None = None) -> DataFrame:
-    """Eagerly truncate ``df``'s lineage — locally by default,
-    reliably when selected.
+def eager_checkpoint(df: DataFrame) -> DataFrame:
+    """Eagerly truncate ``df``'s lineage: locally by default, reliably
+    when the session selects it.
 
-    - default: ``localCheckpoint(eager=True)`` — executor-local
-      blocks, zero external storage, NOT fault-tolerant (a lost block
-      fails later consumers instead of recomputing; recovery is
-      re-running the deterministic batch job). The right trade
-      single-node and for re-runnable batch work.
-    - ``reliable_dir`` passed, or the :data:`RELIABLE_CKPT_CONF`
-      session conf set: ``df.checkpoint(eager=True)`` against that
-      directory — blocks on reliable storage survive executor loss.
-      Checkpoint files accumulate one snapshot per call (per
-      superstep in iterative loops) until application stop unless
+    - default: ``localCheckpoint(eager=True)``, executor-local blocks,
+      zero external storage, NOT fault-tolerant (a lost block fails
+      later consumers instead of recomputing; recovery is re-running
+      the deterministic batch job). The right trade single-node and
+      for re-runnable batch work.
+    - the :data:`RELIABLE_CKPT_CONF` session conf set:
+      ``df.checkpoint(eager=True)`` against that directory, whose
+      blocks survive executor loss. Checkpoint files accumulate one
+      snapshot per call (per superstep in iterative loops) until
+      application stop unless
       ``spark.cleaner.referenceTracking.cleanCheckpoints`` is on
       (:func:`wd2duckdb_spark.session.get_spark` sets it); size the
       directory accordingly.
 
-    The checkpoint directory is PROCESS-GLOBAL SparkContext state: a
-    per-call ``reliable_dir`` override re-points it for every other
-    checkpoint user in the application (ADVICE r6). To keep that
-    blast radius minimal, ``setCheckpointDir`` is only issued when
-    the context's current dir actually differs from the resolved one;
-    prefer selecting the dir once per application via
-    :data:`RELIABLE_CKPT_CONF` over per-call overrides.
+    The checkpoint directory is process-global SparkContext state, so
+    ``setCheckpointDir`` is issued only when the context's current dir
+    does not already lie under the selected one: the context keeps its
+    random UUID subdir across calls, and a dir re-pointed by other code
+    sharing the context is pointed back.
     """
     spark = df.sparkSession
-    if reliable_dir is None:
-        reliable_dir = spark.conf.get(RELIABLE_CKPT_CONF, None)
-    if reliable_dir:
-        app = session_key(spark)
-        # setCheckpointDir appends a random UUID subdir, so the
-        # context's getCheckpointDir can't be string-compared against
-        # the requested dir; remember what WE set per application —
-        # but ALSO verify the context still points under it (prefix
-        # compare on the resolved path), because user code sharing the
-        # session may have re-pointed it since (ADVICE r7): skipping
-        # the re-set on a stale memo would silently checkpoint into
-        # the foreign directory.
+    ckpt_dir = spark.conf.get(RELIABLE_CKPT_CONF, None)
+    if ckpt_dir:
+        # setCheckpointDir appends a random UUID subdir, so compare by
+        # prefix on the resolved path
         current = _current_checkpoint_dir(spark)
-        want = reliable_dir.rstrip("/")
-        still_ours = current is not None and (
+        want = ckpt_dir.rstrip("/")
+        if current is None or not (
             current == want or current.startswith(want + "/")
-        )
-        if _ckpt_dir_set.get(app) != reliable_dir or not still_ours:
-            spark.sparkContext.setCheckpointDir(reliable_dir)
-            _ckpt_dir_set[app] = reliable_dir
+        ):
+            spark.sparkContext.setCheckpointDir(ckpt_dir)
         return df.checkpoint(eager=True)
     return df.localCheckpoint(eager=True)
 
@@ -143,23 +170,14 @@ def _current_checkpoint_dir(spark: SparkSession) -> str | None:
     return urlparse(opt.get()).path or opt.get()
 
 
-#: applicationId → last checkpoint dir set by :func:`eager_checkpoint`
-#: (NOT in the memo registry: clear_memos() invalidates fixture-derived
-#: frames, but the context's checkpoint dir setting survives — clearing
-#: this map would only trigger a redundant re-set, not fix anything).
-_ckpt_dir_set: dict[str, str] = {}
-
-
-#: (applicationId, sf_dir, name) → DataFrame. A DataFrame is an
-#: immutable logical plan, so reuse is safe; caching skips the parquet
-#: footer / schema-inference read that otherwise repeats per query
-#: (~100 ms each on the driver — pure plan-build latency, no effect on
-#: executors).
-_scan_cache: dict[tuple[str, str, str], DataFrame] = register_memo({})
-
-
+@session_memo
 def tbl(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Load one testdata table (parquet scan with pushdown/pruning).
+
+    Memoized per session: a DataFrame is an immutable logical plan, so
+    reuse is safe, and it skips the parquet footer / schema-inference
+    read that otherwise repeats per query (~100 ms each on the driver,
+    pure plan-build latency).
 
     ``events.parquet`` has shipped in two layouts across driver
     versions: ``TIMESTAMP(NANOS)`` (which Spark's parquet reader
@@ -170,32 +188,17 @@ def tbl(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     matching DuckDB's nanos→micros truncation); a timestamp ``ts``
     passes through untouched.
     """
-    key = (session_key(spark), sf_dir, name)
-    cached = _scan_cache.get(key)
-    if cached is not None:
-        return cached
-    _scan_cache[key] = df = _read(spark, sf_dir, name)
-    return df
+    return _read(spark, sf_dir, name)
 
 
-#: Physical scan partition count per testdata table — probed once per
-#: (session, sf_dir, table) because the probe itself (``.rdd`` plan
-#: materialization) costs ~100 ms of driver planning per fresh
-#: DataFrame, far too much to pay inline on every query invocation.
-_scan_parts_cache: dict[tuple[str, str, str], int] = register_memo({})
-
-
+@session_memo
 def scan_partitions(spark: SparkSession, sf_dir: str, name: str) -> int:
     """Number of physical scan partitions (input splits) of one
     testdata table — the signal :func:`spread` keys on. Memoized per
-    (session, sf_dir, table); the fixture files are immutable per run,
-    so the count cannot go stale within a session."""
-    key = (session_key(spark), sf_dir, name)
-    n = _scan_parts_cache.get(key)
-    if n is None:
-        n = tbl(spark, sf_dir, name).rdd.getNumPartitions()
-        _scan_parts_cache[key] = n
-    return n
+    session: the probe (``.rdd`` plan materialization) costs ~100 ms
+    of driver planning per fresh DataFrame, and the fixture files are
+    immutable per run, so the count cannot go stale."""
+    return tbl(spark, sf_dir, name).rdd.getNumPartitions()
 
 
 def spread(df: DataFrame, *keys: str, scan_parts: int | None = None) -> DataFrame:
@@ -271,7 +274,7 @@ _TS_COLUMNS = {
 
 def oracle_view_sql(table: str, parquet_path: str) -> str:
     """DuckDB ``CREATE VIEW`` statement for an oracle-side testdata
-    view, mirroring :func:`_read`'s temporal normalization (ADVICE r1):
+    view, mirroring :func:`_read`'s temporal normalization:
     Spark casts ``_TS_COLUMNS`` to TIMESTAMP whatever the parquet
     layout, so the oracle must see the same type or str()-based value
     hashing diverges under a DATE-typed regeneration

@@ -61,8 +61,7 @@ from pyspark.sql import functions as F
 
 from wd2duckdb_spark.catalog import (
     local_frame,
-    register_memo,
-    session_key,
+    session_memo,
     tbl,
 )
 from wd2duckdb_spark.functions.similarity import (
@@ -83,26 +82,18 @@ from wd2duckdb_spark.functions.similarity import (
 )
 from wd2duckdb_spark.streaming import lake_index
 
-#: (applicationId, index_dir) → [(cid, vector)] — the persisted
-#: centroid table is immutable after bootstrap (frozen-centroid
-#: contract), so one bounded collect per session serves every
-#: micro-batch assignment and every probe.
-_index_cent_cache: dict = register_memo({})
-
-
+@session_memo
 def _index_centroids(
     spark: SparkSession, index_dir: str
 ) -> list[tuple[int, list[float]]]:
-    key = (session_key(spark), index_dir)
-    cached = _index_cent_cache.get(key)
-    if cached is not None:
-        return cached
+    """``[(cid, vector)]`` of an index. The persisted centroid table is
+    immutable after bootstrap (frozen-centroid contract), so one
+    bounded collect per session serves every micro-batch assignment
+    and every probe."""
     rows = spark.read.parquet(f"{index_dir}/centroids").collect()
-    out = sorted(
+    return sorted(
         (int(r["cid"]), [float(x) for x in r["embedding"]]) for r in rows
     )
-    _index_cent_cache[key] = out
-    return out
 
 
 def l2_assign_col(
@@ -292,17 +283,12 @@ def index_cell_balance(spark: SparkSession, index_dir: str) -> DataFrame:
     )
 
 
-#: (applicationId, index_dir) → codebook or None, resolved from the
-#: bootstrap's sidecar (written iff codes are stored).
-_index_cb_cache: dict = register_memo({})
-
-
+@session_memo
 def _index_codebook_if_stored(
     spark: SparkSession, index_dir: str
 ) -> list[list[float]] | None:
-    key = (session_key(spark), index_dir)
-    if key in _index_cb_cache:
-        return _index_cb_cache[key]
+    """The index's PQ codebook, or None: resolved from the bootstrap's
+    sidecar, which is written iff codes are stored."""
     jvm = spark._jvm
     hconf = spark.sparkContext._jsc.hadoopConfiguration()
     p = jvm.org.apache.hadoop.fs.Path(f"{index_dir}/codebook")
@@ -314,7 +300,6 @@ def _index_codebook_if_stored(
             [float(x) for x in r["vec"]]
             for r in sorted(rows, key=lambda r: r["code"])
         ]
-    _index_cb_cache[key] = cb
     return cb
 
 
@@ -552,25 +537,17 @@ def compact_ann_index(
 # Registered query — the index path under the driver's oracle gate
 # ---------------------------------------------------------------------------
 
-#: (applicationId, sf_dir) → index_dir of a bootstrap built from the
-#: fixture embeddings in a session tempdir; built once per session so
-#: the registered query exercises the REAL write→probe round trip
-#: without re-writing per invocation.
-_fixture_index_cache: dict = register_memo({})
-
-
+@session_memo
 def _fixture_index(spark: SparkSession, sf_dir: str) -> str:
-    key = (session_key(spark), sf_dir)
-    cached = _fixture_index_cache.get(key)
-    if cached is not None:
-        return cached
+    """index_dir of a bootstrap built from the fixture embeddings in a
+    tempdir, once per session, so the registered query exercises the
+    real write→probe round trip without re-writing per invocation."""
     import tempfile
 
     index_dir = tempfile.mkdtemp(prefix="wd2duckdb_spark_ann_index_")
     # mkdtemp creates the dir; Spark's mode="error" needs the TARGETS
     # absent, which they are (subpaths of the fresh dir)
     ivf_index_write(spark, sf_dir, index_dir)
-    _fixture_index_cache[key] = index_dir
     return index_dir
 
 

@@ -39,7 +39,7 @@ from collections import Counter
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from wd2duckdb_spark.catalog import register_memo, session_key, tbl
+from wd2duckdb_spark.catalog import session_memo, tbl
 
 #: Training-table cap and merge count for the registered query —
 #: de-fixtured in round 10 (VERDICT r9 item 2): the trainer is the
@@ -292,19 +292,14 @@ def bpe_encode(
     )
 
 
-#: Memoized merge list per (app, sf): training reads the corpus once
-#: per session; every consumer (token counts, budget plan, tests)
-#: reuses the same merges.
-_merges_cache: dict[tuple[str, str], list[tuple[str, str]]] = register_memo({})
-
-
+@session_memo
 def corpus_merges(spark: SparkSession, sf_dir: str) -> list[tuple[str, str]]:
-    key = (session_key(spark), sf_dir)
-    if key not in _merges_cache:
-        _merges_cache[key] = train_bpe_merges(
-            bpe_word_freqs(tbl(spark, sf_dir, "documents")), BPE_N_MERGES
-        )
-    return _merges_cache[key]
+    """The corpus's BPE merge list, trained once per session: every
+    consumer (token counts, budget plan, tests) reuses the same
+    merges."""
+    return train_bpe_merges(
+        bpe_word_freqs(tbl(spark, sf_dir, "documents")), BPE_N_MERGES
+    )
 
 
 def q_token_count_real_bpe(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -15,9 +15,8 @@ from pyspark.sql import functions as F
 
 from wd2duckdb_spark.catalog import (
     local_frame,
-    register_memo,
     scan_partitions,
-    session_key,
+    session_memo,
     spread,
     tbl,
 )
@@ -1229,9 +1228,61 @@ def q_redact_pii(spark: SparkSession, sf_dir: str) -> DataFrame:
 BIGRAM_K = 0.5
 
 
-#: Memoized persisted bigram-LM tables per (session, sf_dir) — the
-#: corpus-trained model :func:`doc_surprisal` scores against.
-_lm_cache: dict[tuple[str, str], DataFrame] = register_memo({})
+def _doc_bigrams(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """``(doc_id, source, bg)``: one row per adjacent word pair of each
+    document."""
+    d = tbl(spark, sf_dir, "documents")
+    toks = F.split(F.lower(F.trim("text")), " ")
+    bigrams = F.expr(
+        "transform(sequence(1, size(w) - 1),"
+        " i -> concat(element_at(w, i), ' ', element_at(w, i + 1)))"
+    )
+    return (
+        d.select("doc_id", "source", toks.alias("w"))
+        # sequence(1, 0) would auto-step DOWN ([1, 0]) for single-token
+        # docs and element_at(w, 0) throws INVALID_INDEX_OF_ZERO —
+        # guard like _with_shingles does; the oracle's range(1, len(w))
+        # is empty for the same docs, so both sides drop them.
+        .filter(F.size("w") >= 2)
+        .select("doc_id", "source", F.explode(bigrams).alias("bg"))
+    )
+
+
+@session_memo
+def _bigram_lm(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The trained bigram LM table ``(bg, smicro)``: each bigram's
+    add-k surprisal −ln P(w₂ | w₁), floor-snapped to integer 1e-12
+    micro-units. Persisted once per session: it is trained model state,
+    vocabulary²-bounded, deterministic and invocation-invariant, and a
+    production pipeline trains once and scores many times."""
+    bg_counts = (
+        _doc_bigrams(spark, sf_dir).groupBy("bg").agg(F.count("*").alias("c12"))
+    )
+    uni = bg_counts.select(
+        F.split("bg", " ").getItem(0).alias("w1"), "c12"
+    ).groupBy("w1").agg(F.sum("c12").alias("c1"))
+    vocab = uni.agg(F.count("*").alias("v"))  # 1 row
+    return (
+        bg_counts.select(
+            "bg", F.split("bg", " ").getItem(0).alias("w1"), "c12"
+        )
+        .join(uni, "w1")
+        .crossJoin(F.broadcast(vocab))
+        .select(
+            "bg",
+            F.floor(
+                -F.log(
+                    (F.col("c12") + F.lit(BIGRAM_K))
+                    / (F.col("c1") + F.lit(BIGRAM_K) * F.col("v"))
+                )
+                * 1e12
+                + F.lit(0.5)
+            )
+            .cast("decimal(38,0)")
+            .alias("smicro"),
+        )
+        .persist()
+    )
 
 
 def doc_surprisal(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1254,8 +1305,7 @@ def doc_surprisal(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc. At 100 TB: identical shape — the LM table is the only reused
     state, and it is data-bounded, not corpus-bounded.
 
-    Determinism (round 9 — the ADVICE-r8 accumulation-order class,
-    applied one level deeper): each bigram's surprisal is a
+    Determinism: each bigram's surprisal is a
     deterministic double of the integer (c12, c1, v) inputs, but the
     per-doc MEAN used to sum those doubles in engine-specific order —
     so every per-bigram surprisal is floor-snapped to integer 1e-12
@@ -1264,62 +1314,9 @@ def doc_surprisal(spark: SparkSession, sf_dir: str) -> DataFrame:
     bit-identical inputs on both engines. Per-source means are floored
     again; the argmax doc ties break on doc_id via min-struct.
     """
-    key = (session_key(spark), sf_dir)
-    d = tbl(spark, sf_dir, "documents")
-    toks = F.split(F.lower(F.trim("text")), " ")
-    bigrams = F.expr(
-        "transform(sequence(1, size(w) - 1),"
-        " i -> concat(element_at(w, i), ' ', element_at(w, i + 1)))"
-    )
-    base = (
-        d.select("doc_id", "source", toks.alias("w"))
-        # sequence(1, 0) would auto-step DOWN ([1, 0]) for single-token
-        # docs and element_at(w, 0) throws INVALID_INDEX_OF_ZERO —
-        # guard like _with_shingles does; the oracle's range(1, len(w))
-        # is empty for the same docs, so both sides drop them.
-        .filter(F.size("w") >= 2)
-        .select("doc_id", "source", F.explode(bigrams).alias("bg"))
-    )
-    bg_counts = base.groupBy("bg").agg(F.count("*").alias("c12"))
-    uni = bg_counts.select(
-        F.split("bg", " ").getItem(0).alias("w1"), "c12"
-    ).groupBy("w1").agg(F.sum("c12").alias("c1"))
-    vocab = uni.agg(F.count("*").alias("v"))  # 1 row
-    # the trained LM table is vocabulary²-bounded, deterministic and
-    # invocation-invariant — memoized persisted per (session, sf_dir)
-    # with a clearCache re-arm. Deliberately KEPT through the round-12
-    # memo scope-down: this is trained MODEL state (the VERDICT r11
-    # keep-list class: LM table / centroids / ANN index / fixture
-    # bridge), not a corpus-sized input projection — a production
-    # pipeline trains once and scores many times.
-    lm = _lm_cache.get(key)
-    if lm is None:
-        lm = (
-            bg_counts.select(
-                "bg", F.split("bg", " ").getItem(0).alias("w1"), "c12"
-            )
-            .join(uni, "w1")
-            .crossJoin(F.broadcast(vocab))
-            .select(
-                "bg",
-                F.floor(
-                    -F.log(
-                        (F.col("c12") + F.lit(BIGRAM_K))
-                        / (F.col("c1") + F.lit(BIGRAM_K) * F.col("v"))
-                    )
-                    * 1e12
-                    + F.lit(0.5)
-                )
-                .cast("decimal(38,0)")
-                .alias("smicro"),
-            )
-            .persist()
-        )
-        _lm_cache[key] = lm
-    elif not lm.storageLevel.useMemory:
-        lm.persist()
-    per_doc = (
-        base.join(lm, "bg")
+    return (
+        _doc_bigrams(spark, sf_dir)
+        .join(_bigram_lm(spark, sf_dir), "bg")
         .groupBy("doc_id", "source")
         .agg(
             (
@@ -1334,7 +1331,6 @@ def doc_surprisal(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("doc_surprisal")
         )
     )
-    return per_doc
 
 
 def q_bigram_surprisal(spark: SparkSession, sf_dir: str) -> DataFrame:

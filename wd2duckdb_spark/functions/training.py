@@ -25,9 +25,8 @@ from pyspark.sql import functions as F
 
 from wd2duckdb_spark.catalog import (
     local_frame,
-    register_memo,
     scan_partitions,
-    session_key,
+    session_memo,
     spread,
     tbl,
 )
@@ -723,28 +722,18 @@ def q_quality_lr_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-#: (applicationId, sf_dir) → trained [w0..w3] — the train-once memo:
-#: the GD loop runs LR_ITERS corpus aggregates once per application
-#: per fixture dir, and every consumer (the per-source score report,
-#: the calibration audit) scores against the SAME weights — exactly
-#: how a production pipeline treats a trained filter (an upstream
-#: artifact, not a per-query cost). Four floats per entry; released by
-#: catalog.clear_memos() like every other memo.
-_lr_w_memo: dict = register_memo({})
-
-
+@session_memo
 def _lr_weights(spark: SparkSession, sf_dir: str) -> list[float]:
-    """Train the weak-label LR once per (application, sf_dir) and memo
-    the 4 weights. Each GD step is ONE map-side-combinable corpus
-    aggregate + a 4-float driver collect; the feature frame is
-    persisted for the loop's duration and unpersisted in the finally
-    (VERDICT r5 item 2 — 1 corpus scan + LR_ITERS cached-column scans,
-    no CacheManager entry outlives the loop)."""
+    """Train the weak-label LR once per session and memo the 4 weights:
+    every consumer (the per-source score report, the calibration audit)
+    scores against the same weights, the way a production pipeline
+    treats a trained filter (an upstream artifact, not a per-query
+    cost). Each GD step is ONE map-side-combinable corpus aggregate + a
+    4-float driver collect; the feature frame is persisted for the
+    loop's duration and unpersisted in the finally (1 corpus scan +
+    LR_ITERS cached-column scans, no CacheManager entry outlives the
+    loop)."""
     import math
-
-    key = (session_key(spark), sf_dir)
-    if key in _lr_w_memo:
-        return _lr_w_memo[key]
 
     pf6 = lambda x: math.floor(x * 1e6 + 0.5) / 1e6  # noqa: E731
     w = [0.0, 0.0, 0.0, 0.0]
@@ -773,7 +762,6 @@ def _lr_weights(spark: SparkSession, sf_dir: str) -> list[float]:
         # the consumers' scoring frames recompute from the parquet
         # source (one fresh scan each) — the cache served the loop only
         feats.unpersist()
-    _lr_w_memo[key] = w
     return w
 
 

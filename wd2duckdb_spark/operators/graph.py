@@ -18,8 +18,7 @@ from pyspark.sql import functions as F
 
 from wd2duckdb_spark.catalog import (
     eager_checkpoint,
-    register_memo,
-    session_key,
+    session_memo,
     tbl,
 )
 
@@ -137,12 +136,6 @@ def _bipartite_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
 #: (pinned in tests/test_round3_ops.py).
 PR_CKPT_DEFAULT = 2
 
-#: (applicationId, sf_dir) → (outdeg, trans, n) of the trade graph.
-#: One persisted pair per (session, sf_dir): a per-call persist would
-#: leave a pair of cache entries behind on every call in a long-lived
-#: session. clear_memos() invalidates as usual.
-_pr_trans_cache: dict[tuple[str, str], tuple] = register_memo({})
-
 
 def _pr_build(edges: DataFrame) -> tuple:
     """Persisted ``(outdeg, trans, n)`` of a ``(src, dst)`` edge frame:
@@ -163,20 +156,12 @@ def _pr_build(edges: DataFrame) -> tuple:
     return outdeg, trans, n
 
 
+@session_memo
 def _pr_structure(spark: SparkSession, sf_dir: str) -> tuple:
-    """:func:`_pr_build` of the trade graph, memoized per session."""
-    key = (session_key(spark), sf_dir)
-    cached = _pr_trans_cache.get(key)
-    if cached is not None:
-        # re-arm persists dropped by an intervening clearCache()
-        for f in (cached[0], cached[1]):
-            if not f.storageLevel.useMemory:
-                f.persist()
-        return cached
-    built = _pr_build(_bipartite_edges(spark, sf_dir))
-    if built[2] > 0:  # an empty corpus is not memoized
-        _pr_trans_cache[key] = built
-    return built
+    """:func:`_pr_build` of the trade graph, memoized per session: one
+    persisted pair per (session, sf_dir), where a per-call persist
+    would leave a pair of cache entries behind on every call."""
+    return _pr_build(_bipartite_edges(spark, sf_dir))
 
 
 def _pr_supersteps(
@@ -303,19 +288,20 @@ def pagerank(
     job (see :func:`_pr_supersteps`): ``Σ|r_i − r_{i−k}| < tol`` stops
     the loop. With ``tol=None`` the loop runs exactly ``max_iters``
     supersteps.
+
+    The returned vector is eagerly checkpointed, so the call leaves no
+    persisted frame of its own behind.
     """
     outdeg, trans, n = _pr_build(edges)
     ranks, converged = _pr_supersteps(
         outdeg, trans, n, max_iters, checkpoint_interval, tol
     )
-    if converged:
-        # the returned frame is checkpoint-truncated — trans/outdeg
-        # are no longer in its lineage, so release them now
-        trans.unpersist()
-        outdeg.unpersist()
-    # not converged: the tail supersteps past the last boundary are
-    # still lazy over trans — unpersisting would force recompute;
-    # left to the caller (clearCache) once the frame is materialized.
+    if not converged:
+        # the supersteps past the last boundary are still lazy over
+        # trans; truncate them so the structure can be released
+        ranks = eager_checkpoint(ranks)
+    trans.unpersist()
+    outdeg.unpersist()
     return ranks.select(F.col("id").alias("node_id"), F.col("rank"))
 
 
