@@ -126,7 +126,7 @@ def test_replayed_batch_is_idempotent(spark, tmp_path):
     second_half = spark.createDataFrame(rows[len(rows) // 2 :], e.schema)
     from wd2duckdb_spark.functions.similarity import SEMDEDUP_THR
 
-    _batch_vec_dedup(second_half, 1, idx, out, SEMDEDUP_THR, "l2")
+    _batch_vec_dedup(second_half, 1, idx, out, SEMDEDUP_THR)
     got = {
         r.vec_id for r in spark.read.parquet(out).select("vec_id").collect()
     }
@@ -151,15 +151,20 @@ def test_history_probe_streams_index_not_broadcast(spark, tmp_path):
     the MICRO-BATCH side and stream the index — the index FileScan
     appears outside (before) the BroadcastExchange subtree."""
     from wd2duckdb_spark.catalog import tbl
-    from wd2duckdb_spark.functions.ann_index import _assigned_rows
-    from wd2duckdb_spark.functions.dedup import _cosine_fold_sql
-    from wd2duckdb_spark.functions.similarity import trained_centroids
+    from wd2duckdb_spark.functions.ann_index import (
+        _assigned_rows,
+        l2_assign_col,
+    )
+    from wd2duckdb_spark.functions.similarity import (
+        _cosine_fold_sql,
+        trained_centroids,
+    )
     from wd2duckdb_spark.streaming import lake_index
 
     idx, _out = _stream_corpus(spark, tmp_path, 2, "orient")
     cents = trained_centroids(spark, SF_DIR)
     batch = tbl(spark, SF_DIR, "embeddings").limit(5)
-    assigned = _assigned_rows(batch, cents, None, "l2")
+    assigned = _assigned_rows(batch, l2_assign_col("v", cents), None)
     hist = (
         spark.read.parquet(f"{idx}/assignments")
         .filter(F.col("batch") != 99)
@@ -201,7 +206,7 @@ def test_catchup_regime_keeps_same_vectors(spark, tmp_path, monkeypatch):
         idx = _bootstrap_centroids_only(spark, tmp_path, tag)
         out = str(tmp_path / f"semout_{tag}")
         for i, half in enumerate(halves):
-            _batch_vec_dedup(half, i, idx, out, SEMDEDUP_THR, "l2")
+            _batch_vec_dedup(half, i, idx, out, SEMDEDUP_THR)
         return {
             r.vec_id for r in spark.read.parquet(out).select("vec_id").collect()
         }

@@ -41,7 +41,7 @@ def _build_streamed_index(spark, tmp_path, splits, tag):
         _assigned_rows,
         ann_ingest_stream,
     )
-    from wd2duckdb_spark.functions.similarity import _centroids
+    from wd2duckdb_spark.functions.similarity import _centroids, ivf_assign_col
 
     in_dir, base, schema = _split_dirs(spark, tmp_path, splits, tag)
     index_dir = str(tmp_path / f"index_{tag}")
@@ -50,7 +50,8 @@ def _build_streamed_index(spark, tmp_path, splits, tag):
         [(cid, vec) for cid, vec in cents],
         "cid int, embedding array<double>",
     ).coalesce(1).write.parquet(f"{index_dir}/centroids")
-    _assigned_rows(base, cents, None).write.partitionBy("cell").parquet(
+    cell = ivf_assign_col("v", "nv", cents)
+    _assigned_rows(base, cell, None).write.partitionBy("cell").parquet(
         f"{index_dir}/assignments/batch=-1"
     )
     stream = (

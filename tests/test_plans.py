@@ -995,3 +995,30 @@ def test_local_frame_round_trips_nulls_nan_arrays_and_empty(spark):
     empty = local_frame(spark, [], ddl)
     assert empty.schema == df.schema
     assert empty.collect() == []
+
+
+def test_plans_snapshot_regenerates_byte_identical():
+    """PLANS_SNAPSHOT.md is exactly what ``tools/explain_all.py``
+    prints for the sf0.001 fixtures. The tool runs in a fresh process,
+    so session conf that earlier tests left behind cannot change the
+    plans it reports. The snapshot reads the same at local[4] and
+    local[32]; the child is pinned to local[4] with a 2g heap, where it
+    takes about a minute on a 4-core host (local[32] there: ~10 min)."""
+    import os
+    import subprocess
+    import sys
+
+    from tests.conftest import REPO
+
+    tool = os.path.join(REPO, "tools", "explain_all.py")
+    out = subprocess.run(
+        [sys.executable, tool, SF_DIR],
+        cwd=REPO,
+        env=dict(os.environ, SPARK_GRAFT_CPUS="4", SPARK_GRAFT_DRIVER_MEM="2g"),
+        capture_output=True,
+        text=True,
+        timeout=900,
+        check=True,
+    ).stdout
+    with open(os.path.join(REPO, "PLANS_SNAPSHOT.md"), encoding="utf-8") as f:
+        assert out == f.read()

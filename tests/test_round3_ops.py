@@ -27,10 +27,9 @@ def _union_find_labels(n_edges):
     return {x: find(x) for x in parent}
 
 
-def test_star_cc_matches_union_find_on_random_graph(spark):
+def test_label_propagation_cc_matches_union_find_on_random_graph(spark):
     """Label propagation equals python union-find on a random sparse
-    graph (the test id predates the removal of the star algorithm).
-    Propagation converges in diameter + 1 rounds; max_iters = the node
+    graph. Propagation converges in diameter + 1 rounds; max_iters = the node
     count bounds any diameter of this graph."""
     from wd2duckdb_spark.functions.dedup import connected_components
 
@@ -97,13 +96,12 @@ from hypothesis import strategies as st
         max_size=60,
     )
 )
-def test_star_cc_property_matches_union_find(spark, edges):
+def test_label_propagation_cc_property_matches_union_find(spark, edges):
     """Property: for ANY pair list (self-loops, duplicates, parallel
     edges included), the propagation labeling equals python union-find
     with min-label canonicalization. Self-loop-only nodes are their own
     singleton cluster. max_iters = 41 ≥ the node count bounds any
-    diameter of these graphs. (The test id predates the removal of the
-    star algorithm.)"""
+    diameter of these graphs."""
     from wd2duckdb_spark.functions.dedup import connected_components
 
     expected = _union_find_labels([(a, b) for a, b in edges if a != b])

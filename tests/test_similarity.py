@@ -244,6 +244,19 @@ def test_semantic_dedup_releases_caches(spark):
     assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
 
 
+def test_trained_centroids_releases_caches(spark):
+    """trained_centroids leaves the CacheManager as it found it: the
+    corpus projection its Lloyd run persists is released once the
+    centroids are collected."""
+    from wd2duckdb_spark.functions.similarity import trained_centroids
+
+    cm = spark._jsparkSession.sharedState().cacheManager()
+    spark.catalog.clearCache()
+    before = cm.cachedData().size()
+    assert trained_centroids(spark, SF_DIR)
+    assert cm.cachedData().size() == before
+
+
 def test_cluster_once_memo_shared_and_clearable(spark):
     """Round 5: kmeans_lloyd and semantic_dedup share ONE Lloyd
     assignment per (application, sf_dir) — the cluster-once memo —

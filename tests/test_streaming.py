@@ -275,6 +275,47 @@ def test_sessionize_stream_late_event_semantics(spark, tmp_path):
     assert u2[base - dt.timedelta(minutes=15)][1] == 2
 
 
+def test_sessionize_stream_rounds_ties_like_batch(spark, tmp_path):
+    """total_value is rounded HALF_UP on the shortest decimal repr, as
+    the batch twin's F.round does: a one-event session of 0.125 gives
+    0.13 and one of 1.005 gives 1.01 on both paths (Python's round()
+    gives 0.12 and 1.0)."""
+    import datetime as dt
+
+    from wd2duckdb_spark.streaming.sessionize import sessionize, sessionize_stream
+
+    base = dt.datetime(2024, 1, 1, 10, 0, 0)
+    schema = "ts timestamp, event_id long, user_id long, value double"
+    events = spark.createDataFrame(
+        [(base, 1, 1, 0.125), (base, 2, 2, 1.005)], schema
+    )
+    in_dir = tmp_path / "tie_in"
+    in_dir.mkdir()
+    events.coalesce(1).write.parquet(str(in_dir / "b0.parquet"))
+    stream = spark.readStream.schema(schema).parquet(str(in_dir) + "/*.parquet")
+    q = (
+        sessionize_stream(stream)
+        .writeStream.format("memory")
+        .queryName("tie_sess")
+        .outputMode("update")
+        .option("checkpointLocation", str(tmp_path / "tie_ckpt"))
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination(180)
+
+    got = {
+        r.user_id: (r.session_start, r.session_end, r.n_events, r.total_value)
+        for r in spark.sql("SELECT * FROM tie_sess").collect()
+    }
+    want = {
+        r.user_id: (r.session_start, r.session_end, r.n_events, r.total_value)
+        for r in sessionize(events).collect()
+    }
+    assert want[1][3] == 0.13 and want[2][3] == 1.01
+    assert got == want
+
+
 def test_dedup_stream_drops_cross_batch_duplicates(spark, tmp_path):
     """Duplicate event_ids arriving in a LATER micro-batch (within the
     watermark) are dropped; distinct events all survive."""

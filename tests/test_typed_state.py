@@ -415,7 +415,7 @@ def test_fold_sessions_batch_split_invariance():
     from hypothesis import given, settings
     from hypothesis import strategies as st
 
-    from wd2duckdb_spark.streaming.typed_state import _GAP_US, _fold_sessions
+    from wd2duckdb_spark.streaming.sessionize import _GAP_US, _fold_sessions
 
     gap = _GAP_US
 
@@ -458,15 +458,15 @@ def test_fold_sessions_batch_split_invariance():
 
 
 def test_round2_matches_spark_f_round_on_shortest_repr_ties(spark):
-    """ADVICE r5 item 1: _round2 must agree with the batch twin's
-    F.round bit-for-bit. Spark's Round goes through
-    BigDecimal.valueOf(double) — the SHORTEST round-trip decimal repr
-    — then HALF_UP; a floor(abs(x)*100+0.5) on the raw binary double
-    diverges on shortest-repr .xx5 ties (1.005 is binary 1.00499…,
-    so the old path gave 1.00 where Spark gives 1.01). Pin the
+    """_round2 must agree with the batch twin's F.round bit-for-bit.
+    Spark's Round goes through BigDecimal.valueOf(double) — the
+    SHORTEST round-trip decimal repr — then HALF_UP; a
+    floor(abs(x)*100+0.5) on the raw binary double diverges on
+    shortest-repr .xx5 ties (1.005 is binary 1.00499…, so that path
+    gives 1.00 where Spark gives 1.01). Pin the
     Decimal(repr(x)) implementation against the real F.round on the
     known-divergent ties, negatives, and a spread of sums."""
-    from wd2duckdb_spark.streaming.typed_state import _round2
+    from wd2duckdb_spark.streaming.sessionize import _round2
 
     vals = [
         1.005, 0.285, 2.675, 0.125, 0.015, -1.005, -0.285, -2.675,

@@ -10,7 +10,9 @@ protocol (streaming/lake_index.py) the dedup tiers share, applied to
 IVF:
 
 - :func:`ivf_index_write` — bootstrap: assign every existing vector
-  to its nearest-centroid cell and persist
+  to its nearest-centroid cell by cosine
+  (:func:`~wd2duckdb_spark.functions.similarity.ivf_assign_col`) and
+  persist
 
   - ``<index_dir>/centroids`` — the (cid, embedding) centroid table
     (broadcast-sized by construction: n_cells rows);
@@ -36,7 +38,11 @@ IVF:
   the STORED vector + norm, so the cosine doubles are bit-identical
   to the from-scratch path (parity pinned across micro-batch layouts
   in tests/test_ann_index.py, and the registered query shares
-  ``q_ivf_ann_topk``'s DuckDB oracle verbatim).
+  ``q_ivf_ann_topk``'s DuckDB oracle verbatim). The cell pick, the
+  probe cosine and the ADC distance of :func:`pq_index_adc_topk` /
+  :func:`ivf_pq_index_probe` are the similarity module's kernels
+  (``probe_cells``, ``probe_cosine``, ``adc_dist``), the ones the
+  from-scratch paths use.
 
 Scale posture: the bootstrap is one linear pass — assign is a
 per-row expression over broadcast-sized centroid literals, and the
@@ -65,22 +71,26 @@ from wd2duckdb_spark.catalog import (
     tbl,
 )
 from wd2duckdb_spark.functions.similarity import (
-    EMB_DIM,
+    ANN_FILTER_LABEL,
     IVF_CENTROID_IDS,
     IVF_NPROBE,
+    PQ_SUBSPACES,
     _as_double,
     _centroids,
-    _dot_fold_sql,
     _ivf_oracle,
-    _py_norm,
+    _pq_lut,
     _sql_arr,
-    clean_embeddings,
+    adc_dist,
     ivf_assign_col,
     norm,
     pq_code_col,
+    probe_cells,
+    probe_cosine,
     query_vector,
+    valid_vector,
 )
 from wd2duckdb_spark.streaming import lake_index
+
 
 @session_memo
 def _index_centroids(
@@ -105,8 +115,8 @@ def l2_assign_col(
     numerics matched term-for-term: zip_with + ascending-dim left
     fold from 0.0 for the squared distance, floor(d·1e6 + 0.5)/1e6
     snap, strict `<` scan in ascending-cid order = smallest cid on
-    ties. An index bootstrapped from ``trained_centroids()`` with
-    ``assign="l2"`` therefore reproduces the registered
+    ties. The semantic dedup-at-ingest tier assigns with this rule
+    against ``trained_centroids()``, so it reproduces the registered
     ``semantic_dedup`` clustering EXACTLY (pinned in
     tests/test_ann_dedup_ingest.py)."""
     dists = ", ".join(
@@ -132,35 +142,18 @@ def l2_assign_col(
 INDEX_ATTR_COLS = ("label",)
 
 
-def _valid_vector() -> Column:
-    """Schema contract of an indexable vector; other rows are
-    quarantined."""
-    return F.col("embedding").isNotNull() & (F.size("embedding") == EMB_DIM)
-
-
 def _assigned_rows(
-    vecs: DataFrame,
-    cents: list[tuple[int, list[float]]],
-    codebook: list[list[float]] | None,
-    assign: str = "cosine",
+    vecs: DataFrame, cell: Column, codebook: list[list[float]] | None
 ) -> DataFrame:
     """(vec_id, v, nv, [attrs,] [code0..7,] cell) for one frame of
-    vectors — the single assignment rule shared by bootstrap and
-    ingest. :data:`INDEX_ATTR_COLS` present in the input are stored
-    so probes can filter without rejoining the source. ``assign``
-    selects the cell rule: ``cosine`` (IVF default) or ``l2`` (the
-    Lloyd/SemDeDup rule, :func:`l2_assign_col`)."""
-    from wd2duckdb_spark.functions.similarity import PQ_SUBSPACES
-
-    cell = (
-        ivf_assign_col("v", "nv", cents)
-        if assign == "cosine"
-        else l2_assign_col("v", cents)
-    )
-    if assign not in ("cosine", "l2"):
-        raise ValueError(f"unknown assign rule {assign!r}")
+    vectors — the one row layout shared by bootstrap and ingest.
+    ``cell`` is the tier's assignment rule over the ``v``/``nv``
+    columns: :func:`ivf_assign_col` for the IVF index,
+    :func:`l2_assign_col` for the semantic dedup tier.
+    :data:`INDEX_ATTR_COLS` present in the input are stored so probes
+    can filter without rejoining the source."""
     out = (
-        vecs.filter(_valid_vector())
+        vecs.filter(valid_vector())
         .withColumn("v", _as_double(F.col("embedding")))
         .withColumn("nv", norm(F.col("v")))
         .withColumn("cell", cell)
@@ -186,7 +179,6 @@ def ivf_index_write(
     index_dir: str,
     codebook: list[list[float]] | None = None,
     centroids: list[tuple[int, list[float]]] | None = None,
-    assign: str = "cosine",
 ) -> None:
     """Bootstrap the persisted IVF index from the embeddings table:
     centroid table + cell-partitioned assignments under
@@ -210,7 +202,9 @@ def ivf_index_write(
     ).coalesce(1).write.mode("error").parquet(f"{index_dir}/centroids")
     (
         _assigned_rows(
-            tbl(spark, sf_dir, "embeddings"), cents, codebook, assign
+            tbl(spark, sf_dir, "embeddings"),
+            ivf_assign_col("v", "nv", cents),
+            codebook,
         )
         .write.mode("error")
         .partitionBy("cell")
@@ -238,9 +232,9 @@ def ann_index_ingest(
     spark = batch_df.sparkSession
     cents = _index_centroids(spark, index_dir)
     codebook = _index_codebook_if_stored(spark, index_dir)
-    src, obs = lake_index.observe_rows(batch_df, _valid_vector())
+    src, obs = lake_index.observe_rows(batch_df, valid_vector())
     lake_index.write_batch(
-        _assigned_rows(src, cents, codebook),
+        _assigned_rows(src, ivf_assign_col("v", "nv", cents), codebook),
         f"{index_dir}/assignments",
         batch_id,
         cell=True,
@@ -370,35 +364,18 @@ def ivf_index_probe(
             F.lit(0).cast("bigint").alias("cell"),
             F.lit(0.0).alias("cosine"),
         )
-
-    def _cos(a: list[float], b: list[float]) -> float:
-        d = sum(x * y for x, y in zip(a, b))
-        return d / (_py_norm(a) * _py_norm(b))
-
-    probe = [
-        cid
-        for cid, _ in sorted(
-            ((cid, _cos(qv, c)) for cid, c in cents),
-            key=lambda t: (-t[1], t[0]),
-        )[:nprobe]
-    ]
     a = spark.read.parquet(f"{index_dir}/assignments").filter(
-        F.col("cell").isin(*probe)
+        F.col("cell").isin(*probe_cells(qv, cents, nprobe))
     )
     if pred is not None:
         a = a.filter(pred)
     if exclude_ids:
         a = a.filter(~F.col("vec_id").isin(*exclude_ids))
-    sim = F.round(
-        F.expr(_dot_fold_sql("v", _sql_arr(qv)))
-        / (F.col("nv") * F.lit(_py_norm(qv))),
-        6,
-    )
     return (
         a.select(
             "vec_id",
             F.col("cell").cast("bigint").alias("cell"),
-            sim.alias("cosine"),
+            probe_cosine("v", F.col("nv"), qv).alias("cosine"),
         )
         .orderBy(F.desc("cosine"), "vec_id")
         .limit(k)
@@ -416,38 +393,11 @@ def pq_index_adc_topk(
     ``codebook``): candidates never rehydrate to floats — 8
     lookup-table reads + adds per row over the code columns, the
     billion-vector memory tier. Scans ALL cells (ADC is the
-    whole-corpus compressed pass; compose with the cell filter for
-    IVF+PQ). floor-normalized distances — same convention as
-    ``q_pq_adc_topk``, whose results this reproduces from the index
-    (pinned in tests)."""
-    from wd2duckdb_spark.functions.similarity import PQ_SUBSPACES, _pq_lut
-
-    codebook = _index_codebook_if_stored(spark, index_dir)
-    if codebook is None:
-        raise ValueError(
-            f"{index_dir} stores no PQ codes — bootstrap with codebook="
-        )
-    lut = _pq_lut(qv, codebook)
-    a = spark.read.parquet(f"{index_dir}/assignments")
-    if exclude_ids:
-        a = a.filter(~F.col("vec_id").isin(*exclude_ids))
-    dist = F.expr(
-        " + ".join(
-            f"element_at(array({', '.join(repr(x) for x in lut[j])}),"
-            f" code{j} + 1)"
-            for j in range(PQ_SUBSPACES)
-        )
-    )
-    return (
-        a.select(
-            "vec_id",
-            (F.floor(dist * 1000000 + F.lit(0.5)) / 1000000).alias(
-                "adc_dist"
-            ),
-        )
-        .orderBy("adc_dist", "vec_id")
-        .limit(k)
-    )
+    whole-corpus compressed pass; :func:`ivf_pq_index_probe` composes
+    it with the cell filter). floor-normalized distances — same
+    convention as ``q_pq_adc_topk``, whose results this reproduces
+    from the index (pinned in tests)."""
+    return _adc_scan(spark, index_dir, qv, k, exclude_ids)
 
 
 def ivf_pq_index_probe(
@@ -466,48 +416,38 @@ def ivf_pq_index_probe(
     probe cells (pinned in tests against exactly that restriction);
     like all IVF paths it trades recall for the nprobe/n_cells scan
     bound."""
-    from wd2duckdb_spark.functions.similarity import PQ_SUBSPACES, _pq_lut
+    return _adc_scan(spark, index_dir, qv, k, exclude_ids, nprobe)
 
+
+def _adc_scan(
+    spark: SparkSession,
+    index_dir: str,
+    qv: list[float],
+    k: int,
+    exclude_ids: tuple[int, ...],
+    nprobe: int | None = None,
+) -> DataFrame:
+    """The one ADC scan of the index: ``(vec_id, [cell,] adc_dist)``
+    top-``k`` over the stored codes, restricted to the ``nprobe``
+    nearest cells when ``nprobe`` is given."""
     codebook = _index_codebook_if_stored(spark, index_dir)
     if codebook is None:
         raise ValueError(
             f"{index_dir} stores no PQ codes — bootstrap with codebook="
         )
-    cents = _index_centroids(spark, index_dir)
-
-    def _cos(a: list[float], b: list[float]) -> float:
-        return sum(x * y for x, y in zip(a, b)) / (
-            _py_norm(a) * _py_norm(b)
-        )
-
-    probe = [
-        cid
-        for cid, _ in sorted(
-            ((cid, _cos(qv, c)) for cid, c in cents),
-            key=lambda t: (-t[1], t[0]),
-        )[:nprobe]
-    ]
-    lut = _pq_lut(qv, codebook)
-    a = spark.read.parquet(f"{index_dir}/assignments").filter(
-        F.col("cell").isin(*probe)
-    )
+    a = spark.read.parquet(f"{index_dir}/assignments")
+    cols = [F.col("vec_id")]
+    if nprobe is not None:
+        cells = probe_cells(qv, _index_centroids(spark, index_dir), nprobe)
+        a = a.filter(F.col("cell").isin(*cells))
+        cols.append(F.col("cell").cast("bigint").alias("cell"))
     if exclude_ids:
         a = a.filter(~F.col("vec_id").isin(*exclude_ids))
-    dist = F.expr(
-        " + ".join(
-            f"element_at(array({', '.join(repr(x) for x in lut[j])}),"
-            f" code{j} + 1)"
-            for j in range(PQ_SUBSPACES)
-        )
+    dist = adc_dist(
+        _pq_lut(qv, codebook), [f"code{j}" for j in range(PQ_SUBSPACES)]
     )
     return (
-        a.select(
-            "vec_id",
-            F.col("cell").cast("bigint").alias("cell"),
-            (F.floor(dist * 1000000 + F.lit(0.5)) / 1000000).alias(
-                "adc_dist"
-            ),
-        )
+        a.select(*cols, dist.alias("adc_dist"))
         .orderBy("adc_dist", "vec_id")
         .limit(k)
     )
@@ -587,8 +527,6 @@ def q_ann_index_filtered_probe(
     label column (pushed into the pruned-cell scan — no join back to
     the source). Row-identical to the from-scratch pre-filter path
     ``q_ann_filtered_ivf`` and shares its oracle verbatim."""
-    from wd2duckdb_spark.functions.similarity import ANN_FILTER_LABEL
-
     qv = query_vector(spark, sf_dir, 0)
     if not qv or not _centroids(spark, sf_dir):
         return tbl(spark, sf_dir, "embeddings").limit(0).select(
@@ -613,15 +551,11 @@ QUERIES = {
 }
 
 
-def _filtered_oracle() -> str:
-    from wd2duckdb_spark.functions.similarity import ANN_FILTER_LABEL
-
-    return _ivf_oracle(extra_where=f"AND v.label = {ANN_FILTER_LABEL}")
-
-
 ORACLES: dict[str, str] = {
     # verbatim the from-scratch IVF oracles: the index is a layout,
     # not a semantics change — both paths must hash identically
     "ann_index_probe": _ivf_oracle(),
-    "ann_index_filtered_probe": _filtered_oracle(),
+    "ann_index_filtered_probe": _ivf_oracle(
+        extra_where=f"AND v.label = {ANN_FILTER_LABEL}"
+    ),
 }

@@ -41,10 +41,11 @@ from wd2duckdb_spark.catalog import (
     spread,
     tbl,
 )
-
-#: mirrored from functions.similarity (imported lazily there to avoid
-#: a cycle): the embedding schema contract used in the neardup oracle
-_EMB_DIM = 64
+from wd2duckdb_spark.functions.similarity import (
+    EMB_DIM,
+    _cosine_fold_sql,
+    valid_vector,
+)
 
 N_MINHASH = 8  #: hash functions in the MinHash signature
 N_BANDS = 4  #: LSH bands (rows per band = N_MINHASH // N_BANDS = 2)
@@ -1501,20 +1502,6 @@ EMB_BLOCKS = 8
 EMB_NEARDUP_THR = 0.4
 
 
-def _cosine_fold_sql(xv: str, yv: str) -> str:
-    """Sequential-fold cosine of two double-array columns — the SAME
-    left-to-right aggregate order as DuckDB's list_reduce, so both
-    engines produce bitwise-identical doubles before rounding."""
-    return (
-        f"aggregate(zip_with({xv}, {yv}, (p, q) -> p * q),"
-        " CAST(0 AS DOUBLE), (acc, z) -> acc + z)"
-        f" / (sqrt(aggregate(transform({xv}, z -> z * z),"
-        " CAST(0 AS DOUBLE), (acc, z) -> acc + z))"
-        f" * sqrt(aggregate(transform({yv}, z -> z * z),"
-        " CAST(0 AS DOUBLE), (acc, z) -> acc + z)))"
-    )
-
-
 def q_embedding_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Embedding-cosine near-duplicate pairs above EMB_NEARDUP_THR
     (rounded to 4 dp), computed EXACTLY via block-partitioned matrix
@@ -1550,20 +1537,8 @@ def q_embedding_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     parallel, no skew, no driver state.  Beyond brute-force scale,
     raise the threshold and switch to the LSH/IVF candidate paths.
     """
-    from wd2duckdb_spark.functions.similarity import EMB_DIM
-
-    # _EMB_DIM is a hand-mirrored literal of this constant
-    # (module-level import would cycle); fail loudly at first use if
-    # the PQ geometry ever changes, instead of letting the engine
-    # filter and the oracle WHERE silently quarantine different rows
-    assert _EMB_DIM == EMB_DIM, (
-        f"dedup._EMB_DIM={_EMB_DIM} drifted from similarity.EMB_DIM="
-        f"{EMB_DIM}; update the mirrored literal"
-    )
     e = tbl(spark, sf_dir, "embeddings").filter(
-        # dirty rows (null / wrong-dimension vectors) can't pair
-        F.col("embedding").isNotNull()
-        & (F.size("embedding") == EMB_DIM)
+        valid_vector()  # dirty rows (null / wrong-dimension) can't pair
     ).select(
         "vec_id",
         F.expr("transform(embedding, x -> CAST(x AS DOUBLE))").alias("v"),
@@ -1645,18 +1620,13 @@ def _sig_matches_sql() -> str:
 
 def _minhash_sql_cte() -> str:
     """Shared oracle CTE: doc_id → h0..h7 minhash signature."""
-    hashes = ", ".join(
-        f"min(('0x' || substr(md5('{i // 4}|' || shingle), {1 + 8 * (i % 4)}, 8))"
-        f"::BIGINT) AS h{i}"
-        for i in range(N_MINHASH)
-    )
     return f"""
         shingled AS (
             SELECT doc_id, unnest({word_shingles_expr(3)}) AS shingle
             FROM documents
             WHERE len(string_split(lower(trim(text)), ' ')) >= 3
         ),
-        sig AS (SELECT doc_id, {hashes} FROM shingled GROUP BY doc_id)
+        sig AS (SELECT doc_id, {_minhash_hashes_sql()} FROM shingled GROUP BY doc_id)
     """
 
 
@@ -2686,7 +2656,7 @@ ORACLES: dict[str, str] = {
     "embedding_neardup": f"""
         WITH clean AS (
             SELECT vec_id, embedding FROM embeddings
-            WHERE embedding IS NOT NULL AND len(embedding) = {_EMB_DIM}
+            WHERE embedding IS NOT NULL AND len(embedding) = {EMB_DIM}
         )
         SELECT a.vec_id AS a_id, b.vec_id AS b_id,
                round(list_cosine_similarity(CAST(a.embedding AS DOUBLE[]),

@@ -164,14 +164,14 @@ _MMR_ENC = 1_000_000
 
 def _mmr_pair_sims(spark: SparkSession, sf_dir: str, cand_ids: list[int]):
     """round6 pairwise cosines among the candidate vectors — computed
-    IN SPARK with the exact arithmetic of :func:`cosine_scored` (same
-    sequential-fold dot, same round6), so the driver-side greedy and
-    the DuckDB oracle see identical numbers."""
+    IN SPARK with the sequential-fold cosine (the dot, norms and
+    product order of :func:`cosine_scored`, so the same doubles), so
+    the driver-side greedy and the DuckDB oracle see identical
+    numbers."""
     from wd2duckdb_spark.functions.similarity import (
         _as_double,
-        _dot_fold_sql,
+        _cosine_fold_sql,
         clean_embeddings,
-        norm,
     )
 
     e = (
@@ -181,11 +181,7 @@ def _mmr_pair_sims(spark: SparkSession, sf_dir: str, cand_ids: list[int]):
     )
     a = e.select(F.col("vec_id").alias("a_id"), F.col("_v").alias("_va"))
     b = e.select(F.col("vec_id").alias("b_id"), F.col("_v").alias("_vb"))
-    sim = F.round(
-        F.expr(_dot_fold_sql("_va", "_vb"))
-        / (norm(F.col("_va")) * norm(F.col("_vb"))),
-        6,
-    )
+    sim = F.round(F.expr(_cosine_fold_sql("_va", "_vb")), 6)
     return (
         a.crossJoin(b)
         .filter(F.col("a_id") != F.col("b_id"))

@@ -13,6 +13,14 @@ Two paths:
   construction; bucket count trades recall vs. cost. The hyperplanes
   are pseudo-random but deterministic (seeded by dimension index), so
   results are reproducible run-to-run and node-to-node.
+
+The probe kernels here are the vector tier's only copies — the
+persisted index (ann_index.py), retrieval.py, dedup.py and the
+semantic ingest stream import them: :func:`valid_vector` (the EMB_DIM
+contract), :func:`probe_cells` (driver-side nprobe cell pick),
+:func:`probe_cosine` (round6 cosine against a probe vector),
+:func:`adc_dist` (PQ lookup-table distance) and
+:func:`_cosine_fold_sql` (pairwise cosine of two vector columns).
 """
 
 from __future__ import annotations
@@ -107,6 +115,48 @@ def _py_norm(v: list[float]) -> float:
     return s**0.5
 
 
+def _cosine_fold_sql(xv: str, yv: str) -> str:
+    """Sequential-fold cosine of two double-array columns — the SAME
+    left-to-right aggregate order as DuckDB's list_reduce, so both
+    engines produce bitwise-identical doubles before rounding."""
+    return (
+        f"aggregate(zip_with({xv}, {yv}, (p, q) -> p * q),"
+        " CAST(0 AS DOUBLE), (acc, z) -> acc + z)"
+        f" / (sqrt(aggregate(transform({xv}, z -> z * z),"
+        " CAST(0 AS DOUBLE), (acc, z) -> acc + z))"
+        f" * sqrt(aggregate(transform({yv}, z -> z * z),"
+        " CAST(0 AS DOUBLE), (acc, z) -> acc + z)))"
+    )
+
+
+def probe_cosine(v: str, nv: Column, qv: list[float]) -> Column:
+    """round6 cosine of the array<double> column ``v`` against the
+    driver-side probe vector ``qv`` — the one scoring rule of every
+    probe (brute force, LSH, IVF, the persisted index). ``nv`` is the
+    row's L2 norm as the caller already has it (a stored column, a
+    hoisted one, or ``norm(v)`` inline); ``norm(q)`` folds to a
+    driver-side constant. The (norm(v) * norm(q)) product order of
+    :func:`cosine` is kept, so the rounded doubles are unchanged."""
+    return F.round(
+        F.expr(_dot_fold_sql(v, _sql_arr(qv))) / (nv * F.lit(_py_norm(qv))),
+        6,
+    )
+
+
+def probe_cells(
+    qv: list[float], cents: list[tuple[int, list[float]]], nprobe: int
+) -> list[int]:
+    """The ``nprobe`` cells nearest the probe ``qv``, picked
+    driver-side from the tiny centroid table: cosine descending, then
+    ascending cid — the oracle's ``ORDER BY sim DESC, cid``."""
+    nq = _py_norm(qv)
+    ranked = sorted(
+        (-(sum(x * y for x, y in zip(qv, c)) / (nq * _py_norm(c))), cid)
+        for cid, c in cents
+    )
+    return [cid for _neg_sim, cid in ranked[:nprobe]]
+
+
 @session_memo
 def query_vector(spark: SparkSession, sf_dir: str, vec_id: int = 0) -> list[float]:
     """Fetch one query vector to the driver (a single row — the one
@@ -139,9 +189,13 @@ def clean_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
     mirrored verbatim in every oracle (WHERE embedding IS NOT NULL
     AND len(embedding) = EMB_DIM), so Spark and DuckDB quarantine
     identically on ragged feeds."""
-    return tbl(spark, sf_dir, "embeddings").filter(
-        F.col("embedding").isNotNull() & (F.size("embedding") == EMB_DIM)
-    )
+    return tbl(spark, sf_dir, "embeddings").filter(valid_vector())
+
+
+def valid_vector() -> Column:
+    """The EMB_DIM schema contract of one ``embedding`` row; every
+    vector operator quarantines the rows it rejects."""
+    return F.col("embedding").isNotNull() & (F.size("embedding") == EMB_DIM)
 
 
 def cosine_scored(
@@ -162,14 +216,8 @@ def cosine_scored(
     qv = query_vector(spark, sf_dir, vec_id)
     if not qv:
         return e.limit(0).select("vec_id", F.lit(0.0).alias("cosine"))
-    # norm(q) folds to a driver-side constant; the (norm(v) * norm(q))
-    # product order of cosine() is preserved, doubles unchanged.
     e = e.withColumn("_v", _as_double(F.col("embedding")))
-    sim = F.round(
-        F.expr(_dot_fold_sql("_v", _sql_arr(qv)))
-        / (norm(F.col("_v")) * F.lit(_py_norm(qv))),
-        6,
-    )
+    sim = probe_cosine("_v", norm(F.col("_v")), qv)
     return e.select("vec_id", sim.alias("cosine"))
 
 
@@ -284,21 +332,14 @@ def lsh_bucket_ann(
         q_bucket ^ (1 << p) for p in flip_order[: max(0, n_probes - 1)]
     ]
     e = clean_embeddings(spark, sf_dir).filter(F.col("vec_id") != vec_id)
-    # hoisted norms: norm(q) is a driver-side constant and norm(v) a
-    # per-row column computed ONCE (the Column-API original re-derived
-    # it inside cosine); the (norm(v) * norm(q)) product order is
-    # preserved so the rounded doubles are unchanged.
     bucketed = e.withColumn(
         "_v", _as_double(F.col("embedding"))
     ).withColumn("bucket", lsh_bucket_col("_v", n_planes, n_dims))
-    sim = F.round(
-        F.expr(_dot_fold_sql("_v", _sql_arr(qv)))
-        / (norm(F.col("_v")) * F.lit(_py_norm(qv))),
-        6,
-    )
     return (
         bucketed.filter(F.col("bucket").isin(*probes))
-        .select("vec_id", sim.alias("cosine"))
+        .select(
+            "vec_id", probe_cosine("_v", norm(F.col("_v")), qv).alias("cosine")
+        )
         .orderBy(F.desc("cosine"), "vec_id")
         .limit(k)
     )
@@ -337,8 +378,7 @@ def _centroids(spark: SparkSession, sf_dir: str) -> list[tuple[int, list[float]]
     rows = (
         tbl(spark, sf_dir, "embeddings")
         .filter(F.col("vec_id").isin(*IVF_CENTROID_IDS))
-        .filter(F.col("embedding").isNotNull())
-        .filter(F.size("embedding") == EMB_DIM)  # schema contract
+        .filter(valid_vector())
         .select("vec_id", "embedding")
         .collect()
     )
@@ -410,20 +450,7 @@ def ivf_topk(
             F.lit(0).cast("int").alias("cell"),
             F.lit(0.0).alias("cosine"),
         )
-    # driver-side: the query's nprobe nearest cells (tiny, exact)
-    def _cos(a: list[float], b: list[float]) -> float:
-        d = sum(x * y for x, y in zip(a, b))
-        na = sum(x * x for x in a) ** 0.5
-        nb = sum(x * x for x in b) ** 0.5
-        return d / (na * nb)
-
-    probe = [
-        cid
-        for cid, _ in sorted(
-            ((cid, _cos(qv, c)) for cid, c in cents),
-            key=lambda t: (-t[1], t[0]),
-        )[:IVF_NPROBE]
-    ]
+    probe = probe_cells(qv, cents, IVF_NPROBE)
     e = clean_embeddings(spark, sf_dir).filter(
         ~F.col("vec_id").isin(vec_id, *IVF_CENTROID_IDS)
     )
@@ -437,11 +464,7 @@ def ivf_topk(
         .withColumn("_nv", norm(F.col("_v")))
         .withColumn("cell", ivf_assign_col("_v", "_nv", cents))
     )
-    sim = F.round(
-        F.expr(_dot_fold_sql("_v", _sql_arr(qv)))
-        / (F.col("_nv") * F.lit(_py_norm(qv))),
-        6,
-    )
+    sim = probe_cosine("_v", F.col("_nv"), qv)
     return (
         assigned.filter(F.col("cell").isin(*probe))
         .select("vec_id", "cell", sim.alias("cosine"))
@@ -545,7 +568,7 @@ def q_embedding_hygiene(spark: SparkSession, sf_dir: str) -> DataFrame:
     LAST on both engines."""
     e = tbl(spark, sf_dir, "embeddings")
     emb = F.col("embedding")
-    clean = emb.isNotNull() & (F.size(emb) == EMB_DIM)
+    clean = valid_vector()
     nv = norm(_as_double(emb))
     f4 = lambda c: F.floor(c * 1e4 + F.lit(0.5)) / 1e4  # noqa: E731
     return (
@@ -721,10 +744,7 @@ def pca_model(spark: SparkSession, sf_dir: str, k: int = 8):
 
     rows = (
         tbl(spark, sf_dir, "embeddings")
-        .filter(
-            F.col("embedding").isNotNull()
-            & (F.size("embedding") == EMB_DIM)  # dirty rows can't fit
-        )
+        .filter(valid_vector())  # dirty rows can't fit
         .select("embedding")
         .mapInPandas(partials, "n long, s array<double>, ss array<double>")
         .collect()
@@ -890,8 +910,7 @@ def _pq_codebook(spark: SparkSession, sf_dir: str) -> list[list[float]]:
     rows = (
         tbl(spark, sf_dir, "embeddings")
         .filter(F.col("vec_id") < PQ_CODES)
-        .filter(F.col("embedding").isNotNull())
-        .filter(F.size("embedding") == EMB_DIM)
+        .filter(valid_vector())
         .select("vec_id", "embedding")
         .collect()
     )
@@ -971,10 +990,7 @@ def q_embedding_pq_codes(spark: SparkSession, sf_dir: str) -> DataFrame:
             ],
         )
     e = spread(
-        tbl(spark, sf_dir, "embeddings").filter(
-            F.col("embedding").isNotNull()
-            & (F.size("embedding") == EMB_DIM)  # dirty rows: no code
-        ),
+        tbl(spark, sf_dir, "embeddings").filter(valid_vector()),
         scan_parts=scan_partitions(spark, sf_dir, "embeddings"),
     ).withColumn("_v", _as_double(F.col("embedding")))
     cols = [
@@ -1046,6 +1062,19 @@ def _pq_lut(qv: list[float], codebook: list[list[float]]) -> list[list[float]]:
     return lut
 
 
+def adc_dist(lut: list[list[float]], code_cols: list[str]) -> Column:
+    """floor-6 asymmetric distance: one lookup-table read per PQ code
+    column (``lut[j][code_j]``), summed in subspace order."""
+    dist = F.expr(
+        " + ".join(
+            f"element_at(array({', '.join(repr(x) for x in lut[j])}),"
+            f" {col} + 1)"
+            for j, col in enumerate(code_cols)
+        )
+    )
+    return F.floor(dist * 1000000 + F.lit(0.5)) / 1000000
+
+
 def q_pq_adc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """PQ search: approximate top-10 nearest (squared L2) to vec_id=0
     by ASYMMETRIC DISTANCE — the query stays exact, candidates are
@@ -1063,9 +1092,7 @@ def q_pq_adc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     lut = _pq_lut(qv, cb)
     e = tbl(spark, sf_dir, "embeddings").filter(
-        (F.col("vec_id") != 0)
-        & F.col("embedding").isNotNull()
-        & (F.size("embedding") == EMB_DIM)
+        (F.col("vec_id") != 0) & valid_vector()
     )
     v = _as_double(F.col("embedding"))
     # Two projections, not one fused expression: inlining the code
@@ -1088,20 +1115,9 @@ def q_pq_adc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             ],
         )
     )
-    dist = F.expr(
-        " + ".join(
-            f"element_at(array({', '.join(repr(x) for x in lut[j])}),"
-            f" _c{j} + 1)"
-            for j in range(PQ_SUBSPACES)
-        )
-    )
+    dist = adc_dist(lut, [f"_c{j}" for j in range(PQ_SUBSPACES)])
     return (
-        codes.select(
-            "vec_id",
-            (F.floor(dist * 1000000 + F.lit(0.5)) / 1000000).alias(
-                "adc_dist"
-            ),
-        )
+        codes.select("vec_id", dist.alias("adc_dist"))
         .orderBy("adc_dist", "vec_id")
         .limit(10)
     )
@@ -1333,8 +1349,11 @@ def trained_centroids(
     K rows collected (broadcast-sized by construction); same training
     codepath as the registered kmeans_lloyd query, so the centroids
     are floor-6 deterministic and session-reproducible."""
-    _vecs, _asg, cents = _lloyd_assignment(spark, sf_dir)
-    rows = cents.collect()
+    vecs, _asg, cents = _lloyd_assignment(spark, sf_dir)
+    try:
+        rows = cents.collect()
+    finally:
+        vecs.unpersist()
     return sorted(
         (int(r["cid"]), [float(x) for x in r["c"]]) for r in rows
     )
@@ -1508,7 +1527,6 @@ def _semantic_keep_plan(
 ) -> DataFrame:
     """The SemDeDup pair stage: grid-decomposed in-cluster cosine
     pairs over ``(vecs, asg)`` → a (vec_id, cid, keep) keep-list."""
-    from wd2duckdb_spark.functions.dedup import _cosine_fold_sql
     from wd2duckdb_spark.operators.skew import grid_self_join
 
     m = asg.select("vec_id", "cid").join(vecs, "vec_id")

@@ -17,10 +17,10 @@ arrival order is vec_id order, this reproduces the batch rule
 ``∃ u < v in cell : cos(u, v) ≥ t`` — EXACTLY ``semantic_dedup``'s
 dup predicate — so stream and batch cannot drift: parity with the
 registered oracle-backed query is pinned across micro-batch layouts
-in tests/test_ann_dedup_ingest.py, with the index bootstrapped from
-``trained_centroids()`` under the ``assign="l2"`` Lloyd rule
-(:func:`wd2duckdb_spark.functions.ann_index.l2_assign_col` — floor-6
-squared-L2 argmin, bit-identical to the batch clustering).
+in tests/test_ann_dedup_ingest.py, with the index's centroids taken
+from ``trained_centroids()``. Cells are always assigned by the Lloyd
+rule (:func:`wd2duckdb_spark.functions.ann_index.l2_assign_col` —
+floor-6 squared-L2 argmin, bit-identical to the batch clustering).
 
 Appends, replay filter and the history probe are the lake-index
 protocol (:mod:`~wd2duckdb_spark.streaming.lake_index`), pruned on the
@@ -38,8 +38,12 @@ from pyspark.sql import functions as F
 from wd2duckdb_spark.functions.ann_index import (
     _assigned_rows,
     _index_centroids,
+    l2_assign_col,
 )
-from wd2duckdb_spark.functions.similarity import SEMDEDUP_THR
+from wd2duckdb_spark.functions.similarity import (
+    SEMDEDUP_THR,
+    _cosine_fold_sql,
+)
 from wd2duckdb_spark.streaming import lake_index
 
 
@@ -49,10 +53,7 @@ def _batch_vec_dedup(
     index_dir: str,
     out_dir: str,
     threshold: float,
-    assign: str,
 ) -> None:
-    from wd2duckdb_spark.functions.dedup import _cosine_fold_sql
-
     cents = _index_centroids(batch_df.sparkSession, index_dir)
     near = F.round(F.expr(_cosine_fold_sql("vb", "vh")), 4) >= F.lit(
         round(float(threshold), 4)
@@ -85,7 +86,7 @@ def _batch_vec_dedup(
         batch_id,
         f"{index_dir}/assignments",
         out_dir,
-        sign=lambda b: _assigned_rows(b, cents, None, assign),
+        sign=lambda b: _assigned_rows(b, l2_assign_col("v", cents), None),
         dups=dups,
         cell=True,
     )
@@ -97,23 +98,22 @@ def semantic_ingest_stream(
     out_dir: str,
     checkpoint: str,
     threshold: float = SEMDEDUP_THR,
-    assign: str = "l2",
     available_now: bool = True,
 ):
     """Start the semantic dedup-at-ingest stage over a streaming
-    embeddings source; returns the StreamingQuery. The index must be
-    bootstrapped first (``ivf_index_write`` — typically centroids
-    from ``trained_centroids()`` with an EMPTY or historical corpus;
-    the centroid read fails fast on a missing index). ``assign``
-    must match the bootstrap's rule — ``l2`` is the SemDeDup/Lloyd
-    rule that makes stream results equal the batch twin's. Read the
-    kept corpus with ``spark.read.parquet(out_dir)``; per-batch drop
-    accounting with ``lake_index.batch_metrics(spark, out_dir)``."""
+    embeddings source; returns the StreamingQuery. The index's
+    centroid table must exist first — typically ``trained_centroids()``
+    with no history, so the whole corpus arrives through the stream;
+    the centroid read fails fast on a missing index. Cells are
+    assigned by the SemDeDup/Lloyd rule (:func:`l2_assign_col`), which
+    makes stream results equal the batch twin's, so any history in
+    ``assignments`` must come from earlier runs of this stage, not
+    from ``ivf_index_write``'s cosine rule. Read the kept corpus
+    with ``spark.read.parquet(out_dir)``; per-batch drop accounting
+    with ``lake_index.batch_metrics(spark, out_dir)``."""
 
     def _fn(batch_df: DataFrame, batch_id: int) -> None:
-        _batch_vec_dedup(
-            batch_df, batch_id, index_dir, out_dir, threshold, assign
-        )
+        _batch_vec_dedup(batch_df, batch_id, index_dir, out_dir, threshold)
 
     writer = vecs.writeStream.foreachBatch(_fn).option(
         "checkpointLocation", checkpoint

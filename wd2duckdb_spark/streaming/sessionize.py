@@ -44,6 +44,8 @@ if TYPE_CHECKING:  # pragma: no cover
 #: Inactivity gap that closes a session.
 SESSION_GAP_MIN = 30
 
+_GAP_US = SESSION_GAP_MIN * 60 * 1_000_000
+
 SESSION_SCHEMA = StructType(
     [
         StructField("user_id", LongType()),
@@ -164,7 +166,6 @@ def _sessionize_fn(
     the watermark in state."""
     import pandas as pd
 
-    gap_us = SESSION_GAP_MIN * 60 * 1_000_000
     (user_id,) = key
 
     if state.hasTimedOut:
@@ -181,46 +182,69 @@ def _sessionize_fn(
         else pd.DataFrame(columns=["ts", "event_id", "value"])
     )
     ts_us = (events["ts"].astype("int64") // 1000).tolist()  # ns → µs
-    values = events["value"].tolist()
     if not ts_us and not state.exists:
         return
+    merged = _fold_sessions(
+        ts_us, events["value"].tolist(), [state.get] if state.exists else []
+    )
+    cur = merged[-1]
+    state.update(tuple(cur))
+    # Event-time timeout: the watermark passing end+gap seals the session.
+    state.setTimeoutTimestamp((cur[1] + _GAP_US) // 1000)
+    out = [(*m, "closed") for m in merged[:-1]] + [(*cur, "open")]
+    yield _session_pdf(pd, user_id, out)
 
-    # 1. fold the batch's events into mini-sessions
+
+def _fold_sessions(ts_us: list, values: list, prior: list) -> list:
+    """Fold (sorted) event times into gap-sessions ``[start_us,
+    end_us, n, value]`` and merge them with the ``prior`` sessions
+    carried in state: adjacent sessions with inter-gap ≤ gap coalesce,
+    so within-watermark out-of-order arrival matches the batch
+    lag+cumsum twin. The one session fold of both streaming
+    sessionizers (this module's and ``typed_state``'s)."""
     minis: list[list] = []
     for t, val in zip(ts_us, values):
-        if minis and t - minis[-1][1] <= gap_us:
+        if minis and t - minis[-1][1] <= _GAP_US:
             m = minis[-1]
             m[1] = max(m[1], t)
             m[2] += 1
             m[3] += val
         else:
             minis.append([t, t, 1, float(val)])
-
-    # 2. insert the open session from state, keep start order
-    if state.exists:
-        minis.append(list(state.get))
+    if prior:
+        minis.extend(list(p) for p in prior)
         minis.sort(key=lambda m: (m[0], m[1]))
-
-    # 3. merge adjacent sessions whose inter-gap closed
     merged: list[list] = []
     for m in minis:
-        if merged and m[0] - merged[-1][1] <= gap_us:
+        if merged and m[0] - merged[-1][1] <= _GAP_US:
             p = merged[-1]
             p[1] = max(p[1], m[1])
             p[2] += m[2]
             p[3] += m[3]
         else:
             merged.append(m)
+    return merged
 
-    out = [
-        (m[0], m[1], m[2], round(m[3], 2), "closed") for m in merged[:-1]
-    ]
-    cur = merged[-1]
-    state.update(tuple(cur))
-    # Event-time timeout: the watermark passing end+gap seals the session.
-    state.setTimeoutTimestamp((cur[1] + gap_us) // 1000)
-    out.append((cur[0], cur[1], cur[2], round(cur[3], 2), "open"))
-    yield _session_pdf(pd, user_id, out)
+
+def _round2(x: float) -> float:
+    """2-dp rounding EXACTLY matching the batch twin's F.round: Spark's
+    Round converts the double via ``BigDecimal.valueOf`` (the SHORTEST
+    round-trip decimal repr — same contract as Python's ``repr``) and
+    rounds that decimal HALF_UP. Neither Python's ``round()`` (banker's
+    half-even) nor ``floor(abs(x)*100+0.5)`` (rounds the BINARY value,
+    so e.g. 1.005 — binary 1.00499...— lands on 1.00 while Spark's
+    shortest-repr path gives 1.01) agrees on ties; going through
+    ``Decimal(repr(x))`` reproduces the BigDecimal.valueOf semantics
+    bit-for-bit (verified on 1.005/0.285/negatives in
+    tests/test_typed_state.py)."""
+    import math
+    from decimal import ROUND_HALF_UP, Decimal
+
+    if not math.isfinite(x):  # Spark's Round passes NaN/±inf through
+        return x
+    return float(
+        Decimal(repr(x)).quantize(Decimal("0.01"), rounding=ROUND_HALF_UP)
+    )
 
 
 def _session_pdf(pd, user_id: int, rows: list[tuple]):
@@ -230,7 +254,7 @@ def _session_pdf(pd, user_id: int, rows: list[tuple]):
             "session_start": [pd.Timestamp(r[0], unit="us") for r in rows],
             "session_end": [pd.Timestamp(r[1], unit="us") for r in rows],
             "n_events": [r[2] for r in rows],
-            "total_value": [round(r[3], 2) for r in rows],
+            "total_value": [_round2(r[3]) for r in rows],
             "status": [r[4] for r in rows],
         }
     )

@@ -69,9 +69,14 @@ if TYPE_CHECKING:  # pragma: no cover
 # ---------------------------------------------------------------------------
 
 #: Imported, not re-declared: the batch twin is the oracle-verified
-#: `sessionize` query, so the gap MUST be the same constant — a local
-#: copy could drift.
-from wd2duckdb_spark.streaming.sessionize import SESSION_GAP_MIN
+#: `sessionize` query, so the gap, the session fold and the rounding
+#: MUST be the same — a local copy could drift.
+from wd2duckdb_spark.streaming.sessionize import (
+    _GAP_US,
+    SESSION_GAP_MIN,
+    _fold_sessions,
+    _round2,
+)
 
 SESSION_OUT_SCHEMA = (
     "user_id long, session_start timestamp, session_end timestamp,"
@@ -80,38 +85,6 @@ SESSION_OUT_SCHEMA = (
 
 #: One pending (unsealed) session — the ListState row layout.
 _SESS_STATE_SCHEMA = "start_us long, end_us long, n int, v double"
-
-_GAP_US = SESSION_GAP_MIN * 60 * 1_000_000
-
-
-def _fold_sessions(ts_us: list, values: list, prior: list) -> list:
-    """Fold (sorted) event times into gap-sessions, merging with the
-    pending sessions carried in state. Identical merge rule to
-    sessionize._sessionize_fn: adjacent sessions with inter-gap
-    ≤ gap coalesce, so within-watermark out-of-order arrival matches
-    the batch lag+cumsum twin."""
-    minis: list[list] = []
-    for t, val in zip(ts_us, values):
-        if minis and t - minis[-1][1] <= _GAP_US:
-            m = minis[-1]
-            m[1] = max(m[1], t)
-            m[2] += 1
-            m[3] += val
-        else:
-            minis.append([t, t, 1, float(val)])
-    if prior:
-        minis.extend(list(p) for p in prior)
-        minis.sort(key=lambda m: (m[0], m[1]))
-    merged: list[list] = []
-    for m in minis:
-        if merged and m[0] - merged[-1][1] <= _GAP_US:
-            p = merged[-1]
-            p[1] = max(p[1], m[1])
-            p[2] += m[2]
-            p[3] += m[3]
-        else:
-            merged.append(m)
-    return merged
 
 
 class SessionTimerProcessor(StatefulProcessor):
@@ -195,27 +168,6 @@ class SessionTimerProcessor(StatefulProcessor):
 
     def close(self) -> None:
         pass
-
-
-def _round2(x: float) -> float:
-    """2-dp rounding EXACTLY matching the batch twin's F.round: Spark's
-    Round converts the double via ``BigDecimal.valueOf`` (the SHORTEST
-    round-trip decimal repr — same contract as Python's ``repr``) and
-    rounds that decimal HALF_UP. Neither Python's ``round()`` (banker's
-    half-even) nor ``floor(abs(x)*100+0.5)`` (rounds the BINARY value,
-    so e.g. 1.005 — binary 1.00499...— lands on 1.00 while Spark's
-    shortest-repr path gives 1.01) agrees on ties; going through
-    ``Decimal(repr(x))`` reproduces the BigDecimal.valueOf semantics
-    bit-for-bit (ADVICE r5 item 1; verified on 1.005/0.285/negatives in
-    tests/test_typed_state.py)."""
-    import math
-    from decimal import ROUND_HALF_UP, Decimal
-
-    if not math.isfinite(x):  # Spark's Round passes NaN/±inf through
-        return x
-    return float(
-        Decimal(repr(x)).quantize(Decimal("0.01"), rounding=ROUND_HALF_UP)
-    )
 
 
 def _sessions_pdf(pd, user_id: int, rows: list):
