@@ -63,3 +63,51 @@ def kg_tables(spark, tmp_path_factory):
     out = str(tmp_path_factory.mktemp("kg")) + "/kg"
     ingest(spark, FIXTURE_DUMP, out)
     return register_views(spark, out)
+
+
+def _seq(s) -> list:
+    """A Scala ``Seq`` from py4j as a Python list."""
+    return [s.apply(i) for i in range(s.size())]
+
+
+def assert_one_scan_probe(probe, col: str, n_chunks: int, *, partition=False):
+    """Pin the plan of a pruned lake-index probe: one scan of the index
+    and no ``Union``; the batch's ``IN`` chunks on ``col`` ORed into
+    that scan's pushed filter (its partition filter when ``col`` is a
+    partition column), one ``In``/``InSet`` per chunk, counted on the
+    JVM expression tree (plan strings truncate scan metadata at 100
+    characters), under a balanced ``Or`` tree; and the broadcast
+    join."""
+    import re
+
+    qe = probe._jdf.queryExecution()
+    plan = qe.executedPlan().toString()
+    assert "Union" not in plan, plan
+    assert plan.count("FileScan") == 1, plan
+    assert "BroadcastHashJoin" in plan, plan
+    if partition:
+        assert re.search(rf"PartitionFilters: \[.*\(+{col}#\d+ IN \(", plan), plan
+    else:
+        assert re.search(rf"PushedFilters: \[(Or\()+In\({col},", plan), plan
+    (scan,) = [
+        leaf
+        for leaf in _seq(qe.sparkPlan().collectLeaves())
+        if leaf.getClass().getSimpleName() == "FileSourceScanExec"
+    ]
+    filters = scan.partitionFilters() if partition else scan.dataFilters()
+    (tree,) = [
+        f for f in _seq(filters) if f.getClass().getSimpleName() == "Or"
+    ]
+    chunks, depth, stack = [], 0, [(tree, 0)]
+    while stack:
+        node, d = stack.pop()
+        if node.getClass().getSimpleName() == "Or":
+            stack.extend((c, d + 1) for c in _seq(node.children()))
+        else:
+            chunks.append(node.getClass().getSimpleName())
+            depth = max(depth, d)
+    # a one-value chunk plans as EqualTo (the optimizer's OptimizeIn)
+    assert set(chunks) <= {"EqualTo", "In", "InSet"}, chunks
+    assert chunks.count("EqualTo") <= 1, chunks
+    assert len(chunks) == n_chunks, chunks
+    assert depth == (n_chunks - 1).bit_length(), depth  # ceil(log2(n))

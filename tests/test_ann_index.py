@@ -153,6 +153,34 @@ def test_probe_partition_prunes_on_cell(spark, tmp_path):
     assert "PartitionFilters" in p
 
 
+def test_fixture_index_rebuilds_in_one_dir_under_spark_files(spark):
+    """The registered query's fixture index lives at one fixed path per
+    sf_dir under the session's SparkFiles root (deleted by
+    ``spark.stop()``): a rebuild after ``clear_memos()`` reuses that
+    path and leaves no new dir in the system temp dir."""
+    import glob
+    import os
+    import tempfile
+
+    from pyspark import SparkFiles
+
+    from wd2duckdb_spark.catalog import clear_memos, tbl
+    from wd2duckdb_spark.functions.ann_index import _fixture_index
+    from wd2duckdb_spark.functions.similarity import valid_vector
+
+    pattern = os.path.join(tempfile.gettempdir(), "wd2duckdb_spark_ann_index_*")
+    before = set(glob.glob(pattern))
+    first = _fixture_index(spark, SF_DIR)
+    clear_memos()
+    second = _fixture_index(spark, SF_DIR)
+    assert first == second
+    assert os.path.dirname(second) == SparkFiles.getRootDirectory()
+    assert set(glob.glob(pattern)) == before
+    # the rebuild replaced the first build, not appended to it
+    n_valid = tbl(spark, SF_DIR, "embeddings").filter(valid_vector()).count()
+    assert spark.read.parquet(f"{second}/assignments").count() == n_valid
+
+
 def test_registered_query_matches_from_scratch_path(spark):
     """q_ann_index_probe (the registered, oracle-gated entry) is
     row-identical to q_ivf_ann_topk on the same fixtures."""

@@ -207,23 +207,44 @@ def test_sense_valued_claim_wrapping(spark, tmp_path):
 
 
 def test_ingest_restores_split_conf(spark, tmp_path):
-    """ingest() narrows spark.sql.files.maxPartitionBytes to 16 MB for
-    the CPU-bound parse but must restore the session value afterwards —
-    leaking it 8x'es the task count of every later parquet scan."""
+    """ingest() sizes the dump scan's splits for the CPU-bound parse
+    (max partition bytes, open cost, min partition count) but must
+    restore all three session values afterwards, unsetting any that was
+    unset — leaking them changes how every later parquet scan splits."""
     import pytest
 
     from wd2duckdb_spark.ingest import ingest
 
-    key = "spark.sql.files.maxPartitionBytes"
-    before = spark.conf.get(key)
+    keys = (
+        "spark.sql.files.maxPartitionBytes",
+        "spark.sql.files.openCostInBytes",
+        "spark.sql.files.minPartitionNum",
+    )
+
+    def conf():
+        return {k: spark.conf.get(k, None) for k in keys}
+
+    before = conf()
     ingest(spark, FIXTURE_DUMP, str(tmp_path / "kg"))
-    assert spark.conf.get(key) == before
+    assert conf() == before
 
     # the error path (mode="error" target-exists refusal, raised from
     # the materializing vertex write) must restore it too
     with pytest.raises(Exception):
         ingest(spark, FIXTURE_DUMP, str(tmp_path / "kg"))
-    assert spark.conf.get(key) == before
+    assert conf() == before
+
+    # a value the caller set comes back as that value
+    key = "spark.sql.files.openCostInBytes"
+    spark.conf.set(key, "1048576")
+    try:
+        ingest(spark, FIXTURE_DUMP, str(tmp_path / "kg2"))
+        assert spark.conf.get(key) == "1048576"
+    finally:
+        if before[key] is None:
+            spark.conf.unset(key)
+        else:
+            spark.conf.set(key, before[key])
 
 
 def test_ingest_observed_metrics(spark, tmp_path):

@@ -9,7 +9,7 @@ import shutil
 
 import pyspark.sql.functions as F
 
-from tests.conftest import FIXTURE_DUMP, SF_DIR
+from tests.conftest import FIXTURE_DUMP, SF_DIR, assert_one_scan_probe
 
 
 def _simhash_reference(docs):
@@ -1004,12 +1004,12 @@ def test_neardup_ingest_compact_then_replay(spark, tmp_path):
 
 
 def test_neardup_ingest_probe_prunes_index_scan(spark, tmp_path, monkeypatch):
-    """Round-5 (VERDICT r4 item 1): in the rate-limited steady state
-    the history probe pushes the micro-batch's band keys into the
-    index scan as chunked IN predicates — pinned on the executed
-    plan (PushedFilters carries In(key, ...), one scan branch per
-    PROBE_CHUNK chunk unioned) — and the pruned probe finds exactly
-    the same dups as the unpruned broadcast probe."""
+    """In the rate-limited steady state the history probe pushes the
+    micro-batch's band keys into ONE index scan as an OR of
+    ``PROBE_CHUNK``-value IN predicates, so the scan reads only the
+    row groups the keys can hit and its tasks do not grow with the
+    chunk count — pinned on the plan — and the pruned probe finds
+    exactly the same dups as the unpruned broadcast probe."""
     from wd2duckdb_spark.functions.dedup import band_keys
     from wd2duckdb_spark.streaming import lake_index
     from wd2duckdb_spark.streaming.lake_index import _IN_THRESHOLD_CONF
@@ -1040,18 +1040,15 @@ def test_neardup_ingest_probe_prunes_index_scan(spark, tmp_path, monkeypatch):
     def run_probe():
         return lake_index.probe(bands, seen, on=["band", "key"], prune_col="key")
 
-    # force multi-chunk unioned branches
+    # force several chunks
     monkeypatch.setattr(lake_index, "PROBE_CHUNK", 2)
     old = spark.conf.get(_IN_THRESHOLD_CONF)
     spark.conf.set(_IN_THRESHOLD_CONF, "3")
     try:
         probe = run_probe()
-        plan = probe._jdf.queryExecution().executedPlan().toString()
+        assert_one_scan_probe(probe, "key", -(-len(keys) // 2))
     finally:
         spark.conf.set(_IN_THRESHOLD_CONF, old)
-    assert "In(key" in plan, plan  # the IN list reached the scan
-    assert "Union" in plan, plan  # chunked into multiple branches
-    assert "BroadcastHashJoin" in plan  # join tier unchanged
 
     got = sorted(r.doc_id for r in probe.collect())
     monkeypatch.setattr(lake_index, "MAX_PROBE_CHUNKS", 0)  # full scan
@@ -1059,28 +1056,33 @@ def test_neardup_ingest_probe_prunes_index_scan(spark, tmp_path, monkeypatch):
     assert got == unpruned == [3]
 
 
-def _pruned_vs_full_scan(spark, monkeypatch, batch_side, seen, on, prune_col):
-    """The executed plan and the sorted ids of the pruned probe forced
-    into several ``IN`` chunks, then the sorted ids of the full-scan
-    regime."""
+def _pruned_vs_full_scan(
+    spark, monkeypatch, batch_side, seen, on, prune_col, *, partition=False
+):
+    """The sorted ids of the pruned probe forced into 2-value ``IN``
+    chunks (its plan pinned by :func:`assert_one_scan_probe`), then the
+    sorted ids of the full-scan regime."""
     from wd2duckdb_spark.streaming import lake_index
     from wd2duckdb_spark.streaming.lake_index import _IN_THRESHOLD_CONF
 
     def run_probe():
         return lake_index.probe(batch_side, seen, on=on, prune_col=prune_col)
 
+    n_vals = batch_side.select(prune_col).distinct().count()
     monkeypatch.setattr(lake_index, "PROBE_CHUNK", 2)
     old = spark.conf.get(_IN_THRESHOLD_CONF)
     spark.conf.set(_IN_THRESHOLD_CONF, "3")
     try:
         probe = run_probe()
-        plan = probe._jdf.queryExecution().executedPlan().toString()
+        assert_one_scan_probe(
+            probe, prune_col, -(-n_vals // 2), partition=partition
+        )
         got = sorted(r[0] for r in probe.collect())
     finally:
         spark.conf.set(_IN_THRESHOLD_CONF, old)
     monkeypatch.setattr(lake_index, "MAX_PROBE_CHUNKS", 0)  # full scan
     full = sorted(r[0] for r in run_probe().collect())
-    return plan, got, full
+    return got, full
 
 
 def test_pruned_probe_escapes_string_keys(spark, tmp_path, monkeypatch):
@@ -1100,11 +1102,9 @@ def test_pruned_probe_escapes_string_keys(spark, tmp_path, monkeypatch):
         + [("it", 10), ("back\\\\slash", 11), ("naive", 12), ("\\", 13)],
         "key string, doc_id long",
     )
-    plan, got, full = _pruned_vs_full_scan(
+    got, full = _pruned_vs_full_scan(
         spark, monkeypatch, batch_side, seen, ["key"], "key"
     )
-    assert "In(key" in plan, plan
-    assert "Union" in plan, plan
     assert got == full == list(range(len(keys)))
 
 
@@ -1122,12 +1122,105 @@ def test_pruned_probe_int_prune_column(spark, tmp_path, monkeypatch):
         [(1, 100), (3, 101), (4, 102), (9, 103), (-2, 104)],
         "cell int, vec_id long",
     )
-    plan, got, full = _pruned_vs_full_scan(
-        spark, monkeypatch, batch_side, seen, ["cell"], "cell"
+    got, full = _pruned_vs_full_scan(
+        spark, monkeypatch, batch_side, seen, ["cell"], "cell", partition=True
     )
-    assert "PartitionFilters: [isnotnull(cell" in plan, plan
-    assert "Union" in plan, plan
     assert got == full == [100, 101, 102]
+
+
+def _probe_scan_cost(spark, batch_side, seen):
+    """(hit ids, scan tasks, input records) of one pruned ``key`` probe
+    and its collect, read from the in-process status store by job-id
+    high-water mark."""
+    from perfbench.harness import StatusStore
+    from wd2duckdb_spark.streaming import lake_index
+
+    store = StatusStore(spark)
+    store.drain()
+    lo = store.job_high_water()
+    probe = lake_index.probe(batch_side, seen, on=["key"], prune_col="key")
+    ids = sorted(r[0] for r in probe.collect())
+    store.drain()
+    stages = [
+        s
+        for j in store.jobs_after(lo, store.job_high_water())
+        for s in j["stage_ids"]
+    ]
+    c = store.stage_counters(stages)
+    return ids, c["tasks"], c["input_records"]
+
+
+def test_pruned_probe_scan_cost_does_not_grow_with_chunks(
+    spark, tmp_path, monkeypatch
+):
+    """The pruned probe is one scan of the index whatever the chunk
+    count: over a 2-file, key-sorted, small-row-group index, 2-value
+    and 200-value chunks run the same tasks and read the same input
+    records (a union of one scan per chunk multiplies both), and both
+    skip row groups the keys cannot hit."""
+    from wd2duckdb_spark.streaming import lake_index
+
+    monkeypatch.setattr(lake_index, "INDEX_ROW_GROUP_BYTES", 1 << 14)
+    index_dir = str(tmp_path / "index")
+    n_rows = 20_000
+    lake_index.write_batch(
+        spark.range(n_rows)
+        .select(F.md5(F.col("id").cast("string")).alias("key"))
+        .repartition(2),
+        index_dir,
+        0,
+        key="key",
+    )
+    seen = spark.read.parquet(index_dir).select("key")
+    assert len(seen.inputFiles()) == 2
+    keys = sorted(r.key for r in seen.collect())[5000:5060]
+    batch_side = spark.createDataFrame(
+        [(k, i) for i, k in enumerate(keys)] + [("absent", 99)],
+        "key string, doc_id long",
+    )
+    lake_index._ensure_in_threshold(spark)
+    monkeypatch.setattr(lake_index, "PROBE_CHUNK", 200)
+    one = _probe_scan_cost(spark, batch_side, seen)
+    monkeypatch.setattr(lake_index, "PROBE_CHUNK", 2)
+    many = _probe_scan_cost(spark, batch_side, seen)
+    assert one == many, (one, many)
+    assert one[0] == list(range(len(keys)))
+    assert 0 < one[2] < n_rows  # row groups were skipped
+
+
+@pytest.mark.slow
+def test_pruned_probe_max_chunks_does_not_overflow(spark, tmp_path):
+    """A probe of ``PROBE_CHUNK × MAX_PROBE_CHUNKS`` keys stays in the
+    pruned regime as one scan with that many ``IN`` chunks ORed into
+    its pushed filter, runs without a StackOverflowError and finds what
+    the full scan finds."""
+    from wd2duckdb_spark.streaming import lake_index
+
+    n_keys = lake_index.PROBE_CHUNK * lake_index.MAX_PROBE_CHUNKS
+    index_dir = str(tmp_path / "index")
+    lake_index.write_batch(
+        spark.range(2 * n_keys)
+        .select(F.md5(F.col("id").cast("string")).alias("key"))
+        .repartition(2),
+        index_dir,
+        0,
+        key="key",
+    )
+    seen = spark.read.parquet(index_dir).select("key")
+    # every other id: half the probe keys are in the index
+    batch_side = spark.range(n_keys).select(
+        F.md5((F.col("id") * 4).cast("string")).alias("key"),
+        F.col("id").alias("doc_id"),
+    )
+    lake_index._ensure_in_threshold(spark)
+    probe = lake_index.probe(batch_side, seen, on=["key"], prune_col="key")
+    assert_one_scan_probe(probe, "key", lake_index.MAX_PROBE_CHUNKS)
+    got = sorted(r[0] for r in probe.collect())
+    full = sorted(
+        r[0]
+        for r in seen.join(batch_side, "key").select("doc_id").distinct().collect()
+    )
+    assert got == full == list(range(n_keys // 2))
 
 
 def test_write_metrics_plans_local_table_scan(spark, tmp_path, monkeypatch):
@@ -1517,10 +1610,10 @@ def test_neardup_ingest_batch_job_count(spark, tmp_path):
 
 @pytest.mark.slow
 def test_neardup_ingest_midband_probe_still_prunes(spark, tmp_path, monkeypatch):
-    """VERDICT r5 item 1: the pruned regime must extend through the
-    mid-band — more than the old 16 scan branches (the cliff is
-    per-branch IN depth, never branch count). 28 branches of chunked
-    IN predicates reach the scan and agree with the unpruned probe."""
+    """The pruned regime extends through the mid-band: more than 16
+    chunks (the stack cliff is per-chunk IN depth, never chunk count).
+    28 chunks reach the one index scan and agree with the unpruned
+    probe."""
     from wd2duckdb_spark.functions.dedup import band_keys
     from wd2duckdb_spark.streaming import lake_index
     from wd2duckdb_spark.streaming.lake_index import _IN_THRESHOLD_CONF
@@ -1549,7 +1642,7 @@ def test_neardup_ingest_midband_probe_still_prunes(spark, tmp_path, monkeypatch)
             (101, "fresh content nothing like anything seen before today",
              "en", "w", 54),
         ]
-        # fresh docs with disjoint words: > 16 branches even at chunk
+        # fresh docs with disjoint words: > 16 chunks even at chunk
         # size 2 (14 docs × 4 band keys = 56 keys = 28 chunks)
         + [
             (102 + j, " ".join(f"fresh{j}w{t}" for t in range(8)), "en", "w", 60)
@@ -1558,6 +1651,8 @@ def test_neardup_ingest_midband_probe_still_prunes(spark, tmp_path, monkeypatch)
         schema,
     )
     bands = band_keys(batch).select("band", "key", "doc_id")
+    n_keys = bands.select("key").distinct().count()
+    assert n_keys > 32  # > 16 chunks at chunk size 2
 
     def run_probe():
         return lake_index.probe(bands, seen, on=["band", "key"], prune_col="key")
@@ -1567,11 +1662,9 @@ def test_neardup_ingest_midband_probe_still_prunes(spark, tmp_path, monkeypatch)
     spark.conf.set(_IN_THRESHOLD_CONF, "3")
     try:
         probe = run_probe()
-        plan = probe._jdf.queryExecution().executedPlan().toString()
+        assert_one_scan_probe(probe, "key", -(-n_keys // 2))
     finally:
         spark.conf.set(_IN_THRESHOLD_CONF, old)
-    assert plan.count("In(key") >= 17, plan  # > the old 16-branch cap
-    assert "BroadcastHashJoin" in plan
     got = sorted(r.doc_id for r in probe.collect())
     monkeypatch.setattr(lake_index, "MAX_PROBE_CHUNKS", 0)  # full scan
     unpruned = sorted(r.doc_id for r in run_probe().collect())

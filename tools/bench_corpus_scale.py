@@ -99,17 +99,14 @@ def main() -> None:
     from wd2duckdb_spark.functions import similarity
     from wd2duckdb_spark.registry import all_queries
 
-    spark = get_spark(
-        app_name="bench_corpus_scale",
-        # status REST API on: the dedup_ingest_probe row reports
-        # BYTES READ, the scale property under test (seconds alone
-        # drown in host noise)
-        extra_conf={"spark.ui.enabled": "true"},
-    )
+    spark = get_spark(app_name="bench_corpus_scale")
     spark.sparkContext.setLogLevel("ERROR")
-    from tools.metrics import StageMetrics
+    # the dedup_ingest_probe rows report BYTES READ and scan tasks, the
+    # scale properties under test (seconds alone drown in host noise),
+    # read from the in-process status store: no UI, no HTTP polling
+    from perfbench.harness import StatusStore
 
-    stage_metrics = StageMetrics(spark)
+    store = StatusStore(spark)
     spark.range(1000).selectExpr("sum(id)").collect()  # warm-up
 
     queries = all_queries()
@@ -182,12 +179,11 @@ def main() -> None:
                     "sec": round(best, 3),
                     "krows_per_sec": round(n_rows / best / 1000, 1),
                 }
-            # Dedup-at-ingest probe cost vs index size (VERDICT r3
-            # item 6): build a band-key index over the m×-scaled
-            # corpus, then time a FIXED-size micro-batch through
-            # _batch_dedup. With the round-4 probe orientation (batch
-            # side broadcast, index streamed) this should stay
-            # flat-to-linear in m — measured here, not asserted.
+            # Dedup-at-ingest probe cost vs index size: build a
+            # band-key index over the m×-scaled corpus, then time a
+            # FIXED-size micro-batch through _batch_dedup. With the
+            # batch side broadcast and the index streamed this should
+            # stay flat-to-linear in m — measured here, not asserted.
             from wd2duckdb_spark.streaming.dedup_ingest import (
                 _batch_dedup,
                 compact_index,
@@ -207,10 +203,10 @@ def main() -> None:
             # steady-state shape: a RATE-LIMITED micro-batch (few
             # hundred docs → pruned probe regime), replayed under the
             # SAME batch_id for both reps so min() compares identical
-            # workloads (ADVICE r4: distinct batch_ids made rep 2
-            # probe a larger index where every doc was a history dup;
-            # the replay filter excludes the batch's own keys, so a
-            # replay re-does exactly the same probe work)
+            # workloads (distinct batch_ids would make rep 2 probe a
+            # larger index where every doc is a history dup; the replay
+            # filter excludes the batch's own keys, so a replay re-does
+            # exactly the same probe work)
             probe = base.limit(16).select(
                 # ids above every history id: bucket-min must see the
                 # probe docs as the newer side
@@ -220,36 +216,17 @@ def main() -> None:
                 "source",
                 "n_chars",
             )
-            best, probe_bytes = float("inf"), None
-            for _ in range(2):
-                stage_metrics.snapshot()
-                t0 = time.perf_counter()
-                _batch_dedup(probe, 1, idx_dir, ing_out)
-                el = time.perf_counter() - t0
-                if el < best:
-                    best = el
-                    d = stage_metrics.delta()
-                    probe_bytes = None if d is None else d["inputBytes"]
+            # probe_input_mb is THE scale number: it must stay ~flat
+            # as index_rows grows m× (IN-pushdown row-group pruning
+            # against the key-sorted index layout)
             per_q["dedup_ingest_probe"] = {
-                "sec": round(best, 3),
                 "index_rows": index_rows,
-                # THE scale number: must stay ~flat as index_rows
-                # grows m× (IN-pushdown row-group pruning against the
-                # key-sorted index layout). delta() returns None when
-                # no stable status-store reading existed — record the
-                # sample as invalid, never as a number (ADVICE r5).
-                "probe_input_mb": (
-                    "invalid"
-                    if probe_bytes is None
-                    else round(probe_bytes / 1e6, 1)
-                ),
+                **_probe_row(store, probe, 1, idx_dir, ing_out),
             }
 
-            # VERDICT r5 item 1: the MID-BAND probe — a ~5k-key burst
-            # (1,250 docs × 4 band keys), past the old 16-chunk cap —
-            # must now ALSO show pruned bytes, not a full-index scan
-            # (MAX_PROBE_CHUNKS raised to 64 → pruned through 12.8k
-            # keys). Same replay discipline as the steady-state row.
+            # the MID-BAND probe — a ~5k-key burst (1,250 docs × 4 band
+            # keys), 25 IN chunks — must also show pruned bytes, not a
+            # full-index scan. Same replay discipline as above.
             probe_mid = base.limit(1250).select(
                 (F.col("doc_id") + F.lit(2_000_000_000)).alias("doc_id"),
                 "text",
@@ -257,24 +234,9 @@ def main() -> None:
                 "source",
                 "n_chars",
             )
-            best, probe_bytes = float("inf"), None
-            for _ in range(2):
-                stage_metrics.snapshot()
-                t0 = time.perf_counter()
-                _batch_dedup(probe_mid, 2, idx_dir, ing_out)
-                el = time.perf_counter() - t0
-                if el < best:
-                    best = el
-                    d = stage_metrics.delta()
-                    probe_bytes = None if d is None else d["inputBytes"]
             per_q["dedup_ingest_probe_midband"] = {
-                "sec": round(best, 3),
                 "index_rows": index_rows,
-                "probe_input_mb": (
-                    "invalid"
-                    if probe_bytes is None
-                    else round(probe_bytes / 1e6, 1)
-                ),
+                **_probe_row(store, probe_mid, 2, idx_dir, ing_out),
             }
 
             n_vecs = emb_rows * m
@@ -299,21 +261,57 @@ def main() -> None:
                 }
             out[f"{m}x"] = {"rows": n_rows, "queries": per_q}
 
-        # VERDICT r5 item 4: archive_index's file-count claim,
-        # measured. The probe-bytes rows above vary index SIZE at
-        # fixed batch count; this varies BATCH COUNT at fixed size —
-        # after B micro-batches the index holds ≥ B files and probe
-        # cost carries a per-file term, so bytes grow with B until
-        # archive_index folds history into one range-partitioned
-        # archive, after which bytes/files must drop back ~flat.
-        out["archive"] = _bench_archive(spark, stage_metrics, base, stage)
+        # archive_index's file-count claim, measured. The probe-bytes
+        # rows above vary index SIZE at fixed batch count; this varies
+        # BATCH COUNT at fixed size — after B micro-batches the index
+        # holds ≥ B files and probe cost carries a per-file term, so
+        # bytes grow with B until archive_index folds history into one
+        # range-partitioned archive, after which bytes/files must drop
+        # back ~flat.
+        out["archive"] = _bench_archive(spark, store, base, stage)
     finally:
         shutil.rmtree(stage, ignore_errors=True)
 
     print(json.dumps({"base_rows": base_rows, "runs": out}))
 
 
-def _bench_archive(spark, stage_metrics, base, stage) -> dict:
+def _probe_row(store, probe, batch_id: int, idx_dir: str, out_dir: str) -> dict:
+    """Best of two same-``batch_id`` replays of one ``_batch_dedup``
+    micro-batch: seconds, input MB and the tasks of the stages that
+    read files (the index scan, plus the micro-batch's own source
+    scan), from the status store's stages of the jobs each replay ran
+    (job-id high-water mark)."""
+    from wd2duckdb_spark.streaming.dedup_ingest import _batch_dedup
+
+    best = None
+    for _ in range(2):
+        store.drain()
+        lo = store.job_high_water()
+        t0 = time.perf_counter()
+        _batch_dedup(probe, batch_id, idx_dir, out_dir)
+        el = time.perf_counter() - t0
+        store.drain()
+        stages = [
+            sid
+            for j in store.jobs_after(lo, store.job_high_water())
+            for sid in j["stage_ids"]
+        ]
+        per_stage = [store.stage_counters([sid]) for sid in stages]
+        row = {
+            "sec": round(el, 3),
+            "probe_input_mb": round(
+                sum(c["input_bytes"] for c in per_stage) / 1e6, 2
+            ),
+            "probe_scan_tasks": sum(
+                c["tasks"] for c in per_stage if c["input_records"] > 0
+            ),
+        }
+        if best is None or el < best["sec"]:
+            best = row
+    return best
+
+
+def _bench_archive(spark, store, base, stage) -> dict:
     """Probe bytes/files before vs after archive_index, at a fixed
     corpus size ingested as MANY SMALL batches (the steady-state
     stream shape archive_index exists for)."""
@@ -354,25 +352,8 @@ def _bench_archive(spark, stage_metrics, base, stage) -> dict:
     )
 
     def _measure(batch_id: int) -> dict:
-        best, probe_bytes = float("inf"), None
-        for _ in range(2):  # same-batch-id replay (identical work)
-            stage_metrics.snapshot()
-            t0 = time.perf_counter()
-            _batch_dedup(probe, batch_id, idx_dir, out_dir)
-            el = time.perf_counter() - t0
-            if el < best:
-                best = el
-                d = stage_metrics.delta()
-                probe_bytes = None if d is None else d["inputBytes"]
-        return {
-            "sec": round(best, 3),
-            "index_files": _n_files(),
-            "probe_input_mb": (
-                "invalid"
-                if probe_bytes is None
-                else round(probe_bytes / 1e6, 2)
-            ),
-        }
+        row = _probe_row(store, probe, batch_id, idx_dir, out_dir)
+        return {**row, "index_files": _n_files()}
 
     before = _measure(n_batches)
     # fold everything but the most recent real batch (and the probe's

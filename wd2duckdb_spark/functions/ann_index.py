@@ -479,14 +479,23 @@ def compact_ann_index(
 
 @session_memo
 def _fixture_index(spark: SparkSession, sf_dir: str) -> str:
-    """index_dir of a bootstrap built from the fixture embeddings in a
-    tempdir, once per session, so the registered query exercises the
-    real write→probe round trip without re-writing per invocation."""
-    import tempfile
+    """index_dir of a bootstrap built from the fixture embeddings, once
+    per session, so the registered query exercises the real
+    write→probe round trip without re-writing per invocation.
 
-    index_dir = tempfile.mkdtemp(prefix="wd2duckdb_spark_ann_index_")
-    # mkdtemp creates the dir; Spark's mode="error" needs the TARGETS
-    # absent, which they are (subpaths of the fresh dir)
+    The dir is one fixed path per ``sf_dir`` under the session's
+    SparkFiles root, a driver-local dir that ``spark.stop()`` deletes.
+    A rebuild (after :func:`~wd2duckdb_spark.catalog.clear_memos`)
+    removes the previous build first, so nothing accumulates."""
+    import hashlib
+    import os
+    import shutil
+
+    from pyspark import SparkFiles
+
+    tag = hashlib.md5(os.path.abspath(sf_dir).encode()).hexdigest()[:12]
+    index_dir = os.path.join(SparkFiles.getRootDirectory(), f"ann_index_{tag}")
+    shutil.rmtree(index_dir, ignore_errors=True)
     ivf_index_write(spark, sf_dir, index_dir)
     return index_dir
 

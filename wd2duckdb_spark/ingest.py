@@ -112,12 +112,24 @@ TIME_SCHEMA_OUT = EDGE_SCHEMA + ", time TIMESTAMP, precision INT"
 DUMP_SPLIT_BYTES = 16 * 1024 * 1024
 
 
+#: The session conf keys :func:`read_dump_lines` sets for the dump scan.
+DUMP_SCAN_CONF_KEYS = (
+    "spark.sql.files.maxPartitionBytes",
+    "spark.sql.files.openCostInBytes",
+    "spark.sql.files.minPartitionNum",
+)
+
+
 def read_dump_lines(spark: SparkSession, path: str) -> DataFrame:
     """Dump file → one row per line, column ``line`` (main.rs:264-269).
 
     Spark reads .bz2/.gz natively, so the reference's ``bzcat … | -``
     stdin pipe is unnecessary; see streaming.ingest_stream for the
     unbounded-source variant.
+
+    Sets the :data:`DUMP_SCAN_CONF_KEYS` split sizing on the session:
+    the scan reads it when a job plans it, not here. :func:`ingest`
+    restores the previous values once its writes are done.
     """
     spark.conf.set("spark.sql.files.maxPartitionBytes", str(DUMP_SPLIT_BYTES))
     # Small-dump parallelism: default openCostInBytes (4 MB) bin-packs a
@@ -435,7 +447,12 @@ def parsed_tables(
 def build_tables(
     spark: SparkSession, dump_path: str, lang: str = DEFAULT_LANG
 ) -> dict[str, DataFrame]:
-    """Dump file → the six logical tables as (lazy) DataFrames."""
+    """Dump file → the six logical tables as (lazy) DataFrames.
+
+    The dump scan's split sizing (:func:`read_dump_lines`) stays set on
+    the session: the frames are lazy and their scan reads that conf
+    when an action plans it, so restoring it here would size the dump
+    scan with the IO-tuned defaults. :func:`ingest` restores it."""
     return parsed_tables(
         parse_entities(sanitize_lines(read_dump_lines(spark, dump_path))), lang
     )
@@ -493,14 +510,13 @@ def ingest(
     extra action). Keys: ``entities``, ``corrupt_lines``, and
     ``rows`` (per-table written row counts).
     """
-    # read_dump_lines narrows spark.sql.files.maxPartitionBytes to
-    # 16 MB for the CPU-bound JSON parse; scope that override to this
-    # call so later parquet scans in the same session keep the
-    # IO-tuned default (128 MB) — 8x the task count on every
+    # read_dump_lines sizes splits for the CPU-bound JSON parse; scope
+    # that conf to this call so later parquet scans in the same session
+    # keep the IO-tuned defaults — 8x the task count on every
     # downstream query is the wrong trade there.
     from pyspark.sql import Observation
 
-    prev_split = spark.conf.get("spark.sql.files.maxPartitionBytes")
+    prev_conf = {k: spark.conf.get(k, None) for k in DUMP_SCAN_CONF_KEYS}
     parsed = parse_entities(sanitize_lines(read_dump_lines(spark, dump_path)))
     parse_obs: Observation | None = None
     if metrics is not None:
@@ -561,4 +577,8 @@ def ingest(
         return out
     finally:
         parsed.unpersist()
-        spark.conf.set("spark.sql.files.maxPartitionBytes", prev_split)
+        for k, v in prev_conf.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)

@@ -162,9 +162,12 @@ def neardup_ingest_stream(
     Rate-limit the SOURCE (``maxFilesPerTrigger`` /
     ``maxBytesPerTrigger`` on the reader the caller builds) so
     micro-batches stay inside the pruned probe regime (≤ 12,800 band
-    keys ≈ 3,200 docs): probes then read a ~flat number of index bytes
-    regardless of history size. Larger catch-up batches still run
-    correctly but pay a full index scan or shuffle.
+    keys ≈ 3,200 docs): each probe is one index scan with the batch's
+    keys pushed down as an OR of 200-key ``IN`` chunks, so it reads a
+    ~flat number of index bytes regardless of history size and runs
+    the same scan tasks however many chunks the keys fill. Larger
+    catch-up batches still run correctly but pay a full index scan or
+    shuffle.
 
     Session-wide side effect: the stage raises
     ``spark.sql.parquet.pushdown.inFilterThreshold`` from its default

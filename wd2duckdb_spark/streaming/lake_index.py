@@ -33,19 +33,23 @@ its layout; this module owns the rules:
 
   - *pruned* (≤ ``PROBE_CHUNK × MAX_PROBE_CHUNKS`` rows, the
     rate-limited steady state): the batch's distinct prune-column values
-    are pushed into the history scan as chunked ``IN`` filters, one scan
-    branch per chunk, before the broadcast join. On a key-sorted index
+    are pushed into ONE history scan as ``key IN (chunk) OR key IN
+    (chunk) OR …``, before the broadcast join. On a key-sorted index
     written in small row groups only the groups whose min/max footer
     stats can match are decoded; on a partition column whole
     directories are skipped. The list is chunked because Spark pushes an
     ``IN`` to parquet as a left-deep OR chain evaluated recursively,
     which overflows the task stack somewhere past ~1k values (1024 ok,
     2048 StackOverflowError where measured; the cliff moves with JIT
-    state, so the chunk keeps a 5× margin). Branch count has no such
-    cliff: 8 to 64 branches over a 5-file index scale linearly, at
-    ~0.1-0.15 s each (one scan task per file per branch, ``local[4]``).
-    Each chunk is one parsed SQL ``IN`` (:func:`_in_expr`), so building
-    the branches costs milliseconds, not a py4j call per value.
+    state, so the chunk keeps a 5× margin). The OR over the chunks is a
+    balanced tree (the SQL parser builds one from a flat ``a OR b OR
+    …``), so 64 chunks add 6 levels, not 64. The scan's tasks and
+    records do not grow with the chunk count: over a 5-file, key-sorted
+    200k-key index at ``local[4]``, a probe of 8 to 64 chunks of random
+    md5 keys ran 19-22 tasks in all and read each index record once, in
+    0.5-1.5 s of execution. The filter is one parsed SQL string
+    (:func:`_in_expr`), so building it costs milliseconds, not a py4j
+    call per value.
   - *broadcast* (≤ ``MAX_BROADCAST_KEYS`` rows): the same join over the
     full history scan.
   - *shuffled-hash* (beyond): an unbounded catch-up batch must not be
@@ -83,7 +87,6 @@ its layout; this module owns the rules:
 from __future__ import annotations
 
 from collections.abc import Callable
-from functools import reduce
 
 from pyspark.sql import Column, DataFrame, Observation
 from pyspark.sql import functions as F
@@ -94,14 +97,14 @@ from wd2duckdb_spark.maintenance import _fs, swap_in
 #: Partition id of the archive and of the ANN bootstrap. Streaming batch
 #: ids start at 0, so it never collides with a live batch.
 ARCHIVE_BATCH = -1
-#: Max ``IN`` values per pushed scan branch (the stack cliff above).
+#: Max values per pushed ``IN`` chunk (the stack cliff above).
 PROBE_CHUNK = 200
-#: Max scan branches of the pruned regime: 12,800 keys, a ~3,200-doc
-#: burst of MinHash band keys, at a worst-case probe of ~9-12 s over a
-#: 5-file index at ``local[4]`` (1.2-1.8 s of it in :func:`probe` itself:
-#: the regime count, the key collect and the plan build). Past it a
-#: full-scan probe is cheaper at test scale; raise it for huge indices —
-#: pruned-probe cost is O(batch keys), full-scan cost O(index).
+#: Max ``IN`` chunks of the pruned regime: 12,800 keys, a ~3,200-doc
+#: burst of MinHash band keys, at a worst-case probe of ~2 s over a
+#: 5-file, 200k-key index at ``local[4]`` (0.5-0.8 s of it in
+#: :func:`probe` itself: the regime count, the key collect and the plan
+#: build). Past it the probe scans all of history; raise it for huge
+#: indices — pruned-probe cost is O(batch keys), full-scan cost O(index).
 MAX_PROBE_CHUNKS = 64
 #: Probe rows above which the batch side is no longer broadcast (1M keys
 #: is a 60-80 MB hashed relation).
@@ -249,13 +252,7 @@ def _join(
         vals = sorted(
             r[0] for r in batch_side.select(prune_col).distinct().collect()
         )
-        seen = reduce(
-            DataFrame.union,
-            (
-                seen.filter(_in_expr(prune_col, vals[i : i + PROBE_CHUNK]))
-                for i in range(0, len(vals), PROBE_CHUNK)
-            ),
-        )
+        seen = seen.filter(_in_expr(prune_col, vals))
     return seen.join(F.broadcast(batch_side), on)
 
 
@@ -270,12 +267,18 @@ def _sql_lit(v: str | int) -> str:
 
 
 def _in_expr(col: str, vals: list) -> Column:
-    """``col IN (vals)`` parsed from one SQL string. ``Column.isin``
+    """``col IN (chunk) OR col IN (chunk) OR …`` over ``PROBE_CHUNK``
+    values per chunk, parsed from one SQL string. ``Column.isin``
     costs a py4j round trip per value (~0.8 ms each: ~2 s for 3,200
-    keys); one parse of the same list is milliseconds and plans the
-    identical ``In`` filter."""
+    keys); one parse is milliseconds, and the parser builds the flat
+    ``OR`` list as a balanced tree, so no chunk sits deeper than
+    log2(chunks) levels."""
     name = col.replace("`", "``")
-    return F.expr(f"`{name}` IN ({', '.join(map(_sql_lit, vals))})")
+    chunks = (
+        ", ".join(map(_sql_lit, vals[i : i + PROBE_CHUNK]))
+        for i in range(0, len(vals), PROBE_CHUNK)
+    )
+    return F.expr(" OR ".join(f"`{name}` IN ({c})" for c in chunks))
 
 
 def dedup_batch(
