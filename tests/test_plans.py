@@ -206,6 +206,12 @@ def test_no_python_udf_in_core_queries(spark):
         assert s["python_udf"] == 0, f"{name} fell back to a Python UDF"
 
 
+def _warehouse_path(spark) -> str:
+    """The local path of the session's warehouse dir (a URI in conf)."""
+    wh = spark.conf.get("spark.sql.warehouse.dir")
+    return spark._jvm.org.apache.hadoop.fs.Path(wh).toUri().getPath()
+
+
 def test_bucketed_join_has_no_exchange(spark, kg_tables, tmp_path):
     """edge ⋈ vertex on the bucket key: zero Exchange on either side —
     the co-located-join layout (the reference's index intent)."""
@@ -213,10 +219,9 @@ def test_bucketed_join_has_no_exchange(spark, kg_tables, tmp_path):
 
     # clear any orphan location left by an interrupted previous run
     import shutil
-    from urllib.parse import urlparse
 
     spark.sql("DROP DATABASE IF EXISTS kg_test CASCADE")
-    wh = urlparse(spark.conf.get("spark.sql.warehouse.dir")).path
+    wh = _warehouse_path(spark)
     shutil.rmtree(f"{wh}/kg_test.db", ignore_errors=True)
 
     write_bucketed(
@@ -820,12 +825,11 @@ def test_bucketed_traversal_edge_side_no_exchange(spark, kg_tables):
     moral equivalent of the reference's endpoint indices
     (value.rs:332-350) serving its traversal queries."""
     import shutil
-    from urllib.parse import urlparse
 
     from wd2duckdb_spark.layout import bucketed_table, write_bucketed
 
     spark.sql("DROP DATABASE IF EXISTS kg_khop CASCADE")
-    wh = urlparse(spark.conf.get("spark.sql.warehouse.dir")).path
+    wh = _warehouse_path(spark)
     shutil.rmtree(f"{wh}/kg_khop.db", ignore_errors=True)
     write_bucketed({"edge": kg_tables["edge"]}, database="kg_khop", n_buckets=4)
 

@@ -1,9 +1,9 @@
-"""BPE trainer de-fixturing bench (VERDICT r9 item 2): the driver
-fixture's 31-word vocabulary exhausts after 89 merges, so production
-merge counts can only be demonstrated on a vocabulary that supports
-them. This tool builds a DETERMINISTIC (seeded) Zipf word-frequency
-table — the trainer's actual input shape; in production it comes from
-the distributed word-count aggregate, and its size is bounded by
+"""BPE trainer de-fixturing bench: the driver fixture's 31-word
+vocabulary exhausts after 89 merges, so production merge counts can
+only be demonstrated on a vocabulary that supports them. This tool
+builds a DETERMINISTIC (seeded) Zipf word-frequency table — the
+trainer's actual input shape; in production it comes from the
+distributed word-count aggregate, and its size is bounded by
 BPE_TOP_K regardless of corpus bytes — and measures:
 
 - the incremental/heap trainer (the shipped ``train_bpe_merges``) at

@@ -1,4 +1,4 @@
-"""Bucketed-vs-flat traversal bench (VERDICT r2 item 3).
+"""Bucketed-vs-flat traversal bench.
 
 Measures a 2-hop k_hop traversal over the SAME synthetic edge set in
 two layouts:
@@ -21,7 +21,7 @@ Prints one JSON line:
    "flat_sec": ..., "bucketed_sec": ..., "speedup": ...}
 
 Usage: python tools/bench_bucketed_traversal.py [n_nodes] [reps]
-(defaults 2_000_000 nodes / ~8M edges, min-of-3).
+(defaults 2_000_000 nodes / ~8M edges, fastest of 3 spans).
 """
 
 from __future__ import annotations
@@ -31,14 +31,17 @@ import os
 import shutil
 import sys
 import tempfile
-import time
+
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+
+from perfbench.harness import Tracer  # noqa: E402
+from tools.benchkit import best, repeat  # noqa: E402
 
 
 def main() -> None:
     n_nodes = int(sys.argv[1]) if len(sys.argv) > 1 else 2_000_000
     reps = int(sys.argv[2]) if len(sys.argv) > 2 else 3
 
-    sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
     from pyspark.sql import functions as F
 
     from wd2duckdb_spark import get_spark
@@ -86,20 +89,18 @@ def main() -> None:
         )
 
         seeds = spark.range(0, n_nodes, 7).withColumnRenamed("id", "id")
+        flat, bucketed = spark.read.parquet(flat_dir), spark.table("trav.edge")
+        tracer = Tracer()
 
-        def run(edge_df) -> float:
-            best = float("inf")
-            for _ in range(reps):
-                t0 = time.perf_counter()
-                frontier = k_hop(edge_df, seeds, 2)
-                frontier.count()
-                frontier.unpersist()
-                best = min(best, time.perf_counter() - t0)
-                spark.catalog.clearCache()
-            return round(best, 3)
+        def hops(edge_df) -> None:
+            frontier = k_hop(edge_df, seeds, 2)
+            frontier.count()
+            frontier.unpersist()
+            spark.catalog.clearCache()
 
-        flat_sec = run(spark.read.parquet(flat_dir))
-        bucketed_sec = run(spark.table("trav.edge"))
+        repeat(tracer, "flat", reps, lambda: hops(flat))
+        repeat(tracer, "bucketed", reps, lambda: hops(bucketed))
+        flat_sec, bucketed_sec = best(tracer, "flat"), best(tracer, "bucketed")
 
         print(
             json.dumps(

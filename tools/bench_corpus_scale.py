@@ -1,12 +1,12 @@
 """Corpus-scaling bench: does per-row throughput hold as the corpus
 grows 1× → 4× → 16×?
 
-Materializes scaled copies of ``documents`` (doc_id remapped into
-disjoint ranges, one token salted per copy so exact-dup semantics
-don't degenerate), then times the scan/agg-bound operator tier over
-each size with the noop sink. If the engine's plans are right, rows/s
-stays ~flat while wall-clock grows linearly — the local[N] proxy for
-"would survive 100×". Pair-generating operators (MinHash-LSH) are
+Materializes benchkit's salted copies of ``documents`` (doc_id
+remapped into disjoint ranges, one token salted per copy so exact-dup
+semantics don't degenerate), then times the scan/agg-bound operator
+tier over each size with the noop sink, fastest of two spans. If the
+engine's plans are right, rows/s stays ~flat while wall-clock grows
+linearly — the local[N] proxy for "would survive 100×". Pair-generating operators (MinHash-LSH) are
 deliberately excluded: duplicating a corpus k× multiplies its
 NEAR-DUP PAIRS quadratically, which is a semantics change, not a
 scaling test.
@@ -24,7 +24,12 @@ import os
 import shutil
 import sys
 import tempfile
-import time
+
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+
+from bench import warm_up_queries  # noqa: E402
+from perfbench.harness import Tracer  # noqa: E402
+from tools.benchkit import best, noop, repeat, salted_copies, write_scaled  # noqa: E402
 
 BENCH_QUERIES = (
     "text_quality",
@@ -35,17 +40,14 @@ BENCH_QUERIES = (
     "pack_sequences",
     "dataset_split",
     "token_count_bpe",
-    # round-2 additions (documents-tier)
     "bigram_surprisal",
     "inverted_index",
     "shard_manifest",
     "weighted_sample",
-    # round-4 (VERDICT r3 item 6): the streaming dedup tier's batch
-    # twin — window-min over band buckets, linear in rows (the PAIR
-    # generator stays excluded; the keep rule is not pair-generating)
+    # the streaming dedup tier's batch twin — window-min over band
+    # buckets, linear in rows (the keep rule is not pair-generating)
     "lsh_keep_list",
-    # round-8 documents-tier additions. All linear in rows: the LM
-    # sampler and JS divergence are aggregate-bounded; the span
+    # All linear in rows: the LM sampler and JS divergence are aggregate-bounded; the span
     # queries mark OCCURRENCES of duplicated grams (≤ total
     # occurrences — linear), unlike the excluded pair generators
     # (simhash_hamming_pairs / leakage_safe_split stay out for the
@@ -55,14 +57,13 @@ BENCH_QUERIES = (
     "repeated_ngram_spans",
     "dedup_span_removal",
     "ngram_novelty",
-    # round-9: real BPE counting — training is a vocabulary-bounded
-    # collect (flat in corpus size), encoding is a linear mapInPandas
-    # pass. The pair generators added this round (simhash_wide_pairs,
-    # containment_join) stay excluded like every other pair generator;
-    # their scale story is measured by tools/bench_simhash_bands.py
-    # (candidate volume) instead.
+    # real BPE counting — training is a vocabulary-bounded collect
+    # (flat in corpus size), encoding is a linear mapInPandas pass.
+    # The pair generators simhash_wide_pairs and containment_join stay
+    # excluded; tools/bench_simhash_bands.py (candidate volume) and
+    # tools/bench_dedup_scale64.py (namespaced copies) measure them.
     "token_count_real_bpe",
-    # round-10: both linear in rows — CDC chunking is one in-row
+    # both linear in rows — CDC chunking is one in-row
     # expression + one chunk-md5 groupBy; the quota cap is one
     # source-keyed WindowGroupLimit exchange (the quota dict is a
     # |sources|-bounded collect, flat in corpus size)
@@ -79,7 +80,7 @@ EMB_QUERIES = (
     "kmeans_lloyd",
     "embedding_centroids",
     "embedding_quantize",
-    # round-8: centroid-nearest prototype — one (label × dim) partial
+    # centroid-nearest prototype — one (label × dim) partial
     # agg + broadcast-back scan scoring, linear in vectors
     "label_exemplars",
     # semantic_dedup deliberately excluded: like MinHash-LSH it is
@@ -89,7 +90,6 @@ EMB_QUERIES = (
 
 
 def main() -> None:
-    sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.1"
     mults = [int(m) for m in sys.argv[2:]] or [1, 4, 16]
 
@@ -98,167 +98,99 @@ def main() -> None:
     from wd2duckdb_spark import get_spark
     from wd2duckdb_spark.functions import similarity
     from wd2duckdb_spark.registry import all_queries
+    from wd2duckdb_spark.streaming.dedup_ingest import _batch_dedup, compact_index
 
     spark = get_spark(app_name="bench_corpus_scale")
     spark.sparkContext.setLogLevel("ERROR")
-    # the dedup_ingest_probe rows report BYTES READ and scan tasks, the
-    # scale properties under test (seconds alone drown in host noise),
-    # read from the in-process status store: no UI, no HTTP polling
-    from perfbench.harness import StatusStore
-
-    store = StatusStore(spark)
-    spark.range(1000).selectExpr("sum(id)").collect()  # warm-up
+    # traced: the dedup_ingest_probe rows report BYTES READ and scan
+    # tasks, the scale properties under test (seconds alone drown in
+    # host noise)
+    tracer = Tracer(spark, enabled=True)
+    warm_up_queries(spark, sf_dir)
 
     queries = all_queries()
     base = spark.read.parquet(f"{sf_dir}/documents.parquet")
     base_rows = base.count()
     emb_rows = spark.read.parquet(f"{sf_dir}/embeddings.parquet").count()
 
+    def timed(m: int, name: str, n_rows: int, before=None) -> dict:
+        """Fastest of two noop runs of query ``name`` over the m× dir."""
+        def call():
+            if before:
+                before()
+            noop(queries[name](spark, f"{stage}/x{m}"))
+        repeat(tracer, f"{m}x.{name}", 2, call)
+        sec = best(tracer, f"{m}x.{name}")
+        return {"sec": sec, "krows_per_sec": round(n_rows / sec / 1000, 1)}
+
+    def probe_docs(n: int, offset: int):
+        # ids above every history id: bucket-min must see the probe
+        # docs as the newer side
+        return base.limit(n).select(
+            (F.col("doc_id") + F.lit(offset)).alias("doc_id"),
+            "text", "lang", "source", "n_chars",
+        )
+
     stage = tempfile.mkdtemp(prefix="corpus_scale_")
     out: dict[str, dict] = {}
     try:
         for m in mults:
-            scaled_dir = os.path.join(stage, f"x{m}")
-            os.makedirs(scaled_dir)
-            # disjoint doc_id ranges per copy; salt one token per copy
-            # so copies are near- but not exact-duplicates
-            copies = base.crossJoin(
-                spark.range(m).withColumnRenamed("id", "copy")
-            ).select(
-                (F.col("doc_id") * m + F.col("copy")).alias("doc_id"),
-                F.concat(
-                    F.col("text"),
-                    F.lit(" salt"),
-                    F.col("copy").cast("string"),
-                ).alias("text"),
-                "lang",
-                "source",
-                "n_chars",
-            )
-            copies.repartition(
-                max(m, spark.sparkContext.defaultParallelism)
-            ).write.parquet(f"{scaled_dir}/documents.parquet")
+            scaled_dir = f"{stage}/x{m}"
             emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-            emb.crossJoin(
-                spark.range(m).withColumnRenamed("id", "copy")
-            ).select(
+            emb.crossJoin(spark.range(m).withColumnRenamed("id", "copy")).select(
                 # vec_id + copy*emb_rows (NOT vec_id*m + copy): kmeans
                 # seeds on vec_id < K, so ids 0..K-1 must stay the
-                # ORIGINAL first K vectors at every multiplier — the
-                # interleaved remap made the seed set m duplicates of
-                # only ceil(K/m) originals, skewing cross-scale
-                # comparisons (ADVICE r2).
-                (F.col("vec_id") + F.col("copy") * F.lit(emb_rows)).alias(
-                    "vec_id"
-                ),
+                # ORIGINAL first K vectors at every multiplier
+                (F.col("vec_id") + F.col("copy") * F.lit(emb_rows)).alias("vec_id"),
                 "embedding",
                 "label",
-            ).repartition(
-                max(m, spark.sparkContext.defaultParallelism)
-            ).write.parquet(f"{scaled_dir}/embeddings.parquet")
-            # the query tier touches documents + embeddings; link the rest
-            for t in (
-                "region nation customer supplier part orders lineitem "
-                "events"
-            ).split():
-                os.symlink(
-                    f"{sf_dir}/{t}.parquet", f"{scaled_dir}/{t}.parquet"
-                )
+            ).repartition(max(m, spark.sparkContext.defaultParallelism)).write.parquet(
+                f"{scaled_dir}/embeddings.parquet"
+            )
+            write_scaled(salted_copies(base, m), m, sf_dir, scaled_dir)
             n_rows = base_rows * m
+            per_q = {name: timed(m, name, n_rows) for name in BENCH_QUERIES}
 
-            per_q: dict[str, dict] = {}
-            for name in BENCH_QUERIES:
-                best = float("inf")
-                for _ in range(2):
-                    t0 = time.perf_counter()
-                    queries[name](spark, scaled_dir).write.format(
-                        "noop"
-                    ).mode("overwrite").save()
-                    best = min(best, time.perf_counter() - t0)
-                per_q[name] = {
-                    "sec": round(best, 3),
-                    "krows_per_sec": round(n_rows / best / 1000, 1),
-                }
             # Dedup-at-ingest probe cost vs index size: build a
             # band-key index over the m×-scaled corpus, then time a
             # FIXED-size micro-batch through _batch_dedup. With the
             # batch side broadcast and the index streamed this should
             # stay flat-to-linear in m — measured here, not asserted.
-            from wd2duckdb_spark.streaming.dedup_ingest import (
-                _batch_dedup,
-                compact_index,
-            )
-
-            ingest_root = os.path.join(stage, f"ingest_x{m}")
-            idx_dir = f"{ingest_root}/idx"
-            ing_out = f"{ingest_root}/out"
-            hist = spark.read.parquet(f"{scaled_dir}/documents.parquet")
-            _batch_dedup(hist, 0, idx_dir, ing_out)  # m×-sized history
+            idx_dir, ing_out = f"{stage}/ingest_x{m}/idx", f"{stage}/ingest_x{m}/out"
+            _batch_dedup(
+                spark.read.parquet(f"{scaled_dir}/documents.parquet"), 0, idx_dir, ing_out
+            )  # m×-sized history
             # operational steady state: history compacted to few large
             # key-sorted files — the layout the probe's row-group
             # pruning is designed against (probe bytes ≈ n_files ×
             # n_probe_keys × row-group size, independent of m)
             compact_index(spark, idx_dir, target_file_bytes=1 << 30)
             index_rows = spark.read.parquet(idx_dir).count()
-            # steady-state shape: a RATE-LIMITED micro-batch (few
-            # hundred docs → pruned probe regime), replayed under the
-            # SAME batch_id for both reps so min() compares identical
-            # workloads (distinct batch_ids would make rep 2 probe a
-            # larger index where every doc is a history dup; the replay
-            # filter excludes the batch's own keys, so a replay re-does
-            # exactly the same probe work)
-            probe = base.limit(16).select(
-                # ids above every history id: bucket-min must see the
-                # probe docs as the newer side
-                (F.col("doc_id") + F.lit(1_000_000_000)).alias("doc_id"),
-                "text",
-                "lang",
-                "source",
-                "n_chars",
-            )
-            # probe_input_mb is THE scale number: it must stay ~flat
-            # as index_rows grows m× (IN-pushdown row-group pruning
-            # against the key-sorted index layout)
+            # a RATE-LIMITED micro-batch (few hundred docs → pruned
+            # probe regime); probe_input_mb is THE scale number: it
+            # must stay ~flat as index_rows grows m× (IN-pushdown
+            # row-group pruning against the key-sorted index layout)
             per_q["dedup_ingest_probe"] = {
                 "index_rows": index_rows,
-                **_probe_row(store, probe, 1, idx_dir, ing_out),
+                **_probe_row(tracer, probe_docs(16, 1_000_000_000), 1, idx_dir, ing_out),
             }
-
             # the MID-BAND probe — a ~5k-key burst (1,250 docs × 4 band
             # keys), 25 IN chunks — must also show pruned bytes, not a
-            # full-index scan. Same replay discipline as above.
-            probe_mid = base.limit(1250).select(
-                (F.col("doc_id") + F.lit(2_000_000_000)).alias("doc_id"),
-                "text",
-                "lang",
-                "source",
-                "n_chars",
-            )
+            # full-index scan
             per_q["dedup_ingest_probe_midband"] = {
                 "index_rows": index_rows,
-                **_probe_row(store, probe_mid, 2, idx_dir, ing_out),
+                **_probe_row(tracer, probe_docs(1250, 2_000_000_000), 2, idx_dir, ing_out),
             }
 
-            n_vecs = emb_rows * m
+            # kmeans_lloyd's assignment is memoized per session and
+            # dir — drop ONLY that memo so every rep re-runs the Lloyd
+            # chain (the scaling under test). A blanket clear_memos()
+            # would also wipe the scan cache and the IVF/PQ memos,
+            # silently changing what EVERY row measures.
             for name in EMB_QUERIES:
-                best = float("inf")
-                for _ in range(2):
-                    # kmeans_lloyd's assignment is memoized per
-                    # session and dir — drop ONLY that memo so every
-                    # rep re-runs the Lloyd chain (the scaling under
-                    # test). A blanket clear_memos() here would also
-                    # wipe the scan cache and the IVF/PQ memos,
-                    # silently changing what EVERY row measures.
-                    similarity._lloyd_checkpointed.cache.clear()
-                    t0 = time.perf_counter()
-                    queries[name](spark, scaled_dir).write.format(
-                        "noop"
-                    ).mode("overwrite").save()
-                    best = min(best, time.perf_counter() - t0)
-                per_q[name] = {
-                    "sec": round(best, 3),
-                    "krows_per_sec": round(n_vecs / best / 1000, 1),
-                }
+                per_q[name] = timed(
+                    m, name, emb_rows * m, similarity._lloyd_checkpointed.cache.clear
+                )
             out[f"{m}x"] = {"rows": n_rows, "queries": per_q}
 
         # archive_index's file-count claim, measured. The probe-bytes
@@ -268,50 +200,37 @@ def main() -> None:
         # bytes grow with B until archive_index folds history into one
         # range-partitioned archive, after which bytes/files must drop
         # back ~flat.
-        out["archive"] = _bench_archive(spark, store, base, stage)
+        out["archive"] = _bench_archive(
+            spark, tracer, base, probe_docs(16, 3_000_000_000), stage
+        )
     finally:
         shutil.rmtree(stage, ignore_errors=True)
 
     print(json.dumps({"base_rows": base_rows, "runs": out}))
 
 
-def _probe_row(store, probe, batch_id: int, idx_dir: str, out_dir: str) -> dict:
-    """Best of two same-``batch_id`` replays of one ``_batch_dedup``
-    micro-batch: seconds, input MB and the tasks of the stages that
-    read files (the index scan, plus the micro-batch's own source
-    scan), from the status store's stages of the jobs each replay ran
-    (job-id high-water mark)."""
+def _probe_row(tracer, probe, batch_id: int, idx_dir: str, out_dir: str) -> dict:
+    """Fastest of two same-``batch_id`` replays of one ``_batch_dedup``
+    micro-batch (a replay re-does exactly the same probe work: the
+    replay filter excludes the batch's own keys): seconds, input MB and
+    the tasks of the stages that read files (the index scan, plus the
+    micro-batch's own source scan)."""
     from wd2duckdb_spark.streaming.dedup_ingest import _batch_dedup
 
-    best = None
-    for _ in range(2):
-        store.drain()
-        lo = store.job_high_water()
-        t0 = time.perf_counter()
-        _batch_dedup(probe, batch_id, idx_dir, out_dir)
-        el = time.perf_counter() - t0
-        store.drain()
-        stages = [
-            sid
-            for j in store.jobs_after(lo, store.job_high_water())
-            for sid in j["stage_ids"]
-        ]
-        per_stage = [store.stage_counters([sid]) for sid in stages]
-        row = {
-            "sec": round(el, 3),
-            "probe_input_mb": round(
-                sum(c["input_bytes"] for c in per_stage) / 1e6, 2
-            ),
-            "probe_scan_tasks": sum(
-                c["tasks"] for c in per_stage if c["input_records"] > 0
-            ),
-        }
-        if best is None or el < best["sec"]:
-            best = row
-    return best
+    name = f"probe.{idx_dir}.{batch_id}"
+    repeat(tracer, name, 2, lambda: _batch_dedup(probe, batch_id, idx_dir, out_dir))
+    span = min(tracer.named(name), key=lambda s: s.seconds)
+    per_stage = [
+        tracer.store.stage_counters([sid]) for j in span.jobs for sid in j["stage_ids"]
+    ]
+    return {
+        "sec": round(span.seconds, 3),
+        "probe_input_mb": round(sum(c["input_bytes"] for c in per_stage) / 1e6, 2),
+        "probe_scan_tasks": sum(c["tasks"] for c in per_stage if c["input_records"] > 0),
+    }
 
 
-def _bench_archive(spark, store, base, stage) -> dict:
+def _bench_archive(spark, tracer, base, probe, stage) -> dict:
     """Probe bytes/files before vs after archive_index, at a fixed
     corpus size ingested as MANY SMALL batches (the steady-state
     stream shape archive_index exists for)."""
@@ -319,41 +238,19 @@ def _bench_archive(spark, store, base, stage) -> dict:
 
     from pyspark.sql import functions as F
 
-    from wd2duckdb_spark.streaming.dedup_ingest import (
-        _batch_dedup,
-        archive_index,
-    )
+    from wd2duckdb_spark.streaming.dedup_ingest import _batch_dedup, archive_index
 
-    root = os.path.join(stage, "archive_bench")
-    idx_dir, out_dir = f"{root}/idx", f"{root}/out"
+    idx_dir, out_dir = f"{stage}/archive_bench/idx", f"{stage}/archive_bench/out"
     n_batches, per = 24, 50
     for b in range(n_batches):
-        lo, hi = b * per, (b + 1) * per
-        sl = base.filter(
-            (F.col("doc_id") >= lo) & (F.col("doc_id") < hi)
-        ).coalesce(1)
-        _batch_dedup(sl, b, idx_dir, out_dir)
-
-    def _n_files() -> int:
-        return len(
-            [
-                p
-                for p in glob.glob(f"{idx_dir}/batch=*/*")
-                if not os.path.basename(p).startswith(("_", "."))
-            ]
-        )
-
-    probe = base.limit(16).select(
-        (F.col("doc_id") + F.lit(3_000_000_000)).alias("doc_id"),
-        "text",
-        "lang",
-        "source",
-        "n_chars",
-    )
+        sl = base.filter((F.col("doc_id") >= b * per) & (F.col("doc_id") < (b + 1) * per))
+        _batch_dedup(sl.coalesce(1), b, idx_dir, out_dir)
 
     def _measure(batch_id: int) -> dict:
-        row = _probe_row(store, probe, batch_id, idx_dir, out_dir)
-        return {**row, "index_files": _n_files()}
+        row = _probe_row(tracer, probe, batch_id, idx_dir, out_dir)
+        files = glob.glob(f"{idx_dir}/batch=*/*")
+        row["index_files"] = sum(not os.path.basename(p).startswith(("_", ".")) for p in files)
+        return row
 
     before = _measure(n_batches)
     # fold everything but the most recent real batch (and the probe's

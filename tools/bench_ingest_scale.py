@@ -1,20 +1,23 @@
-"""Ingest scale demonstration (VERDICT r1 item 5): show that dump
-ingest throughput HOLDS (in fact grows) as the dump size scales from
-fixed-cost-dominated to steady-state, i.e. that the pipeline is
-bounded by splits x cores, not by any single-threaded stage.
+"""Ingest scale demonstration: show that dump ingest throughput HOLDS
+(in fact grows) as the dump size scales from fixed-cost-dominated to
+steady-state, i.e. that the pipeline is bounded by splits x cores, not
+by any single-threaded stage.
 
 Runs the full 6-table ETL at several dump sizes (default 0.5M / 2M /
 8M lines ~ 0.75 / 3 / 12 GB of JSON) on one SparkSession and prints
 ONE JSON line:
 
-    {"metric": "ingest_scale", "points": [{"lines": N, "sec": s,
-      "lines_per_sec": r, "splits": k}, ...],
-     "peak_jvm_heap_gb": g, "peak_execution_mb": m}
+    {"metric": "ingest_scale", "points": [{"lines": N, "gb": g,
+      "sec": s, "lines_per_sec": r, "splits": k}, ...],
+     "peak_jvm_heap_gb": g}
 
-Peak memory comes from the Spark REST API's executor
-peakMemoryMetrics (the local-mode driver JVM hosts all executor
-threads, so its peak heap bounds the whole run — the persisted parse
-is the dominant resident set).
+``sec`` is the ingest call's span after bench.py's ingest warm-up;
+``splits`` is the number of tasks the dump scan ran, read from the
+span's stage counters (the dump is split by ``DUMP_SPLIT_BYTES`` with
+at least one split per core). Peak memory is the driver JVM's peak
+heap from its MemoryPoolMXBeans (the local-mode driver JVM hosts all
+executor threads, so its peak heap bounds the whole run — the
+persisted parse is the dominant resident set).
 
 Dump generation is deterministic (tools/gen_dump.entity is a pure
 function of the line index) and parallelized across processes; files
@@ -30,11 +33,12 @@ import os
 import shutil
 import sys
 import tempfile
-import time
 from multiprocessing import Pool
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from bench import warm_up_ingest  # noqa: E402
+from perfbench.harness import Tracer  # noqa: E402
 from tools.gen_dump import entity  # noqa: E402
 
 
@@ -71,10 +75,10 @@ def gen_dump_parallel(path: str, n: int, workers: int = 16) -> None:
 
 
 def _peak_memory(spark) -> dict:
-    """Peak JVM heap across all memory pools (MemoryPoolMXBean
-    getPeakUsage, via py4j) — in local mode the one JVM hosts every
-    executor thread, so this bounds the whole run including the
-    persisted parse. The REST API is unavailable here (UI disabled)."""
+    """Peak JVM heap summed over the heap memory pools
+    (MemoryPoolMXBean getPeakUsage, via py4j) — in local mode the one
+    JVM hosts every executor thread, so this bounds the whole run
+    including the persisted parse."""
     try:
         mf = spark._jvm.java.lang.management.ManagementFactory
         peak = sum(
@@ -95,37 +99,33 @@ def main() -> None:
 
     spark = get_spark(app_name="wd2duckdb_spark_ingest_scale")
     spark.sparkContext.setLogLevel("ERROR")
-
-    # steady-state warm-up (same convention as bench.py)
-    warm = f"{tempfile.gettempdir()}/wd_scale_warm_500.json"
-    gen_dump_parallel(warm, 500)
-    warm_out = tempfile.mkdtemp(prefix="wd_scale_warm_")
-    shutil.rmtree(warm_out)
-    ingest(spark, warm, warm_out)
-    shutil.rmtree(warm_out, ignore_errors=True)
+    tracer = Tracer(spark, enabled=True)
+    warm_up_ingest(spark)
 
     points = []
     for n in sizes:
         dump = f"{tempfile.gettempdir()}/wd_scale_dump_{n}.json"
         gen_dump_parallel(dump, n)
-        out = tempfile.mkdtemp(prefix="wd_scale_kg_")
-        shutil.rmtree(out)
-        t0 = time.perf_counter()
-        ingest(spark, dump, out)
-        dt = time.perf_counter() - t0
-        n_rows = spark.read.parquet(f"{out}/vertex").count()
+        stage = tempfile.mkdtemp(prefix="wd_scale_kg_")
+        try:
+            with tracer.span("ingest") as s:
+                ingest(spark, dump, f"{stage}/kg")
+            n_rows = spark.read.parquet(f"{stage}/kg/vertex").count()
+        finally:
+            shutil.rmtree(stage, ignore_errors=True)
         assert n_rows == n, f"expected {n} vertices, got {n_rows}"
-        splits = -(-os.path.getsize(dump) // (128 << 20))  # ceil, 128M splits
+        # the dump scan's tasks: the first stage of the ingest's first
+        # (vertex) job — perfbench's ingest.scan_tasks
+        scan = s.jobs[0]["stage_ids"]
         points.append(
             {
                 "lines": n,
                 "gb": round(os.path.getsize(dump) / (1 << 30), 2),
-                "sec": round(dt, 1),
-                "lines_per_sec": round(n / dt),
-                "splits": splits,
+                "sec": round(s.seconds, 1),
+                "lines_per_sec": round(n / s.seconds),
+                "splits": tracer.store.stage_counters([min(scan)])["tasks"],
             }
         )
-        shutil.rmtree(out, ignore_errors=True)
 
     result = {"metric": "ingest_scale", "points": points, **_peak_memory(spark)}
     print(json.dumps(result))

@@ -4,8 +4,9 @@ Usage:
     python tools/bench_one.py [--sf DIR] [--reps N] [--plan OUTDIR] q1 q2 ...
 
 Times each named query through the noop sink (min over N reps,
-clearCache between queries — same methodology as bench.py), and with
---plan writes `<OUTDIR>/<query>.txt` containing .explain("formatted").
+clearCache between queries, bench.py's warm-up — the same method as
+bench.py), and with --plan writes `<OUTDIR>/<query>.txt` containing
+.explain("formatted").
 """
 
 from __future__ import annotations
@@ -13,7 +14,12 @@ from __future__ import annotations
 import argparse
 import os
 import sys
-import time
+
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+
+from bench import warm_up_queries  # noqa: E402
+from perfbench.harness import Tracer  # noqa: E402
+from tools.benchkit import noop, repeat  # noqa: E402
 
 
 def main() -> None:
@@ -24,48 +30,28 @@ def main() -> None:
     ap.add_argument("queries", nargs="+")
     args = ap.parse_args()
 
-    sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-    from pyspark.sql import functions as F
-
     from wd2duckdb_spark import get_spark
+    from wd2duckdb_spark.plans.inspect import explain_str
     from wd2duckdb_spark.registry import all_queries
 
     spark = get_spark(app_name="bench_one")
     spark.sparkContext.setLogLevel("ERROR")
     qs = all_queries()
-
-    # Same warm-up as bench.py so numbers are comparable.
-    lw = spark.read.parquet(f"{args.sf}/lineitem.parquet").limit(1000)
-    dim = spark.range(100).withColumnRenamed("id", "l_orderkey")
-    (
-        lw.join(F.broadcast(dim), "l_orderkey", "left")
-        .groupBy("l_returnflag")
-        .agg(F.sum("l_quantity").alias("s"), F.count("*").alias("c"))
-        .orderBy("l_returnflag")
-        .write.format("noop").mode("overwrite").save()
-    )
+    warm_up_queries(spark, args.sf)
 
     for name in args.queries:
         fn = qs[name]
         if args.plan:
             os.makedirs(args.plan, exist_ok=True)
-            df = fn(spark, args.sf)
-            plan = df._sc._jvm.PythonSQLUtils.explainString(
-                df._jdf.queryExecution(), "formatted"
-            )
             with open(os.path.join(args.plan, f"{name}.txt"), "w") as f:
-                f.write(plan)
+                f.write(explain_str(fn(spark, args.sf), "formatted"))
             spark.catalog.clearCache()
-        best, runs = float("inf"), []
-        for _ in range(args.reps):
-            spark.sparkContext.setJobDescription(f"bench_one: {name}")
-            t0 = time.perf_counter()
-            fn(spark, args.sf).write.format("noop").mode("overwrite").save()
-            dt = time.perf_counter() - t0
-            runs.append(round(dt, 3))
-            best = min(best, dt)
+        tracer = Tracer()
+        spark.sparkContext.setJobDescription(f"bench_one: {name}")
+        repeat(tracer, name, args.reps, lambda: noop(fn(spark, args.sf)))
         spark.catalog.clearCache()
-        print(f"{name}\t{best:.3f}\t{runs}", flush=True)
+        runs = [round(s.seconds, 3) for s in tracer.spans]
+        print(f"{name}\t{min(runs):.3f}\t{runs}", flush=True)
     spark.stop()
 
 

@@ -1,7 +1,7 @@
-"""SimHash banding candidate-volume audit (VERDICT r8 item 1): on
-1×/4×/16× scaled copies of ``documents``, count the banded candidate
-SUPERSET for the narrow layout (blocks=4 → 15-bit keys) vs the wide
-layout (blocks=6 → 30-bit 3-block combined keys).
+"""SimHash banding candidate-volume audit: on 1×/4×/16× scaled copies
+of ``documents``, count the banded candidate SUPERSET for the narrow
+layout (blocks=4 → 15-bit keys) vs the wide layout (blocks=6 → 30-bit
+3-block combined keys).
 
 True Hamming ≤ 3 pairs grow quadratically when a corpus is duplicated
 (a semantics change — which is why simhash_hamming_pairs is excluded
@@ -11,6 +11,9 @@ pairs: candidates − true, the random-collision volume Manku et al. §3
 control with more tables of wider keys. Expectation: wide overhead ≈
 20·N²/2^31, narrow ≈ 4·N²/2^16 — the wide layout's overhead should
 stay near zero at every multiplier while the narrow one grows.
+
+The copies are benchkit's salted copies; ``sec`` is one span per
+layout.
 
 Usage: python tools/bench_simhash_bands.py [sf_dir] [multipliers...]
 Prints one JSON line:
@@ -26,15 +29,17 @@ import os
 import shutil
 import sys
 import tempfile
-import time
+
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+
+from bench import warm_up_queries  # noqa: E402
+from perfbench.harness import Tracer  # noqa: E402
+from tools.benchkit import salted_copies, write_scaled  # noqa: E402
 
 
 def main() -> None:
-    sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.1"
     mults = [int(m) for m in sys.argv[2:]] or [1, 4, 16]
-
-    from pyspark.sql import functions as F
 
     from wd2duckdb_spark import get_spark
     from wd2duckdb_spark.functions.dedup import (
@@ -48,7 +53,8 @@ def main() -> None:
 
     spark = get_spark(app_name="bench_simhash_bands")
     spark.sparkContext.setLogLevel("ERROR")
-    spark.range(1000).selectExpr("sum(id)").collect()  # warm-up
+    warm_up_queries(spark, sf_dir)
+    tracer = Tracer()
 
     base = spark.read.parquet(f"{sf_dir}/documents.parquet")
     base_rows = base.count()
@@ -57,19 +63,8 @@ def main() -> None:
     runs: dict[str, dict] = {}
     try:
         for m in mults:
-            copies = base.crossJoin(
-                spark.range(m).withColumnRenamed("id", "copy")
-            ).select(
-                (F.col("doc_id") * m + F.col("copy")).alias("doc_id"),
-                F.concat(
-                    F.col("text"), F.lit(" salt"), F.col("copy").cast("string")
-                ).alias("text"),
-            )
-            path = os.path.join(stage, f"x{m}")
-            copies.repartition(
-                max(m, spark.sparkContext.defaultParallelism)
-            ).write.parquet(path)
-            docs = spark.read.parquet(path)
+            path = write_scaled(salted_copies(base, m), m, sf_dir, f"{stage}/x{m}")
+            docs = spark.read.parquet(f"{path}/documents.parquet")
             sig = simhash_signatures(docs).persist()
             sig.count()  # materialize once; both layouts reuse it
 
@@ -79,14 +74,14 @@ def main() -> None:
                 ("narrow", SIMHASH_BANDS),
                 ("wide", SIMHASH_WIDE_BLOCKS),
             ):
-                t0 = time.time()
-                cand = simhash_candidates(
-                    sig, blocks=blocks, hamming=SIMHASH_HAMMING
-                ).count()
+                with tracer.span(label) as s:
+                    cand = simhash_candidates(
+                        sig, blocks=blocks, hamming=SIMHASH_HAMMING
+                    ).count()
                 row[label] = {
                     "candidates": cand,
                     "overhead": cand - true_pairs,
-                    "sec": round(time.time() - t0, 3),
+                    "sec": round(s.seconds, 3),
                 }
             runs[f"{m}x"] = row
             sig.unpersist()

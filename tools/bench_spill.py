@@ -1,11 +1,10 @@
-"""Spill-under-pressure bench (VERDICT r8 item 7): run the 16× corpus
-tier in a DELIBERATELY small-heap session and record
-memoryBytesSpilled / diskBytesSpilled from the status REST API —
-proving the heavy aggregate/sort pipelines COMPLETE under memory
-pressure by spilling, not by OOMing. This is the property the
-MEMORY_AND_DISK persist levels and sort-based aggregates claim in
-docstrings but the time-linearity tier (bench_corpus_scale.py, run
-with a roomy heap) never exercises.
+"""Spill-under-pressure bench: run the 16× corpus tier in a
+DELIBERATELY small-heap session and record memoryBytesSpilled /
+diskBytesSpilled of each query's stages — proving the heavy
+aggregate/sort pipelines COMPLETE under memory pressure by spilling,
+not by OOMing. This is the property the MEMORY_AND_DISK persist levels
+and sort-based aggregates claim in docstrings but the time-linearity
+tier (bench_corpus_scale.py, run with a roomy heap) never exercises.
 
 Pressure recipe: a small driver heap (1g vs the engine's 8g default;
 local mode: driver == executor), a squeezed unified pool, a
@@ -16,9 +15,11 @@ story — pure pool starvation produces allocation failure, not
 spills).
 
 The property under test is COMPLETION + nonzero spill, not speed —
-wall-clock under forced spill on a virtualized host is noise.
+wall-clock under forced spill on a virtualized host is noise. Spill
+bytes are the counters of each query's span, read from the in-process
+status store.
 
-Measured (this box, sf0.1 × 16 = 80k docs, 1g heap):
+Measured (sf0.1 × 16 = 80k docs, 1g heap):
     repeated_ngram_spans  completed, 248.7 MB mem / 36.5 MB disk spilled
     dedup_span_removal    completed, 553.6 MB mem / 115.9 MB disk spilled
     bm25_eval             completed, 0 spill (its state is stats-sized)
@@ -27,7 +28,7 @@ Usage (fresh process required — driver memory binds at JVM launch):
     python tools/bench_spill.py [sf_dir] [multiplier]
 Prints one JSON line:
     {"heap": "1g", "memory_fraction": 0.3, "mult": 16, "rows": N,
-     "queries": {name: {"sec": s, "completed": true,
+     "queries": {name: {"sec": s, "rows": n, "completed": true,
                         "memory_spilled": B, "disk_spilled": B}}}
 """
 
@@ -38,8 +39,13 @@ import os
 import shutil
 import sys
 import tempfile
-import time
-import urllib.request
+
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+
+from py4j.protocol import Py4JJavaError  # noqa: E402
+
+from perfbench.harness import Tracer  # noqa: E402
+from tools.benchkit import salted_copies, write_scaled  # noqa: E402
 
 #: Pressure recipe, calibrated by failure: pure pool starvation does
 #: NOT produce spills — at fraction 0.08 (and still at 0.2 with 64×
@@ -50,7 +56,7 @@ import urllib.request
 #: (1g vs the engine's 8g default, fraction 0.3 ≈ 220 MB pool) and the
 #: spill machinery is engaged DETERMINISTICALLY via the element-count
 #: force-spill thresholds — every sorter/window/aggregate buffer must
-#: go through its real spill path, and the status API records the
+#: go through its real spill path, and the status store records the
 #: resulting bytes. Completion + nonzero spilled bytes is the claim.
 HEAP = "1g"
 MEM_FRACTION = "0.3"
@@ -77,44 +83,23 @@ FORCE_SPILL_CONF = {
 SPILL_QUERIES = ("repeated_ngram_spans", "dedup_span_removal", "bm25_eval")
 
 
-def _spills(spark, hwm: int) -> tuple[int, int, int]:
-    """Sum memory/disk spill bytes over completed stages with id >
-    ``hwm`` (the high-water-mark design of tools/metrics.py); returns
-    (mem, disk, new_hwm)."""
-    ui = spark.sparkContext.uiWebUrl
-    app = spark.sparkContext.applicationId
-    url = f"{ui}/api/v1/applications/{app}/stages?status=complete"
-    for _ in range(20):
+def _memory_spilled(store, span) -> int:
+    """memoryBytesSpilled over a traced span's stages (the harness's
+    ``spill_bytes`` is diskBytesSpilled)."""
+    total = 0
+    for sid in {i for j in span.jobs for i in j["stage_ids"]}:
         try:
-            with urllib.request.urlopen(url, timeout=10) as r:
-                stages = json.load(r)
-            break
-        except OSError:
-            time.sleep(0.5)
-    else:
-        return 0, 0, hwm
-    mem = sum(
-        s.get("memoryBytesSpilled", 0)
-        for s in stages
-        if s.get("stageId", -1) > hwm
-    )
-    disk = sum(
-        s.get("diskBytesSpilled", 0)
-        for s in stages
-        if s.get("stageId", -1) > hwm
-    )
-    new_hwm = max((s.get("stageId", -1) for s in stages), default=hwm)
-    return mem, disk, new_hwm
+            total += store.lastStageAttempt(sid).memoryBytesSpilled()
+        except Py4JJavaError:  # never ran: nothing spilled
+            pass
+    return total
 
 
 def main() -> None:
-    sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.1"
     mult = int(sys.argv[2]) if len(sys.argv) > 2 else 16
 
     os.environ["SPARK_GRAFT_DRIVER_MEM"] = HEAP
-    from pyspark.sql import functions as F
-
     from wd2duckdb_spark import get_spark
     from wd2duckdb_spark.registry import all_queries
 
@@ -122,17 +107,15 @@ def main() -> None:
         app_name="bench_spill",
         master="local[4]",
         shuffle_partitions=4,
-        extra_conf={
-            "spark.ui.enabled": "true",
-            "spark.memory.fraction": MEM_FRACTION,
-            **FORCE_SPILL_CONF,
-        },
+        extra_conf={"spark.memory.fraction": MEM_FRACTION, **FORCE_SPILL_CONF},
     )
     spark.sparkContext.setLogLevel("ERROR")
     assert spark.sparkContext.getConf().get("spark.driver.memory") == HEAP, (
         "driver heap did not bind - run this tool in a FRESH python "
         "process (the JVM inherits the first session's heap)"
     )
+    tracer = Tracer(spark, enabled=True)
+    store = spark.sparkContext._jsc.sc().statusStore()
 
     queries = all_queries()
     base = spark.read.parquet(f"{sf_dir}/documents.parquet")
@@ -141,38 +124,18 @@ def main() -> None:
     stage_dir = tempfile.mkdtemp(prefix="bench_spill_")
     out: dict[str, dict] = {}
     try:
-        scaled = os.path.join(stage_dir, f"x{mult}")
-        os.makedirs(scaled)
-        base.crossJoin(
-            spark.range(mult).withColumnRenamed("id", "copy")
-        ).select(
-            (F.col("doc_id") * mult + F.col("copy")).alias("doc_id"),
-            F.concat(
-                F.col("text"), F.lit(" salt"), F.col("copy").cast("string")
-            ).alias("text"),
-            "lang",
-            "source",
-            "n_chars",
-        ).repartition(4).write.parquet(f"{scaled}/documents.parquet")
-        for t in (
-            "region nation customer supplier part orders lineitem events "
-            "embeddings"
-        ).split():
-            os.symlink(f"{sf_dir}/{t}.parquet", f"{scaled}/{t}.parquet")
-
-        _, _, hwm = _spills(spark, -1)
+        scaled = write_scaled(
+            salted_copies(base, mult), mult, sf_dir, os.path.join(stage_dir, f"x{mult}")
+        )
         for name in SPILL_QUERIES:
-            t0 = time.time()
-            n = queries[name](spark, scaled).count()  # full execution
-            sec = round(time.time() - t0, 3)
-            time.sleep(1.0)  # let async stage records land
-            mem, disk, hwm = _spills(spark, hwm)
+            with tracer.span(name) as s:
+                n = queries[name](spark, scaled).count()  # full execution
             out[name] = {
-                "sec": sec,
+                "sec": round(s.seconds, 3),
                 "rows": n,
                 "completed": True,
-                "memory_spilled": mem,
-                "disk_spilled": disk,
+                "memory_spilled": _memory_spilled(store, s),
+                "disk_spilled": s.counters["spill_bytes"],
             }
     finally:
         shutil.rmtree(stage_dir, ignore_errors=True)

@@ -3,8 +3,9 @@
 Usage: python tools/compare_duckdb.py [sf_dir] [query ...]
 
 Runs every bench.HEADLINE query that has an oracle (or the queries
-named on the command line), min-of-2 timings on both engines over the
-same parquet, and prints one JSON line:
+named on the command line; ``--all`` for every oracle), min-of-2
+timings on both engines over the same parquet, and prints one JSON
+line:
 
     {"sf": 0.1, "spark_total": ..., "duckdb_total": ...,
      "queries": {name: {"spark": s, "duckdb": s, "ratio": spark/duckdb}}}
@@ -22,18 +23,22 @@ import json
 import os
 import re
 import sys
-import time
+
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+
+from bench import HEADLINE, warm_up_queries  # noqa: E402
+from perfbench.harness import Tracer  # noqa: E402
+from tools.benchkit import best, noop, repeat  # noqa: E402
 
 
 def main() -> None:
-    sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.1"
     only = sys.argv[2:]
 
     import duckdb
 
-    from bench import HEADLINE
     from wd2duckdb_spark import get_spark
+    from wd2duckdb_spark.catalog import oracle_view_sql
     from wd2duckdb_spark.registry import all_oracles, all_queries
 
     m = re.search(r"sf([0-9.]+)", sf_dir)
@@ -46,10 +51,7 @@ def main() -> None:
 
     spark = get_spark(app_name="compare_duckdb")
     spark.sparkContext.setLogLevel("ERROR")
-    # warm up JVM / codegen
-    spark.range(1000).selectExpr("sum(id)").collect()
-
-    from wd2duckdb_spark.catalog import oracle_view_sql
+    warm_up_queries(spark, sf_dir)
 
     con = duckdb.connect()
     for t in (
@@ -58,32 +60,17 @@ def main() -> None:
     ).split():
         con.execute(oracle_view_sql(t, f"{sf_dir}/{t}.parquet"))
 
-    def time_min2(fn) -> float:
-        best = float("inf")
-        for _ in range(2):
-            t0 = time.perf_counter()
-            fn()
-            best = min(best, time.perf_counter() - t0)
-        return round(best, 3)
-
+    tracer = Tracer()
     out: dict[str, dict[str, float]] = {}
     for name in names:
-        s = time_min2(
-            lambda: queries[name](spark, sf_dir)
-            .write.format("noop")
-            .mode("overwrite")
-            .save()
-        )
+        repeat(tracer, f"spark.{name}", 2, lambda: noop(queries[name](spark, sf_dir)))
         # persist()-barrier queries cache small intermediates; clear
         # between queries so no later plan-identical subtree measures
         # warm off another query's cache (same discipline as bench.py)
         spark.catalog.clearCache()
-        d = time_min2(lambda: con.execute(oracles[name]).fetchall())
-        out[name] = {
-            "spark": s,
-            "duckdb": d,
-            "ratio": round(s / d, 2) if d > 0 else None,
-        }
+        repeat(tracer, f"duckdb.{name}", 2, lambda: con.execute(oracles[name]).fetchall())
+        s, d = best(tracer, f"spark.{name}"), best(tracer, f"duckdb.{name}")
+        out[name] = {"spark": s, "duckdb": d, "ratio": round(s / d, 2) if d > 0 else None}
 
     print(
         json.dumps(

@@ -1805,7 +1805,7 @@ def _prefix_frames(
     vocabulary-sized table to the driver and every executor). Both
     sides are keyed by ``tok``; the shuffle join is the scale-safe
     plan, AQE still downgrades to broadcast at runtime when dfc is
-    genuinely small, and tools/bench_prefix_join.py
+    genuinely small, and tools/bench_dedup_scale64.py
     measures candidate volume + wall-clock staying per-row-flat at
     1×/4×/16× corpus (where dfc itself grows 16×): with per-copy
     token namespaces (so pair semantics scale linearly by
