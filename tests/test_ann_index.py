@@ -5,6 +5,8 @@ layouts and across replays."""
 
 from __future__ import annotations
 
+import math
+
 import pyspark.sql.functions as F
 import pytest
 
@@ -454,6 +456,12 @@ def test_index_cell_balance_reads_partition_column_only(spark, tmp_path):
         .collect()
     }
     assert {r.cell: r.n_vectors for r in rows} == want
+    # the oracle-backed half-up rule of q_ivf_cell_balance
+    t, c = sum(want.values()), len(want)
+    assert all(
+        r.x_mean == math.floor(r.n_vectors * c / t * 1e4 + 0.5) / 1e4
+        for r in rows
+    )
     rs = " ".join(read_schema(df))
     assert "v" not in rs.split() and "nv" not in rs, rs
 

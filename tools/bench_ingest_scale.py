@@ -51,18 +51,18 @@ def _write_chunk(args: tuple[str, int, int, int]) -> str:
     return path
 
 
-def gen_dump_parallel(path: str, n: int, workers: int = 16) -> None:
-    """Byte-identical to tools.gen_dump.write_dump, produced by
-    ``workers`` processes writing line ranges then concatenated."""
+def gen_dump_parallel(path: str, n: int) -> None:
+    """Byte-identical to tools.gen_dump.write_dump, produced by one
+    process per core (never more than there are line ranges to write)
+    writing line ranges then concatenated."""
     if os.path.exists(path):
         return
-    chunk = (n + workers - 1) // workers
+    chunk = max(1, -(-n // (os.cpu_count() or 1)))
     jobs = [
-        (f"{path}.part{w}", w * chunk, min((w + 1) * chunk, n), n)
-        for w in range(workers)
-        if w * chunk < n
+        (f"{path}.part{w}", lo, min(lo + chunk, n), n)
+        for w, lo in enumerate(range(0, n, chunk))
     ]
-    with Pool(len(jobs)) as pool:
+    with Pool(max(1, len(jobs))) as pool:
         parts = pool.map(_write_chunk, jobs)
     with open(path + ".tmp", "wb") as out:
         out.write(b"[\n")

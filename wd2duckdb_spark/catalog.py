@@ -1,11 +1,13 @@
-"""Tiny catalog helper for the driver's parquet testdata tables."""
+"""The driver's parquet testdata tables, and the helpers every query
+module shares: the per-session memo, the CPU-spread repartition,
+JVM-local driver tables, the lineage cut and half-up rounding."""
 
 from __future__ import annotations
 
 import functools
 import inspect
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import LongType, StructType, TimestampType
 
@@ -260,6 +262,26 @@ def local_frame(spark: SparkSession, rows, ddl: str) -> DataFrame:
         [pa.array(c, type=f.type) for c, f in zip(cols, arrow)], schema=arrow
     )
     return spark.createDataFrame(table, schema)
+
+
+def half_up(c: Column, digits: int) -> Column:
+    """``c`` rounded half-up to ``digits`` decimals on the binary
+    double: ``floor(c·10ⁿ + 0.5) / 10ⁿ``, the engine's one rounding
+    rule for exact-match results.
+
+    ``round()`` cannot be used: Spark rounds the decimal expansion of
+    a double and DuckDB the double itself, so their ties differ where
+    a binary value sits at an n-digit boundary (``2.675``). ``floor``
+    of identical doubles cannot disagree.
+
+    The scale is an integer literal: a DOUBLE operand multiplies by it
+    as a double, a DECIMAL one exactly as a decimal. NaN passes
+    through as NaN, as in DuckDB; Spark's ``floor`` returns a bigint,
+    which would read NaN as 0. The result is DOUBLE."""
+    scale = 10**digits
+    return F.when(F.isnan(c), c).otherwise(
+        F.floor(c * scale + F.lit(0.5)) / scale
+    )
 
 
 #: Temporal columns the driver has shipped (or may ship) in varying

@@ -66,6 +66,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from wd2duckdb_spark.catalog import (
+    half_up,
     local_frame,
     session_memo,
     tbl,
@@ -78,11 +79,13 @@ from wd2duckdb_spark.functions.similarity import (
     _as_double,
     _centroids,
     _ivf_oracle,
+    _norm_fold_sql,
     _pq_lut,
     _sql_arr,
+    _sqdist_fold_sql,
     adc_dist,
+    cell_balance,
     ivf_assign_col,
-    norm,
     pq_code_col,
     probe_cells,
     probe_cosine,
@@ -111,28 +114,27 @@ def l2_assign_col(
 ) -> Column:
     """Nearest-centroid cell by FLOOR-6 SQUARED-L2 argmin — the
     Lloyd assignment rule (similarity._lloyd_assignment: dist =
-    floor6(sqdist), min-struct (dist, cid)) as one in-row expression,
-    numerics matched term-for-term: zip_with + ascending-dim left
-    fold from 0.0 for the squared distance, floor(d·1e6 + 0.5)/1e6
-    snap, strict `<` scan in ascending-cid order = smallest cid on
-    ties. The semantic dedup-at-ingest tier assigns with this rule
-    against ``trained_centroids()``, so it reproduces the registered
+    half_up(sqdist, 6), min-struct (dist, cid)) as one in-row
+    expression over the same :func:`_sqdist_fold_sql` fold, with a
+    strict `<` scan in ascending-cid order = smallest cid on ties.
+    The semantic dedup-at-ingest tier assigns with this rule against
+    ``trained_centroids()``, so it reproduces the registered
     ``semantic_dedup`` clustering EXACTLY (pinned in
     tests/test_ann_dedup_ingest.py)."""
-    dists = ", ".join(
-        f"FLOOR(aggregate(zip_with({vec_sql}, {_sql_arr(c)},"
-        f" (x, y) -> (x - y) * (x - y)),"
-        f" CAST(0.0 AS DOUBLE), (acc, w) -> acc + w)"
-        f" * 1000000.0 + 0.5) / 1000000.0"
+    dists = [
+        half_up(F.expr(_sqdist_fold_sql(vec_sql, _sql_arr(c))), 6)
         for _cid, c in cents
-    )
-    cids = ", ".join(str(cid) for cid, _c in cents)
-    return F.expr(
-        f"aggregate(zip_with(array({dists}), array({cids}),"
-        " (d, c) -> named_struct('d', d, 'c', c)),"
-        " named_struct('d', CAST('Infinity' AS DOUBLE), 'c', -1),"
-        " (acc, e) -> IF(e.d < acc.d, e, acc)).c"
-    )
+    ]
+    cids = [F.lit(cid) for cid, _c in cents]
+    return F.aggregate(
+        F.zip_with(
+            F.array(*dists),
+            F.array(*cids),
+            lambda d, c: F.struct(d.alias("d"), c.alias("c")),
+        ),
+        F.struct(F.lit(float("inf")).alias("d"), F.lit(-1).alias("c")),
+        lambda acc, e: F.when(e["d"] < acc["d"], e).otherwise(acc),
+    )["c"]
 
 
 #: Filterable metadata columns stored alongside each vector when the
@@ -155,7 +157,7 @@ def _assigned_rows(
     out = (
         vecs.filter(valid_vector())
         .withColumn("v", _as_double(F.col("embedding")))
-        .withColumn("nv", norm(F.col("v")))
+        .withColumn("nv", F.expr(_norm_fold_sql("v")))
         .withColumn("cell", cell)
     )
     cols = ["vec_id", "v", "nv"]
@@ -258,22 +260,8 @@ def index_cell_balance(spark: SparkSession, index_dir: str) -> DataFrame:
     what nprobe-bounded probes can hide". One partition-column
     aggregate: reads parquet FOOTERS' worth of data per cell, never
     the vectors."""
-    a = spark.read.parquet(f"{index_dir}/assignments").select("cell")
-    counts = a.groupBy("cell").agg(F.count("*").alias("n_vectors"))
-    tot = counts.agg(
-        F.sum("n_vectors").alias("_t"), F.count("*").alias("_c")
-    )
-    return (
-        counts.crossJoin(F.broadcast(tot))
-        .select(
-            F.col("cell").cast("bigint").alias("cell"),
-            "n_vectors",
-            F.round(F.col("n_vectors") / F.col("_t"), 4).alias("share"),
-            F.round(
-                F.col("n_vectors") / (F.col("_t") / F.col("_c")), 4
-            ).alias("x_mean"),
-        )
-        .orderBy("cell")
+    return cell_balance(
+        spark.read.parquet(f"{index_dir}/assignments").select("cell")
     )
 
 

@@ -1,4 +1,4 @@
-"""Real byte-pair-encoding tokenization (VERDICT r8 item 2): a
+"""Real byte-pair-encoding tokenization: a
 deterministic BPE trainer + encoder so token accounting
 (`token_count_real_bpe`) and its consumers (`token_budget_plan`,
 `pack_sequences`) can run on REAL subword counts instead of the
@@ -41,12 +41,11 @@ from pyspark.sql import functions as F
 
 from wd2duckdb_spark.catalog import session_memo, tbl
 
-#: Training-table cap and merge count for the registered query —
-#: de-fixtured in round 10 (VERDICT r9 item 2): the trainer is the
-#: incremental/heap form that handles these for real (measured in
-#: tools/bench_bpe_train.py: 8,192 merges on a ~98k-word Zipf table
-#: in 32 s, 32,768 in 52 s driver-side — the naive rescan trainer
-#: extrapolates to ~98 min for 8k). On the driver fixture the corpus
+#: Training-table cap and merge count for the registered query: the
+#: trainer is the incremental/heap form that handles these for real
+#: (measured in tools/bench_bpe_train.py: 8,192 merges on a ~98k-word
+#: Zipf table in 32 s, 32,768 in 52 s driver-side — the naive rescan
+#: trainer extrapolates to ~98 min for 8k). On the driver fixture the corpus
 #: has only 31 distinct whitespace words, so training EXHAUSTS after
 #: 89 merges (every word a single symbol) and these caps are
 #: non-binding there — the merge list is a pure prefix, so raising
@@ -111,7 +110,7 @@ def train_bpe_merges(
     is a pure function of the table). Stops early when no pair
     repeats.
 
-    Scalable form (VERDICT r9 item 2 — de-fixturing): instead of
+    Scalable form: instead of
     recounting every pair each round (O(n_merges × Σ|word|) — fine at
     200 merges, hours at 32k), pair counts are maintained
     INCREMENTALLY (only words containing the merged pair are
@@ -251,8 +250,7 @@ def bpe_encode(
     uses), and the Pandas stage receives the pre-split word array —
     Python ``str.lower()`` disagrees with the JVM on some Unicode
     case mappings (e.g. U+0130), so an encode-side Python lowercase
-    could miss the trained vocabulary on non-ASCII corpora
-    (ADVICE-r9); sharing one JVM expression removes the class."""
+    could miss the trained vocabulary on non-ASCII corpora; sharing one JVM expression removes the class."""
     if output not in ("count", "tokens"):
         raise ValueError(f"output must be 'count' or 'tokens', got {output!r}")
     ranks = merge_ranks(merges)

@@ -36,6 +36,7 @@ from pyspark.sql import functions as F
 
 from wd2duckdb_spark.catalog import (
     eager_checkpoint,
+    half_up,
     scan_partitions,
     session_memo,
     spread,
@@ -498,30 +499,24 @@ def q_dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     """16-bit SimHash per doc over distinct tokens: bit j of the
-    signature = majority vote of bit j across token hashes."""
-    d = tbl(spark, sf_dir, "documents")
-    toks = spread(
+    signature = majority vote of bit j across the tokens' md5 hashes
+    read from their first 4 hex chars. Those are the top 16 of the
+    60-bit kernel's hash bits, so this is the kernel's signature
+    (:func:`simhash_signatures`) shifted right by 44 — one in-row
+    pass, no per-token rows and no aggregate."""
+    d = spread(
         # see _with_shingles — the md5-per-token work must spread over
         # all cores locally; skipped when the scan is multi-split
-        d,
+        tbl(spark, sf_dir, "documents"),
         "doc_id",
         scan_parts=scan_partitions(spark, sf_dir, "documents"),
-    ).select(
-        "doc_id",
-        F.explode(F.array_distinct(F.split(F.lower(F.trim(F.col("text"))), " "))).alias(
-            "tok"
-        ),
-    ).filter(F.col("tok") != "")
-    h16 = F.conv(F.substring(F.md5("tok"), 1, 4), 16, 10).cast("int")
-    bit_sums = [
-        F.sum(F.shiftright(h16, j).bitwiseAND(1)).alias(f"c{j}") for j in range(16)
-    ]
-    agg = toks.groupBy("doc_id").agg(F.count("*").alias("n"), *bit_sums)
-    sim = None
-    for j in range(16):
-        term = F.when(F.col(f"c{j}") * 2 > F.col("n"), F.lit(1 << j)).otherwise(0)
-        sim = term if sim is None else sim + term
-    return agg.select("doc_id", sim.cast("int").alias("simhash")).orderBy("doc_id")
+    )
+    top16 = F.shiftright("sim", SIMHASH_BITS - 16).cast("int")
+    return (
+        simhash_signatures(d)
+        .select("doc_id", top16.alias("simhash"))
+        .orderBy("doc_id")
+    )
 
 
 SIMHASH_BITS = 60  # 15 md5 hex chars — stays inside a signed 64-bit
@@ -1035,13 +1030,7 @@ def q_repeated_ngram_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
             (F.col("max_run") + F.lit(SPAN_N - 1)).alias(
                 "max_dup_span_tokens"
             ),
-            (
-                F.floor(
-                    F.col("n_dup_grams") / F.col("n_grams") * 1e4
-                    + F.lit(0.5)
-                )
-                / 1e4
-            ).alias("dup_fraction"),
+            half_up(F.col("n_dup_grams") / F.col("n_grams"), 4).alias("dup_fraction"),
         )
         .orderBy("doc_id")
     )
@@ -1249,12 +1238,9 @@ def q_ngram_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count("*").alias("n_docs"),
             F.sum("n_grams").alias("total_grams"),
             F.sum("n_novel").alias("novel_grams"),
-            (
-                F.floor(
-                    F.sum("nm") / F.count("*") + F.lit(0.5)
-                )
-                / 1e4
-            ).alias("avg_novelty"),
+            (half_up(F.sum("nm") / F.count("*"), 0) / 1e4).alias(
+                "avg_novelty"
+            ),
         )
         .orderBy("decile")
     )
@@ -1483,7 +1469,7 @@ def q_source_overlap_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
             "src_a",
             "src_b",
             "n_shared",
-            (F.floor(jac * 1e4 + F.lit(0.5)) / 1e4).alias("jaccard"),
+            half_up(jac, 4).alias("jaccard"),
         )
         .orderBy("src_a", "src_b")
     )
@@ -1921,12 +1907,7 @@ def q_jaccard_prefix_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     return scored.select(
         "a_id",
         "b_id",
-        (
-            F.floor(
-                F.col("ni") / (F.col("nab") - F.col("ni")) * 1e4 + F.lit(0.5)
-            )
-            / 1e4
-        ).alias("jaccard"),
+        half_up(F.col("ni") / (F.col("nab") - F.col("ni")), 4).alias("jaccard"),
     ).orderBy("a_id", "b_id")
 
 
@@ -2250,9 +2231,7 @@ def q_containment_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         "a_id",
         "b_id",
         "na",
-        (F.floor(F.col("ni") / F.col("na") * 1e4 + F.lit(0.5)) / 1e4).alias(
-            "containment"
-        ),
+        half_up(F.col("ni") / F.col("na"), 4).alias("containment"),
     ).orderBy("a_id", "b_id")
 
 
@@ -2296,18 +2275,19 @@ def q_lsh_candidate_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
             "n_hits"
         ),
     )
-    f4 = lambda c: F.floor(c * 1e4 + F.lit(0.5)) / 1e4  # noqa: E731
     return f.select(
         "n_candidates",
         "n_true",
         "n_hits",
         F.when(
             F.col("n_candidates") > 0,
-            f4(F.col("n_hits") / F.col("n_candidates")),
+            half_up(F.col("n_hits") / F.col("n_candidates"), 4),
         )
         .otherwise(F.lit(0.0))
         .alias("precision"),
-        F.when(F.col("n_true") > 0, f4(F.col("n_hits") / F.col("n_true")))
+        F.when(
+            F.col("n_true") > 0, half_up(F.col("n_hits") / F.col("n_true"), 4)
+        )
         .otherwise(F.lit(0.0))
         .alias("recall"),
     )
@@ -2382,7 +2362,7 @@ def q_neardup_method_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
         "n_both",
         F.when(
             denom > 0,
-            F.floor(F.col("n_both") / denom * 1e4 + F.lit(0.5)) / 1e4,
+            half_up(F.col("n_both") / denom, 4),
         )
         .otherwise(F.lit(0.0))
         .alias("overlap"),

@@ -5,8 +5,8 @@ Model: a media item is ``(media_id, kind, content: binary,
 meta: struct<mime, width, height, duration_ms, sample_rate>)``.
 Transformations run as Arrow-batched ``mapInPandas`` — the Spark
 plumbing (schemas, batch iteration, partition parallelism, output
-contracts) is real and tested, and since round 2 the *decode* step is
-real too, for header-level features: :func:`parse_media_header` is a
+contracts) is real and tested, and the *decode* step is real too, for
+header-level features: :func:`parse_media_header` is a
 dependency-free ``struct``-based container parser for BMP / PNG / GIF
 / WAV / JPEG.  Full pixel/sample decode still needs an injected codec
 (no image/audio library ships in this container) — that seam is
@@ -36,6 +36,8 @@ import pandas as pd
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from wd2duckdb_spark.catalog import half_up
 
 MEDIA_SCHEMA = (
     "media_id LONG, kind STRING, content BINARY, "
@@ -210,7 +212,7 @@ def parse_media_header(content: bytes) -> dict[str, Any]:
     Returns ``{mime, width, height, duration_ms, sample_rate,
     data_offset}`` with None for fields the container doesn't carry;
     raises ``ValueError`` on an unrecognized container. This is the
-    pure-Python fallback the VERDICT asked for — header features are
+    pure-Python fallback: header features are
     real parsed bytes, only pixel/sample decode remains codec-gated."""
     out: dict[str, Any] = dict(
         mime=None, width=None, height=None, duration_ms=None,
@@ -489,7 +491,7 @@ def q_audio_pcm_features(spark: SparkSession, sf_dir: str) -> DataFrame:
         "n_samples",
         "sum_sq",
         "peak",
-        (F.floor(rms * 1e4 + F.lit(0.5)) / 1e4).alias("rms"),
+        half_up(rms, 4).alias("rms"),
         "duration_ms",
     ).orderBy("media_id")
 

@@ -34,7 +34,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from wd2duckdb_spark.catalog import local_frame, tbl
+from wd2duckdb_spark.catalog import half_up, local_frame, tbl
 
 #: RRF smoothing constant (the value from the original RRF paper and
 #: the default in Elasticsearch/OpenSearch/Vespa hybrid search).
@@ -54,11 +54,11 @@ def rrf_fuse(
     """Fuse two (doc_id, <rank>) frames — ``lex_rank`` / ``sem_rank``
     columns — into the RRF top-``topk``. Inputs must already be
     depth-bounded (the caller's TakeOrdered); the join is tiny."""
-    f6 = lambda c: F.floor(c * 1e6 + F.lit(0.5)) / 1e6  # noqa: E731
     fused = lex.join(sem, "doc_id", "full_outer")
-    rrf = f6(
+    rrf = half_up(
         F.coalesce(F.lit(1.0) / (F.lit(k) + F.col("lex_rank")), F.lit(0.0))
-        + F.coalesce(F.lit(1.0) / (F.lit(k) + F.col("sem_rank")), F.lit(0.0))
+        + F.coalesce(F.lit(1.0) / (F.lit(k) + F.col("sem_rank")), F.lit(0.0)),
+        6,
     )
     return (
         fused.select(

@@ -31,6 +31,7 @@ from pyspark.sql import functions as F
 from wd2duckdb_spark.catalog import (
     RELIABLE_CKPT_CONF,
     eager_checkpoint,
+    half_up,
     local_frame,
     scan_partitions,
     session_memo,
@@ -43,33 +44,19 @@ def _as_double(col: Column) -> Column:
     return F.transform(col, lambda x: x.cast("double"))
 
 
-def dot(a: Column, b: Column) -> Column:
-    """Element-wise dot product of two array<double> columns (no UDF)."""
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: x * y), F.lit(0.0), lambda acc, v: acc + v
-    )
-
-
-def norm(a: Column) -> Column:
-    return F.sqrt(dot(a, a))
-
-
-def cosine(a: Column, b: Column) -> Column:
-    return dot(a, b) / (norm(a) * norm(b))
-
-
 # ---------------------------------------------------------------------------
-# SQL-text expression builders.
+# The vector folds, as SQL text.
 #
-# Literal-heavy expressions (a centroid table, a set of hyperplanes)
-# built via the Column API cost one py4j round-trip PER literal —
-# measured 0.8-0.9 s of pure driver time per plan build for the
-# 8-centroid IVF assign (the PQ encoder had the same pathology, fixed
-# there with pq_code_sql). One F.expr() parse of
-# the equivalent SQL string is milliseconds. Numerics are unchanged:
-# repr(float) round-trips exactly through the SQL parser (tested), and
-# every fold keeps the same left-associated element order as the
-# Column-API originals, so doubles stay bit-identical.
+# Every dot product, norm and squared distance of the vector tier is
+# one of the fold builders below, parsed with F.expr(). Literal-heavy
+# expressions (a centroid table, a set of hyperplanes) built via the
+# Column API cost one py4j round-trip PER literal — measured 0.8-0.9 s
+# of pure driver time per plan build for the 8-centroid IVF assign;
+# one F.expr() parse of the equivalent SQL string is milliseconds.
+# Each fold adds its terms left to right from 0.0 in ascending element
+# order, the order of DuckDB's list_reduce and of the driver-side
+# _py_norm, so all three compute bit-identical doubles; repr(float)
+# round-trips exactly through the SQL parser (tested).
 # ---------------------------------------------------------------------------
 
 
@@ -97,18 +84,34 @@ def _sql_arr(vals: list[float]) -> str:
 
 
 def _dot_fold_sql(a_sql: str, b_sql: str) -> str:
-    """Sequential-fold dot product — same order as :func:`dot`."""
+    """Sequential-fold dot product of two double arrays."""
     return (
         f"aggregate(zip_with({a_sql}, {b_sql}, (x, y) -> x * y),"
         " CAST(0 AS DOUBLE), (acc, v) -> acc + v)"
     )
 
 
+def _norm_fold_sql(v_sql: str) -> str:
+    """Sequential-fold L2 norm of a double array."""
+    return (
+        f"sqrt(aggregate(transform({v_sql}, z -> z * z),"
+        " CAST(0 AS DOUBLE), (acc, z) -> acc + z))"
+    )
+
+
+def _sqdist_fold_sql(a_sql: str, b_sql: str) -> str:
+    """Sequential-fold squared L2 distance of two double arrays."""
+    return (
+        f"aggregate(zip_with({a_sql}, {b_sql}, (x, y) -> (x - y) * (x - y)),"
+        " CAST(0 AS DOUBLE), (acc, w) -> acc + w)"
+    )
+
+
 def _py_norm(v: list[float]) -> float:
     """Driver-side L2 norm with the same left-fold add order as
-    :func:`norm`, so the constant is bit-identical to what the JVM
-    would have computed (IEEE adds in the same sequence, then one
-    correctly-rounded sqrt on both sides)."""
+    :func:`_norm_fold_sql`, so the constant is bit-identical to what
+    the JVM would have computed (IEEE adds in the same sequence, then
+    one correctly-rounded sqrt on both sides)."""
     s = 0.0
     for x in v:
         s += x * x
@@ -116,16 +119,12 @@ def _py_norm(v: list[float]) -> float:
 
 
 def _cosine_fold_sql(xv: str, yv: str) -> str:
-    """Sequential-fold cosine of two double-array columns — the SAME
-    left-to-right aggregate order as DuckDB's list_reduce, so both
-    engines produce bitwise-identical doubles before rounding."""
+    """Sequential-fold cosine of two double-array columns:
+    ``dot / (norm(x) * norm(y))``, the product order of every cosine
+    in the tier and of DuckDB's list_cosine_similarity."""
     return (
-        f"aggregate(zip_with({xv}, {yv}, (p, q) -> p * q),"
-        " CAST(0 AS DOUBLE), (acc, z) -> acc + z)"
-        f" / (sqrt(aggregate(transform({xv}, z -> z * z),"
-        " CAST(0 AS DOUBLE), (acc, z) -> acc + z))"
-        f" * sqrt(aggregate(transform({yv}, z -> z * z),"
-        " CAST(0 AS DOUBLE), (acc, z) -> acc + z)))"
+        f"{_dot_fold_sql(xv, yv)}"
+        f" / ({_norm_fold_sql(xv)} * {_norm_fold_sql(yv)})"
     )
 
 
@@ -134,9 +133,9 @@ def probe_cosine(v: str, nv: Column, qv: list[float]) -> Column:
     driver-side probe vector ``qv`` — the one scoring rule of every
     probe (brute force, LSH, IVF, the persisted index). ``nv`` is the
     row's L2 norm as the caller already has it (a stored column, a
-    hoisted one, or ``norm(v)`` inline); ``norm(q)`` folds to a
-    driver-side constant. The (norm(v) * norm(q)) product order of
-    :func:`cosine` is kept, so the rounded doubles are unchanged."""
+    hoisted one, or the :func:`_norm_fold_sql` of ``v`` inline);
+    ``norm(q)`` folds to a driver-side constant. The (norm(v) *
+    norm(q)) product order of :func:`_cosine_fold_sql` is kept."""
     return F.round(
         F.expr(_dot_fold_sql(v, _sql_arr(qv))) / (nv * F.lit(_py_norm(qv))),
         6,
@@ -217,7 +216,7 @@ def cosine_scored(
     if not qv:
         return e.limit(0).select("vec_id", F.lit(0.0).alias("cosine"))
     e = e.withColumn("_v", _as_double(F.col("embedding")))
-    sim = probe_cosine("_v", norm(F.col("_v")), qv)
+    sim = probe_cosine("_v", F.expr(_norm_fold_sql("_v")), qv)
     return e.select("vec_id", sim.alias("cosine"))
 
 
@@ -338,7 +337,8 @@ def lsh_bucket_ann(
     return (
         bucketed.filter(F.col("bucket").isin(*probes))
         .select(
-            "vec_id", probe_cosine("_v", norm(F.col("_v")), qv).alias("cosine")
+            "vec_id",
+            probe_cosine("_v", F.expr(_norm_fold_sql("_v")), qv).alias("cosine"),
         )
         .orderBy(F.desc("cosine"), "vec_id")
         .limit(k)
@@ -399,8 +399,8 @@ def ivf_assign_col(
     centroid, centroid norms fold to driver-side constants, and the
     whole assign is ONE parsed expression (the SQL-text rationale
     above — this was 0.8 s of py4j literal traffic per plan build).
-    The (norm(v) * norm(c)) product order of :func:`cosine` is kept,
-    so the sims array is bit-identical to the Column-API original."""
+    The (norm(v) * norm(c)) product order of :func:`_cosine_fold_sql`
+    is kept."""
     sims = ", ".join(
         f"{_dot_fold_sql(vec_sql, _sql_arr(c))}"
         f" / ({nv_sql} * {_sql_dbl(_py_norm(c))})"
@@ -461,7 +461,7 @@ def ivf_topk(
     # query-cosine — product orders preserved, doubles unchanged.
     assigned = (
         e.withColumn("_v", _as_double(F.col("embedding")))
-        .withColumn("_nv", norm(F.col("_v")))
+        .withColumn("_nv", F.expr(_norm_fold_sql("_v")))
         .withColumn("cell", ivf_assign_col("_v", "_nv", cents))
     )
     sim = probe_cosine("_v", F.col("_nv"), qv)
@@ -526,23 +526,32 @@ def q_ivf_cell_balance(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     assigned = (
         e.withColumn("_v", _as_double(F.col("embedding")))
-        .withColumn("_nv", norm(F.col("_v")))
+        .withColumn("_nv", F.expr(_norm_fold_sql("_v")))
         .withColumn("cell", ivf_assign_col("_v", "_nv", cents))
     )
+    return cell_balance(assigned)
+
+
+def cell_balance(assigned: DataFrame) -> DataFrame:
+    """``(cell, n_vectors, share, x_mean)`` per cell of a frame with a
+    ``cell`` column: the rows in the cell, their share of all rows and
+    their multiple of the mean cell load ``n·cells/total``, both
+    :func:`~wd2duckdb_spark.catalog.half_up` to 4 dp. The one tail of
+    :func:`q_ivf_cell_balance` and of the persisted index's
+    ``index_cell_balance``."""
     counts = assigned.groupBy("cell").agg(F.count("*").alias("n_vectors"))
     stats = counts.agg(
         F.sum("n_vectors").alias("_total"),
         F.count("*").alias("_ncells"),
     )
-    f4 = lambda c: F.floor(c * 1e4 + F.lit(0.5)) / 1e4  # noqa: E731
     return (
         counts.crossJoin(F.broadcast(stats))
         .select(
             F.col("cell").cast("long").alias("cell"),
             "n_vectors",
-            f4(F.col("n_vectors") / F.col("_total")).alias("share"),
-            f4(
-                F.col("n_vectors") * F.col("_ncells") / F.col("_total")
+            half_up(F.col("n_vectors") / F.col("_total"), 4).alias("share"),
+            half_up(
+                F.col("n_vectors") * F.col("_ncells") / F.col("_total"), 4
             ).alias("x_mean"),
         )
         .orderBy("cell")
@@ -569,8 +578,9 @@ def q_embedding_hygiene(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = tbl(spark, sf_dir, "embeddings")
     emb = F.col("embedding")
     clean = valid_vector()
-    nv = norm(_as_double(emb))
-    f4 = lambda c: F.floor(c * 1e4 + F.lit(0.5)) / 1e4  # noqa: E731
+    nv = F.expr(
+        _norm_fold_sql("transform(embedding, x -> CAST(x AS DOUBLE))")
+    )
     return (
         e.groupBy("label")
         .agg(
@@ -580,7 +590,7 @@ def q_embedding_hygiene(spark: SparkSession, sf_dir: str) -> DataFrame:
                 (emb.isNotNull() & (F.size(emb) != EMB_DIM)).cast("long")
             ).alias("n_ragged"),
             F.sum((clean & (nv == 0.0)).cast("long")).alias("n_zero_norm"),
-            f4(F.avg(F.when(clean, nv))).alias("avg_norm"),
+            half_up(F.avg(F.when(clean, nv)), 4).alias("avg_norm"),
         )
         .orderBy(F.asc_nulls_last("label"))
     )
@@ -649,7 +659,7 @@ def q_label_exemplars(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "label",
             "vec_id",
-            F.round(cosine(F.col("_v"), F.col("cv")), 6).alias("cos"),
+            F.round(F.expr(_cosine_fold_sql("_v", "cv")), 6).alias("cos"),
         )
     )
     best = F.max(
@@ -789,16 +799,13 @@ def q_embedding_pca(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     mu, evals, evecs, total_var = model
     k = len(evals)
-    e = tbl(spark, sf_dir, "embeddings")
-    centered = F.zip_with(
-        _as_double(F.col("embedding")),
-        F.array(*[F.lit(float(m)) for m in mu]),
-        lambda x, m: x - m,
+    centered = tbl(spark, sf_dir, "embeddings").selectExpr(
+        "zip_with(transform(embedding, x -> CAST(x AS DOUBLE)),"
+        f" {_sql_arr(mu)}, (x, m) -> x - m) AS c"
     )
-    projected = e.select(
+    projected = centered.select(
         *[
-            dot(centered, F.array(*[F.lit(float(c)) for c in evecs[:, j]]))
-            .alias(f"p{j}")
+            F.expr(_dot_fold_sql("c", _sql_arr(evecs[:, j]))).alias(f"p{j}")
             for j in range(k)
         ]
     )
@@ -1072,7 +1079,7 @@ def adc_dist(lut: list[list[float]], code_cols: list[str]) -> Column:
             for j, col in enumerate(code_cols)
         )
     )
-    return F.floor(dist * 1000000 + F.lit(0.5)) / 1000000
+    return half_up(dist, 6)
 
 
 def q_pq_adc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1272,19 +1279,6 @@ KMEANS_K = 8
 KMEANS_ITERS = 2
 
 
-def _floor6(c: Column) -> Column:
-    return F.floor(c * 1e6 + F.lit(0.5)) / 1e6
-
-
-def _sqdist(a: Column, b: Column) -> Column:
-    """Squared L2 distance as a sequential fold (codegen, no UDF)."""
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: (x - y) * (x - y)),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
-    )
-
-
 def _lloyd_assignment(
     spark: SparkSession, sf_dir: str
 ) -> tuple[DataFrame, DataFrame, DataFrame]:
@@ -1312,7 +1306,7 @@ def _lloyd_assignment(
         d = vecs.crossJoin(F.broadcast(cents)).select(
             "vec_id",
             "cid",
-            _floor6(_sqdist(F.col("v"), F.col("c"))).alias("dist"),
+            half_up(F.expr(_sqdist_fold_sql("v", "c")), 6).alias("dist"),
         )
         return d.groupBy("vec_id").agg(
             F.min(F.struct("dist", "cid")).alias("m")
@@ -1327,7 +1321,7 @@ def _lloyd_assignment(
         cents = (
             members.select("cid", F.posexplode("v"))
             .groupBy("cid", "pos")
-            .agg(_floor6(F.avg("col")).alias("x"))
+            .agg(half_up(F.avg("col"), 6).alias("x"))
             .groupBy("cid")
             .agg(
                 F.transform(
@@ -1400,9 +1394,7 @@ def _cluster_summary(asg: DataFrame) -> DataFrame:
         asg.groupBy("cid")
         .agg(
             F.count("*").alias("n_vecs"),
-            (F.floor(F.avg("dist") * 1e4 + F.lit(0.5)) / 1e4).alias(
-                "avg_dist"
-            ),
+            half_up(F.avg("dist"), 4).alias("avg_dist"),
         )
         .orderBy("cid")
     )
@@ -1661,15 +1653,14 @@ def q_hard_negative_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
     floor-6 normalized before the argmax so both engines compare
     identical doubles.
     """
-    e = clean_embeddings(spark, sf_dir).select(
-        "vec_id",
-        "label",
-        _as_double(F.col("embedding")).alias("v"),
+    e = (
+        clean_embeddings(spark, sf_dir)
+        .select("vec_id", "label", _as_double(F.col("embedding")).alias("v"))
         # norm hoisted to each SIDE of the cross join: one fold per
         # corpus row + one per anchor instead of two per (row, anchor)
-        # pair — the (norm(a_v) * norm(v)) product order of cosine()
-        # is preserved so the floor-6 doubles are unchanged.
-        norm(_as_double(F.col("embedding"))).alias("nv"),
+        # pair, in the (norm(a_v) * norm(v)) product order of
+        # _cosine_fold_sql.
+        .withColumn("nv", F.expr(_norm_fold_sql("v")))
     )
     anchors = e.filter(F.col("vec_id") < HARDNEG_ANCHORS).select(
         F.col("vec_id").alias("a_id"),
@@ -1685,9 +1676,9 @@ def q_hard_negative_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
             "a_label",
             "vec_id",
             "label",
-            _floor6(
-                dot(F.col("a_v"), F.col("v"))
-                / (F.col("a_n") * F.col("nv"))
+            half_up(
+                F.expr(_dot_fold_sql("a_v", "v")) / (F.col("a_n") * F.col("nv")),
+                6,
             ).alias("cos"),
         )
     )

@@ -14,6 +14,7 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from wd2duckdb_spark.catalog import (
+    half_up,
     local_frame,
     scan_partitions,
     session_memo,
@@ -27,7 +28,7 @@ from wd2duckdb_spark.catalog import (
 EN_STOPWORDS = ("the", "and", "of", "to", "in", "a", "is", "that")
 
 
-#: Unicode-aware token class (VERDICT r10 item 3): letter / combining
+#: Unicode-aware token class: letter / combining
 #: mark / digit runs. One-letter general categories (\p{L}, \p{M},
 #: \p{N}) parse identically in Java regex (Spark) and RE2 (DuckDB's
 #: regexp_* functions), so oracles stay exact. \p{M} keeps combining
@@ -108,7 +109,7 @@ def q_lang_id(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_lang_id_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Language-ID quality eval (round 8): the confusion matrix of the
+    """Language-ID quality eval: the confusion matrix of the
     stopword-heuristic prediction against the stored gold ``lang``
     label — one row per (gold, predicted) cell with its doc count and
     its share of the gold class (so the diagonal cells read as
@@ -127,11 +128,10 @@ def q_lang_id_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     p = q_lang_id(spark, sf_dir).select("lang", "lang_pred")
     m = p.groupBy("lang", "lang_pred").agg(F.count("*").alias("n_docs"))
     w = Window.partitionBy("lang")
-    f4 = lambda c: F.floor(c * 1e4 + F.lit(0.5)) / 1e4  # noqa: E731
     return (
         m.withColumn(
             "share_of_lang",
-            f4(F.col("n_docs") / F.sum("n_docs").over(w)),
+            half_up(F.col("n_docs") / F.sum("n_docs").over(w), 4),
         )
         .orderBy(F.asc_nulls_last("lang"), "lang_pred")
     )
@@ -209,7 +209,7 @@ def q_token_count_bpe(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_token_stats_unicode(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The Unicode tokenizer seam, oracle-exact (VERDICT r10 item 3):
+    """The Unicode tokenizer seam, oracle-exact:
     per-doc token counts under BOTH tokenizers plus the unicode
     distinct-token count. On ASCII fixtures the two mostly agree
     (punctuation splits differ); on CJK/diacritics corpora the
@@ -361,11 +361,10 @@ def q_chunk_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         # one hash(chunk) exchange serves BOTH the keeper argmin and
         # the join back (co-partitioned — guide §2.4), and the chunk
         # fan-out is computed once into the persisted frame instead of
-        # once per branch; previously the keeper side was an AQE
-        # broadcast of the corpus-LINEAR distinct-chunk table — fine
-        # at fixture scale, the wrong shape at 100 TB (round 11). The
-        # persist is armed per invocation — the round-11 session memo
-        # is gone (optimization round 12).
+        # once per branch; an AQE broadcast of the corpus-LINEAR
+        # distinct-chunk table on the keeper side is fine at fixture
+        # scale, the wrong shape at 100 TB. The persist is armed per
+        # invocation, not memoized per session.
         .repartition("chunk")
         .persist()
     )
@@ -435,7 +434,7 @@ def q_tfidf_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
 #: folded in this order so float addition order is engine-identical).
 #: Drawn from the synthetic generator's core vocabulary so every
 #: fixture SF matches; :func:`bm25_scored` is the parameterized scorer
-#: a production caller feeds its own term list (VERDICT r6 item 4).
+#: a production caller feeds its own term list.
 BM25_TERMS = ("merge", "scan", "window")
 BM25_K1 = 1.2
 BM25_B = 0.75
@@ -456,24 +455,21 @@ def _bm25_tf(toks: Column, term: str) -> Column:
     return F.size(F.filter(toks, lambda x: x == F.lit(term)))
 
 
-def _f6(c: Column) -> Column:
-    return F.floor(c * 1e6 + F.lit(0.5)) / 1e6
-
-
 def _bm25_contrib(term: str) -> Column:
     """One term's floor6-snapped BM25 contribution, as an expression
     over the shared ``tf_<term>`` / ``df_<term>`` / ``dl`` / ``avgdl``
     / ``n_docs`` columns — the single Spark-side source of the BM25
     arithmetic (the SQL twin is :func:`_bm25_sql_contrib`)."""
     tf = F.col(f"tf_{term}")
-    idf = _f6(
+    idf = half_up(
         F.log(
             (F.col("n_docs") - F.col(f"df_{term}") + F.lit(0.5))
             / (F.col(f"df_{term}") + F.lit(0.5))
             + F.lit(1.0)
-        )
+        ),
+        6,
     )
-    return _f6(
+    return half_up(
         idf
         * (tf * F.lit(BM25_K1 + 1.0))
         / (
@@ -484,7 +480,8 @@ def _bm25_contrib(term: str) -> Column:
                 - F.lit(BM25_B)
                 + F.lit(BM25_B) * F.col("dl") / F.col("avgdl")
             )
-        )
+        ),
+        6,
     )
 
 
@@ -513,17 +510,16 @@ def _bm25_base(
     aggregate passes) tokenizes the corpus once instead of once per
     branch — the same documented optimizer-barrier persist() pattern
     as ngram_decontaminate/jaccard_prefix_join, armed per invocation.
-    (The round-11 per-session tf-frame memo that lived here is gone —
-    optimization round 12: it only excluded the tokenize pass from
-    warm benchmark reps, and a cross-caller cache keyed without the
-    ``docs`` frame could serve one caller's tf rows to another's
-    filtered docs, ADVICE r11 item 1.)"""
+    It is not memoized per session: that would only exclude the
+    tokenize pass from warm benchmark reps, and a cross-caller cache
+    keyed without the ``docs`` frame could serve one caller's tf rows
+    to another's filtered docs."""
     tfs = _bm25_tfs(docs, all_terms)
     if persist:
         tfs = tfs.persist()
     stats = tfs.agg(
         F.count("*").alias("n_docs"),
-        _f6(F.avg("dl")).alias("avgdl"),
+        half_up(F.avg("dl"), 6).alias("avgdl"),
         *[
             F.sum((F.col(f"tf_{t}") > 0).cast("long")).alias(f"df_{t}")
             for t in all_terms
@@ -541,12 +537,12 @@ def _bm25_query_cols(terms: tuple[str, ...]) -> tuple[Column, Column]:
         tf = F.col(f"tf_{t}")
         total = total + F.when(tf > 0, _bm25_contrib(t)).otherwise(F.lit(0.0))
         n_terms = n_terms + (tf > 0).cast("int")
-    score = F.floor(total * 1e4 + F.lit(0.5)) / 1e4
+    score = half_up(total, 4)
     return n_terms, score
 
 
 def bm25_scored(docs: DataFrame, terms) -> DataFrame:
-    """Parameterized BM25 scorer (VERDICT r6 item 4): score every doc
+    """Parameterized BM25 scorer: score every doc
     of ``docs`` matching ≥1 of ``terms`` against the query, returning
     ``(doc_id, n_terms, score)`` unranked — callers add their own
     top-k / threshold. Lucene idf form (always positive); score is
@@ -554,13 +550,12 @@ def bm25_scored(docs: DataFrame, terms) -> DataFrame:
     term order, so results are engine-deterministic (see q_bm25_topk
     for the full contract). Terms are deduplicated and sorted.
 
-    Exactly two corpus scans, zero wide shuffles, no caching: the
-    round-11 ``memo=`` parameter (a per-session tf-frame cache) is
-    gone — its key ignored ``docs``, so a caller passing a filtered
-    frame could silently read another caller's cached tf rows
-    (ADVICE r11 item 1).
+    Exactly two corpus scans, zero wide shuffles, no caching: a
+    per-session tf-frame cache keyed without ``docs`` would let a
+    caller passing a filtered frame silently read another caller's
+    cached tf rows.
 
-    Terms must match ``^[a-z0-9_]+$`` (ADVICE r7): they are spliced
+    Terms must match ``^[a-z0-9_]+$``: they are spliced
     into derived column names and a filter expression, so a space,
     quote, hyphen, uppercase, or other non-identifier character would
     mis-parse or silently never match (documents are lowercased before
@@ -619,7 +614,7 @@ def q_bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_bm25_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Retrieval-quality eval of the BM25 scorer (VERDICT r6 item 4):
+    """Retrieval-quality eval of the BM25 scorer:
     MRR and precision@10 per eval query against a DERIVABLE relevance
     rule — a doc is relevant to a query iff it contains EVERY query
     term (AND-containment), so ground truth comes from the corpus
@@ -637,7 +632,7 @@ def q_bm25_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     embeds the bm25_topk oracle's arithmetic via the same SQL template
     (:func:`_bm25_sql_scored`), so scorer and eval cannot drift.
 
-    Plan shape (VERDICT r7 item 1 — NO per-query global sort): the
+    Plan shape (NO per-query global sort): the
     query key has only len(BM25_EVAL_QUERIES) values, so ranking with
     ``row_number() OVER (PARTITION BY query)`` would funnel every
     matched corpus row into that many tasks for a full sort — billions
@@ -657,21 +652,20 @@ def q_bm25_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
       plans as a partial ``WindowGroupLimit`` BELOW the exchange: each
       input partition locally sorts and keeps ≤ 10·|queries| rows, so
       the query-key exchange moves rank-limited candidates, never the
-      matched corpus. (The r7 window was unbounded — ranks consumed as
-      an unfiltered min() — which is exactly what disables this
-      pushdown and forces the full per-query sort.)
+      matched corpus. (An unbounded window — ranks consumed as an
+      unfiltered min() — disables this pushdown and forces the full
+      per-query sort.)
 
     The shared tf frame (narrow: doc_id, dl, k tf columns) is
     persist()ed so the corpus is tokenized ONCE and every aggregate
     branch reads the cache (MEMORY_AND_DISK at production scale) —
     without it each branch re-ran the scan+tokenize (measured 2.6 s vs
     1.8 s for the window form at sf0.1; with the cache the aggregate
-    form is the faster one as well as the scale-safe one). Since
-    optimization round 12 the exploded per-(doc, query) scored frame
-    ``ex`` is persisted too (VERDICT r11 item 4): passes A/B/C used to
-    each re-run the explode + K-term scoring from the tf cache —
-    three score passes per invocation — and now the scores are
-    computed once and the three barrier aggregates read the (narrow:
+    form is the faster one as well as the scale-safe one). The
+    exploded per-(doc, query) scored frame ``ex`` is persisted too:
+    without it passes A/B/C each re-run the explode + K-term scoring
+    from the tf cache — three score passes per invocation — so the
+    scores are computed once and the three barrier aggregates read the (narrow:
     doc_id, query, score, rel) cache. Both persists are within ONE
     invocation's plan; nothing is cached across invocations. The
     oracle keeps the window formulation — rank semantics are identical
@@ -707,10 +701,9 @@ def q_bm25_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("nt") > 0)
         # score once, aggregate thrice: passes A/B/C below read this
         # materialization instead of re-running the explode + K-term
-        # scoring per pass (VERDICT r11 item 4; within-invocation only)
+        # scoring per pass (within-invocation only)
         .persist()
     )
-    f4 = lambda c: F.floor(c * 1e4 + F.lit(0.5)) / 1e4  # noqa: E731
 
     # pass A: per-query counts + the best relevant doc (max score,
     # min doc_id among ties — struct max with the id negated). One
@@ -803,9 +796,9 @@ def q_bm25_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.coalesce("n_relevant", F.lit(0)).alias("n_relevant"),
             "first_rel_rank",
             F.coalesce(
-                f4(F.lit(1.0) / F.col("first_rel_rank")), F.lit(0.0)
+                half_up(F.lit(1.0) / F.col("first_rel_rank"), 4), F.lit(0.0)
             ).alias("rr"),
-            f4(F.coalesce("_hits10", F.lit(0)) / F.lit(10.0)).alias(
+            half_up(F.coalesce("_hits10", F.lit(0)) / F.lit(10.0), 4).alias(
                 "p_at_10"
             ),
         )
@@ -821,7 +814,7 @@ RAG_CHUNK_STRIDE = 24
 
 
 def q_rag_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Sliding-window document chunking with overlap (round 7): split
+    """Sliding-window document chunking with overlap: split
     every document into ``RAG_CHUNK_TOKENS``-token windows advancing
     by ``RAG_CHUNK_STRIDE`` — the chunk-for-retrieval primitive of a
     RAG / context-window prep pipeline (``chunk_dedup`` uses
@@ -899,9 +892,9 @@ def q_vocab_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
             # in a double AND far from the 2^63 long clamp) and
             # multiply by n as decimal(38,0). Snapping the PRODUCT
             # would floor a long that clamps at 2^63 for any word with
-            # n ≳ 4.4e5 while DuckDB's HUGEINT doesn't (ADVICE-r9);
-            # this form has no long intermediate at any corpus size,
-            # and stays order-free (ADVICE-r8 accumulation class).
+            # n ≳ 4.4e5 while DuckDB's HUGEINT doesn't; this form has
+            # no long intermediate at any corpus size, and stays
+            # order-free (an exact integer sum in any order).
             F.sum(
                 F.col("n").cast("decimal(19,0)")
                 * F.floor(F.log2("n") * 1e12 + F.lit(0.5)).cast(
@@ -916,23 +909,16 @@ def q_vocab_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
             # floor-normalized, not round(): division-derived doubles
             # can land on exact decimal ties where Spark and DuckDB
             # round() disagree (PLANS.md "rounding ties")
-            (
-                F.floor(
-                    (
-                        F.log2("n_tokens")
-                        - F.col("_nlogn_micro").cast("double")
-                        / 1e12
-                        / F.col("n_tokens")
-                    )
-                    * 10000
-                    + F.lit(0.5)
-                )
-                / 10000
+            half_up(
+                F.log2("n_tokens")
+                - F.col("_nlogn_micro").cast("double")
+                / 1e12
+                / F.col("n_tokens"),
+                4,
             ).alias("entropy_bits"),
-            (
-                F.floor(F.col("vocab") / F.col("n_tokens") * 10000 + F.lit(0.5))
-                / 10000
-            ).alias("type_token_ratio"),
+            half_up(F.col("vocab") / F.col("n_tokens"), 4).alias(
+                "type_token_ratio"
+            ),
         )
         .orderBy("source")
     )
@@ -1319,15 +1305,11 @@ def doc_surprisal(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(_bigram_lm(spark, sf_dir), "bg")
         .groupBy("doc_id", "source")
         .agg(
-            (
-                F.floor(
-                    F.sum("smicro").cast("double")
-                    / F.count("*").cast("double")
-                    / 1e12
-                    * 1e4
-                    + F.lit(0.5)
-                )
-                / 1e4
+            half_up(
+                F.sum("smicro").cast("double")
+                / F.count("*").cast("double")
+                / 1e12,
+                4,
             ).alias("doc_surprisal")
         )
     )
@@ -1344,14 +1326,14 @@ def q_bigram_surprisal(spark: SparkSession, sf_dir: str) -> DataFrame:
             # exact integer micro-unit sum of the 4-dp doc scores
             # (same order-free discipline as perplexity_bucket_sample)
             (
-                F.floor(
+                half_up(
                     F.sum(
                         F.floor(
                             F.col("doc_surprisal") * 1e4 + F.lit(0.5)
                         ).cast("long")
                     ).cast("double")
-                    / F.count("*").cast("double")
-                    + F.lit(0.5)
+                    / F.count("*").cast("double"),
+                    0,
                 )
                 / 1e4
             ).alias("avg_surprisal"),
@@ -1391,11 +1373,11 @@ def q_vocab_divergence(spark: SparkSession, sf_dir: str) -> DataFrame:
     the full JS with no outer join and no per-pair full-vocabulary
     frame. Pairs with FULLY DISJOINT vocabularies are seeded from the
     tiny totals frame and report exactly JS = ln 2 with
-    n_shared_words = 0 (ADVICE r8: the most-divergent pairs are the
+    n_shared_words = 0 (the most-divergent pairs are the
     ones a drift audit most wants to see — the inner join alone would
     silently drop them).
 
-    Cross-engine determinism (ADVICE r8): the per-word js/mass terms
+    Cross-engine determinism: the per-word js/mass terms
     are deterministic doubles of the integer (c, tot) inputs, but
     their SUM is accumulation-order-dependent — so each term is
     floor-snapped to integer 1e-12 micro-units per row and summed as
@@ -1404,15 +1386,15 @@ def q_vocab_divergence(spark: SparkSession, sf_dir: str) -> DataFrame:
     single IEEE ops on identical integers. Worst-case snap error is
     5e-13 per shared word — invisible at the 4-dp output precision.
 
-    Plan (round 10): one (source, word) aggregate, a broadcast of the
+    Plan: one (source, word) aggregate, a broadcast of the
     ≤|sources| totals row set, then ONE word-keyed aggregate that
     collects each word's (source, p) list — bounded by |sources|, a
     dimension — and expands the shared pairs IN-ROW (sorted list +
     upper-triangle transform), then a |sources|²-group aggregate and a
-    broadcast left join onto the all-pairs seed. The previous form
-    self-joined two copies of the distribution on `word`, which
-    re-computed the corpus unigram count on BOTH join sides (no
-    exchange reuse across the persist boundary) — the in-row
+    broadcast left join onto the all-pairs seed. A self-join of two
+    copies of the distribution on `word` would re-compute the corpus
+    unigram count on BOTH join sides (no exchange reuse across the
+    persist boundary) — the in-row
     expansion pays the corpus-scale exchange exactly once and drops
     the join entirely; per-word work is |sources|² with identical
     per-pair terms, so the oracle (which keeps the readable join
@@ -1423,7 +1405,7 @@ def q_vocab_divergence(spark: SparkSession, sf_dir: str) -> DataFrame:
         "source",
         F.explode(F.split(F.lower(F.trim("text")), " ")).alias("word"),
     )
-    # NOT memoized (round 11, measured): persisting the (source, word)
+    # NOT memoized (measured): persisting the (source, word)
     # counts broke the count→JS codegen fusion and regressed the query
     # (A/B 1.20 → 1.41 s min) — the downstream is one fused pass, so
     # the materialization costs more than the re-derivation saves.
@@ -1485,7 +1467,7 @@ def q_vocab_divergence(spark: SparkSession, sf_dir: str) -> DataFrame:
             "source_a",
             "source_b",
             F.coalesce(F.col("nw"), z).alias("n_shared_words"),
-            (F.floor(js * 1e4 + F.lit(0.5)) / 1e4).alias("js_divergence"),
+            half_up(js, 4).alias("js_divergence"),
         )
         .orderBy("source_a", "source_b")
     )
@@ -1514,8 +1496,8 @@ def q_perplexity_bucket_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Determinism: doc_surprisal is floored to 4 dp upstream; the
     global mean/stddev are derived from EXACT INTEGER sums of its
-    1e-4 micro-units (Σx and Σx² as decimal(38,0) / HUGEINT — ADVICE
-    r8: avg/stddev_samp over doubles accumulate in engine-specific
+    1e-4 micro-units (Σx and Σx² as decimal(38,0) / HUGEINT —
+    avg/stddev_samp over doubles accumulate in engine-specific
     order, so a doc whose 4-dp z lands exactly on a ±0.5 boundary
     could bucket differently across engines; with order-free integer
     sums the z inputs are bit-identical and the boundary comparison
@@ -1552,13 +1534,9 @@ def q_perplexity_bucket_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     z = (
         F.when((F.col("n_all") < 2) | (var <= 0), F.lit(0.0))
         .otherwise(
-            F.floor(
-                (F.col("micro").cast("double") - s_d / n_d)
-                / F.sqrt(var)
-                * 1e4
-                + F.lit(0.5)
+            half_up(
+                (F.col("micro").cast("double") - s_d / n_d) / F.sqrt(var), 4
             )
-            / 1e4
         )
     )
     bucket = (
@@ -1592,10 +1570,9 @@ def q_perplexity_bucket_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
             "source",
             "n_docs",
             "n_kept",
-            (
-                F.floor(F.col("sum_micro") / F.col("n_docs") + F.lit(0.5))
-                / 1e4
-            ).alias("avg_surprisal"),
+            (half_up(F.col("sum_micro") / F.col("n_docs"), 0) / 1e4).alias(
+                "avg_surprisal"
+            ),
         )
         .orderBy("bucket", "source")
     )
@@ -1626,7 +1603,7 @@ def _surprisal_sql_cte() -> str:
         -- per-bigram surprisal snapped to integer 1e-12 micro-units:
         -- the per-doc mean below sums EXACT integers (HUGEINT; the
         -- Spark twin sums decimal(38,0)), so accumulation order
-        -- cannot move the 4-dp floor (ADVICE-r8 class, round 9)
+        -- cannot move the 4-dp floor
         SELECT bg,
                CAST(floor(-ln((c12 + {BIGRAM_K}) / (c1 + {BIGRAM_K} * v))
                           * 1e12 + 0.5) AS BIGINT) AS smicro
@@ -1856,7 +1833,7 @@ def q_quality_threshold_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
         f"{t}, d{t}, t{t}" for t in QUALITY_THRESHOLDS
     )
     rate = F.when(F.col("all_docs") == 0, F.lit(None)).otherwise(
-        F.floor(F.col("n_docs") / F.col("all_docs") * 1e4 + F.lit(0.5)) / 1e4
+        half_up(F.col("n_docs") / F.col("all_docs"), 4)
     )
     return (
         row.select(
@@ -1905,7 +1882,7 @@ ORACLES["quality_threshold_sweep"] = f"""
 # Single SQL source of the BM25 arithmetic: bm25_topk's oracle and every
 # per-query scored CTE of bm25_eval's oracle are generated from the same
 # fragments, so the scorer and its eval cannot drift (the composition
-# discipline of ann_recall_eval, VERDICT r6 item 4).
+# discipline of ann_recall_eval).
 
 
 def _bm25_sql_contrib(term: str) -> str:

@@ -24,6 +24,7 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from wd2duckdb_spark.catalog import (
+    half_up,
     local_frame,
     scan_partitions,
     session_memo,
@@ -122,17 +123,12 @@ def q_dataset_split(spark: SparkSession, sf_dir: str) -> DataFrame:
         "n_docs",
         "total_tokens",
         # floor-normalized (PLANS.md "rounding ties")
-        (
-            F.floor(
-                F.col("n_docs") / F.sum("n_docs").over(w) * 10000 + F.lit(0.5)
-            )
-            / 10000
-        ).alias("doc_share"),
+        half_up(F.col("n_docs") / F.sum("n_docs").over(w), 4).alias("doc_share"),
     ).orderBy("source", "split")
 
 
 def q_leakage_safe_split(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Leakage-FREE split assignment (round 8): the fix for what
+    """Leakage-FREE split assignment: the fix for what
     :func:`q_split_leakage_audit` measures. Instead of splitting each
     document independently (which strands near-duplicate pairs on
     opposite sides of the train/eval boundary), assign the WHOLE
@@ -178,7 +174,7 @@ def q_leakage_safe_split(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_split_leakage_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Eval-contamination audit (round 7): counts LSH near-dup
+    """Eval-contamination audit: counts LSH near-dup
     candidate pairs by the split memberships of their two sides. A
     near-dup pair crossing train↔val/test means eval answers leak
     into training — the failure mode the decontaminate/dedup tier
@@ -266,13 +262,9 @@ def q_pack_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
             "n_docs",
             "window_tokens",
             "first_doc",
-            (
-                F.floor(
-                    F.col("window_tokens") / float(PACK_CAPACITY) * 10000
-                    + F.lit(0.5)
-                )
-                / 10000
-            ).alias("fill_ratio"),
+            half_up(F.col("window_tokens") / float(PACK_CAPACITY), 4).alias(
+                "fill_ratio"
+            ),
         )
         .orderBy("shard", "window_id")
     )
@@ -302,15 +294,15 @@ def q_boilerplate_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
         d.select("doc_id", F.explode(toks).alias("word"))
         # hash(word) satisfies both the (doc_id, word) distinct and the
         # DF aggregate — one exchange instead of two (guide §2.4;
-        # 1.18 s → 0.84 s at sf0.1, round 11)
+        # measured 1.18 s → 0.84 s at sf0.1)
         .repartition("word")
         .distinct()
         .groupBy("word")
         .agg(F.count("*").alias("d"))
     )
     # 1 row (possibly empty array), consumed once under the broadcast —
-    # no persist, no memo: the round-11 session memo here only excluded
-    # the corpus DF pass from warm benchmark reps (optimization round 12)
+    # no persist, no memo: a session memo here would only exclude the
+    # corpus DF pass from warm benchmark reps
     hi = (
         dfc.crossJoin(F.broadcast(ndocs))
         .filter(F.col("d") / F.col("n_total") > BOILERPLATE_DF)
@@ -357,10 +349,7 @@ def q_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "word",
             "cnt",
-            (
-                F.floor(F.col("cnt") / F.col("total") * 10000 + F.lit(0.5))
-                / 10000
-            ).alias("share"),
+            half_up(F.col("cnt") / F.col("total"), 4).alias("share"),
         )
         .orderBy(F.desc("cnt"), "word")
         .limit(20)
@@ -400,12 +389,7 @@ def q_importance_resample(spark: SparkSession, sf_dir: str) -> DataFrame:
             "n_docs",
             "n_kept",
             "kept_tokens",
-            (
-                F.floor(
-                    F.col("n_kept") / F.col("n_docs") * 10000 + F.lit(0.5)
-                )
-                / 10000
-            ).alias("accept_rate"),
+            half_up(F.col("n_kept") / F.col("n_docs"), 4).alias("accept_rate"),
         )
         .orderBy("source")
     )
@@ -503,8 +487,7 @@ def mix_weighted_from_counts(counts: DataFrame) -> DataFrame:
     cross-joined with the 1-row (all_tokens, all_w) broadcast, from
     ANY per-document ``(source, n_tokens)`` frame — the pluggable
     seam that lets the budget plan consume real BPE counts
-    (functions/bpe.py) instead of the whitespace estimate (VERDICT r8
-    item 2 "token_budget_plan able to consume it")."""
+    (functions/bpe.py) instead of the whitespace estimate."""
     per_src = counts.groupBy("source").agg(
         F.count("*").alias("n_docs"),
         F.sum("n_tokens").alias("total_tokens"),
@@ -535,7 +518,7 @@ TOKEN_BUDGET = 1_000_000
 
 
 def q_token_budget_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Token-budget allocation plan (round 7): split a fixed training
+    """Token-budget allocation plan: split a fixed training
     budget of :data:`TOKEN_BUDGET` tokens across sources by the
     √-temperature mixing weights, and report the implied EPOCH count
     per source (allocated / available) — >1 means the source repeats
@@ -568,7 +551,6 @@ def budget_plan_from_counts(
     integer-exact allocation arithmetic as the registered query."""
     if budget < 1:
         raise ValueError(f"budget must be >= 1, got {budget}")
-    f4 = lambda c: F.floor(c * 1e4 + F.lit(0.5)) / 1e4  # noqa: E731
     alloc = F.expr(f"CAST(({budget} * w) DIV all_w AS BIGINT)")
     return (
         mix_weighted_from_counts(counts)
@@ -578,7 +560,7 @@ def budget_plan_from_counts(
             F.col("total_tokens").alias("available_tokens"),
             F.col("w").alias("weight"),
             alloc.alias("alloc_tokens"),
-            f4(alloc / F.col("total_tokens")).alias("epochs"),
+            half_up(alloc / F.col("total_tokens"), 4).alias("epochs"),
         )
         .orderBy("source")
     )
@@ -599,20 +581,20 @@ def q_source_mix_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     rounding convention (PLANS.md). One low-cardinality aggregate —
     nothing document-sized shuffles more than once.
     """
-    r6 = lambda c: F.floor(c * 1e6 + F.lit(0.5)) / 1e6  # noqa: E731
     return (
         _mix_weighted(spark, sf_dir)
         .select(
             "source",
             "n_docs",
             "total_tokens",
-            r6(F.col("total_tokens") / F.col("all_tokens")).alias(
+            half_up(F.col("total_tokens") / F.col("all_tokens"), 6).alias(
                 "natural_share"
             ),
-            r6(F.col("w") / F.col("all_w")).alias("mix_share"),
-            r6(
+            half_up(F.col("w") / F.col("all_w"), 6).alias("mix_share"),
+            half_up(
                 (F.col("w") / F.col("all_w"))
-                / (F.col("total_tokens") / F.col("all_tokens"))
+                / (F.col("total_tokens") / F.col("all_tokens")),
+                6,
             ).alias("sampling_factor"),
         )
         .orderBy("source")
@@ -643,12 +625,11 @@ def _lr_features(d: DataFrame) -> DataFrame:
     L = F.length("text")
     digits = L - F.length(F.regexp_replace("text", "[0-9]", ""))
     spaces = L - F.length(F.regexp_replace("text", " ", ""))
-    f6 = lambda c: F.floor(c * 1e6 + F.lit(0.5)) / 1e6  # noqa: E731
     return d.filter(F.col("text").isNotNull()).select(
         "source",
-        f6(F.log(F.lit(1.0) + L) / 10).alias("x1"),
-        f6(digits / (L + F.lit(1))).alias("x2"),
-        f6(spaces / (L + F.lit(1))).alias("x3"),
+        half_up(F.log(F.lit(1.0) + L) / 10, 6).alias("x1"),
+        half_up(digits / (L + F.lit(1)), 6).alias("x2"),
+        half_up(spaces / (L + F.lit(1)), 6).alias("x3"),
         F.when(F.col("lang") == "en", 1.0).otherwise(0.0).alias("y"),
     )
 
@@ -658,10 +639,8 @@ def _lr_sigma(z: Column) -> Column:
     1e-4 grid so ``exp`` sees identical inputs in both engines, and
     the probability is floored to 6 dp so a ≤1-ulp difference between
     JVM Math.exp and DuckDB's libm cannot survive into the weights."""
-    z4 = F.floor(z * 1e4 + F.lit(0.5)) / 1e4
-    return F.floor(
-        (F.lit(1.0) / (F.lit(1.0) + F.exp(-z4))) * 1e6 + F.lit(0.5)
-    ) / 1e6
+    z4 = half_up(z, 4)
+    return half_up(F.lit(1.0) / (F.lit(1.0) + F.exp(-z4)), 6)
 
 
 def q_quality_lr_score(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -711,9 +690,7 @@ def q_quality_lr_score(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("source")
         .agg(
             F.count("*").alias("n_docs"),
-            (F.floor(F.avg("score") * 1e4 + F.lit(0.5)) / 1e4).alias(
-                "mean_score"
-            ),
+            half_up(F.avg("score"), 4).alias("mean_score"),
             F.sum(F.when(F.col("score") < 0.5, 1).otherwise(0))
             .cast("bigint")
             .alias("n_flagged"),
@@ -751,7 +728,7 @@ def _lr_weights(spark: SparkSession, sf_dir: str) -> list[float]:
             g = feats.agg(
                 *[
                     F.coalesce(
-                        F.floor(F.avg(r * x) * 1e6 + F.lit(0.5)) / 1e6,
+                        half_up(F.avg(r * x), 6),
                         F.lit(0.0),
                     ).alias(f"g{j}")
                     for j, x in enumerate(xs)
@@ -778,10 +755,8 @@ def _lr_scored(spark: SparkSession, sf_dir: str) -> DataFrame:
         + F.lit(w[2]) * F.col("x2")
         + F.lit(w[3]) * F.col("x3")
     )
-    z4 = F.floor(z * 1e4 + F.lit(0.5)) / 1e4
-    score = F.floor(
-        (F.lit(1.0) / (F.lit(1.0) + F.exp(-z4))) * 1e4 + F.lit(0.5)
-    ) / 1e4
+    z4 = half_up(z, 4)
+    score = half_up(F.lit(1.0) / (F.lit(1.0) + F.exp(-z4)), 4)
     return feats.select("source", "y", score.alias("score"))
 
 
@@ -805,12 +780,8 @@ def q_quality_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
         s.groupBy(bucket.alias("bucket"))
         .agg(
             F.count("*").alias("n_docs"),
-            (F.floor(F.avg("score") * 1e4 + F.lit(0.5)) / 1e4).alias(
-                "mean_score"
-            ),
-            (F.floor(F.avg("y") * 1e4 + F.lit(0.5)) / 1e4).alias(
-                "pos_rate"
-            ),
+            half_up(F.avg("score"), 4).alias("mean_score"),
+            half_up(F.avg("y"), 4).alias("pos_rate"),
         )
         .orderBy("bucket")
     )
@@ -903,8 +874,7 @@ DOMAIN_CAP = 15
 #: Quota maps up to this size compile to a literal CASE chain (the
 #: plan-pinned WindowGroupLimit shape); larger maps broadcast-join a
 #: (source, quota) lookup instead — a thousands-entry CASE chain is
-#: O(|caps|) expression depth and risks Catalyst codegen/stack blowup
-#: (ADVICE r10).
+#: O(|caps|) expression depth and risks Catalyst codegen/stack blowup.
 DOMAIN_CAP_CASE_MAX = 64
 
 
@@ -960,7 +930,7 @@ def domain_cap_keep(
     shuffle, which is what bounds a crawl-heavy hot domain's exchange
     at cap·n_tasks rows.
 
-    ``caps`` (VERDICT r9 item 5) is a per-source quota map — the real
+    ``caps`` is a per-source quota map — the real
     C4/RefinedWeb shape where crawl-heavy domain classes get smaller
     budgets than curated ones. Sources absent from the map fall back
     to ``default_cap`` (default: ``cap``). The filter is planted as
@@ -1002,7 +972,7 @@ def domain_cap_keep(
             )
             .drop("_rn")
         )
-    # ADVICE r10: a thousands-entry CASE chain gives O(|caps|)
+    # a thousands-entry CASE chain gives O(|caps|)
     # expression DEPTH — Catalyst codegen / analyzer stack blowup and
     # per-row linear evaluation. Above the threshold, ship the map as
     # a broadcast (source, _quota) lookup instead: same max-cap
@@ -1030,8 +1000,7 @@ DOMAIN_QUOTA_SMALL = 8
 
 
 def q_domain_cap_quota(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-domain cap with a HETEROGENEOUS quota map (VERDICT r9
-    item 5): surviving (doc_id, source) rows where each source keeps
+    """Per-domain cap with a HETEROGENEOUS quota map: surviving (doc_id, source) rows where each source keeps
     at most its OWN budget — :data:`DOMAIN_QUOTA_LARGE` for odd-rank
     source names, :data:`DOMAIN_QUOTA_SMALL` for even — selected in
     the same salted-md5 deterministic order as the global cap.
@@ -1042,7 +1011,7 @@ def q_domain_cap_quota(spark: SparkSession, sf_dir: str) -> DataFrame:
     the registered query exercises the real dict-parameter API; the
     filter still plans WindowGroupLimit on the max quota
     (plan-pinned in tests/test_round10_ops.py)."""
-    # explicit NULL-source contract (ADVICE r10): a NULL source has no
+    # explicit NULL-source contract: a NULL source has no
     # quota semantics — Python sorted() would raise on str/None, and
     # the oracle's JOIN ... USING (source) silently DROPS NULL-source
     # rows while a CASE chain would cap them at the fallback. Filter

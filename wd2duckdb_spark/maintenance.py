@@ -511,7 +511,7 @@ def snapshot_diff(
     b = snapshot_read(spark, table_dir, v_to)
     nonkeys = sorted(c for c in b.columns if c not in keys)
 
-    # Content hash (ADVICE r2): xxhash64 over the non-key columns, not
+    # Content hash: xxhash64 over the non-key columns, not
     # md5(to_json(struct(...))) — to_json drops null fields and gives
     # maps nondeterministic key order, so identical rows could hash
     # differently ("update" noise). Two subtleties:
@@ -522,8 +522,8 @@ def snapshot_diff(
     # - xxhash64 folds a NULL child by leaving the accumulator
     #   untouched, so ('x', NULL) and (NULL, 'x') would collide —
     #   every value is therefore paired with its isNull flag, making
-    #   null positions part of the hash AT EVERY NESTING DEPTH
-    #   (ADVICE r3): struct fields, array elements, and map values
+    #   null positions part of the hash AT EVERY NESTING DEPTH:
+    #   struct fields, array elements, and map values
     #   are each wrapped as (isnull, value) structs by _tag, so a
     #   struct flipping ('x', NULL) → (NULL, 'x') — or an array
     #   ['x', NULL] → [NULL, 'x'] — hashes differently. Map keys are

@@ -26,7 +26,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from wd2duckdb_spark.catalog import tbl
+from wd2duckdb_spark.catalog import half_up, tbl
 
 #: Pivot value list is pinned — at scale, letting pivot() infer values
 #: costs an extra pass over the fact table.
@@ -475,7 +475,7 @@ SESSION_FUNNEL_PATTERN = "v[^epg]*c[^epg]*p"
 #: — web-scale pipelines pass the classic 1800 s.
 SESSION_GAP_SECONDS = 86_400
 
-#: Hot-user bound for sequence assembly (VERDICT r8 item 5): a
+#: Hot-user bound for sequence assembly: a
 #: bot-grade key's per-task state is capped at this many events; the
 #: overflow is FLAGGED (`truncated`), never silent. 100k single-char
 #: codes ≈ 100 KB of state per hot user — far under task memory.
@@ -500,8 +500,8 @@ def match_events(
     session_gap_seconds: float | None = None,
 ) -> DataFrame:
     """Complex-event-processing (CEP) pattern matching — the
-    MATCH_RECOGNIZE capability class — as a public parameterized API
-    (VERDICT r8 item 3): each key's event stream collapses to one
+    MATCH_RECOGNIZE capability class — as a public parameterized API:
+    each key's event stream collapses to one
     single-char-per-event string in ``order_cols`` order, and
     ``pattern`` is counted with non-overlapping leftmost regex
     semantics — identical in Java regex (Spark) and DuckDB's RE2 for
@@ -670,7 +670,7 @@ def q_event_pattern_match(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_abandoned_cart(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Abandoned carts per user — the second registered
-    :func:`match_events` pattern (VERDICT r8 item 3): a view→click
+    :func:`match_events` pattern: a view→click
     funnel that reaches another view or the end of the stream with NO
     purchase (``v[^ep]*c[^pv]*(v|$)``). The anchor + alternation
     exercise the portable-regex subset beyond plain character
@@ -937,9 +937,7 @@ def q_interpolate_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     daily = (
         e.groupBy("user_id", F.to_date("ts").alias("day"))
         .agg(
-            (F.floor(F.sum("value") * 10000 + F.lit(0.5)) / 10000).alias(
-                "v_obs"
-            )
+            half_up(F.sum("value"), 4).alias("v_obs")
         )
     )
     spine = (
@@ -982,7 +980,7 @@ def q_interpolate_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
         "user_id",
         "day",
         "v_obs",
-        (F.floor(filled * 10000 + F.lit(0.5)) / 10000).alias("v_filled"),
+        half_up(filled, 4).alias("v_filled"),
     ).orderBy("user_id", "day")
 
 
@@ -1420,7 +1418,6 @@ def q_histogram_equiwidth(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.min("o_totalprice").alias("mn"), F.max("o_totalprice").alias("mx")
     )
     nb = F.lit(HIST_BUCKETS)
-    f2 = lambda c: F.floor(c * 100 + F.lit(0.5)) / 100  # noqa: E731
     # the degenerate mn == mx corpus (one distinct price) puts every
     # row in bucket 0 EXPLICITLY — a nullif/coalesce formulation is
     # subtly wrong because least() SKIPS nulls (least(floor(NULL),
@@ -1440,15 +1437,17 @@ def q_histogram_equiwidth(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("o_totalprice", "mn", "mx", bucket.alias("bucket"))
         .groupBy("bucket")
         .agg(
-            f2(
-                F.min("mn") + F.col("bucket") * (F.min("mx") - F.min("mn")) / nb
+            half_up(
+                F.min("mn") + F.col("bucket") * (F.min("mx") - F.min("mn")) / nb,
+                2,
             ).alias("bin_lo"),
-            f2(
+            half_up(
                 F.min("mn")
-                + (F.col("bucket") + 1) * (F.min("mx") - F.min("mn")) / nb
+                + (F.col("bucket") + 1) * (F.min("mx") - F.min("mn")) / nb,
+                2,
             ).alias("bin_hi"),
             F.count("*").alias("n_orders"),
-            f2(F.avg("o_totalprice")).alias("avg_price"),
+            half_up(F.avg("o_totalprice"), 2).alias("avg_price"),
         )
         .orderBy("bucket")
     )
@@ -1476,9 +1475,7 @@ def q_corr_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
         for b in CORR_MEASURES[i + 1:]
     ]
     aggs = [
-        (
-            F.floor(F.corr(a, b) * 1e4 + F.lit(0.5)) / 1e4
-        ).alias(f"c_{i}")
+        half_up(F.corr(a, b), 4).alias(f"c_{i}")
         for i, (a, b) in enumerate(pairs)
     ]
     stack_args = ", ".join(

@@ -18,6 +18,7 @@ from pyspark.sql import functions as F
 
 from wd2duckdb_spark.catalog import (
     eager_checkpoint,
+    half_up,
     session_memo,
     tbl,
 )
@@ -46,7 +47,7 @@ def q_graph_2hop(spark: SparkSession, sf_dir: str) -> DataFrame:
         # COUNT DISTINCT (the (c_custkey, l_suppkey) partial dedup by
         # the subset rule, then the final per-customer count), so the
         # distinct count rides a single exchange instead of two
-        # (guide §2.3/§2.4; 1.22 s → 0.94 s at sf0.1, round 11)
+        # (guide §2.3/§2.4; measured 1.22 s → 0.94 s at sf0.1)
         .select("c_custkey", "l_suppkey")
         .repartition("c_custkey")
         .groupBy("c_custkey")
@@ -510,13 +511,12 @@ def _rcte_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     subtree was re-EXECUTED by every iteration), so the only way to
     make the loop read materialized data is to hand it a plan that IS
     materialized data — the checkpoint's LogicalRDD. The
-    materialization is paid PER INVOCATION (~0.15 s at sf0.1): the
-    round-11 session memo here survived even ``clearCache()``, so no
-    benchmark rep after the first ever measured the edge build
-    (optimization round 12 — VERDICT r11 item 1). Within one
-    invocation the checkpoint still saves 24 scans / 12 aggregates:
-    the 6 supersteps each re-execute the loop body. Materialization
-    goes through :func:`eager_checkpoint` (ADVICE r11 item 3):
+    materialization is paid PER INVOCATION (~0.15 s at sf0.1): a
+    per-session memo would survive even ``clearCache()``, so no
+    benchmark rep after the first would measure the edge build.
+    Within one invocation the checkpoint still saves 24 scans / 12
+    aggregates: the 6 supersteps each re-execute the loop body.
+    Materialization goes through :func:`eager_checkpoint`:
     executor-local blocks by default, durable ``df.checkpoint`` when
     the session selects :data:`RELIABLE_CKPT_CONF` — the right cluster
     posture where executor loss is routine."""
@@ -599,17 +599,16 @@ def _weighted_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     ONCE PER INVOCATION (``localCheckpoint``) and both directions are
     emitted by ONE in-row explode, so every consumer inside the SSSP
     plan (each superstep's relax join + the vertex seed) reads the
-    materialized blocks instead of re-running the join+aggregate. The
-    round-11 version memoized the checkpoint per session, which even
-    survived ``clearCache()`` — no benchmark rep after the first ever
-    measured the ~1 s pair aggregate (optimization round 12 — VERDICT
-    r11 item 1); now every invocation pays its own build. Row multiset
+    materialized blocks instead of re-running the join+aggregate.
+    Every invocation pays its own build: a per-session memo would
+    survive even ``clearCache()``, and no benchmark rep after the
+    first would measure the ~1 s pair aggregate. Row multiset
     is identical to ``fwd.union(rev)``: union is bag semantics and the
     explode emits exactly the fwd and rev row per pair (pinned in
     tests/test_round2_ops.py)."""
     o = tbl(spark, sf_dir, "orders")
     l = tbl(spark, sf_dir, "lineitem")
-    # materialized via eager_checkpoint (ADVICE r11 item 3):
+    # materialized via eager_checkpoint:
     # executor-local blocks by default, durable df.checkpoint when the
     # session selects RELIABLE_CKPT_CONF
     pair = eager_checkpoint(
@@ -712,7 +711,7 @@ def q_shortest_path_bounded(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     return dist.select(
         F.col("node").alias("node_id"),
-        (F.floor(F.col("dist") * 1e6 + F.lit(0.5)) / 1e6).alias("dist"),
+        half_up(F.col("dist"), 6).alias("dist"),
     ).orderBy("dist", "node_id")
 
 

@@ -14,7 +14,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from wd2duckdb_spark.catalog import tbl
+from wd2duckdb_spark.catalog import half_up, tbl
 
 #: (check_name, SQL predicate counting VIOLATIONS) over ``orders``.
 #: Single source for the Spark plan and the DuckDB oracle.
@@ -112,8 +112,8 @@ def _check_selects() -> str:
 
 
 def q_dq_embedding_quarantine(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Quarantine ACCOUNTING for the EMB_DIM schema contract (VERDICT
-    r3 item 5): every dimension-bound operator silently filters NULL
+    """Quarantine ACCOUNTING for the EMB_DIM schema contract: every
+    dimension-bound operator silently filters NULL
     and wrong-dimension vectors (similarity.clean_embeddings and its
     verbatim oracle mirrors) — this report is where a pipeline SEES
     what it lost: per-reason dropped-row counts over ``embeddings``,
@@ -210,15 +210,14 @@ def q_outlier_mad(spark: SparkSession, sf_dir: str) -> DataFrame:
     engines.
     """
     e = tbl(spark, sf_dir, "events").select("event_type", "value")
-    f4 = lambda c: F.floor(c * 1e4 + F.lit(0.5)) / 1e4  # noqa: E731
     med = e.groupBy("event_type").agg(
-        f4(F.expr("percentile(value, 0.5)")).alias("med")
+        half_up(F.expr("percentile(value, 0.5)"), 4).alias("med")
     )
     dev = e.join(F.broadcast(med), "event_type").select(
         "event_type", "med", F.abs(F.col("value") - F.col("med")).alias("adev")
     )
     mad = dev.groupBy("event_type").agg(
-        f4(F.expr("percentile(adev, 0.5)")).alias("mad")
+        half_up(F.expr("percentile(adev, 0.5)"), 4).alias("mad")
     )
     return (
         dev.join(F.broadcast(mad), "event_type")
@@ -249,10 +248,9 @@ def q_winsorize(spark: SparkSession, sf_dir: str) -> DataFrame:
     clip decisions compare identical doubles in both engines.
     """
     o = tbl(spark, sf_dir, "orders")
-    f4 = lambda c: F.floor(c * 1e4 + F.lit(0.5)) / 1e4  # noqa: E731
     bounds = o.agg(
-        f4(F.expr("percentile(o_totalprice, 0.01)")).alias("lo"),
-        f4(F.expr("percentile(o_totalprice, 0.99)")).alias("hi"),
+        half_up(F.expr("percentile(o_totalprice, 0.01)"), 4).alias("lo"),
+        half_up(F.expr("percentile(o_totalprice, 0.99)"), 4).alias("hi"),
     )
     clipped = F.least(F.greatest(F.col("o_totalprice"), F.col("lo")), F.col("hi"))
     return (
@@ -266,8 +264,8 @@ def q_winsorize(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum((F.col("o_totalprice") > F.col("hi")).cast("long")).alias(
                 "n_clipped_hi"
             ),
-            f4(F.avg("o_totalprice")).alias("mean_raw"),
-            f4(F.avg(clipped)).alias("mean_winsorized"),
+            half_up(F.avg("o_totalprice"), 4).alias("mean_raw"),
+            half_up(F.avg(clipped), 4).alias("mean_winsorized"),
         )
         .orderBy("o_orderpriority")
     )
@@ -340,7 +338,6 @@ def q_table_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     approx_count_distinct — one line, same shape). Values are
     floor-normalized where engines can disagree (mean/stddev)."""
     o = tbl(spark, sf_dir, PROFILE_TABLE)
-    f4 = lambda c: F.floor(c * 1e4 + F.lit(0.5)) / 1e4  # noqa: E731
     c = PROFILE_COLS[0]
     agg = o.agg(
         F.count("*").alias("n_rows"),
@@ -348,8 +345,8 @@ def q_table_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.countDistinct(c).alias("n_distinct"),
         F.min(c).alias("min_v"),
         F.max(c).alias("max_v"),
-        f4(F.avg(c)).alias("mean_v"),
-        f4(F.stddev(c)).alias("stddev_v"),
+        half_up(F.avg(c), 4).alias("mean_v"),
+        half_up(F.stddev(c), 4).alias("stddev_v"),
     )
     stats = (
         ("n_rows", "n_rows"),

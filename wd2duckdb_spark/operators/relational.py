@@ -26,7 +26,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
-from wd2duckdb_spark.catalog import tbl
+from wd2duckdb_spark.catalog import half_up, tbl
 
 
 # ---------------------------------------------------------------------------
@@ -894,10 +894,8 @@ def q_window_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
             # same k/n doubles, but their round() tie rules differ on
             # values whose binary form sits at a 6-dp boundary; floor
             # of identical doubles cannot disagree.
-            (F.floor(F.percent_rank().over(w) * 1000000 + F.lit(0.5))
-             / 1000000).alias("pct_rank"),
-            (F.floor(F.cume_dist().over(w) * 1000000 + F.lit(0.5))
-             / 1000000).alias("cume"),
+            half_up(F.percent_rank().over(w), 6).alias("pct_rank"),
+            half_up(F.cume_dist().over(w), 6).alias("cume"),
         )
         .orderBy("c_custkey")
     )

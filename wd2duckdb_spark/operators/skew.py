@@ -23,6 +23,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from wd2duckdb_spark.catalog import half_up
+
 
 def with_salt(df: DataFrame, n: int, salt_col: str = "_salt") -> DataFrame:
     """Deterministic salt in [0, n) from the row's full content."""
@@ -107,7 +109,7 @@ def grid_self_join(
 ) -> DataFrame:
     """Self-equi-join on a hot block key, decomposed over a G×G grid
     (G = ⌈√n_cells⌉) — the 2-D upgrade of :func:`salted_join` for the
-    SELF-join case (VERDICT r3 item 2).
+    SELF-join case.
 
     Both inputs are projections of the same table joined on a
     low-cardinality block key (dedup blocking, cluster ids), so the
@@ -215,22 +217,21 @@ def _hot_keys_tail(counts: DataFrame, k: int = 10) -> DataFrame:
         F.sum("n_rows").alias("_total"),
         F.count("*").alias("_nkeys"),
     )
-    f4 = lambda c: F.floor(c * 1e4 + F.lit(0.5)) / 1e4  # noqa: E731
     return (
         counts.crossJoin(F.broadcast(stats))
         .select(
             "key",
             "n_rows",
-            f4(F.col("n_rows") / F.col("_total")).alias("share"),
+            half_up(F.col("n_rows") / F.col("_total"), 4).alias("share"),
             # n_rows / (total/n_keys) = multiple of the mean key load
-            f4(
-                F.col("n_rows") * F.col("_nkeys") / F.col("_total")
-            ).alias("x_mean"),
+            half_up(F.col("n_rows") * F.col("_nkeys") / F.col("_total"), 4).alias(
+                "x_mean"
+            ),
         )
         # asc_nulls_last + explicit NULLS LAST in the oracle: Spark
         # sorts NULLs FIRST on ascending while DuckDB defaults to
         # NULLS LAST, so a NULL key group tying at the top-k boundary
-        # would otherwise diverge cross-engine (ADVICE r6).
+        # would otherwise diverge cross-engine.
         .orderBy(F.desc("n_rows"), F.asc_nulls_last("key"))
         .limit(k)
     )
@@ -271,8 +272,7 @@ HOT_KEY_COUNTERS = 65_536
 def hot_keys_sketch(
     df: DataFrame, key_col: str, k: int = 10, counters: int = HOT_KEY_COUNTERS
 ) -> DataFrame:
-    """Read-only variant of the hot-key diagnostic (VERDICT r6 item 2):
-    the exact report's ``groupBy(key)`` is ITSELF the skewed shuffle
+    """Read-only variant of the hot-key diagnostic: the exact report's ``groupBy(key)`` is ITSELF the skewed shuffle
     being diagnosed — on the 100 TB corpus the probe would hit the
     exact hot-partition problem it exists to measure. This variant
     never shuffles a corpus row: a ``mapInPandas`` pass folds each
@@ -293,14 +293,13 @@ def hot_keys_sketch(
     any key above that share (0.0015% at the default budget) is
     guaranteed to surface, which is exactly the regime where a skew
     diagnostic matters. The NULL-key counter participates in the
-    budget and in trim selection like any other counter (VERDICT r7
-    item 5 — the budget is exactly ``counters`` including NULL, and
-    the same ≥(counters+1)·t-per-trim mass argument covers it). The
+    budget and in trim selection like any other counter (the budget
+    is exactly ``counters`` including NULL, and the same ≥(counters+1)·t-per-trim mass argument covers it). The
     error-bound degradation, including a majority-NULL partition, is
     pinned in tests with a deliberately tiny budget.
 
-    Integer keys are routed through a lossless string representation
-    (ADVICE r7): Arrow→pandas turns a NULLABLE int64 column into
+    Integer keys are routed through a lossless string representation:
+    Arrow→pandas turns a NULLABLE int64 column into
     float64, which corrupts keys above 2^53 and would merge distinct
     keys' partial counts; decimal strings round-trip exactly and the
     merged keys cast back to the declared key type afterwards.

@@ -13,7 +13,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from wd2duckdb_spark.catalog import tbl
+from wd2duckdb_spark.catalog import half_up, tbl
 
 
 def q_scd2_intervals(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -134,28 +134,26 @@ def q_ohlc_downsample(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.min("value").alias("low"),
             F.max(key).getField("value").alias("close"),
             F.count("*").alias("volume"),
-            (F.floor(F.avg("value") * 1e4 + F.lit(0.5)) / 1e4).alias(
-                "mean_value"
-            ),
+            half_up(F.avg("value"), 4).alias("mean_value"),
         )
         .orderBy("user_id", "day")
     )
 
 
 def q_cohort_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Cohort retention matrix (round 7): users grouped by their FIRST
+    """Cohort retention matrix: users grouped by their FIRST
     active day (the cohort), then for each day-offset the share of the
     cohort still active — the standard product-analytics retention
     triangle, built the warehouse way.
 
-    Plan (VERDICT r7 item 3 — ONE corpus shuffle, no cohort join):
+    Plan (ONE corpus shuffle, no cohort join):
     events repartition ONCE on ``user_id``; hash-partitioning on
     user_id satisfies ClusteredDistribution for BOTH the
     ``(user_id, day)`` distinct AND the per-user
     ``min(day) OVER (PARTITION BY user_id)`` window, so the
     cohort day is derived in-place with zero further exchanges —
-    the r7 formulation's ``first`` aggregate + equi-join re-shuffled
-    activity on user_id a second time. Every later frame is
+    a ``first`` aggregate + equi-join would re-shuffle activity on
+    user_id a second time. Every later frame is
     day-granular and tiny: the retention matrix aggregate moves
     map-side partials only, and cohort sizes fall out of the matrix
     itself (every user is active on their own cohort day, so
@@ -165,9 +163,9 @@ def q_cohort_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
     cohort_size), an integer ratio.
 
     NULL ``user_id`` rows are filtered up front, mirrored in the
-    oracle (ADVICE r7): the r7 join form counted a NULL user in its
-    cohort's denominator while the inner join dropped its activity —
-    deflating even day-0 retention; a NULL user key is untrackable
+    oracle: a join form would count a NULL user in its cohort's
+    denominator while the inner join dropped its activity — deflating
+    even day-0 retention; a NULL user key is untrackable
     identity, not a cohort member.
     """
     e = (
@@ -190,7 +188,6 @@ def q_cohort_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
     # every user active on their cohort day): a window over the tiny
     # day-granular matrix, not a second corpus branch
     wc = Window.partitionBy("cohort_day")
-    f4 = lambda c: F.floor(c * 1e4 + F.lit(0.5)) / 1e4  # noqa: E731
     return (
         matrix.withColumn(
             "cohort_size",
@@ -203,7 +200,9 @@ def q_cohort_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
             "day_offset",
             "n_active",
             "cohort_size",
-            f4(F.col("n_active") / F.col("cohort_size")).alias("retention"),
+            half_up(F.col("n_active") / F.col("cohort_size"), 4).alias(
+                "retention"
+            ),
         )
         .orderBy("cohort_day", "day_offset")
     )
@@ -220,7 +219,7 @@ QUERIES = {
 ORACLES: dict[str, str] = {
     "cohort_retention": """
         WITH e AS (
-            -- ADVICE r7: NULL user_id filtered symmetrically with the
+            -- NULL user_id filtered symmetrically with the
             -- engine (an untrackable identity, not a cohort member)
             SELECT user_id, CAST(ts AS DATE) AS day FROM events
             WHERE user_id IS NOT NULL

@@ -1,5 +1,4 @@
-"""The six fixture-blocked TPC-H queries (VERDICT r8 "What's missing"
-item 2), unblocked by DETERMINISTIC DERIVED VIEWS: the driver's
+"""The six fixture-blocked TPC-H queries, unblocked by DETERMINISTIC DERIVED VIEWS: the driver's
 synthetic schema lacks ``partsupp`` and the lineitem
 commit/receipt/shipmode columns, so this module derives them as pure
 integer functions of the existing keys — computed from the SAME
@@ -324,8 +323,7 @@ def q_q16_parts_supplier_relationship(
     return (
         ps.join(p, ps.ps_partkey == p.p_partkey)
         .join(
-            # no forced broadcast: supplier is SF-LINEAR (10k×SF), the
-            # same class as the round-11 supplier de-broadcast sweep —
+            # no forced broadcast: supplier is SF-LINEAR (10k×SF) —
             # AQE still broadcasts the filtered side at fixture scale
             bad,
             ps.ps_suppkey == bad.s_suppkey,

@@ -99,7 +99,7 @@ class WikidataDumpReader(DataSourceReader):
         # the caller iterating it — if Spark (or a future caller)
         # consumed it lazily or partially, the pushed filter would be
         # silently dropped while Spark still trusts the source applied
-        # it (ADVICE r1).
+        # it.
         remaining = []
         for f in filters:
             if (
@@ -221,9 +221,8 @@ class WikidataDumpStreamReader(DataSourceStreamReader):
     ``partitions(start, end)`` emits one ``_AlignedRange`` per shard
     whose safe size grew: a shard still being APPENDED to is ingested
     up to its last complete line and REVISITED for the delta next
-    micro-batch — round 2 recorded names only, so a shard listed
-    mid-write was ingested partially and the appended tail silently
-    dropped (ADVICE r2). A partial trailing line (no ``\\n`` yet) is
+    micro-batch (recording names only would ingest a shard listed
+    mid-write partially and silently drop the appended tail). A partial trailing line (no ``\\n`` yet) is
     never emitted, so no half-record ever reaches the sink. A failed
     batch replays its exact (name, start, end) set from the
     checkpointed offsets (exactly-once into idempotent sinks).
@@ -235,8 +234,8 @@ class WikidataDumpStreamReader(DataSourceStreamReader):
     (create them via atomic rename). mtime — unlike an in-memory
     "size stable across two listings" probe — survives driver
     restarts, so an already-ingested shard can never be re-reported
-    at offset 0 and regress the checkpoint. Legacy round-2
-    checkpoints (name-list offsets) are upgraded in place: listed
+    at offset 0 and regress the checkpoint. Legacy checkpoints
+    (name-list offsets) are upgraded in place: listed
     names count as fully ingested at their then-current size.
     """
 
@@ -313,7 +312,7 @@ class WikidataDumpStreamReader(DataSourceStreamReader):
     def _files_map(self, offset: dict) -> dict[str, int]:
         files = offset.get("files", {})
         if isinstance(files, list):
-            # legacy round-2 name-list checkpoint: listed shards were
+            # legacy name-list checkpoint: listed shards were
             # "fully ingested" at checkpoint time. Upgrade to the
             # LINE-ALIGNED size, not the raw size — a shard currently
             # ending mid-line would otherwise upgrade to an offset

@@ -26,7 +26,7 @@ without protobuf, but the public Google Cloud SDK on the image vendors
 a pure-Python protobuf 6.32 runtime; `tools/protobuf_shim` (enabled
 automatically by tests/conftest.py when no real protobuf is
 installed) routes `google.protobuf` to it, so the execution parity
-test RUNS here (round 5 — previously the one env-gated skip). The
+test RUNS here. The
 `pytest.importorskip` guard remains for environments with neither a
 protobuf install nor the SDK. The production-semantics twin
 `applyInPandasWithState` path (sessionize.py) is exercised
